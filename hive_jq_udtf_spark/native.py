@@ -51,48 +51,12 @@ tojson quotes strings with Jackson escaping (the same
 \\n/\\t/\\r/\\uXXXX shortcuts as jqlib's json.dumps), keys_unsorted
 reads json_object_keys over raw text for document order — under an
 iterate that raw text is the element's text twin.  DUPLICATE-KEY
-documents ({"a":1,"a":2}): r12 closes the former every-spec-NULL
-class — jq_explode turns on spark.sql.variant.allowDuplicateKeys
-(the variant then keeps the LAST occurrence, exactly jq), scalar
-plain-path reads route suspect rows (`_dup_suspect`, a backreference
-regex over the raw text) through the variant instead of the
-first-occurrence get_json_object text, and keys/keys_unsorted
-dedupe to first-occurrence document order like jq's in-place
-jv_object_set.  r13 (VERDICT r12 #4) closes the composite-value
-residual VALUE-PRECISELY: suspect COMPOSITES substitute the variant
-render only when the raw text's parsed value actually differs from
-the last-wins variant (`_dup_fixed_raw`), so false positives keep
-document-order text and true duplicates get correct last-wins
-VALUES everywhere (STRING-declared composites, tostring /
-interpolation views, keys_unsorted under a duplicated ancestor,
-type-changing duplicates in both directions).  r14 (VERDICT r13 #3)
-closes the former ORDER-only residue: true-difference composites
-substitute a DOCUMENT-ORDER rebuild (`_dup_doc_render`) — a
-last-occurrence path walk over ``from_json(.., map<string,string>)``
-entries (which preserve duplicate keys in document order with
-order-preserving subtree texts) plus a first-position/last-value
-object render exactly like jq's in-place jv_object_set — so
-STRING-declared composites, tostring/tojson/interpolation views,
-keys_unsorted, and object iteration all see jq's key order on
-true-duplicate docs.  The same closure fixed a SILENT r13
-wrong-render: a subtree whose own object carried the duplicate
-({"k":1,"k":3,"z":2}) parsed value-equal on both sides of the
-keep-raw gate and kept its duplicate-key raw text.  The iterate
-text SOURCE resolves SHALLOWLY (`_dupsql_shallow`: last-occurrence
-walk + top-level first-position/last-value dedup, child texts kept
-RAW) so object iteration emits jq's row set without spending the
-rebuild depth budget before per-element readers — which carry their
-own budget from the element's text twin — ever run.  Narrowed
-residuals, documented here: still-suspect composites nested MORE
-than `_DUP_RENDER_DEPTH` (=2) levels below the reading site fall
-back to the sorted variant render (values exact, order sorted), and
-element-level reads whose text twin has no SQL form (single-level
-posexplode) keep the r13 sorted fallback; duplicate keys spelled
-with DIFFERENT JSON escapes ("a" vs "\\u0061") are caught by a
-second suspect trigger (any \\uXXXX escape in key position —
-over-approximation is free by the false-positive-safety property)
-and read last-wins through the variant, which normalizes escapes
-exactly like jq.
+documents ({"a":1,"a":2}) never reach this tier's readers:
+`NativePlan.apply` routes every row that is well-formed JSON but that
+the variant parser rejects — under Spark's default
+``spark.sql.variant.allowDuplicateKeys=false`` exactly the documents
+with a duplicate key at any depth — to the exact Python tier, and
+jq_explode keeps a session that sets that conf off this tier.
 sqrt of a
 negative yields NaN natively where the Python tier raises the jq
 error — same class.  On clean data the tiers agree BIT-FOR-BIT —
@@ -113,7 +77,7 @@ paths).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -950,9 +914,7 @@ def _reduce_update_ok(ast: AST, var: str) -> bool:
 
 
 def _reduce_col(json_col: Column, path: Path, init, upd: AST) -> Column:
-    # dup-key aware (r12): the fold must see the LAST occurrence's
-    # array like jq; array element order survives the variant cast
-    raw = _dup_fixed_json_text(json_col, path)
+    raw = F.get_json_object(json_col, _json_path(path))
     arr = F.from_json(raw, T.ArrayType(T.DoubleType()))
 
     def build(a: AST, acc: Column, x: Column) -> Column:
@@ -1589,61 +1551,22 @@ def _json_path(p: Path) -> str:
     return out
 
 
-# Duplicate-key suspect gate (r12, VERDICT r11 #4): the SAME quoted
-# key token appears twice in key position anywhere in the document.
-# Over-approximate by design — the same key at two different nesting
-# levels also matches — which is SAFE: the substituted variant-sourced
-# value equals the text-sourced value on any document without true
-# duplicates (pinned by test_native_dup_key_gate_false_positive_safe).
-# jq parses duplicate keys last-occurrence-wins; get_json_object
-# returns the FIRST occurrence, and the variant parser keeps the last
-# once spark.sql.variant.allowDuplicateKeys is on (jq_explode sets it
-# when applying a native plan), so suspect rows read through the
-# variant instead of the raw text.
-#
-# r13 notes (ADVICE r12): (1) the key tokens compare BYTE-FOR-BYTE,
-# so duplicate keys spelled with DIFFERENT JSON escapes ("a" vs
-# "\\u0061", the same key to jq) don't match the backreference —
-# instead, ANY key containing a \\uXXXX escape marks the document
-# suspect (`_DUP_ESC_RE`): the gate may over-approximate freely
-# because the substituted variant read equals the text read on any
-# document without true duplicates (the false-positive-safety
-# property), while the variant parser normalizes escapes exactly
-# like jq/json.loads — so escape-variant duplicates now read
-# last-wins instead of being a silent first-occurrence residual;
-# (2) the inner string-token quantifiers are POSSESSIVE (*+) — the
-# alternation's branches are disjoint prefix-free token classes, so
-# possessiveness never changes what matches but caps the
-# backtracking on large documents (the `(?s:.*)` gap scan remains
-# O(doc) per key position, bounded by Java's regex engine; rows
-# without a repeated quoted token reject at the backreference
-# immediately).
-_DUP_KEY_RE = '("(?:[^"\\\\]|\\\\.)*+")[ \\t\\r\\n]*:(?s:.*)\\1[ \\t\\r\\n]*:'
-_DUP_ESC_RE = (
-    '"(?:[^"\\\\]|\\\\.)*\\\\u[0-9a-fA-F]{4}'
-    '(?:[^"\\\\]|\\\\.)*+"[ \\t\\r\\n]*:'
-)
-
-
 # --- doc-level bind-once (r15, guide §1.2 per-task work) -----------------
-# A compiled plan's output columns re-derive the SAME two per-document
-# values many times per row: the duplicate-key suspect flag (two
-# whole-document regex scans per read — ~24 RLIKE occurrences in a
-# typical 2-output plan) and the variant parse (~26 parseJson
-# occurrences).  Catalyst's CollapseProject re-inlines projected
-# aliases into every use, and the variant machinery is CodegenFallback
-# (no whole-stage codegen, so no subexpression elimination), so each
-# occurrence really evaluates per row — measured ~12-16 us each, the
-# dominant per-row cost of the native tier at bench SF.
+# A compiled plan's output columns read the SAME per-document variant
+# parse many times per row.  Catalyst's CollapseProject re-inlines
+# projected aliases into every use, and the variant machinery is
+# CodegenFallback (no whole-stage codegen, so no subexpression
+# elimination), so each occurrence really evaluates per row.
 #
-# Fix: NativePlan.apply binds both values ONCE per row in a one-element
+# Fix: NativePlan.apply binds the parse ONCE per row in a one-element
 # explode (a Generate blocks alias re-inlining — the _pre_filter_recipe
-# idiom), and every builder that would re-derive them from the TOP-LEVEL
+# idiom), and every builder that would re-derive it from the TOP-LEVEL
 # doc column references the bound struct field instead.  The rewrite is
 # IDENTITY-GATED: a builder's column is substituted only when its SQL
-# rendering equals the plan's doc column, so subtree texts, element
-# twins and Column-typed docs keep the inline computation — results are
-# expression-for-expression identical, just evaluated once.
+# rendering equals the plan's doc column, so subtree texts and element
+# twins keep the inline computation — results are
+# expression-for-expression identical, just evaluated once.  The bound
+# variant also yields the per-row tier route (`_python_rows`).
 _DOC_BINDING: "contextvars.ContextVar[tuple[str, str] | None]"
 import contextvars
 
@@ -1663,510 +1586,42 @@ def _doc_bound_field(col: Column, field: str) -> Optional[Column]:
     return None
 
 
-def _dup_suspect_expr(col: Column) -> Column:
-    return F.coalesce(
-        col.rlike(_DUP_KEY_RE) | col.rlike(_DUP_ESC_RE), F.lit(False)
-    )
-
-
-def _dup_suspect(col: Column) -> Column:
-    bound = _doc_bound_field(col, "s")
-    return bound if bound is not None else _dup_suspect_expr(col)
-
-
 def _parse_doc(col: Column) -> Column:
     """``try_parse_json`` with the doc-level bind-once substitution."""
     bound = _doc_bound_field(col, "v")
     return bound if bound is not None else F.try_parse_json(col)
 
 
-def _with_doc_binding(df: DataFrame, col: Column) -> DataFrame:
-    """Attach the per-row (suspect, variant) struct through a
-    one-element explode so downstream projections cannot re-inline
-    (and hence re-evaluate) it.  array() is never NULL, so exactly one
-    row comes out per input row."""
-    return df.withColumn(
-        _BIND_COL,
-        F.explode(
-            F.array(
-                F.struct(
-                    _dup_suspect_expr(col).alias("s"),
-                    F.try_parse_json(col).alias("v"),
-                )
-            )
-        ),
-    )
+def _python_rows(col: Column, bind: str) -> Column:
+    """Rows the exact Python tier must evaluate: well-formed JSON that
+    the variant parser rejects.  Under Spark's default
+    ``spark.sql.variant.allowDuplicateKeys=false`` that is exactly a
+    duplicate key at any depth, escape-spelled ones ("a" vs "\\u0061")
+    included — jq reads those last-occurrence-wins, get_json_object
+    reads the first.  Corrupt and NULL cells fail both parsers and stay
+    native.  Never NULL, so ``~`` selects the complement.  A CASE, not
+    an AND: the optimizer would push the doc-only conjunct below the
+    binding Generate and re-read every row's text."""
+    return F.when(
+        F.col(bind)["v"].isNull(), F.get_json_object(col, "$").isNotNull()
+    ).otherwise(F.lit(False))
 
 
-def _dup_fixed_num(col: Column, path: Path) -> Column:
-    """Double-typed path read for compiled arithmetic, duplicate-key
-    aware (r12 randomized-differential find: expr specs read the
-    FIRST occurrence through get_json_object where jq computes with
-    the last).  Old-Spark fallback (ADVICE r12): when the variant
-    parse is unavailable (no allowDuplicateKeys conf) the substitution
-    coalesces back to the raw text — the delta stays first-occurrence,
-    never NULL."""
-    raw = F.get_json_object(col, _json_path(path))
-    v = F.try_variant_get(_parse_doc(col), _json_path(path), "variant")
-    return (
-        F.when(~_dup_suspect(col), raw)
-        .otherwise(_dup_sub(raw, v))
-        .try_cast("double")
-    )
+def _num_at(col: Column, path: Path) -> Column:
+    """Double-typed path read for compiled arithmetic."""
+    return F.get_json_object(col, _json_path(path)).try_cast("double")
 
 
-def _dup_fixed_json_text(col: Column, path: Path) -> Column:
-    """Raw JSON text of the value at a path, duplicate-key aware.
-    Unlike `_dup_fixed_raw`, COMPOSITES substitute unconditionally:
-    the arrayfn / reduce callers from_json the text by position or
-    field name, so the variant cast's sorted-key rendering cannot
-    change a value, while array element order is preserved.  NULL
-    variant (old Spark / unparseable) coalesces back to the raw
-    text (ADVICE r12)."""
-    raw = F.get_json_object(col, _json_path(path))
-    v = F.try_variant_get(_parse_doc(col), _json_path(path), "variant")
-    return F.when(~_dup_suspect(col), raw).otherwise(_dup_sub(raw, v))
-
-
-def _dup_sub(raw: Column, v: Column) -> Column:
-    """The suspect-row substitution value: the canonical variant
-    render, EXCEPT when the variant itself is missing —
-    schema_of_variant NULL means the doc never parsed to a variant
-    (older Spark without allowDuplicateKeys, or a doc the variant
-    parser rejects) and the substitution keeps the raw text so the
-    old-Spark delta stays first-occurrence TEXT, never NULL (ADVICE
-    r12).  A genuine JSON null at the path is a VOID variant (vt
-    non-NULL) and still renders NULL like get_json_object — the
-    r12-pinned null semantics are unchanged."""
-    vt = F.schema_of_variant(v)
-    return F.when(vt.isNull(), raw).otherwise(v.try_cast("string"))
-
-
-# r14 (VERDICT r13 #3): nesting levels BELOW the read that the
-# document-order rebuild unrolls; deeper still-suspect subtrees fall
-# back to the sorted variant render (values exact — the former
-# whole-composite residual, now pushed beyond this depth).  2 keeps
-# the CASE-gated expression tree (and its codegen) bounded; the
-# randomized differential exercises depths 0-2.
-_DUP_RENDER_DEPTH = 2
-
-
-def _let(val: Column, body) -> Column:
-    """Catalyst let-binding: evaluate ``val`` once and reference it as
-    a LAMBDA VARIABLE inside ``body`` — a single-element transform.
-    Column references otherwise re-inline their whole sub-expression
-    tree, which makes the recursive dup-key rebuild EXPONENTIAL in
-    depth at plan-build/analysis time; with the binding every
-    reference is a leaf and the tree stays linear."""
-    return F.try_element_at(F.transform(F.array(val), body), F.lit(1))
-
-
-def _sql_lit(s: str) -> str:
-    """A Python string as a Spark SQL single-quoted literal (default
-    escapedStringLiterals=false: backslash escapes active)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-# The rebuild is generated as ONE SQL text and parsed JVM-side with a
-# single F.expr call: building the same tree through the Column API
-# costs thousands of py4j round-trips (~5 s per occurrence, measured),
-# while the SQL parse is milliseconds.  Let-bindings are spelled as
-# single-element transforms — `try_element_at(transform(array(VAL),
-# name -> BODY), 1)` — so every reference of a bound value is a
-# lambda-variable leaf and the tree stays linear in rebuild depth.
-def _dupsql_suspect(x: str) -> str:
-    return (
-        f"coalesce((rlike({x}, {_sql_lit(_DUP_KEY_RE)}) or "
-        f"rlike({x}, {_sql_lit(_DUP_ESC_RE)})), false)"
-    )
-
-
-def _dupsql_let(val: str, name: str, body: str) -> str:
-    return f"try_element_at(transform(array({val}), {name} -> {body}), 1)"
-
-
-def _dupsql_quote(x: str) -> str:
-    """`_json_quote` in SQL text: quoted, Jackson-escaped string token
-    via to_json(named_struct(..)) wrapper-stripping; NULL -> 'null'."""
-    js = f"to_json(named_struct('s', {x}))"
-    return (
-        f"(case when {x} is null then 'null' "
-        f"else substr({js}, 6, length({js}) - 6) end)"
-    )
-
-
-def _dupsql_entry(sv: str, vv: str, depth: int, n: list) -> str:
-    """`_dup_entry_render` in SQL text: strings re-quote with Jackson
-    escaping (the string twin and the variant cast both hold the
-    DECODED content), null/VOID renders 'null', other scalars take the
-    variant's canonical render (the callers' composite canonicalizer
-    trims the decimal tails), and composites recurse through
-    `_dupsql_node` to `_DUP_RENDER_DEPTH` before falling back to the
-    pre-r14 policy (raw text when not suspect, else the sorted variant
-    render)."""
-    n[0] += 1
-    p = f"dp{n[0]}"
-    ps, pv = f"{p}.s", f"{p}.v"
-    vt = f"schema_of_variant({pv})"
-    vstr = f"try_cast({pv} as string)"
-    if depth < _DUP_RENDER_DEPTH:
-        comp = f"coalesce({_dupsql_node(ps, depth + 1, n)}, {vstr})"
-    else:
-        susp = _dupsql_suspect(ps)
-        comp = (
-            f"(case when not {susp} then {ps} "
-            f"else coalesce({vstr}, {ps}) end)"
-        )
-    body = (
-        f"(case when {vt} is null or {vt} = 'VOID' then 'null' "
-        f"when {vt} = 'STRING' then {_dupsql_quote(vstr)} "
-        f"when startswith({vt}, 'ARRAY') or startswith({vt}, 'OBJECT') "
-        f"then {comp} "
-        f"else coalesce({vstr}, 'null') end)"
-    )
-    return _dupsql_let(f"named_struct('s', {sv}, 'v', {vv})", p, body)
-
-
-def _dupsql_node(s: str, depth: int, n: list) -> str:
-    """`_dup_node_render` in SQL text: document-order render of a
-    (possibly duplicate-key) JSON value raw text — the VERDICT r13 #3
-    closure of the ORDER-only residual.
-
-    Objects rebuild first-position/last-value like jq's in-place
-    ``jv_object_set`` (and jackson-jq's LinkedHashMap put):
-    ``from_json(s, 'map<string,string>')`` preserves duplicate entries
-    in DOCUMENT order with order-preserving re-serialized subtree
-    texts (verified empirically on Spark 4.1: inner duplicates survive
-    too), and a positionally aligned ``map<string,variant>`` twin
-    supplies the value types.  Arrays re-render each element so nested
-    dup-key objects inside them rebuild too.  A non-suspect node keeps
-    its raw text untouched (document order and values already exact).
-    NULL on any parse failure — callers coalesce to the sorted variant
-    render (the pre-r14 behavior)."""
-    n[0] += 1
-    sb = f"dn{n[0]}"
-    n[0] += 1
-    b = f"db{n[0]}"
-    es, ev, ks, asv, avv = (
-        f"{b}.es",
-        f"{b}.ev",
-        f"{b}.ks",
-        f"{b}.asv",
-        f"{b}.avv",
-    )
-    bound = (
-        "named_struct("
-        f"'es', map_entries(from_json({sb}, 'map<string,string>')), "
-        f"'ev', map_entries(from_json({sb}, 'map<string,variant>')), "
-        f"'ks', transform(map_entries(from_json({sb}, "
-        "'map<string,string>')), ke -> ke.key), "
-        f"'asv', from_json({sb}, 'array<string>'), "
-        f"'avv', from_json({sb}, 'array<variant>'))"
-    )
-    # object: keep first occurrences in position, read the LAST
-    # occurrence's value per key (1-based from the front via reverse)
-    n[0] += 1
-    e = f"de{n[0]}"
-    n[0] += 1
-    li = f"dl{n[0]}"
-    li_val = (
-        f"cast(size({ks}) - array_position(reverse({ks}), {e}.key) + 1 "
-        "as int)"
-    )
-    pair = _dupsql_let(
-        li_val,
-        li,
-        f"concat({_dupsql_quote(e + '.key')}, ':', "
-        + _dupsql_entry(
-            f"try_element_at({es}, {li}).value",
-            f"try_element_at({ev}, {li}).value",
-            depth,
-            n,
-        )
-        + ")",
-    )
-    kept = (
-        f"filter({es}, ({e}, i{n[0]}) -> "
-        f"array_position({ks}, {e}.key) = i{n[0]} + 1)"
-    )
-    obj = f"concat('{{', array_join(transform({kept}, {e} -> {pair}), ','), '}}')"
-    n[0] += 1
-    sv = f"ds{n[0]}"
-    items = (
-        f"transform({asv}, ({sv}, j{n[0]}) -> "
-        + _dupsql_entry(
-            sv, f"try_element_at({avv}, cast(j{n[0]} + 1 as int))", depth, n
-        )
-        + ")"
-    )
-    arr = f"concat('[', array_join({items}, ',', 'null'), ']')"
-    first = f"substring(ltrim({sb}), 1, 1)"
-    comp = (
-        f"(case when {first} = '{{' then {obj} "
-        f"when {first} = '[' then {arr} else {sb} end)"
-    )
-    susp = _dupsql_suspect(sb)
-    body = (
-        f"(case when not {susp} then {sb} "
-        f"else {_dupsql_let(bound, b, comp)} end)"
-    )
-    return _dupsql_let(s, sb, body)
-
-
-def _dupsql_entry_shallow(sv: str, vv: str, n: list) -> str:
-    """Shallow value render: strings re-quote, null/VOID → 'null',
-    everything else keeps its RAW subtree text (number lexemes,
-    booleans, and composites — including any inner duplicate keys,
-    which the next reader resolves with its own depth budget)."""
-    n[0] += 1
-    p = f"dq{n[0]}"
-    vt = f"schema_of_variant({p}.v)"
-    vstr = f"try_cast({p}.v as string)"
-    body = (
-        f"(case when {vt} is null or {vt} = 'VOID' then 'null' "
-        f"when {vt} = 'STRING' then {_dupsql_quote(vstr)} "
-        f"else coalesce({p}.s, {vstr}, 'null') end)"
-    )
-    return _dupsql_let(f"named_struct('s', {sv}, 'v', {vv})", p, body)
-
-
-def _dupsql_shallow(s: str, n: list) -> str:
-    """SHALLOW document-order resolve for the iterate text SOURCE
-    (r14): a duplicate-key OBJECT dedups first-position/last-value
-    like jq's parse — so object iteration emits jq's row set in jq's
-    order — but every VALUE keeps its raw subtree text untouched.
-    The deep `_dupsql_node` is wrong here: it spends the rebuild
-    depth budget at the source, pre-sorting inner objects before the
-    per-element readers (which carry their own budget from the
-    element's text twin) ever see them.  Arrays and scalars pass
-    through raw (array elements split by position downstream)."""
-    n[0] += 1
-    sb = f"dh{n[0]}"
-    n[0] += 1
-    b = f"dg{n[0]}"
-    es, ev, ks = f"{b}.es", f"{b}.ev", f"{b}.ks"
-    bound = (
-        "named_struct("
-        f"'es', map_entries(from_json({sb}, 'map<string,string>')), "
-        f"'ev', map_entries(from_json({sb}, 'map<string,variant>')), "
-        f"'ks', transform(map_entries(from_json({sb}, "
-        "'map<string,string>')), kh -> kh.key))"
-    )
-    n[0] += 1
-    e = f"df{n[0]}"
-    n[0] += 1
-    li = f"dm{n[0]}"
-    li_val = (
-        f"cast(size({ks}) - array_position(reverse({ks}), {e}.key) + 1 "
-        "as int)"
-    )
-    pair = _dupsql_let(
-        li_val,
-        li,
-        f"concat({_dupsql_quote(e + '.key')}, ':', "
-        + _dupsql_entry_shallow(
-            f"try_element_at({es}, {li}).value",
-            f"try_element_at({ev}, {li}).value",
-            n,
-        )
-        + ")",
-    )
-    kept = (
-        f"filter({es}, ({e}, h{n[0]}) -> "
-        f"array_position({ks}, {e}.key) = h{n[0]} + 1)"
-    )
-    obj = f"concat('{{', array_join(transform({kept}, {e} -> {pair}), ','), '}}')"
-    susp = _dupsql_suspect(sb)
-    first = f"substring(ltrim({sb}), 1, 1)"
-    body = (
-        f"(case when not {susp} then {sb} "
-        f"when {first} = '{{' then {_dupsql_let(bound, b, obj)} "
-        f"else {sb} end)"
-    )
-    return _dupsql_let(s, sb, body)
-
-
-def _dup_doc_render(
-    colsql: str, path: Path, shallow: bool = False
-) -> Column:
-    """Last-occurrence path walk + document-order rebuild for a
-    TRUE-duplicate composite read (VERDICT r13 #3).  Each object step
-    takes the LAST entry whose (decoded) key matches — exactly the
-    navigation over jq's parse-resolved document, and the step that
-    ``get_json_object`` (first match) cannot express; array steps
-    index the string twin.  The walked subtree text then rebuilds in
-    document order via `_dupsql_node`.  NULL whenever a step fails to
-    parse or match — the caller coalesces to the sorted variant
-    render.  ``colsql`` is the doc column as a SQL fragment (threaded
-    from ``apply``; Spark 4 Columns expose no SQL render) — the
-    generated text is instantiated with ONE F.expr call for py4j
-    economy.  ``shallow`` selects the iterate-source resolve
-    (`_dupsql_shallow`: top-level dedup only, raw child texts)."""
-    cur = colsql
-    n = [0]
-    for step in path:
-        if isinstance(step, int):
-            idx = step + 1 if step >= 0 else step
-            cur = f"try_element_at(from_json({cur}, 'array<string>'), {idx})"
-        else:
-            n[0] += 1
-            w = f"dw{n[0]}"
-            cur = (
-                "try_element_at(filter(map_entries(from_json("
-                f"{cur}, 'map<string,string>')), {w} -> {w}.key = "
-                f"{_sql_lit(step)}), -1).value"
-            )
-    if shallow:
-        return F.expr(_dupsql_shallow(cur, n))
-    return F.expr(_dupsql_node(cur, 0, n))
-
-
-def _dup_fixed_view(
-    col: Column,
-    raw: Column,
-    v: Column,
-    path: Path | None,
-    view,
-    colsql: str | None = None,
-    shallow: bool = False,
-) -> Column:
-    """``view`` applied to the duplicate-key-aware text of the value
-    at ``path`` — the composition point that keeps plans SMALL and the
-    hot path in whole-stage codegen (r14).
-
-    Views (_m2_string_view, fn chains, interpolation renders)
-    reference their text argument 10-15×; applying one directly to
-    `_dup_fixed_raw`'s output re-inlines the whole substitution tree
-    per reference (a 24 MiB task binary on the tostring chain,
-    pre-fix), and each view BUILD costs ~0.4 s of py4j round-trips.
-    Branch layout instead:
-
-    1. non-suspect doc → ``view(raw)`` — raw is just get_json_object,
-       so the clean-row hot path stays tiny and fully codegen;
-    2. suspect → the substitution CASE (kept raw / variant render /
-       document-order rebuild, which itself is ONE F.expr) bound once
-       with `_let` and ``view`` applied to the lambda variable.  The
-       let's higher-order function evaluates interpreted
-       (CodegenFallback), but CASE codegen only reaches it on suspect
-       rows.  Two view builds total, and every big subtree appears
-       exactly once in the plan."""
-    vr = v.try_cast("string")
-    vt = F.schema_of_variant(v)
-    iscomp = vt.startswith("ARRAY") | vt.startswith("OBJECT")
-    same = F.equal_null(
-        _parse_doc(raw).try_cast("string"),
-        _parse_doc(vr).try_cast("string"),
-    )
-    rendered = (
-        _dup_doc_render(colsql, path, shallow=shallow)
-        if path is not None and colsql is not None
-        else None
-    )
-    # Tightening `keep` by the raw subtree's own suspicion (the r14
-    # subtree-internal-duplicate closure) is only SAFE when the
-    # document-order rebuild exists: rebuilding a false positive is
-    # content-identity, whereas the vr fallback would SORT a clean
-    # value-equal composite (a regression the elem-text growth cases
-    # caught).  Without a rebuild (no colsql — element-level reads
-    # under iterates) the r13 value-precise gate stands, and the
-    # subtree-internal duplicate render stays an r13-documented
-    # residual there.
-    keep = same & ~_dup_suspect(raw) if rendered is not None else same
-    csub = F.coalesce(rendered, vr) if rendered is not None else vr
-    sub = F.when(vt.isNull() | (iscomp & keep), raw).otherwise(
-        F.when(iscomp, csub).otherwise(vr)
-    )
-    return F.when(~_dup_suspect(col), view(raw)).otherwise(
-        _let(sub, lambda r: view(r))
-    )
-
-
-def _dup_fixed_raw(
-    col: Column,
-    raw: Column,
-    v: Column,
-    path: Path | None = None,
-    colsql: str | None = None,
-    shallow: bool = False,
-) -> Column:
-    """Raw-text view with duplicate-key suspects read from the variant
-    (last-occurrence-wins, like jq).
-
-    r13 (VERDICT r12 #4): suspect COMPOSITES now substitute too, but
-    only VALUE-PRECISELY — the raw first-occurrence text is kept when
-    it parses to the same value as the last-wins variant (canonical-
-    render equality), so the over-approximate document gate's false
-    positives (the same key at two different nesting levels — e.g.
-    every arrays-of-objects document) keep their document-order raw
-    text and pay one extra parse, never a wrong value.  True
-    differences substitute the canonical variant render: correct
-    last-wins VALUES (the callers' canonicalizer fixes the render's
-    number lexemes).  This also fixes type-changing duplicates in
-    BOTH directions (composite → scalar kept first-occurrence
-    composite text pre-r13).
-
-    r14 (VERDICT r13 #3): when the caller supplies the read ``path``,
-    a true-difference COMPOSITE substitutes the DOCUMENT-ORDER rebuild
-    (`_dup_doc_render`: last-occurrence path walk + first-position/
-    last-value object render) instead of the sorted variant render —
-    the former ORDER-only residual.  The sorted render remains the
-    coalesce fallback (walk/parse failure, or still-suspect subtrees
-    beyond `_DUP_RENDER_DEPTH` nesting levels below the read).
-
-    Old-Spark fallback (ADVICE r12): a MISSING variant
-    (schema_of_variant NULL — no allowDuplicateKeys conf, or a doc
-    the variant parser rejects) keeps the raw text, so the delta
-    stays first-occurrence text, never NULL; a genuine JSON null
-    (VOID variant) still renders NULL like get_json_object."""
-    # r14 (ADVICE r13 high): the keep-raw equality is LEXEME-insensitive
-    # — get_json_object and the variant render preserve decimal scale
-    # differently (doc token 1.50E2 -> raw '150.0' but reparse '150'
-    # vs variant render '150.0'), so both sides re-render through the
-    # same parse+cast before comparing.  r14 (VERDICT r13 #3): keeping
-    # the raw text ALSO requires the raw subtree itself not to be
-    # dup-suspect — the parse RESOLVES duplicates, so a subtree whose
-    # own object carries a true duplicate ({"k":1,"k":3,"z":2}) read
-    # value-equal to the variant and kept its duplicate-key raw render
-    # (a silent r13 wrong-render, closed by the rebuild).  Branch
-    # layout and size discipline live in `_dup_fixed_view`.
-    return _dup_fixed_view(
-        col, raw, v, path, lambda r: r, colsql=colsql, shallow=shallow
-    )
-
-
-def _scalar_out_col(
-    col: Column, path: Path, dt: T.DataType, colsql: str | None = None
-) -> Column:
+def _scalar_out_col(col: Column, path: Path, dt: T.DataType) -> Column:
     """Plain-path output at the scalar tier: STRING-declared outputs
     go through the variant-gated M2 normalization (`_m2_string_view`,
-    r10), everything else through `_cast_extracted`.  The
-    try_parse_json is shared across output columns by codegen
-    subexpression elimination.
-
-    Duplicate-key documents (r12): suspect rows substitute the raw
-    text — last-occurrence-wins like jq, NULL for missing/JSON-null
-    exactly like get_json_object.  The CASE branch keeps the variant
-    parse off the clean-row hot path.  r14: true-difference
-    STRING-declared composites substitute the document-order rebuild
-    via `_dup_fixed_view` (jq key order; module docstring)."""
+    r10), everything else through `_cast_extracted`."""
     jp = _json_path(path)
     raw = F.get_json_object(col, jp)
-    v = F.try_variant_get(_parse_doc(col), jp, "variant")
     if isinstance(dt, T.StringType):
-        return _dup_fixed_view(
-            col,
-            raw,
-            v,
-            path,
-            lambda r: _m2_gate(r, _m2_string_view(r, v)),
-            colsql=colsql,
-        )
-    # non-string decls substitute composites too: from_json resolves
-    # nested fields BY NAME, so the variant cast's sorted-key text
-    # still parses to the right (last-wins) values; a MISSING variant
-    # (old Spark / rejected doc) keeps the raw text (ADVICE r12)
-    raw2 = F.when(~_dup_suspect(col), raw).otherwise(_dup_sub(raw, v))
-    return _cast_extracted(raw2, dt)
+        v = F.try_variant_get(_parse_doc(col), jp, "variant")
+        return _m2_gate(raw, _m2_string_view(raw, v))
+    return _cast_extracted(raw, dt)
 
 
 def _cast_extracted(raw: Column, dt: T.DataType) -> Column:
@@ -2805,39 +2260,18 @@ def _tojson_view(raw: Column, v: Column) -> Column:
     )
 
 
-def _keys_unsorted_col(
-    raw: Column,
-    v: Column,
-    doc: Column | None = None,
-    path: Path | None = None,
-    colsql: str | None = None,
-) -> Column:
+def _keys_unsorted_col(raw: Column, v: Column) -> Column:
     """jq ``keys_unsorted``: object keys in DOCUMENT order —
     ``json_object_keys`` over the raw text preserves field order,
     where variants sort keys (r10); arrays yield index strings like
-    ``keys``.  Anything else is the NULL delta class.  array_distinct
-    (r12): duplicate-key objects list each key once at its FIRST
-    position — jq's jv_object_set updates an existing key in place,
-    so insertion order is first-occurrence order; identity on clean
-    documents.
-
-    r13 (VERDICT r12 #4): when the enclosing document (``doc``) is
-    supplied, the text twin goes through the value-precise dup-key
-    substitution — a DUPLICATED ANCESTOR path no longer lists the
-    FIRST occurrence's keys (a wrong key SET pre-r13).  r14 (VERDICT
-    r13 #3): with the read ``path`` supplied too, the substitution is
-    the DOCUMENT-ORDER rebuild, so the listed keys come back in the
-    last occurrence's document order exactly like jq (``keys`` proper
-    is exact — it reads `_variant_keys`)."""
-    if doc is not None:
-        raw = _dup_fixed_raw(doc, raw, v, path=path, colsql=colsql)
+    ``keys``.  Anything else is the NULL delta class."""
     vt = F.schema_of_variant(v)
     arr_n = F.size(v.try_cast("array<variant>"))
     idx = F.when(
         arr_n > 0, F.sequence(F.lit(0), arr_n - F.lit(1))
     ).otherwise(F.array().cast("array<int>"))
     return F.when(
-        vt.startswith("OBJECT"), F.array_distinct(F.json_object_keys(raw))
+        vt.startswith("OBJECT"), F.json_object_keys(raw)
     ).when(
         vt.startswith("ARRAY"),
         F.transform(idx, lambda i: i.cast("string")),
@@ -2898,7 +2332,7 @@ def _filter_col(json_col: Column, f: Filter) -> Column:
     if f.lhs_expr is not None:
         c = _compile_expr(
             f.lhs_expr,
-            lambda p: _dup_fixed_num(json_col, f.lhs + p),
+            lambda p: _num_at(json_col, f.lhs + p),
         )
         return _cmp_with_null_order(c, f.op, f.lit)
     if f.op == "truthy":
@@ -2926,10 +2360,8 @@ def _filter_col(json_col: Column, f: Filter) -> Column:
         )
         return _string_pred_col(_variant_string_only(v), f.op, f.lit)
     if f.lit is None:
-        # `== null` is true for both JSON null and missing (jq).
-        # Read the exact-typed variant, not the raw text (r12: the
-        # raw view sees the FIRST occurrence on duplicate-key docs
-        # where jq tests the last; corrupt docs are NULL either way)
+        # `== null` is true for both JSON null and missing (jq), read
+        # from the exact-typed variant (corrupt docs are NULL)
         v = F.try_variant_get(
             _parse_doc(json_col), _json_path(f.lhs), "variant"
         )
@@ -3103,17 +2535,16 @@ def _pre_filter_recipe(
 def _run_pre_filters(df: DataFrame, recipe) -> DataFrame:
     """Replay a _pre_filter_recipe on a real DataFrame (same op order
     as the pre-r14 inline version: text wheres, then the one-parse
-    Generate + variant wheres + original-column reselect)."""
+    Generate + variant wheres, then the parse column dropped)."""
     text_conds, var_gen, var_conds = recipe
     for c in text_conds:
         df = df.where(c)
     if var_gen is None:
         return df
-    orig = df.columns
-    df = df.withColumn("__jq_prefilter", var_gen)
+    df = df.select("*", var_gen.alias("__jq_prefilter"))
     for c in var_conds:
         df = df.where(c)
-    return df.select(*orig)
+    return df.drop(F.col("__jq_prefilter"))
 
 
 def _java_quote(s: str) -> str:
@@ -3145,32 +2576,19 @@ def _slice_col(
     STRING decl (Spark length/substr count characters, matching
     Python/jq).  Cross-type and OBJECT inputs are NULL — jq errors on
     objects and slices the type the decl didn't ask for, the
-    documented NULL-delta class.  Duplicate-key docs read last-wins
-    (`_dup_fixed_json_text`)."""
-    raw = _dup_fixed_json_text(json_col, path)
+    documented NULL-delta class."""
     v = F.try_variant_get(
         _parse_doc(json_col), _json_path(path), "variant"
     )
     vt = F.schema_of_variant(v)
     if isinstance(out_dt, T.ArrayType):
-        arr = F.from_json(raw, out_dt)
+        arr = F.from_json(F.get_json_object(json_col, _json_path(path)), out_dt)
         n = F.size(arr)
         lo_c = _slice_idx(lo, n, F.lit(0))
         hi_c = _slice_idx(hi, n, n)
         cnt = F.greatest(hi_c - lo_c, F.lit(0))
-        # r14 (ADVICE r13 low): a MISSING variant (old Spark without
-        # the allowDuplicateKeys conf, or a doc the variant parser
-        # rejects) must not NULL the whole slice — fall back to gating
-        # on the raw-text from_json parse succeeding, mirroring the
-        # _dup_sub missing-variant policy (delta stays first-occurrence
-        # text semantics, never NULL).
-        is_arr = F.coalesce(vt.startswith("ARRAY"), arr.isNotNull())
-        return F.when(is_arr, F.slice(arr, lo_c + F.lit(1), cnt))
-    # string slice: missing variant falls back to the raw text view
-    # (get_json_object already unquotes string values); the cross-type
-    # ambiguity (a number would slice as its text) only exists on the
-    # no-variant fallback path and keeps the never-NULL policy.
-    s = F.when(vt.isNull(), raw).otherwise(_variant_string_only(v))
+        return F.when(vt.startswith("ARRAY"), F.slice(arr, lo_c + F.lit(1), cnt))
+    s = _variant_string_only(v)
     n = F.length(s)
     lo_c = _slice_idx(lo, n, F.lit(0))
     hi_c = _slice_idx(hi, n, n)
@@ -3187,10 +2605,7 @@ def _arrayfn_col(json_col: Column, path: Path, fn: str, args, out_dt: T.DataType
     array_join) or an aggregate() fold for add.  jq deltas are the
     documented cast-garbage class: jq aborts on wrong-typed input,
     this tier yields NULL."""
-    # dup-key aware (r12): same last-occurrence substitution as the
-    # plain-path reads (array order survives the variant cast; nested
-    # object keys re-sort, harmless to the positional/number folds)
-    raw = _dup_fixed_json_text(json_col, path)
+    raw = F.get_json_object(json_col, _json_path(path))
 
     def lenient(dt: T.DataType) -> T.DataType:
         # integral decls parse as double then truncate, matching the
@@ -3347,10 +2762,8 @@ class _SchemaConflict(Exception):
 
 
 class NativePlan:
-    """Executable plan: apply(df, column, alias, outer) → DataFrame
-    with the same shape jq_explode produces."""
-
-    _colsql: str | None = None  # set per-apply; None → no dup rebuild
+    """Executable plan: apply(df, column, python_tier, outer) →
+    DataFrame with the same shape jq_explode produces."""
 
     def __init__(self, ir: NativeIR, decls: tuple[str, ...]):
         self.ir = ir
@@ -3359,9 +2772,9 @@ class NativePlan:
         _validate_new_specs(ir.project, self.schema)
         if ir.iterate:
             self._elem_schema()  # raises _SchemaConflict on mixed shapes
-        # recipe cache: (applicationId, colsql, outer) → built Columns
-        # (see apply); the lock serializes builds so the transient
-        # self._colsql handoff is race-free under concurrent sessions
+        # recipe cache: (applicationId, column, outer, binding column)
+        # → built Columns (see apply); the lock serializes builds so
+        # concurrent sessions build each recipe once
         self._recipes: dict = {}
         import threading
 
@@ -3390,9 +2803,7 @@ class NativePlan:
                 kc = _variant_length(v)
             else:
                 raw = F.get_json_object(col, jp) if path else col
-                kc = _keys_unsorted_col(
-                    raw, v, doc=col, path=tuple(path), colsql=self._colsql
-                )
+                kc = _keys_unsorted_col(raw, v)
             out_cols.append(kc.try_cast(fdt.dataType).alias(fdt.name))
         elif self.single and ir.project is None:
             # (wrapped_single projects fall through to the project
@@ -3405,9 +2816,7 @@ class NativePlan:
                 )
             else:
                 out_cols.append(
-                    _scalar_out_col(
-                        col, src or (), fdt.dataType, colsql=self._colsql
-                    ).alias(fdt.name)
+                    _scalar_out_col(col, src or (), fdt.dataType).alias(fdt.name)
                 )
         elif ir.project is not None:
             for fdt in self.schema.fields:
@@ -3418,29 +2827,11 @@ class NativePlan:
                     out_cols.append(F.lit(spec[1]).cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "expr":
                     _, ast, base = spec
-                    c = _compile_expr(
-                        ast,
-                        lambda p: _dup_fixed_num(col, tuple(base) + p),
-                    )
+                    c = _compile_expr(ast, lambda p: _num_at(col, tuple(base) + p))
                     out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "fnchain":
                     _, path, fns = spec
                     raw0 = F.get_json_object(col, _json_path(path))
-                    # duplicate-key suspects read the LAST occurrence
-                    # (r12; r14 document-order rebuild) — the fn-chain
-                    # views below otherwise see the first occurrence's
-                    # text.  Composed through _dup_fixed_view so the
-                    # chain's many text references don't re-inline the
-                    # rebuild tree (r14 task-binary discipline).
-                    dupv = F.try_variant_get(
-                        _parse_doc(col), _json_path(path), "variant"
-                    )
-
-                    def _dupfix(view_fn, _p=tuple(path), _v=dupv):
-                        return _dup_fixed_view(
-                            col, raw0, _v, _p, view_fn, colsql=self._colsql
-                        )
-
                     if fns[0][0] == "type":
                         # r11: type name from the exact-typed variant;
                         # corrupt docs poison to NULL like the sibling
@@ -3476,19 +2867,14 @@ class NativePlan:
                             if fns[0][0] == "tojson"
                             else _tostring_view
                         )
-
-                        def _ts_view(r, _v=v, _view=view, _fns=fns):
-                            first = F.when(
-                                _parse_doc(col).isNotNull(),
-                                _view(r, _v),
-                            )
-                            return (
-                                _apply_fnchain(first, _fns[1:])
-                                if len(_fns) > 1
-                                else first
-                            )
-
-                        c = _dupfix(_ts_view)
+                        first = F.when(
+                            _parse_doc(col).isNotNull(), view(raw0, v)
+                        )
+                        c = (
+                            _apply_fnchain(first, fns[1:])
+                            if len(fns) > 1
+                            else first
+                        )
                         out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                         continue
                     if fns[0][0] in _STR_ONLY_HEADS | _NUM_ONLY_HEADS:
@@ -3501,58 +2887,38 @@ class NativePlan:
                         if fns[0][0] in _STR_ONLY_HEADS:
                             c = _apply_fnchain(_variant_string_only(v), fns)
                         else:
-                            c = _dupfix(
-                                lambda r, _v=v, _fns=fns: _apply_fnchain(
-                                    _num_only_view(r, _v), _fns
-                                )
-                            )
+                            c = _apply_fnchain(_num_only_view(raw0, v), fns)
                         out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                         continue
-
-                    def _chain_view(r, _fns=fns, _p=path):
-                        c = _apply_fnchain(r, _fns)
-                        if _fns[0][0] in ("ltrimstr", "rtrimstr"):
-                            # jq passes NON-string values through these
-                            # unchanged (no abort) — gate on exact type
-                            vt = F.schema_of_variant(
-                                F.try_variant_get(
-                                    _parse_doc(col),
-                                    _json_path(_p),
-                                    "variant",
-                                )
+                    c = _apply_fnchain(raw0, fns)
+                    if fns[0][0] in ("ltrimstr", "rtrimstr"):
+                        # jq passes NON-string values through these
+                        # unchanged (no abort) — gate on exact type
+                        vt = F.schema_of_variant(
+                            F.try_variant_get(
+                                _parse_doc(col), _json_path(path), "variant"
                             )
-                            rest = (
-                                _apply_fnchain(r, _fns[1:])
-                                if len(_fns) > 1
-                                else r
-                            )
-                            c = F.when(vt == F.lit("STRING"), c).otherwise(rest)
-                        return c
-
-                    out_cols.append(
-                        _dupfix(_chain_view).cast(fdt.dataType).alias(fdt.name)
-                    )
+                        )
+                        rest = (
+                            _apply_fnchain(raw0, fns[1:]) if len(fns) > 1 else raw0
+                        )
+                        c = F.when(vt == F.lit("STRING"), c).otherwise(rest)
+                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "alt":
                     _, path, dflt = spec
                     # jq // substitutes when the value is null/missing
                     # OR boolean false — exactly NOT jq-truthy, read
-                    # from the exact-typed variant (r12: the old
-                    # raw-text null test saw the FIRST occurrence on
-                    # duplicate-key docs where jq substitutes on the
-                    # last).  Both branches pre-cast to the declared
-                    # type so when() type unification can't introduce
-                    # a stricter common type (ANSI cast crash).
+                    # from the exact-typed variant.  Both branches
+                    # pre-cast to the declared type so when() type
+                    # unification can't introduce a stricter common
+                    # type (ANSI cast crash).
                     v = F.try_variant_get(
                         _parse_doc(col), _json_path(path), "variant"
                     )
                     c = F.when(
                         ~_variant_truthy(v),
                         F.lit(dflt).try_cast(fdt.dataType),
-                    ).otherwise(
-                        _scalar_out_col(
-                            col, path, fdt.dataType, colsql=self._colsql
-                        )
-                    )
+                    ).otherwise(_scalar_out_col(col, path, fdt.dataType))
                     out_cols.append(c.alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "strcat":
                     # doc-validity gate: a corrupt doc parses to a
@@ -3578,29 +2944,10 @@ class NativePlan:
                             _json_path(val),
                             "variant",
                         )
-
-                        # duplicate-key suspects interpolate the LAST
-                        # occurrence (r12; r14 document-order rebuild),
-                        # composed via _dup_fixed_view so the render's
-                        # text references don't re-inline the rebuild
-                        def _seg_view(r, _v=v, _kind=kind):
-                            view = (
-                                _tojson_view
-                                if _kind == "pathjson"
-                                else _tostring_view
-                            )(r, _v)
-                            return (
-                                _b64_view(view) if _kind == "pathb64" else view
-                            )
-
-                        return _dup_fixed_view(
-                            _col,
-                            F.get_json_object(_col, _json_path(val)),
-                            v,
-                            tuple(val),
-                            _seg_view,
-                            colsql=self._colsql,
-                        )
+                        view = (
+                            _tojson_view if kind == "pathjson" else _tostring_view
+                        )(F.get_json_object(_col, _json_path(val)), v)
+                        return _b64_view(view) if kind == "pathb64" else view
 
                     segs = [
                         F.lit(val) if kind == "lit" else _interp_seg(kind, val)
@@ -3637,11 +2984,7 @@ class NativePlan:
                     )
                     out_cols.append(
                         _keys_unsorted_col(
-                            F.get_json_object(col, _json_path(spec[1])),
-                            vv,
-                            doc=col,
-                            path=tuple(spec[1]),
-                            colsql=self._colsql,
+                            F.get_json_object(col, _json_path(spec[1])), vv
                         )
                         .try_cast(fdt.dataType)
                         .alias(fdt.name)
@@ -3732,9 +3075,7 @@ class NativePlan:
                     def _branch(sp, _dt=fdt.dataType):
                         if sp[0] == "lit":
                             return F.lit(sp[1]).try_cast(_dt)
-                        return _scalar_out_col(
-                            col, sp[1], _dt, colsql=self._colsql
-                        )
+                        return _scalar_out_col(col, sp[1], _dt)
 
                     c = F.when(cond, _branch(t_spec)).otherwise(_branch(e_spec))
                     out_cols.append(c.alias(fdt.name))
@@ -3744,9 +3085,7 @@ class NativePlan:
                     )
                 else:
                     out_cols.append(
-                        _scalar_out_col(
-                            col, spec, fdt.dataType, colsql=self._colsql
-                        ).alias(fdt.name)
+                        _scalar_out_col(col, spec, fdt.dataType).alias(fdt.name)
                     )
         else:
             # bare path + NAME:TYPE decls → destructure result object
@@ -3760,12 +3099,7 @@ class NativePlan:
                     )
                     continue
                 out_cols.append(
-                    _scalar_out_col(
-                        col,
-                        base + (fdt.name,),
-                        fdt.dataType,
-                        colsql=self._colsql,
-                    ).alias(
+                    _scalar_out_col(col, base + (fdt.name,), fdt.dataType).alias(
                         fdt.name
                     )
                 )
@@ -3980,9 +3314,8 @@ class NativePlan:
     def _build_explode(self, col: Column, outer: bool) -> tuple:
         """Build the explode-path recipe:
         (pre_filter_recipe, gens, post_conds, out_cols) where gens is
-        a list of (generated_column_name, generator Column) — name
-        None marks the posexplode select("*", gen) form.  Pure Column
-        construction, cacheable (NativePlan.apply)."""
+        a list of (generated column names, aliased generator Column).
+        Pure Column construction, cacheable (NativePlan.apply)."""
         ir = self.ir
 
         def wrap_steps(steps: Path, inner: T.DataType) -> T.DataType:
@@ -4024,30 +3357,12 @@ class NativePlan:
         # a numeric field → NULL here vs Jackson-lenient 0 in the
         # Python tier) remain the documented cast-leniency delta.
         jsonpath = _json_path(ir.pre_path) if ir.pre_path else "$"
-        # r13 (VERDICT r12 #4): the text source feeding the object-
-        # iterate route and the text twins is duplicate-key aware,
-        # value-precisely — a DUPLICATED ANCESTOR path no longer
-        # iterates the FIRST occurrence's values (the typed from_json
-        # nav was already last-wins, so this also re-aligns the
-        # text/variant twins on dup docs).  False positives keep the
-        # raw text, preserving document key order for object
-        # iteration; true duplicates substitute the DOCUMENT-ORDER
-        # rebuild (r14, VERDICT r13 #3) — last-wins values, object
-        # values iterating in the last occurrence's document order
-        # like jq (sorted-render fallback only beyond the rebuild
-        # depth or on walk failure).
-        src_raw = (
+        # raw text source for the object-iterate route and the text
+        # twins (document key order)
+        src = (
             F.get_json_object(col, _json_path(ir.pre_path))
             if ir.pre_path
             else col
-        )
-        src = _dup_fixed_raw(
-            col,
-            src_raw,
-            F.try_variant_get(_parse_doc(col), jsonpath, "variant"),
-            path=tuple(ir.pre_path or ()),
-            colsql=self._colsql,
-            shallow=True,
         )
         # only rebuild when the value at the path IS a JSON array —
         # get_json_object strips quotes from string values, so a
@@ -4170,13 +3485,6 @@ class NativePlan:
         )
         elem_var = None
         elem_txt = None
-        # SQL fragment for elem_txt where one exists (r14): mid-path
-        # explode levels materialize the text twin as a real struct
-        # field, so element-level dup-key reads can take the
-        # document-order rebuild; the posexplode twin is a derived
-        # expression with no SQL name -> no rebuild there (sorted
-        # fallback, documented residual)
-        elem_txt_sql = None
         if ir.mid_paths:
             # chained explode for multi-iterate programs (.a[].b[]).
             # from_json nulls the DEEPEST mismatching node (an inner
@@ -4235,7 +3543,7 @@ class NativePlan:
                 nav.isNotNull(),
                 F.arrays_zip(nav.alias("t"), var0.alias("v"), txt0.alias("x")),
             )
-            gens = [("__jq_elem0", gen(zipped))]
+            gens = [(("__jq_elem0",), gen(zipped).alias("__jq_elem0"))]
             ec = F.col("__jq_elem0").getField("t")
             ev = F.col("__jq_elem0").getField("v")
             ex = F.col("__jq_elem0").getField("x")
@@ -4287,13 +3595,13 @@ class NativePlan:
                     c2.isNotNull(),
                     F.arrays_zip(c2.alias("t"), v2.alias("v"), x2.alias("x")),
                 )
-                gens.append((f"__jq_elem{lvl}", gen(zipped)))
+                name = f"__jq_elem{lvl}"
+                gens.append(((name,), gen(zipped).alias(name)))
                 ec = F.col(f"__jq_elem{lvl}").getField("t")
                 ev = F.col(f"__jq_elem{lvl}").getField("v")
                 ex = F.col(f"__jq_elem{lvl}").getField("x")
             elem_var = ev  # last level's variant twin
             elem_txt = ex  # last level's raw-text twin
-            elem_txt_sql = f"`__jq_elem{lvl}`.x"
         elif needs_ev or needs_ex:
             # posexplode keeps the element index so the element's
             # variant can be read from the doc-level variant array
@@ -4324,13 +3632,14 @@ class NativePlan:
                 if lims and lims[0] is not None:
                     txt_arr = F.slice(txt_arr, F.lit(1), F.lit(lims[0]))
             pgen = F.posexplode_outer if outer else F.posexplode
-            gens = [(None, pgen(nav).alias("__jq_pos0", "__jq_elem0"))]
+            names = ("__jq_pos0", "__jq_elem0")
+            gens = [(names, pgen(nav).alias(*names))]
             ec = F.col("__jq_elem0")
             elem_var = F.try_element_at(var_arr, F.col("__jq_pos0") + 1)
             if txt_arr is not None:
                 elem_txt = F.try_element_at(txt_arr, F.col("__jq_pos0") + 1)
         else:
-            gens = [("__jq_elem0", gen(nav))]
+            gens = [(("__jq_elem0",), gen(nav).alias("__jq_elem0"))]
             ec = F.col("__jq_elem0")
         def _elem_leaf(ff: Filter) -> Column:
             # r12: whole-element predicates read the variant twin —
@@ -4382,13 +3691,7 @@ class NativePlan:
                     )
                 else:
                     raw = elem_txt
-                kc = _keys_unsorted_col(
-                    raw,
-                    c,
-                    doc=elem_txt,
-                    path=tuple(ir.single_path or ()),
-                    colsql=elem_txt_sql,
-                )
+                kc = _keys_unsorted_col(raw, c)
             out_cols.append(kc.try_cast(fdt0.dataType).alias(fdt0.name))
         elif self.single and ir.project is None:
             c = ec
@@ -4575,13 +3878,7 @@ class NativePlan:
                         else F.lit(None).cast(T.StringType())
                     )
                     out_cols.append(
-                        _keys_unsorted_col(
-                            raw,
-                            c,
-                            doc=elem_txt,
-                            path=tuple(path),
-                            colsql=elem_txt_sql,
-                        )
+                        _keys_unsorted_col(raw, c)
                         .try_cast(fdt.dataType)
                         .alias(fdt.name)
                     )
@@ -4602,67 +3899,62 @@ class NativePlan:
                 )
         return pre, gens, post_conds, out_cols
 
-    def apply(self, df: DataFrame, column: str | Column, outer: bool = False) -> DataFrame:
-        """Apply the plan to a DataFrame.
+    def apply(
+        self,
+        df: DataFrame,
+        column: str | Column,
+        python_tier: Callable[[DataFrame], DataFrame],
+        outer: bool = False,
+    ) -> DataFrame:
+        """Apply the plan to a DataFrame, routing per row.
+
+        Every row binds its variant parse once (`_DOC_BINDING`).  Rows
+        that are well-formed JSON the variant parser rejects — under
+        the default conf, exactly the duplicate-key documents
+        (`_python_rows`) — go through ``python_tier``, the exact Python
+        tier; all other rows through the compiled Columns.  The two
+        branches are concatenated by position (``unionByName`` rejects
+        duplicate input column names), so rows of different input rows
+        may come out in a different order than one tier alone would
+        emit them; the rows of one input row keep jq's order.
 
         r14 optimization (guide §1.2 "per-task work", driver-side):
         every Column the plan needs is built ONCE per (Spark context,
-        column name, outer) and cached on the plan instance — building
-        the tree costs hundreds of py4j round trips (~0.5–2 s of
-        driver latency per jq_explode, measured), replaying the cached
-        recipe on a DataFrame costs a handful of where/withColumn/
-        select calls.  Nothing data-dependent is cached: recipes are
-        unresolved expression trees, the same objects a fresh build
-        would produce, so plans, results, and explain output are
-        bit-identical.  Keyed by applicationId so a restarted context
-        (new JVM) never sees another JVM's py4j handles; Column-typed
-        doc inputs (no stable SQL identity) skip the cache."""
+        column name, outer, binding column) and cached on the plan
+        instance — building the tree costs hundreds of py4j round
+        trips, replaying the cached recipe costs a handful of
+        where/withColumn/select calls.  Recipes are unresolved
+        expression trees, the same objects a fresh build would
+        produce.  Keyed by applicationId so a restarted context (new
+        JVM) never sees another JVM's py4j handles; Column-typed doc
+        inputs (no stable identity) skip the cache."""
         col = F.col(column) if isinstance(column, str) else column
-        # SQL fragment for the doc column (r14): the document-order
-        # dup-key rebuild is generated as ONE SQL text for py4j
-        # economy, which needs the doc as SQL; a Column-typed doc has
-        # no SQL render on Spark 4 → no rebuild (sorted fallback).
-        colsql = (
-            "`%s`" % column.replace("`", "``")
-            if isinstance(column, str)
-            else None
-        )
+        bind = _BIND_COL
+        while bind in df.columns:
+            bind += "_"
         key = None
-        if colsql is not None:
+        if isinstance(column, str):
             try:
                 appid = df.sparkSession.sparkContext.applicationId
             except Exception:  # pragma: no cover - defensive
                 appid = None
             if appid is not None:
-                key = (appid, colsql, outer)
+                key = (appid, column, outer, bind)
         with self._build_lock:
             recipe = self._recipes.get(key) if key is not None else None
             if recipe is None:
-                self._colsql = colsql
-                # doc-level bind-once (r15): while building, reads of
-                # the top-level doc column reference the per-row
-                # (suspect, variant) binding that replay injects below
-                token = None
-                if colsql is not None:
-                    try:
-                        doc_sql = col._jc.toString()
-                    except Exception:  # pragma: no cover - defensive
-                        doc_sql = None
-                    if doc_sql is not None:
-                        token = _DOC_BINDING.set((doc_sql, _BIND_COL))
+                # while building, reads of the top-level doc column
+                # reference the per-row binding injected below
                 try:
-                    if self.ir.iterate:
-                        recipe = (
-                            "explode",
-                            self._build_explode(col, outer),
-                            token is not None,
-                        )
-                    else:
-                        recipe = (
-                            "scalar",
-                            self._build_scalar(col),
-                            token is not None,
-                        )
+                    token = _DOC_BINDING.set((col._jc.toString(), bind))
+                except Exception:  # pragma: no cover - defensive
+                    token = None
+                try:
+                    recipe = (
+                        self._build_explode(col, outer)
+                        if self.ir.iterate
+                        else self._build_scalar(col)
+                    )
                 finally:
                     if token is not None:
                         _DOC_BINDING.reset(token)
@@ -4670,27 +3962,28 @@ class NativePlan:
                     if len(self._recipes) > 64:  # stale-context bound
                         self._recipes.clear()
                     self._recipes[key] = recipe
-        kind, parts, bound = recipe
-        src = _with_doc_binding(df, col) if bound else df
-        if kind == "scalar":
-            pre, out_cols = parts
-            out = _run_pre_filters(src, pre)
-            if bound:
-                return out.select(
-                    *[c for c in out.columns if c != _BIND_COL], *out_cols
-                )
-            return out.select("*", *out_cols)
-        pre, gens, post_conds, out_cols = parts
-        out = _run_pre_filters(src, pre)
-        keep = [c for c in out.columns if c != _BIND_COL]
-        for name, gcol in gens:
-            if name is None:
+        # one-element explode: array() is never NULL, so exactly one
+        # row comes out per input row
+        bound = df.select(
+            "*",
+            F.explode(F.array(F.struct(F.try_parse_json(col).alias("v")))).alias(
+                bind
+            ),
+        )
+        to_python = _python_rows(col, bind)
+        out = _run_pre_filters(bound.where(~to_python), recipe[0])
+        internal = [bind]
+        if self.ir.iterate:
+            _, gens, post_conds, out_cols = recipe
+            for names, gcol in gens:
                 out = out.select("*", gcol)
-            else:
-                out = out.withColumn(name, gcol)
-        for c in post_conds:
-            out = out.where(c)
-        return out.select(*keep, *out_cols)
+                internal += names
+            for c in post_conds:
+                out = out.where(c)
+        else:
+            _, out_cols = recipe
+        out = out.select("*", *out_cols).drop(*[F.col(c) for c in internal])
+        return out.union(python_tier(bound.where(to_python).drop(F.col(bind))))
 
 
 _PLAN_CACHE: dict[tuple[str, tuple[str, ...]], Optional[NativePlan]] = {}

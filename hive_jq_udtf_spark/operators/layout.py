@@ -297,18 +297,26 @@ def global_cumsum(
             for c in sum_cols
         ],
     )
+    return _add_offsets(parted, offsets, sort_cols, sum_cols, prefix)
+
+
+def _add_offsets(
+    parted: DataFrame,
+    offsets: DataFrame,
+    sort_cols: list[str],
+    sum_cols: list[str],
+    prefix: str,
+) -> DataFrame:
+    """In-range running sums of ``parted`` plus each ``_range``'s
+    offset.  LEFT join: a recomputed _range absent from the totals
+    pass (possible only for uncached nondeterministic inputs) keeps
+    its rows with a NULL running sum, like global_ntile's NULL bucket,
+    instead of being dropped or silently offset by 0.
+    Deterministic/cached inputs produce identical rows either way."""
     w = Window.partitionBy("_range").orderBy(*sort_cols).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    # LEFT join + per-column coalesce (ADVICE r14): a recomputed
-    # _range absent from the totals pass (possible only for uncached
-    # nondeterministic inputs) keeps its rows at offset 0 instead of
-    # being silently dropped by an inner join.  Deterministic/cached
-    # inputs produce identical rows either way.
     out = parted.join(F.broadcast(offsets), "_range", "left")
     for c in sum_cols:
-        out = out.withColumn(
-            prefix + c,
-            F.sum(c).over(w) + F.coalesce(F.col(f"_off_{c}"), F.lit(0)),
-        )
+        out = out.withColumn(prefix + c, F.sum(c).over(w) + F.col(f"_off_{c}"))
     return out.drop("_range", *[f"_off_{c}" for c in sum_cols])

@@ -693,7 +693,8 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (edges both directions, so no dangling nodes), 10 iterations,
     d=0.85.  Each iteration is one join + one aggregation, both
     hash-partitioned on the node id; lineage truncated by
-    localCheckpoint every iteration (operators/pagerank.py).  The
+    localCheckpoint every second iteration (``checkpoint_every=2``,
+    operators/pagerank.py).  The
     oracle unrolls the identical 10 steps as chained CTEs."""
     from ..operators.pagerank import pagerank
 

@@ -359,9 +359,11 @@ def q_knn_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact5.join(ivf5, "qid", "left")
         .select(
             "qid",
-            F.coalesce(
-                F.size(F.array_intersect("e5", "i5")), F.lit(0)
-            ).alias("hits"),
+            # a qid with no IVF candidates has NULL i5; size(NULL) is
+            # -1 with ANSI off, so test for NULL instead of coalescing
+            F.when(F.col("i5").isNull(), F.lit(0))
+            .otherwise(F.size(F.array_intersect("e5", "i5")))
+            .alias("hits"),
         )
     )
     return hits.agg(

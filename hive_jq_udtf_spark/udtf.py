@@ -242,12 +242,10 @@ def jq_explode(
     column: str | Column,
     program: str,
     *decls: str,
-    alias: str = "jq",
     outer: bool = False,
     native: str = "auto",
     min_parallelism: int | None = None,
     extended: bool = False,
-    allow_duplicate_keys: bool = True,
 ) -> DataFrame:
     """LATERAL VIEW jq(...) equivalent: every input column is kept,
     generated columns appear flattened under their declared names
@@ -257,32 +255,32 @@ def jq_explode(
     (LATERAL VIEW OUTER), with NULL generated columns.
 
     native: "auto" compiles simple-path programs to pure Catalyst
-    expressions (no Python worker — SURVEY §4.2); "never" forces the
-    Python UDTF tier; "require" raises if the program can't compile
-    natively (for perf-critical pipelines that must stay JVM-side).
+    expressions (SURVEY §4.2); "never" forces the Python UDTF tier;
+    "require" raises if the program can't compile natively.  A native
+    plan carries one Python node, which only rows the variant parser
+    rejects although they are well-formed JSON reach — under Spark's
+    default conf, exactly the duplicate-key documents, which jq reads
+    last-occurrence-wins.  A session with
+    ``spark.sql.variant.allowDuplicateKeys=true`` parses those rows
+    itself, so the route cannot find them: "auto" then takes the
+    Python tier and "require" raises.  Nothing here changes a session
+    conf.  Both branches of a native plan evaluate ``df``, so persist
+    a nondeterministic input first.
 
     min_parallelism: repartition the input up to this many partitions
     BEFORE the (expensive, per-row) Python tier when the scan came in
     with fewer — e.g. a handful of unsplittable single-row-group
     files.  A real multi-file dataset already exceeds it, so this is
-    a no-op at scale; never applied to the native tier (pure codegen
-    needs no Python parallelism boost).
-
-    allow_duplicate_keys (default True): compiling a NATIVE plan sets
-    ``spark.sql.variant.allowDuplicateKeys=true`` on the DataFrame's
-    SparkSession so duplicate-key documents read last-occurrence-wins
-    like jq.  NOTE this is a SESSION-GLOBAL setting (ADVICE r12): it
-    cannot be scoped to the returned lazy plan, so it also changes
-    ``parse_json``/``try_parse_json``/variant behavior for every other
-    query in the session — duplicate-key documents that previously
-    parsed to NULL parse last-wins once any native jq plan compiles.
-    Pass ``allow_duplicate_keys=False`` to leave the session conf
-    untouched; duplicate-key documents then keep the documented
-    first-occurrence-text delta (the substitution coalesces back to
-    the raw text when the variant parse rejects the doc).
+    a no-op at scale; never applied to a native plan.
     """
     if native not in ("auto", "never", "require"):
         raise ValueError("native must be auto|never|require")
+
+    def python_tier(rows: DataFrame) -> DataFrame:
+        col = F.col(column) if isinstance(column, str) else column
+        arr = jq_array_udf(program, *decls, extended=extended)(col)
+        return rows.select("*", F.inline_outer(arr) if outer else F.inline(arr))
+
     if native != "never" and not extended:
         # extended declared types are a Python-tier feature: the native
         # compiler's schema parse rejects them, so auto would fall back
@@ -290,41 +288,26 @@ def jq_explode(
         from .native import compile_native
 
         plan = compile_native(program, tuple(decls))
+        conf = "spark.sql.variant.allowDuplicateKeys"
+        if plan is not None and (
+            df.sparkSession.conf.get(conf, "false").lower() == "true"
+        ):
+            if native == "require":
+                raise ValueError(
+                    f"jq program {program!r} cannot run natively while "
+                    f"{conf}=true: duplicate-key documents would parse "
+                    "instead of reaching the Python tier"
+                )
+            plan = None
         if plan is not None:
-            # jq parses duplicate-key objects last-occurrence-wins;
-            # Spark's variant parser REJECTS them by default
-            # (try_parse_json -> NULL, the pre-r12 silent-NULL delta
-            # class).  With this conf the variant keeps the last
-            # occurrence — exactly jq — and clean documents parse
-            # identically, so the setting is behavior-widening only.
-            # SESSION-GLOBAL (see the allow_duplicate_keys docstring
-            # note): the lazy plan reads the conf at execution time,
-            # so it cannot be restored after compile.  Opt out with
-            # allow_duplicate_keys=False.
-            if allow_duplicate_keys:
-                try:
-                    df.sparkSession.conf.set(
-                        "spark.sql.variant.allowDuplicateKeys", "true"
-                    )
-                except Exception:
-                    # older Spark without the conf: the dup-key
-                    # substitutions coalesce back to the raw text, so
-                    # the delta stays first-occurrence text, not NULL
-                    pass
-            return plan.apply(df, column, outer=outer)
+            return plan.apply(df, column, python_tier, outer=outer)
         if native == "require":
             raise ValueError(
                 f"jq program not compilable to native expressions: {program!r}"
             )
     if min_parallelism and df.rdd.getNumPartitions() < min_parallelism:
         df = df.repartition(min_parallelism)
-    col = F.col(column) if isinstance(column, str) else column
-    arr = jq_array_udf(program, *decls, extended=extended)(col)
-    gen = F.explode_outer(arr) if outer else F.explode(arr)
-    out = df.withColumn(alias, gen)
-    schema, _single = parse_output_schema(list(decls), extended=extended)
-    flat = [F.col(f"{alias}.{f.name}").alias(f.name) for f in schema.fields]
-    return out.select(*df.columns, *flat)
+    return python_tier(df)
 
 
 # ---------------------------------------------------------------------------

@@ -31,3 +31,52 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_PY_NODE_NAMES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "PythonUDTF",
+    "FlatMapGroupsInPandas",
+)
+
+
+def _children(node):
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _route_filter(node):
+    """The first Filter below ``node``; it must select the rows a
+    native plan routes to the Python tier (`native._python_rows`)."""
+    while node.nodeName() != "Filter":
+        kids = _children(node)
+        assert len(kids) == 1, f"no route Filter below {node.nodeName()}"
+        node = kids[0]
+    cond = node.condition().toString()
+    assert cond.startswith("CASE WHEN isnull(__jq_docbind"), cond
+    return node
+
+
+def collect_routed(df):
+    """Collect ``df`` and return ``(rows, sent)``, where ``sent`` is
+    how many rows its Python nodes received, asserting that every
+    Python node reads a Filter on the native tier's duplicate-key
+    route flag — a native jq plan's only Python node.  Must be the
+    first action on ``df``: plan metrics add up across actions."""
+    rows = df.collect()
+    sent, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _PY_NODE_NAMES:
+            f = _route_filter(_children(node)[0])
+            sent += f.metrics().apply("numOutputRows").value()
+            continue
+        stack.extend(_children(node))
+    return rows, sent

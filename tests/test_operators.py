@@ -1443,6 +1443,24 @@ def test_global_ntile_and_cumsum_match_naive_window(spark):
     assert global_ntile(empty, ["k", "id"], 7).count() == 0
 
 
+def test_global_cumsum_missing_range_offset_is_null(spark):
+    """A _range the totals pass never saw (an uncached
+    nondeterministic upstream) yields a NULL running sum, not a sum
+    silently offset by 0."""
+    from hive_jq_udtf_spark.operators.layout import _add_offsets
+
+    parted = spark.createDataFrame(
+        [(0, 1, 5), (0, 2, 6), (1, 3, 7), (1, 4, 8)],
+        "_range int, id long, c long",
+    )
+    offsets = spark.createDataFrame([(0, 0)], "_range int, _off_c long")
+    got = sorted(
+        (r.id, r.cum_c)
+        for r in _add_offsets(parted, offsets, ["id"], ["c"], "cum_").collect()
+    )
+    assert got == [(1, 5), (2, 11), (3, None), (4, None)]
+
+
 def test_label_propagation_two_cliques_converge(spark):
     # two triangles bridged by nothing: each converges to its smallest
     # node id as the community label
@@ -2319,3 +2337,26 @@ def test_ann_recall_vs_brute_force_baseline(spark):
         ann = {(r.query_id, r.neighbor_id) for r in fn(spark, sf).collect()}
         recall = len(ann & exact) / len(exact)
         assert recall >= bound, (name, recall)
+
+
+def test_knn_recall_ivf_matches_oracle_with_ansi_off(spark, sf_dir):
+    """knn_recall_ivf counts a query with no IVF candidates as 0 hits
+    under any ANSI setting: legacy size(NULL) is -1, so the hit count
+    must not depend on it."""
+    import duckdb
+
+    from hive_jq_udtf_spark.plans.queries import ORACLES, QUERIES
+
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = [tuple(r) for r in QUERIES["knn_recall_ivf"](spark, sf_dir).collect()]
+    finally:
+        spark.conf.set(key, prev)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    want = [tuple(r) for r in con.execute(ORACLES["knn_recall_ivf"]).fetchall()]
+    assert got == want
