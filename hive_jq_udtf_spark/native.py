@@ -33,21 +33,24 @@ NULL); unproven chains (``.a + .b``, ``.a + .b * 2``) fall back to
 the Python tier — compiling them numerically silently NULLed
 string results (r9 found the path-only ``+`` case, r10 closed the
 ``- * /``-as-anchor case).
-``tostring`` normalizes integral floats below 1e17 to integer text
-like jq (1.0 → "1", variant-type-gated so STRING "1.0" passes
-through), recursing into OBJECT/ARRAY text via a string-token-safe
-regex (r10); r11 closes the SCALAR scientific-notation class exactly
-(`_sci_python_text`: Jackson "1.0E20"/"1.5E-7"/"1.23456789E7" → jq
-"1e+20"/"1.5e-07"/"12345678.9") plus the nested subclass where both
-engines print scientific (e >= 17 / e <= -5); r12 closes the NESTED
-digit-shift class too (`_shift_rebuild`: marked tokens at e in
-[0,16] / e in [-4,-1] tokenize, shift positionally, and reassemble
-in pure codegen — "1.23456789E7" inside an object prints
-"12345678.9" like jq).  ``tojson`` /
-``@json`` / ``@text`` / ``@base64`` and ``keys_unsorted`` compile
-too (r10 scalar tier; r11 under ITERATES and as trailing bare
-``keys``/``keys_unsorted`` calls in the single-TYPE decl form):
-tojson quotes strings with Jackson escaping (the same
+Number text: this tier prints no number itself.  Strings, booleans,
+null and 64-bit integers read as text (a string-typed slot, or
+``tostring`` / ``tojson`` / ``@text`` / ``@json`` / ``@base64`` /
+interpolation / ``join`` / the ``ltrimstr``-``rtrimstr``
+pass-through) keep the raw text view, which already equals jq's
+text.  Three rules cover the rest:
+
+1. a row where such a value's ``schema_of_variant`` names DECIMAL,
+   DOUBLE or FLOAT — or a mixed array's elements do (`_number_text`)
+   — goes to the exact Python tier (`_number_text_rows`);
+2. computed numbers (arithmetic, ``length``, ``tonumber``/``floor``/
+   ``ceil``/``sqrt``/``fabs``, ``add``) and the order-dependent
+   ``sort``/``unique``/``max``/``min`` into a string-typed slot do not
+   compile (`_validate_new_specs`), so ``auto`` takes the Python tier;
+3. a numeric literal into a string slot is rendered once, at build
+   time, by the marshaller's own jq text (`_lit_col`).
+
+``tojson`` quotes strings with Jackson escaping (the same
 \\n/\\t/\\r/\\uXXXX shortcuts as jqlib's json.dumps), keys_unsorted
 reads json_object_keys over raw text for document order — under an
 iterate that raw text is the element's text twin.  DUPLICATE-KEY
@@ -84,6 +87,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .jqlib.parser import AST, parse
+from .marshal import _as_string
 from .schema import parse_output_schema
 
 # ---------------------------------------------------------------------------
@@ -643,17 +647,23 @@ def _strcat_col(parts, var_of) -> Column:
     return F.when(~poison, F.concat(*segs))
 
 
-def _apply_fnchain(c: Column, fns) -> Column:
+def _integral(d: Column, fn) -> Column:
+    """``floor``/``ceil`` of a double that stays a double: Spark's
+    FLOOR/CEIL return BIGINT and clamp at ±2^63, but a double with
+    |x| >= 2^52 is already integral (NaN and ±inf pass through too)."""
+    return F.when(F.abs(d) < F.lit(2.0**52), fn(d).cast("double")).otherwise(d)
+
+
+def _apply_fnchain(c: Column, fns, json_text: bool = False) -> Column:
     """Apply a whitelisted fn chain to a STRING-typed Column (the
-    get_json_object / from_json string view of the value).
-    ``is_num`` tracks whether the running value is a NUMBER (output
-    of tonumber/floor/ceil/sqrt/fabs) — tojson renders numbers bare
-    with integral normalization, strings quoted."""
+    get_json_object / from_json string view of the value).  A number
+    fn is never followed by a string fn here (`_validate_new_specs`).
+    ``json_text``: ``c`` is the JSON text of a non-string value that a
+    leading ltrimstr/rtrimstr passed through, which ``tojson`` prints
+    as is; otherwise ``tojson`` quotes a string."""
     import string as _string
 
-    is_num = False
     for name, args in fns:
-        is_num_next = name in _NUM_FNS
         if name == "ascii_downcase":
             # jq's ascii_* fold ONLY A-Z — translate, not lower()
             # (lower() would also fold unicode, a real semantic delta)
@@ -701,40 +711,21 @@ def _apply_fnchain(c: Column, fns) -> Column:
             c = F.coalesce(c, F.lit("null"))
         elif name == "tojson":
             # NON-leading tojson (leading is special-cased to the
-            # variant-gated _tojson_view): a NUMBER renders bare with
-            # the integral normalization (floor|tojson of 7.0 → "7");
-            # a string quotes; NULL after a numeric fn stays NULL
-            # (jq aborted upstream — the documented delta class)
-            if is_num:
-                d = c.try_cast("double")
-                intish = (
-                    d.isNotNull()
-                    & (d == F.floor(d))
-                    & (F.abs(d) < F.lit(1e17))
-                )
-                s = d.cast("string")
-                # r11: the cast prints Double.toString scientific
-                # form for |v| >= 1e7 / < 1e-3 — normalize to jq's
-                # float text like the leading views do
-                c = F.when(intish, d.cast("bigint").cast("string")).otherwise(
-                    F.when(s.rlike(_SCI_TOKEN_RE), _sci_python_text(s)).otherwise(s)
-                )
-            else:
-                c = _json_quote(c)
+            # variant-gated _tojson_view)
+            c = _tostring_view(c) if json_text else _json_quote(c)
         elif name == "tonumber":
             # try_cast: garbage strings are the documented NULL-delta
             # class (jq aborts the row); never an ANSI runtime crash
             c = c.try_cast("double")
         elif name == "floor":
-            c = F.floor(c.try_cast("double"))
+            c = _integral(c.try_cast("double"), F.floor)
         elif name == "ceil":
-            c = F.ceil(c.try_cast("double"))
+            c = _integral(c.try_cast("double"), F.ceil)
         elif name == "sqrt":
             c = F.sqrt(c.try_cast("double"))
         elif name == "fabs":
             c = F.abs(c.try_cast("double"))
-        is_num = is_num_next
-
+        json_text = json_text and name in ("ltrimstr", "rtrimstr")
     return c
 
 
@@ -1149,7 +1140,20 @@ def _compile_expr(ast: AST, num_path_col) -> Column:
     if op == "/":
         return lc.cast("double") / rc.cast("double")
     if op == "%":
-        return lc.cast("long") % rc.cast("long")
+        # jq truncates both operands toward zero (jqlib's int()) and
+        # keeps the dividend's sign, as Spark's remainder does.  A long
+        # holds an operand below 2^63 (try_cast truncates, and is NULL
+        # past that, where a cast fails with CAST_OVERFLOW); a larger
+        # one is an integral double that decimal(38,0) holds below
+        # 1e38, and the remainder then fits a long whenever one operand
+        # does.  Beyond that the result is NULL where jq keeps a value,
+        # and a zero divisor NULL where jq aborts.
+        ld, rd = lc.cast("double"), rc.cast("double")
+        ll, rl = ld.try_cast("long"), rd.try_cast("long")
+        wide = F.try_mod(ld.try_cast("decimal(38,0)"), rd.try_cast("decimal(38,0)"))
+        return F.when(ll.isNotNull() & rl.isNotNull(), F.try_mod(ll, rl)).otherwise(
+            wide.try_cast("long")
+        )
     raise AssertionError(op)
 
 
@@ -1559,52 +1563,77 @@ def _json_path(p: Path) -> str:
 # elimination), so each occurrence really evaluates per row.
 #
 # Fix: NativePlan.apply binds the parse ONCE per row in a one-element
-# explode (a Generate blocks alias re-inlining — the _pre_filter_recipe
-# idiom), and every builder that would re-derive it from the TOP-LEVEL
-# doc column references the bound struct field instead.  The rewrite is
-# IDENTITY-GATED: a builder's column is substituted only when its SQL
-# rendering equals the plan's doc column, so subtree texts and element
-# twins keep the inline computation — results are
-# expression-for-expression identical, just evaluated once.  The bound
-# variant also yields the per-row tier route (`_python_rows`).
-_DOC_BINDING: "contextvars.ContextVar[tuple[str, str] | None]"
-import contextvars
-
-_DOC_BINDING = contextvars.ContextVar("jq_doc_binding", default=None)
+# explode (a Generate blocks alias re-inlining) and hands the bound
+# variant ``dv`` to every builder, which reads it instead of re-parsing
+# the doc column.  The bound variant also yields the per-row tier route
+# (`_python_rows`).
 _BIND_COL = "__jq_docbind"
 
 
-def _doc_bound_field(col: Column, field: str) -> Optional[Column]:
-    b = _DOC_BINDING.get()
-    if b is None:
-        return None
-    try:
-        if col._jc.toString() == b[0]:
-            return F.col(b[1])[field]
-    except Exception:  # pragma: no cover - defensive (Connect etc.)
-        pass
-    return None
+def _number_text(v: Column, depth: int = 2) -> Column:
+    """Whether the raw text view of variant ``v`` may print a number
+    unlike jq: its schema names a non-integer number type.  A mixed
+    array's schema hides its element types (``[1.0, "a"]`` is
+    ``ARRAY<VARIANT>``), so a VARIANT in it looks ``depth`` levels
+    further into the elements, and counts as number text below that."""
+    s = F.schema_of_variant(v)
+    if depth == 0:
+        return s.rlike("DECIMAL|DOUBLE|FLOAT|VARIANT")
+    return s.rlike("DECIMAL|DOUBLE|FLOAT") | (
+        s.contains("VARIANT")
+        & F.exists(_elements(v), lambda e: _number_text(e, depth - 1))
+    )
 
 
-def _parse_doc(col: Column) -> Column:
-    """``try_parse_json`` with the doc-level bind-once substitution."""
-    bound = _doc_bound_field(col, "v")
-    return bound if bound is not None else F.try_parse_json(col)
+def _elements(v: Column) -> Column:
+    """The values ``.[]`` iterates in variant ``v``: an array's
+    elements or an object's values; NULL for anything else."""
+    return F.coalesce(
+        v.try_cast("array<variant>"),
+        F.map_values(v.try_cast("map<string,variant>")),
+    )
 
 
-def _python_rows(col: Column, bind: str) -> Column:
-    """Rows the exact Python tier must evaluate: well-formed JSON that
-    the variant parser rejects.  Under Spark's default
-    ``spark.sql.variant.allowDuplicateKeys=false`` that is exactly a
-    duplicate key at any depth, escape-spelled ones ("a" vs "\\u0061")
-    included — jq reads those last-occurrence-wins, get_json_object
-    reads the first.  Corrupt and NULL cells fail both parsers and stay
-    native.  Never NULL, so ``~`` selects the complement.  A CASE, not
-    an AND: the optimizer would push the doc-only conjunct below the
-    binding Generate and re-read every row's text."""
-    return F.when(
-        F.col(bind)["v"].isNull(), F.get_json_object(col, "$").isNotNull()
-    ).otherwise(F.lit(False))
+def _number_text_rows(v: Column, levels: list, paths: list) -> Column:
+    """Whether any value at ``paths`` that the plan reads as text holds
+    number text (`_number_text`).  ``levels`` are the paths to each
+    iterate (pre-path, then mid-paths) — empty for a scalar plan — and
+    ``paths`` are relative to the last iterated element; every element
+    counts, also those a filter or limit drops."""
+
+    def at(x: Column, p: Path) -> Column:
+        return F.try_variant_get(x, _json_path(p), "variant") if p else x
+
+    def check(x: Column, lvl: int) -> Column:
+        if lvl == len(levels):
+            c = F.lit(False)
+            for p in paths:
+                c = c | _number_text(at(x, p))
+            return c
+        return F.exists(_elements(at(x, levels[lvl])), lambda e: check(e, lvl + 1))
+
+    return F.coalesce(check(v, 0), F.lit(False))
+
+
+def _python_rows(col: Column, dv: Column, levels: list, paths: list) -> Column:
+    """Rows the exact Python tier must evaluate, over the bound variant
+    ``dv`` of doc column ``col``:
+
+    - well-formed JSON that the variant parser rejects.  Under Spark's
+      default ``spark.sql.variant.allowDuplicateKeys=false`` that is
+      exactly a duplicate key at any depth, escape-spelled ones ("a" vs
+      "\\u0061") included — jq reads those last-occurrence-wins,
+      get_json_object reads the first.  Corrupt and NULL cells fail
+      both parsers and stay native;
+    - a value the plan reads as text that holds number text
+      (`_number_text_rows`).
+
+    Never NULL, so ``~`` selects the complement.  A CASE, not an OR:
+    the optimizer would push the doc-only half below the binding
+    Generate and re-read every row's text."""
+    return F.when(dv.isNull(), F.get_json_object(col, "$").isNotNull()).otherwise(
+        _number_text_rows(dv, levels, paths) if paths else F.lit(False)
+    )
 
 
 def _num_at(col: Column, path: Path) -> Column:
@@ -1613,15 +1642,30 @@ def _num_at(col: Column, path: Path) -> Column:
 
 
 def _scalar_out_col(col: Column, path: Path, dt: T.DataType) -> Column:
-    """Plain-path output at the scalar tier: STRING-declared outputs
-    go through the variant-gated M2 normalization (`_m2_string_view`,
-    r10), everything else through `_cast_extracted`."""
-    jp = _json_path(path)
-    raw = F.get_json_object(col, jp)
+    """Plain-path output at the scalar tier (string slots read the raw
+    text view: rows whose value holds number text go to the Python
+    tier, `_python_rows`)."""
+    return _cast_extracted(F.get_json_object(col, _json_path(path)), dt)
+
+
+def _holds_text(dt: T.DataType) -> bool:
+    """Whether a declared type reads some JSON value as text: a string,
+    or an array/map/struct with a string inside."""
+    if isinstance(dt, T.ArrayType):
+        return _holds_text(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _holds_text(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_holds_text(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.StringType)
+
+
+def _lit_col(value: Any, dt: T.DataType) -> Column:
+    """A literal into a declared slot; a string slot holds the
+    marshaller's own text (jq's: 1.0 → "1", 1e20 → "1e+20")."""
     if isinstance(dt, T.StringType):
-        v = F.try_variant_get(_parse_doc(col), jp, "variant")
-        return _m2_gate(raw, _m2_string_view(raw, v))
-    return _cast_extracted(raw, dt)
+        return F.lit(None if value is None else _as_string(value)).cast(dt)
+    return F.lit(value).try_cast(dt)
 
 
 def _cast_extracted(raw: Column, dt: T.DataType) -> Column:
@@ -1789,10 +1833,10 @@ def _elem_out_col(c: Column, dt: T.DataType) -> Column:
     return c.try_cast(dt)
 
 
-def _scalar_map_col(json_col: Column, path: Path, dt: T.MapType) -> Column:
+def _scalar_map_col(dv: Column, path: Path, dt: T.MapType) -> Column:
     """Scalar-tier map-declared output: variant-gated M4 rule
     (object → map, null/missing → NULL, any other value → empty map)."""
-    vv = F.try_variant_get(_parse_doc(json_col), _json_path(path), "variant")
+    vv = F.try_variant_get(dv, _json_path(path), "variant")
     vt = F.schema_of_variant(vv)
     return (
         F.when(vv.isNull() | (vt == F.lit("VOID")), F.lit(None).cast(dt))
@@ -1856,360 +1900,10 @@ def _num_only_view(raw: Column, v: Column) -> Column:
     return F.when(isnum, raw)
 
 
-# Number-token canonicalization INSIDE composite (object/array) JSON
-# text, matching jqlib's recursive canonical_number (values.py): the
-# alternation's first branch consumes complete JSON string tokens
-# atomically (replaced by themselves via $1), so number tokens inside
-# strings are never rewritten; the second branch rewrites a float
-# token in a grammar-valid number position.  ≤16 integer digits keeps
-# the integral rewrite inside the scalar rule's <1e17 window
-# (bigger integral floats print scientific in jq — the documented
-# scientific-notation delta class, left untouched).
-_JSTR = r'("(?:[^"\\]|\\.)*")'
-_NUMEND = r"(?=[\s,}\]]|$)"  # chars that can follow a number token
-_CANON_INT_RE = _JSTR + r"|(-?\d{1,15})\.0+" + _NUMEND
-_CANON_TRIM_RE = _JSTR + r"|(-?\d{1,16}\.\d*[1-9])0+" + _NUMEND
-# jqlib prints -0.0 / -0 as "0" (values.py _canon_num via int());
-# the lookbehind keeps exponent tails ("1e-0") and digit runs intact
-_CANON_NEGZERO_RE = _JSTR + r"|(?<![eE\d.])-(0)" + _NUMEND
-# NOTE the {1,15}-digit bound on the integral rewrite: jqlib
-# normalizes through the DOUBLE value (json.loads), so a nested
-# "9999999999999999.0" prints as 10000000000000000 (the nearest
-# double) — a raw-text rewrite would keep the original digits.
-# <= 15 digits are always exactly representable; longer integral
-# floats keep their lexeme (the documented precision/scientific
-# delta class).  Jackson additionally re-prints parsed doubles
-# >= 1e7 in Double.toString scientific form inside composite text
-# ("1.23456789012345E14"), which a text rewrite cannot shift back —
-# NESTED integral floats >= 1e7 therefore keep the scientific form
-# where jqlib prints integer text (same documented class; SCALAR
-# values normalize exactly through the variant's double).
-
-
-# r11 (VERDICT r10 #7): NESTED scientific tokens whose jq form is
-# also scientific reformat in place — Jackson "1.5E300"/"2.0E-308"
-# → jq/Python "1.5e+300"/"2e-308".  Only the exponent ranges where
-# BOTH engines print scientific qualify: e >= 17 (every double with
-# e == 16 is integral — doubles >= 2^53 have no fraction — and jqlib
-# prints those as integer text, the documented shift class) and
-# e <= -5 (jq goes positional at e == -4).  The mantissa drops a
-# bare ".0" and keeps significant fractions; single-digit negative
-# exponents zero-pad ("e-07") like Python repr.  Tokens needing a
-# DIGIT SHIFT (e in [7,16] and e == -4: "1.23456789E7" → jq
-# "12345678.9") stay in Jackson form — regexp_replace cannot move a
-# decimal point by a captured amount; the SCALAR tier normalizes
-# those exactly via _sci_python_text.
-#
-# MECHANICS: the string-token-safe alternation only works with
-# captures-only replacements ("$1$2") — any literal text would also
-# be inserted where the string-token branch matched.  The rewrite
-# therefore goes through control-char MARKERS: pass 1 turns the "E"
-# of a qualifying token into \x01/\x02/\x03 (one per exponent
-# class); the cleanup passes then run WITHOUT the alternation —
-# safe, because re-serialized JSON text escapes control characters
-# as \uXXXX, so a raw marker can only be one this pass inserted
-# (string tokens collect a trailing marker from the alternation
-# branch; the final pass strips any marker not consumed by a
-# cleanup, and a string token is never directly followed by a digit
-# in valid JSON, so cleanups cannot misfire on them).
-# mantissa: one digit, optional significant fraction, then any
-# trailing zeros (Double.toString never emits them, but nested
-# BigDecimal re-prints preserve scale: "1.50E-7", "1.00E+22");
-# positive exponents may carry BigDecimal's explicit "+".
-# r13 (ADVICE r12 high): a LEFT BOUNDARY lookbehind — without it the
-# mantissa matched at an INTERIOR digit of a multi-digit-integer-part
-# token ("21.5E-1" matched at "1.5E-1", leaving the "2" behind →
-# silently wrong values), and the bare trailing-zero swallow ate
-# INTEGER-part zeros ("20E3" → mantissa "2", losing a power of ten).
-# The swallow is now conditional on a fraction actually preceding it
-# (bounded-length lookbehind — Java regex, used by rlike/
-# regexp_replace, supports it), so it only ever drops value-neutral
-# trailing FRACTION zeros.
-_SCI_MANT = r"(?<![\d.])(-?\d(?:\.\d*[1-9])?)(?:\.0+|(?<=\.\d{1,330})0+)?"
-_CANON_SCI_POS_RE = (
-    _JSTR + "|" + _SCI_MANT + r"E\+?(1[7-9]|[2-9]\d|[1-9]\d{2})" + _NUMEND
-)
-_CANON_SCI_NEG1_RE = _JSTR + "|" + _SCI_MANT + r"E-([5-9])" + _NUMEND
-_CANON_SCI_NEG2_RE = _JSTR + "|" + _SCI_MANT + r"E-([1-9]\d{1,2})" + _NUMEND
-
-# r12 (VERDICT r11 #4): NESTED tokens needing a DIGIT SHIFT — the
-# exponent ranges where jq prints POSITIONAL text (0 <= e <= 16,
-# -4 <= e <= -1; Jackson/Spark's to_json emits scientific from e >= 7
-# and e <= -4, user-written docs can carry any of them).
-# regexp_replace cannot move a decimal point by a captured amount, so
-# these rewrite through the same marker trick (\x04 non-negative
-# exponent, \x05 negative) and then a tokenize → per-token transform
-# → reassemble pass (`_shift_rebuild`) — still pure codegen, and the
-# rebuild only evaluates on rows that actually carry a marked token.
-#
-# r13 (ADVICE r12 high): the shift class is GENERALIZED.  The
-# mantissa now admits a MULTI-DIGIT integer part (JSON-valid, so it
-# starts [1-9]; capped at 17 digits — beyond double precision the
-# token stays raw, the documented ≥18-significant-digit class) and a
-# lowercase exponent marker, and the written exponent may be any 1–2
-# digit value: the REBUILD computes the true decimal exponent
-# t = e + len(intpart) − 1 per token and picks the jq output form
-# (positional 0 ≤ t ≤ 16, leading-zero positional −4 ≤ t ≤ −1, or
-# jq/Python scientific otherwise — with k ≤ 17 and e ≤ 99, |t| ≤ 115
-# never overflows a double's exponent range).  This makes formerly
-# mis-shifted user tokens ("21.5E-1" → 2.15, "20E3" → 20000,
-# "-31.5E-2" → -0.315) EXACT, and is idempotent on this module's own
-# lowercase outputs ("1.5e+20" re-marks and rebuilds to itself).
-# Remaining residuals: zero integer-part scientific ("0.5E3") and
-# 3-digit exponents on multi-digit-intpart or lowercase tokens pass
-# through raw (formatting-only); mantissas with ≥18 significant
-# digits shift with ALL their digits kept ("1.23456789012345678E5"
-# → "123456.789012345678" where jq rounds through the double to
-# "123456.78901234567") — the documented digit-precision class, a
-# text rewrite cannot round through the double.
-_SHIFT_MANT = (
-    r"(?<![\d.])(-?[1-9]\d{0,16}(?:\.\d*[1-9])?)"
-    r"(?:\.0+|(?<=\.\d{1,330})0+)?"
-)
-_CANON_SHIFT_POS_RE = _JSTR + "|" + _SHIFT_MANT + r"[eE]\+?(\d{1,2})" + _NUMEND
-_CANON_SHIFT_NEG_RE = _JSTR + "|" + _SHIFT_MANT + r"[eE]-(\d{1,2})" + _NUMEND
-_SHIFT_TOK_RE = "-?[1-9]\\d{0,16}(?:\\.\\d+)?[\x04\x05]\\d{1,2}"
-
-
-def _shift_rebuild(c: Column) -> Column:
-    """Reassemble composite text whose digit-shift tokens were marked:
-    split on the marked-token shape, transform each token by actually
-    shifting the decimal point (integral results print as integer
-    text, like jqlib's canonical_number), and interleave the pieces
-    back.  Stray markers (the alternation appends one after every
-    string token) never match the token shape — a digit must
-    immediately precede the marker — and are stripped by the caller's
-    final cleanup pass."""
-    parts = F.split(c, _SHIFT_TOK_RE)
-    toks = F.regexp_extract_all(c, F.lit(_SHIFT_TOK_RE), F.lit(0))
-
-    def shift(t: Column) -> Column:
-        sign = F.when(t.startswith("-"), F.lit("-")).otherwise(F.lit(""))
-        ipart = F.regexp_extract(t, r"^-?(\d+)", 1)
-        fr = F.regexp_extract(t, r"\.(\d+)", 1)
-        digits = F.concat(ipart, fr)
-        e = F.regexp_extract(t, "[\x04\x05](\\d+)$", 1).try_cast("int")
-        # true decimal exponent: value = 0.digits × 10^(td+1), i.e.
-        # first significant digit sits at decimal position td
-        # (digits never start with 0 — the mantissa regex is [1-9]-led)
-        td = F.when(t.rlike("\x05"), F.length(ipart) - 1 - e).otherwise(
-            F.length(ipart) - 1 + e
-        )
-        # positional, 0 <= td <= 16 (jq prints integral doubles < 1e17
-        # as integer text; trailing fraction zeros are insignificant)
-        pad = F.repeat(
-            F.lit("0"), F.greatest(td + F.lit(1) - F.length(digits), F.lit(0))
-        )
-        dp = F.concat(digits, pad)
-        ip = dp.substr(F.lit(1), td + F.lit(1))
-        fp = F.regexp_replace(
-            dp.substr(td + F.lit(2), F.lit(400)), "0+$", ""
-        )
-        pos = F.when(fp == F.lit(""), F.concat(sign, ip)).otherwise(
-            F.concat(sign, ip, F.lit("."), fp)
-        )
-        # leading-zero positional, -4 <= td <= -1
-        stripped = F.regexp_replace(digits, "0+$", "")
-        neg = F.concat(
-            sign, F.lit("0."), F.repeat(F.lit("0"), -td - F.lit(1)), stripped
-        )
-        # both-scientific regime (td >= 17 or td <= -5): jq/Python text
-        rest = stripped.substr(F.lit(2), F.lit(400))
-        mant = F.when(
-            rest == F.lit(""), F.concat(sign, stripped.substr(1, 1))
-        ).otherwise(
-            F.concat(sign, stripped.substr(1, 1), F.lit("."), rest)
-        )
-        esig = F.when(td < 0, F.lit("-")).otherwise(F.lit("+"))
-        # r14 (ADVICE r13 medium): NO lpad — Spark's lpad TRUNCATES
-        # strings longer than the target length (the module's own
-        # _sci_python_text note), and the r13-generalized mantissa
-        # lets |td| reach 3 digits ("12E99" → td=100), which lpad
-        # silently rendered as "1.2e+10".  Pad conditionally instead.
-        tdabs = F.abs(td).cast("string")
-        tdpad = F.when(
-            F.length(tdabs) < 2, F.concat(F.lit("0"), tdabs)
-        ).otherwise(tdabs)
-        sci = F.concat(mant, F.lit("e"), esig, tdpad)
-        return F.when((td >= 0) & (td <= 16), pos).otherwise(
-            F.when((td >= -4) & (td < 0), neg).otherwise(sci)
-        )
-
-    head = F.zip_with(
-        F.slice(parts, F.lit(1), F.size(toks)),
-        F.transform(toks, shift),
-        lambda p, t: F.concat(p, t),
-    )
-    return F.concat(F.array_join(head, ""), F.element_at(parts, F.lit(-1)))
-
-
-def _canon_composite_text(raw: Column) -> Column:
-    c = F.regexp_replace(raw, _CANON_INT_RE, "$1$2")
-    c = F.regexp_replace(c, _CANON_TRIM_RE, "$1$2")
-    c = F.regexp_replace(c, _CANON_NEGZERO_RE, "$1$2")
-    c = F.regexp_replace(c, _CANON_SCI_POS_RE, "$1$2\x01$3")
-    c = F.regexp_replace(c, _CANON_SCI_NEG1_RE, "$1$2\x02$3")
-    c = F.regexp_replace(c, _CANON_SCI_NEG2_RE, "$1$2\x03$3")
-    c = F.regexp_replace(c, "\x01(\\d+)", "e+$1")
-    c = F.regexp_replace(c, "\x02(\\d)", "e-0$1")
-    c = F.regexp_replace(c, "\x03(\\d+)", "e-$1")
-    c = F.regexp_replace(c, _CANON_SHIFT_POS_RE, "$1$2\x04$3")
-    c = F.regexp_replace(c, _CANON_SHIFT_NEG_RE, "$1$2\x05$3")
-    c = F.when(c.rlike("\\d[\x04\x05]"), _shift_rebuild(c)).otherwise(c)
-    return F.regexp_replace(c, "[\x01\x02\x03\x04\x05]", "")
-
-
-# SCALAR scientific-token normalization (r11, VERDICT r10 #7): a
-# Jackson Double.toString / BigDecimal science-form token → the exact
-# jq/Python float text.  Jackson prints scientific for |value| >= 1e7
-# or < 1e-3 while jq/Python switch at >= 1e16 / < 1e-4, so the
-# conversion has three regimes (exponent from the token itself):
-#   e >= 17 or e <= -5 → both scientific: trim the mantissa's bare
-#     ".0", exponent always signed and >= 2 digits ("1e+20",
-#     "1.5e-07", "2e-308");
-#   7 <= e <= 16      → jq positional: shift the digits ("1.23456789E7"
-#     → "12345678.9"); values here with e == 16 are integral doubles
-#     and never reach this view (the intish branch precedes it);
-#   e == -4           → jq positional small: "1.5E-4" → "0.00015".
-# Pure Column expressions — regexp_extract + substr arithmetic.
-#
-# Residual DIGIT-level delta (not formatting): JDK 17's
-# Double.toString emits non-shortest digits for a ~0.1% sliver of
-# doubles — measured by a 60k random-bit fuzz: 63 hits, all integral
-# values in |v| ∈ [1e17, 1e19) ("1.70338826681018035E18" where
-# Python prints '1.7033882668101804e+18') plus deep subnormals
-# (5e-324 → "4.9E-324") — JDK-4511638, fixed in JDK 19+.  The digits
-# themselves differ there, beyond any text transform's reach.
-# exponent may carry BigDecimal's explicit "+" (DECIMAL-typed
-# variants re-print through BigDecimal: "1.00E+22"); int cast
-# accepts the sign
-_SCI_TOKEN_RE = r"^-?\d\.\d+E[+-]?\d+$"
-_SCI_PARTS_RE = r"^(-?)(\d)\.(\d+)E([+-]?\d+)$"
-
-
-def _sci_python_text(raw: Column) -> Column:
-    sign = F.regexp_extract(raw, _SCI_PARTS_RE, 1)
-    d = F.regexp_extract(raw, _SCI_PARTS_RE, 2)
-    fr = F.regexp_replace(
-        F.regexp_extract(raw, _SCI_PARTS_RE, 3), "0+$", ""
-    )
-    e = F.regexp_extract(raw, _SCI_PARTS_RE, 4).cast("int")
-    digits = F.concat(d, fr)
-    mant = F.when(fr == F.lit(""), d).otherwise(
-        F.concat(d, F.lit("."), fr)
-    )
-    esign = F.when(e < 0, F.lit("-")).otherwise(F.lit("+"))
-    # NOTE no lpad: Spark's lpad TRUNCATES to the target length, so a
-    # 3-digit exponent would lose its last digit — pad conditionally
-    eabs = F.abs(e).cast("string")
-    epad = F.when(
-        F.length(eabs) < 2, F.concat(F.lit("0"), eabs)
-    ).otherwise(eabs)
-    sci = F.concat(sign, mant, F.lit("e"), esign, epad)
-    # positional expansion: pad digits out to the decimal point, then
-    # split (defensive "0" fraction keeps the shape for integral-ish
-    # inputs, though intish catches those upstream)
-    pad = F.repeat(
-        F.lit("0"), F.greatest(e + F.lit(1) - F.length(digits), F.lit(0))
-    )
-    digits_p = F.concat(digits, pad)
-    ipart = digits_p.substr(F.lit(1), e + F.lit(1))
-    fpart0 = digits_p.substr(e + F.lit(2), F.lit(330))
-    fpart = F.when(fpart0 == F.lit(""), F.lit("0")).otherwise(fpart0)
-    pos_big = F.concat(sign, ipart, F.lit("."), fpart)
-    pos_small = F.concat(sign, F.lit("0.000"), digits)
-    return (
-        F.when((e >= 17) | (e <= -5), sci)
-        .when(e >= 7, pos_big)
-        .when(e == F.lit(-4), pos_small)
-        .otherwise(raw)
-    )
-
-
-def _tostring_view(raw: Column, v: Column) -> Column:
-    """jq ``tostring`` of the value at a path: the raw text view with
-    NUMBER normalization matching jqlib — integral floats below 1e17
-    print without the fraction (1.0 → "1", 1e2 → "100", -0.0 → "0";
-    values.py::_canon_num).  The variant supplies the exact JSON type
-    so a STRING "1.0" is never normalized (r9 fix: the bare text view
-    emitted "1.0" where jq prints "1" — a live auto-mode divergence).
-    Composite values (OBJECT/ARRAY) canonicalize their NESTED number
-    tokens too (r10 fix: ``"p-\\(.v)"`` on ``{"v":{"x":1.0}}`` emitted
-    'p-{"x":1.0}' where jq prints 'p-{"x":1}').  r11 closes the
-    scalar scientific-notation class exactly (``_sci_python_text``:
-    "1.0E20" → "1e+20", "1.23456789E7" → "12345678.9", "1.5E-4" →
-    "0.00015") and the nested both-engines-scientific subclass
-    (e >= 17 / e <= -5 reformat in `_canon_composite_text`); residual
-    documented delta: NESTED tokens needing a digit shift (Jackson
-    scientific, jq positional/integer — e in [7,16], e == -4) keep
-    the Jackson form."""
-    vt = F.schema_of_variant(v)
-    num = F.try_variant_get(v, "$", "double")
-    isnum = (vt == F.lit("DOUBLE")) | vt.startswith("DECIMAL")
-    intish = (
-        isnum
-        & num.isNotNull()
-        & (num == F.floor(num))
-        & (F.abs(num) < F.lit(1e17))
-    )
-    issci = isnum & raw.rlike(_SCI_TOKEN_RE)
-    iscomp = vt.startswith("ARRAY") | vt.startswith("OBJECT")
-    return (
-        F.when(intish, num.cast("bigint").cast("string"))
-        .when(issci, _sci_python_text(raw))
-        .when(iscomp, _canon_composite_text(raw))
-        .otherwise(F.coalesce(raw, F.lit("null")))
-    )
-
-
-# texts that may need M2 normalization: an integral-float lexeme, a
-# Double.toString SCIENTIFIC form (Jackson re-prints parsed doubles
-# >= 1e7 as "1.23456789012345E14" — the variant path turns integral
-# ones back into integer text like jqlib), or a composite (which may
-# hold nested float tokens).  Everything else (ordinary strings,
-# integers, bools, plain non-integral decimals) passes through
-# without touching the variant — the when() short-circuits the parse
-# per row
-_M2_SUSPECT_RE = r"^-?[0-9]{1,17}\.0+$|^-?[0-9](\.[0-9]+)?E[+-]?[0-9]{1,3}$"
-
-
-def _m2_gate(raw: Column, view: Column) -> Column:
-    suspect = (
-        raw.rlike(_M2_SUSPECT_RE)
-        | raw.startswith("[")
-        | raw.startswith("{")
-    )
-    return F.when(raw.isNull() | ~suspect, raw).otherwise(view)
-
-
-def _m2_string_view(raw: Column, v: Column) -> Column:
-    """M2 stringify of a plain-path value for a STRING-declared
-    output: strings pass through, numbers normalize like jqlib's
-    tojson (marshal.py::_as_string — integral floats print without
-    the fraction), composites canonicalize their nested number
-    tokens; null/missing stays NULL (M2 maps missing → NULL, unlike
-    tostring's "null").  r10 deep-fuzz find: the bare text view
-    emitted "1.0" / '{"k":1.0}' where the Python tier prints "1" /
-    '{"k":1}' — the r9 tostring-normalization class on the M2
-    route.  r11: scalar scientific tokens normalize exactly
-    (_sci_python_text), same as _tostring_view."""
-    vt = F.schema_of_variant(v)
-    num = F.try_variant_get(v, "$", "double")
-    isnum = (vt == F.lit("DOUBLE")) | vt.startswith("DECIMAL")
-    intish = (
-        isnum
-        & num.isNotNull()
-        & (num == F.floor(num))
-        & (F.abs(num) < F.lit(1e17))
-    )
-    issci = isnum & raw.rlike(_SCI_TOKEN_RE)
-    iscomp = vt.startswith("ARRAY") | vt.startswith("OBJECT")
-    return (
-        F.when(intish, num.cast("bigint").cast("string"))
-        .when(issci, _sci_python_text(raw))
-        .when(iscomp, _canon_composite_text(raw))
-        .otherwise(raw)
-    )
+def _tostring_view(raw: Column) -> Column:
+    """jq ``tostring`` of the value at a path: the raw text view, with
+    null/missing as "null".  Number text never reaches it (`_python_rows`)."""
+    return F.coalesce(raw, F.lit("null"))
 
 
 def _json_quote(c: Column) -> Column:
@@ -2231,33 +1925,22 @@ def _b64_view(c: Column) -> Column:
 
 def _tojson_view(raw: Column, v: Column) -> Column:
     """jq ``tojson`` / ``@json`` rendering of the value: like
-    `_tostring_view` but STRINGS come back QUOTED with JSON escaping.
-    The escaping rides Jackson: ``to_json(struct(s))`` emits
-    ``{"s":"<escaped>"}`` and the wrapper is stripped — codegen-only,
-    handles quotes/backslashes/control chars exactly like jqlib's
-    json.dumps (both use the \\n/\\t/\\r/\\uXXXX shortcuts and leave
-    non-ASCII unescaped)."""
-    vt = F.schema_of_variant(v)
-    s = F.try_variant_get(v, "$", "string")
-    js = F.to_json(F.struct(s.alias("s")))
-    quoted = js.substr(F.lit(6), F.length(js) - 6)
-    num = F.try_variant_get(v, "$", "double")
-    isnum = (vt == F.lit("DOUBLE")) | vt.startswith("DECIMAL")
-    intish = (
-        isnum
-        & num.isNotNull()
-        & (num == F.floor(num))
-        & (F.abs(num) < F.lit(1e17))
-    )
-    issci = isnum & raw.rlike(_SCI_TOKEN_RE)
-    iscomp = vt.startswith("ARRAY") | vt.startswith("OBJECT")
-    return (
-        F.when(vt == F.lit("STRING"), quoted)
-        .when(intish, num.cast("bigint").cast("string"))
-        .when(issci, _sci_python_text(raw))
-        .when(iscomp, _canon_composite_text(raw))
-        .otherwise(F.coalesce(raw, F.lit("null")))
-    )
+    `_tostring_view` but STRINGS come back QUOTED with JSON escaping
+    (`_json_quote`, read from the variant's string value)."""
+    return F.when(
+        F.schema_of_variant(v) == F.lit("STRING"),
+        _json_quote(F.try_variant_get(v, "$", "string")),
+    ).otherwise(_tostring_view(raw))
+
+
+def _interp_view(kind: str, raw: Column, v: Column) -> Column:
+    """One interpolated value of a string interpolation part list
+    (`_as_strinterp`): tostring, tojson for @json, or base64 of
+    tostring for @base64."""
+    if kind == "pathjson":
+        return _tojson_view(raw, v)
+    view = _tostring_view(raw)
+    return _b64_view(view) if kind == "pathb64" else view
 
 
 def _keys_unsorted_col(raw: Column, v: Column) -> Column:
@@ -2318,60 +2001,19 @@ def _nav_step(c: Column, s) -> Column:
     return c.getField(s)
 
 
-def _filter_col(json_col: Column, f: Filter) -> Column:
-    if f.fn == "length":
-        # jq length of the path's value vs a numeric literal; length
-        # of null/missing is 0 (jq), booleans (jq error) take the
-        # NULL→false delta like every native-tier abort class
-        jp = _json_path(f.lhs) if f.lhs else "$"
-        v = F.try_variant_get(_parse_doc(json_col), jp, "variant")
-        return F.coalesce(
-            _CMP_FN[f.op](_variant_length(v), F.lit(float(f.lit))),
-            F.lit(False),
-        )
+def _filter_col(json_col: Column, dv: Column, f: Filter) -> Column:
+    """One select() leaf at the scalar tier: expression filters read
+    doubles from the text view, every other leaf reads the value's
+    exact-typed variant from the bound document ``dv``
+    (`_variant_leaf_filter`)."""
     if f.lhs_expr is not None:
         c = _compile_expr(
             f.lhs_expr,
             lambda p: _num_at(json_col, f.lhs + p),
         )
         return _cmp_with_null_order(c, f.op, f.lit)
-    if f.op == "truthy":
-        # exact JSON type via the variant reader (same technique as the
-        # `//` projection below): get_json_object strips quotes, so the
-        # STRING "false" would otherwise be confused with boolean false
-        v = F.try_variant_get(
-            _parse_doc(json_col), _json_path(f.lhs), "variant"
-        )
-        return _variant_truthy(v)
-    if f.op in ("not_truthy", "has"):
-        v = F.try_variant_get(
-            _parse_doc(json_col), _json_path(f.lhs), "variant"
-        )
-        if f.op == "not_truthy":
-            return ~_variant_truthy(v)
-        return _variant_has(v, f.lit)
-    if f.op in _STR_PREDS:
-        # gate on the exact JSON type: get_json_object's text view
-        # would serialize arrays/objects/numbers and substring-match
-        # the serialization (".tags | test(..)" on an array must be
-        # the null→false delta, not a match against '["..."]')
-        v = F.try_variant_get(
-            _parse_doc(json_col), _json_path(f.lhs), "variant"
-        )
-        return _string_pred_col(_variant_string_only(v), f.op, f.lit)
-    if f.lit is None:
-        # `== null` is true for both JSON null and missing (jq), read
-        # from the exact-typed variant (corrupt docs are NULL)
-        v = F.try_variant_get(
-            _parse_doc(json_col), _json_path(f.lhs), "variant"
-        )
-        is_null = v.isNull() | (F.schema_of_variant(v) == F.lit("VOID"))
-        return is_null if f.op == "==" else ~is_null
-    # exact jq total-order comparison (null/missing and cross-type
-    # values compare DEFINED, per the type ranking) via the variant
-    # reader — the text view cannot type its value
-    v = F.try_variant_get(_parse_doc(json_col), _json_path(f.lhs), "variant")
-    return _variant_cmp(v, f.op, f.lit)
+    v = F.try_variant_get(dv, _json_path(f.lhs), "variant")
+    return _variant_leaf_filter(v, f)
 
 
 _CMP_FN = {
@@ -2391,160 +2033,19 @@ def _cmp_with_null_order(c: Column, op: str, lit: Any) -> Column:
 
 
 def _struct_filter_col(struct_col: Column, f: Filter) -> Column:
-    if f.fn == "length":
-        # element schema types length-filter paths VARIANT
+    """One select() leaf on an iterated element: the element schema
+    types every non-expression filter path VARIANT (`_elem_schema`), so
+    the leaf reads the exact JSON type like the scalar tier."""
+    def nav(p: Path) -> Column:
         c = struct_col
-        for s in f.lhs:
+        for s in p:
             c = _nav_step(c, s)
-        return F.coalesce(
-            _CMP_FN[f.op](_variant_length(c), F.lit(float(f.lit))),
-            F.lit(False),
-        )
+        return c
+
     if f.lhs_expr is not None:
-        def nav(p, _f=f):
-            c = struct_col
-            for s in _f.lhs + p:
-                c = _nav_step(c, s)
-            return c.try_cast("double")
-
-        return _cmp_with_null_order(_compile_expr(f.lhs_expr, nav), f.op, f.lit)
-    c = struct_col
-    for s in f.lhs:
-        c = _nav_step(c, s)
-    if f.op == "truthy":
-        # the element schema types truthy-filter paths as VARIANT
-        # (_elem_schema), so the exact JSON type is available here;
-        # comparing a STRING-typed view to lit(False) would ANSI-crash
-        # on truthy strings like "hello"
-        return _variant_truthy(c)
-    if f.op in ("not_truthy", "has"):
-        # element schema types these paths VARIANT (same else branch
-        # as truthy/comparisons in _elem_schema)
-        return ~_variant_truthy(c) if f.op == "not_truthy" else _variant_has(c, f.lit)
-    if f.op in _STR_PREDS:
-        # element schema types strpred paths VARIANT so the non-string
-        # gate is decidable here (a StringType element field would
-        # capture the raw JSON serialization of arrays/objects)
-        return _string_pred_col(_variant_string_only(c), f.op, f.lit)
-    # the element schema types every plain comparison-filter path
-    # VARIANT (exact jq total order incl. null/missing and cross-type
-    # values — see _variant_cmp)
-    if f.lit is None:
-        vt = F.schema_of_variant(c)
-        is_null = c.isNull() | (vt == F.lit("VOID"))
-        return is_null if f.op == "==" else ~is_null
-    return _variant_cmp(c, f.op, f.lit)
-
-
-def _leaf_needs_variant(f: Filter) -> bool:
-    """Whether _filter_col would route this leaf through the variant
-    reader (exact JSON type needed): jq truthiness, has(), and plain
-    comparisons with a non-null literal (jq total order)."""
-    if f.lhs_expr is not None:
-        return False
-    if f.fn == "length":
-        return True
-    if f.op in ("truthy", "not_truthy", "has"):
-        return True
-    if f.op in _STR_PREDS:
-        return False
-    return f.lit is not None
-
-
-def _group_all_variant(item) -> bool:
-    fs = item.filters if isinstance(item, OrGroup) else [item]
-    return all(_leaf_needs_variant(f) for f in fs)
-
-
-def _variant_paths_schema(groups) -> Optional[T.StructType]:
-    """from_json schema typing every leaf path of the given filter
-    groups as VARIANT.  Returns None when the paths can't be laid out
-    in one struct (int steps, whole-document filters, or a leaf/struct
-    prefix conflict) — callers fall back to per-leaf evaluation."""
-    needed: dict = {}
-
-    def add(path) -> bool:
-        if not path or not all(isinstance(s, str) for s in path):
-            return False
-        cur = needed
-        for s in path[:-1]:
-            nxt = cur.setdefault(s, {})
-            if not isinstance(nxt, dict):
-                return False
-            cur = nxt
-        if isinstance(cur.get(path[-1]), dict):
-            return False
-        cur[path[-1]] = T.VariantType()
-        return True
-
-    for g in groups:
-        for f in g.filters if isinstance(g, OrGroup) else [g]:
-            if not add(tuple(f.lhs)):
-                return None
-
-    def to_struct(d) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField(k, to_struct(v) if isinstance(v, dict) else v)
-                for k, v in d.items()
-            ]
-        )
-
-    return to_struct(needed)
-
-
-def _pre_filter_recipe(
-    col: Column, pre_filters
-) -> tuple[list[Column], Optional[Column], list[Column]]:
-    """Build the select()-filter conditions that precede any iterate,
-    as a replayable recipe (r14 opt: all Column construction is cached
-    per (context, column, outer) in NativePlan.apply — building these
-    trees costs hundreds of py4j round trips, replaying them on a
-    DataFrame costs a handful).
-
-    Variant-needing groups are evaluated against ONE from_json parse
-    routed through a one-element explode: FilterExec has no
-    subexpression elimination and Catalyst's predicate pushdown
-    re-inlines projected aliases into the condition, so a naive
-    `withColumn(parse) → where` re-parses the JSON once per leaf
-    (measured 7× parseJson per row on a two-leaf and/or condition).
-    A Generate blocks pushdown of conditions on its output, pinning
-    the single parse below the filter."""
-    var_groups = [f for f in pre_filters if _group_all_variant(f)]
-    text_groups = [f for f in pre_filters if not _group_all_variant(f)]
-    text_conds = [
-        _cond_col(f, lambda ff: _filter_col(col, ff)) for f in text_groups
-    ]
-    if not var_groups:
-        return (text_conds, None, [])
-    schema = _variant_paths_schema(var_groups)
-    if schema is None:
-        text_conds += [
-            _cond_col(f, lambda ff: _filter_col(col, ff)) for f in var_groups
-        ]
-        return (text_conds, None, [])
-    pc = F.col("__jq_prefilter")
-    var_gen = F.explode(F.array(F.from_json(col, schema)))
-    var_conds = [
-        _cond_col(f, lambda ff: _struct_filter_col(pc, ff))
-        for f in var_groups
-    ]
-    return (text_conds, var_gen, var_conds)
-
-
-def _run_pre_filters(df: DataFrame, recipe) -> DataFrame:
-    """Replay a _pre_filter_recipe on a real DataFrame (same op order
-    as the pre-r14 inline version: text wheres, then the one-parse
-    Generate + variant wheres, then the parse column dropped)."""
-    text_conds, var_gen, var_conds = recipe
-    for c in text_conds:
-        df = df.where(c)
-    if var_gen is None:
-        return df
-    df = df.select("*", var_gen.alias("__jq_prefilter"))
-    for c in var_conds:
-        df = df.where(c)
-    return df.drop(F.col("__jq_prefilter"))
+        c = _compile_expr(f.lhs_expr, lambda p: nav(f.lhs + p).try_cast("double"))
+        return _cmp_with_null_order(c, f.op, f.lit)
+    return _variant_leaf_filter(nav(f.lhs), f)
 
 
 def _java_quote(s: str) -> str:
@@ -2566,7 +2067,7 @@ def _slice_idx(idx, n: Column, default: Column) -> Column:
 
 
 def _slice_col(
-    json_col: Column, path: Path, lo, hi, out_dt: T.DataType
+    json_col: Column, dv: Column, path: Path, lo, hi, out_dt: T.DataType
 ) -> Column:
     """jq ``.path[lo:hi]`` at the scalar tier (r13 growth, VERDICT r12
     #5).  Exact-typed variant gate: ARRAY values slice under an ARRAY
@@ -2578,7 +2079,7 @@ def _slice_col(
     objects and slices the type the decl didn't ask for, the
     documented NULL-delta class."""
     v = F.try_variant_get(
-        _parse_doc(json_col), _json_path(path), "variant"
+        dv, _json_path(path), "variant"
     )
     vt = F.schema_of_variant(v)
     if isinstance(out_dt, T.ArrayType):
@@ -2693,6 +2194,21 @@ def _validate_new_specs(project: Optional[dict], schema: T.StructType) -> None:
         dt = types.get(name)
         if dt is None:
             continue
+        if _holds_text(dt) and (
+            # computed numbers and the order-dependent array fns into a
+            # string slot: only jqlib prints and orders those exactly
+            (spec[0] == "expr" and _expr_kind(spec[1]) == "num")
+            or spec[0] == "length"
+            or (spec[0] == "arrayfn" and spec[2] in ("max", "min", "sort", "unique"))
+            or (spec[0] == "fnchain" and spec[2][-1][0] in _NUM_FNS)
+        ):
+            raise _SchemaConflict(spec)
+        if spec[0] == "fnchain" and any(
+            a in _NUM_FNS and b not in _NUM_FNS
+            for (a, _), (b, _) in zip(spec[2], spec[2][1:])
+        ):
+            # a string fn over a computed number (tonumber | tojson)
+            raise _SchemaConflict(spec)
         if spec[0] in ("strcat", "strinterp") and not isinstance(dt, T.StringType):
             # concat/interpolation results are strings; numeric
             # declared targets would need Jackson-lenient coercion —
@@ -2781,12 +2297,10 @@ class NativePlan:
         self._build_lock = threading.Lock()
 
     # -- scalar (no explode) path --------------------------------------
-    def _build_scalar(self, col: Column) -> tuple:
-        """Build the scalar-path recipe: (pre_filter_recipe, out_cols).
-        Pure Column construction — no DataFrame access — so the result
-        is cacheable and replayable (NativePlan.apply)."""
+    def _build_scalar(self, col: Column, dv: Column) -> list:
+        """Build the scalar-path output Columns over the doc column and
+        its bound variant ``dv``."""
         ir = self.ir
-        pre = _pre_filter_recipe(col, ir.pre_filters)
         out_cols = []
         if ir.single_call is not None:
             # ``.path | keys`` / ``| keys_unsorted`` as the WHOLE
@@ -2796,7 +2310,7 @@ class NativePlan:
             fdt = self.schema.fields[0]
             path = ir.single_path or ()
             jp = _json_path(path) if path else "$"
-            v = F.try_variant_get(_parse_doc(col), jp, "variant")
+            v = F.try_variant_get(dv, jp, "variant")
             if ir.single_call == "keys":
                 kc = _variant_keys(v)
             elif ir.single_call == "length":
@@ -2812,7 +2326,7 @@ class NativePlan:
             src = ir.single_path
             if isinstance(fdt.dataType, T.MapType):
                 out_cols.append(
-                    _scalar_map_col(col, src or (), fdt.dataType).alias(fdt.name)
+                    _scalar_map_col(dv, src or (), fdt.dataType).alias(fdt.name)
                 )
             else:
                 out_cols.append(
@@ -2824,7 +2338,7 @@ class NativePlan:
                 if spec is None:
                     out_cols.append(F.lit(None).cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "lit":
-                    out_cols.append(F.lit(spec[1]).cast(fdt.dataType).alias(fdt.name))
+                    out_cols.append(_lit_col(spec[1], fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "expr":
                     _, ast, base = spec
                     c = _compile_expr(ast, lambda p: _num_at(col, tuple(base) + p))
@@ -2837,44 +2351,31 @@ class NativePlan:
                         # corrupt docs poison to NULL like the sibling
                         # heads (tostring/tojson gate)
                         v = F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
+                            dv, _json_path(path), "variant"
                         )
                         first = F.when(
-                            _parse_doc(col).isNotNull(),
+                            dv.isNotNull(),
                             _variant_type_name(v),
                         )
-                        c = (
-                            _apply_fnchain(first, fns[1:])
-                            if len(fns) > 1
-                            else first
-                        )
+                        c = _apply_fnchain(first, fns[1:])
                         out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                         continue
                     if fns[0][0] in ("tostring", "tojson"):
-                        # leading tostring/tojson: number-normalized
-                        # view (variant type gate — see _tostring_view
-                        # / _tojson_view; tojson additionally quotes
-                        # strings).  Corrupt (unparseable) docs must
+                        # leading tostring/tojson: the raw text view
+                        # (tojson quotes strings, read from the
+                        # variant).  Corrupt (unparseable) docs must
                         # yield NULL like every other spec — without
                         # the gate the missing-path → "null" identity
                         # would fabricate a value where the Python
                         # tier errors the row (r10, ADVICE class)
-                        v = F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
-                        )
-                        view = (
-                            _tojson_view
-                            if fns[0][0] == "tojson"
-                            else _tostring_view
-                        )
-                        first = F.when(
-                            _parse_doc(col).isNotNull(), view(raw0, v)
-                        )
-                        c = (
-                            _apply_fnchain(first, fns[1:])
-                            if len(fns) > 1
-                            else first
-                        )
+                        if fns[0][0] == "tojson":
+                            view = _tojson_view(
+                                raw0, F.try_variant_get(dv, _json_path(path), "variant")
+                            )
+                        else:
+                            view = _tostring_view(raw0)
+                        first = F.when(dv.isNotNull(), view)
+                        c = _apply_fnchain(first, fns[1:])
                         out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                         continue
                     if fns[0][0] in _STR_ONLY_HEADS | _NUM_ONLY_HEADS:
@@ -2882,7 +2383,7 @@ class NativePlan:
                         # NULL where jq aborts, never a value computed
                         # from their serialization
                         v = F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
+                            dv, _json_path(path), "variant"
                         )
                         if fns[0][0] in _STR_ONLY_HEADS:
                             c = _apply_fnchain(_variant_string_only(v), fns)
@@ -2896,12 +2397,10 @@ class NativePlan:
                         # unchanged (no abort) — gate on exact type
                         vt = F.schema_of_variant(
                             F.try_variant_get(
-                                _parse_doc(col), _json_path(path), "variant"
+                                dv, _json_path(path), "variant"
                             )
                         )
-                        rest = (
-                            _apply_fnchain(raw0, fns[1:]) if len(fns) > 1 else raw0
-                        )
+                        rest = _apply_fnchain(raw0, fns[1:], json_text=True)
                         c = F.when(vt == F.lit("STRING"), c).otherwise(rest)
                     out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "alt":
@@ -2913,11 +2412,11 @@ class NativePlan:
                     # unification can't introduce a stricter common
                     # type (ANSI cast crash).
                     v = F.try_variant_get(
-                        _parse_doc(col), _json_path(path), "variant"
+                        dv, _json_path(path), "variant"
                     )
                     c = F.when(
                         ~_variant_truthy(v),
-                        F.lit(dflt).try_cast(fdt.dataType),
+                        _lit_col(dflt, fdt.dataType),
                     ).otherwise(_scalar_out_col(col, path, fdt.dataType))
                     out_cols.append(c.alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "strcat":
@@ -2928,29 +2427,24 @@ class NativePlan:
                     # poison the whole result to NULL instead (r10,
                     # ADVICE fix)
                     c = F.when(
-                        _parse_doc(col).isNotNull(),
+                        dv.isNotNull(),
                         _strcat_col(
                             spec[1],
                             lambda p: F.try_variant_get(
-                                _parse_doc(col), _json_path(p), "variant"
+                                dv, _json_path(p), "variant"
                             ),
                         ),
                     )
                     out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "strinterp":
-                    def _interp_seg(kind, val, _col=col):
-                        v = F.try_variant_get(
-                            _parse_doc(_col),
-                            _json_path(val),
-                            "variant",
-                        )
-                        view = (
-                            _tojson_view if kind == "pathjson" else _tostring_view
-                        )(F.get_json_object(_col, _json_path(val)), v)
-                        return _b64_view(view) if kind == "pathb64" else view
-
                     segs = [
-                        F.lit(val) if kind == "lit" else _interp_seg(kind, val)
+                        F.lit(val)
+                        if kind == "lit"
+                        else _interp_view(
+                            kind,
+                            F.get_json_object(col, _json_path(val)),
+                            F.try_variant_get(dv, _json_path(val), "variant"),
+                        )
                         for kind, val in spec[1]
                     ]
                     # same corrupt-doc gate as strcat: interpolation's
@@ -2958,7 +2452,7 @@ class NativePlan:
                     # literals+"null" text for unparseable docs
                     out_cols.append(
                         F.when(
-                            _parse_doc(col).isNotNull(),
+                            dv.isNotNull(),
                             F.concat(*segs),
                         )
                         .cast(fdt.dataType)
@@ -2966,21 +2460,21 @@ class NativePlan:
                     )
                 elif isinstance(spec, tuple) and spec and spec[0] == "length":
                     vv = F.try_variant_get(
-                        _parse_doc(col), _json_path(spec[1]), "variant"
+                        dv, _json_path(spec[1]), "variant"
                     )
                     out_cols.append(
                         _variant_length(vv).try_cast(fdt.dataType).alias(fdt.name)
                     )
                 elif isinstance(spec, tuple) and spec and spec[0] == "keyssorted":
                     vv = F.try_variant_get(
-                        _parse_doc(col), _json_path(spec[1]), "variant"
+                        dv, _json_path(spec[1]), "variant"
                     )
                     out_cols.append(
                         _variant_keys(vv).try_cast(fdt.dataType).alias(fdt.name)
                     )
                 elif isinstance(spec, tuple) and spec and spec[0] == "keysunsorted":
                     vv = F.try_variant_get(
-                        _parse_doc(col), _json_path(spec[1]), "variant"
+                        dv, _json_path(spec[1]), "variant"
                     )
                     out_cols.append(
                         _keys_unsorted_col(
@@ -2996,7 +2490,7 @@ class NativePlan:
                     # their JSON serialization
                     s = _variant_string_only(
                         F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
+                            dv, _json_path(path), "variant"
                         )
                     )
                     if pname == "contains":
@@ -3016,7 +2510,7 @@ class NativePlan:
                     _, path, pat, names = spec
                     s = _variant_string_only(
                         F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
+                            dv, _json_path(path), "variant"
                         )
                     )
                     fields = [
@@ -3033,7 +2527,7 @@ class NativePlan:
                     out_cols.append(c.try_cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "slicearr":
                     _, path, lo, hi = spec
-                    c = _slice_col(col, path, lo, hi, fdt.dataType)
+                    c = _slice_col(col, dv, path, lo, hi, fdt.dataType)
                     out_cols.append(c.try_cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "reduce":
                     _, path, init, upd, _var = spec
@@ -3046,7 +2540,7 @@ class NativePlan:
                     # serialization (r9)
                     s = _variant_string_only(
                         F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
+                            dv, _json_path(path), "variant"
                         )
                     )
                     parts = F.split(s, _java_quote(sep), -1)
@@ -3060,7 +2554,7 @@ class NativePlan:
                     _, path, sep = spec
                     s = _variant_string_only(
                         F.try_variant_get(
-                            _parse_doc(col), _json_path(path), "variant"
+                            dv, _json_path(path), "variant"
                         )
                     )
                     c = F.split(s, _java_quote(sep), -1)
@@ -3069,19 +2563,19 @@ class NativePlan:
                     _, filters, t_spec, e_spec = spec
                     cond = None
                     for item in filters:
-                        cc = _cond_col(item, lambda ff: _filter_col(col, ff))
+                        cc = _cond_col(item, lambda ff: _filter_col(col, dv, ff))
                         cond = cc if cond is None else (cond & cc)
 
                     def _branch(sp, _dt=fdt.dataType):
                         if sp[0] == "lit":
-                            return F.lit(sp[1]).try_cast(_dt)
+                            return _lit_col(sp[1], _dt)
                         return _scalar_out_col(col, sp[1], _dt)
 
                     c = F.when(cond, _branch(t_spec)).otherwise(_branch(e_spec))
                     out_cols.append(c.alias(fdt.name))
                 elif isinstance(fdt.dataType, T.MapType):
                     out_cols.append(
-                        _scalar_map_col(col, spec, fdt.dataType).alias(fdt.name)
+                        _scalar_map_col(dv, spec, fdt.dataType).alias(fdt.name)
                     )
                 else:
                     out_cols.append(
@@ -3093,7 +2587,7 @@ class NativePlan:
             for fdt in self.schema.fields:
                 if isinstance(fdt.dataType, T.MapType):
                     out_cols.append(
-                        _scalar_map_col(col, base + (fdt.name,), fdt.dataType).alias(
+                        _scalar_map_col(dv, base + (fdt.name,), fdt.dataType).alias(
                             fdt.name
                         )
                     )
@@ -3103,7 +2597,7 @@ class NativePlan:
                         fdt.name
                     )
                 )
-        return pre, out_cols
+        return out_cols
 
     # -- explode path ---------------------------------------------------
     def _elem_schema(self) -> T.DataType:
@@ -3311,11 +2805,13 @@ class NativePlan:
             return whole_elem
         return to_struct(needed)
 
-    def _build_explode(self, col: Column, outer: bool) -> tuple:
-        """Build the explode-path recipe:
-        (pre_filter_recipe, gens, post_conds, out_cols) where gens is
-        a list of (generated column names, aliased generator Column).
-        Pure Column construction, cacheable (NativePlan.apply)."""
+    def _build_explode(
+        self, col: Column, dv: Column, bind: str, outer: bool
+    ) -> tuple:
+        """Build the explode-path recipe over the doc column and its
+        bound variant ``dv``: (gens, post_conds, out_cols) where gens
+        is a list of (generated column names, aliased generator
+        Column), named after the binding column ``bind``."""
         ir = self.ir
 
         def wrap_steps(steps: Path, inner: T.DataType) -> T.DataType:
@@ -3326,7 +2822,6 @@ class NativePlan:
                     inner = T.StructType([T.StructField(s, inner)])
             return inner
 
-        pre = _pre_filter_recipe(col, ir.pre_filters)
         elem = self._elem_schema()
         # wrap the LAST element's schema in each iterate level's array
         # + the steps leading to it, innermost-out, then the pre-path
@@ -3368,7 +2863,7 @@ class NativePlan:
         # get_json_object strips quotes from string values, so a
         # string "[1,2]" would otherwise fabricate rows
         is_array = F.schema_of_variant(
-            F.try_variant_get(_parse_doc(col), jsonpath, "variant")
+            F.try_variant_get(dv, jsonpath, "variant")
         ).startswith("ARRAY")
         et = lvl0.elementType
 
@@ -3406,7 +2901,7 @@ class NativePlan:
         # document-order treatment from the raw-text twin threaded
         # through the chained explodes below (r9).
         is_object = F.schema_of_variant(
-            F.try_variant_get(_parse_doc(col), jsonpath, "variant")
+            F.try_variant_get(dv, jsonpath, "variant")
         ).startswith("OBJECT")
         obj_vals = F.map_values(
             F.from_json(src, T.MapType(T.StringType(), T.VariantType()))
@@ -3427,22 +2922,13 @@ class NativePlan:
             # BEFORE the explode: the dropped elements never become rows
             nav = F.slice(nav, F.lit(1), F.lit(lims[0]))
         gen = F.explode_outer if outer else F.explode
-        # leading-tostring fnchains need the element's VARIANT for the
-        # number-normalization type gate (_tostring_view); multi-level
+        # the element's VARIANT twin: tojson quotes only strings, the
+        # string-/number-only fnchain heads gate on the exact type, and
+        # whole-element predicates (select(has("k")) / select(. > 5),
+        # r12) read it instead of a from_json field.  Multi-level
         # programs already thread a variant twin, single-level ones
         # switch to posexplode and index the doc-level variant array
-        gated_heads = {"tostring", "tojson"} | _STR_ONLY_HEADS | _NUM_ONLY_HEADS
-
-        def _is_plain_path(s) -> bool:
-            return isinstance(s, tuple) and not (
-                s and isinstance(s[0], str) and s[0] in _SPEC_KINDS
-            )
-
-        _str_decls = {
-            f.name
-            for f in self.schema.fields
-            if isinstance(f.dataType, T.StringType)
-        }
+        gated_heads = {"tojson"} | _STR_ONLY_HEADS | _NUM_ONLY_HEADS
         needs_ev = (
             ir.project is not None
             and any(
@@ -3450,25 +2936,11 @@ class NativePlan:
                 and s
                 and (
                     (s[0] == "fnchain" and s[2][0][0] in gated_heads)
-                    or s[0] == "strinterp"
+                    or (s[0] == "strinterp" and any(k == "pathjson" for k, _ in s[1]))
                 )
                 for s in ir.project.values()
             )
-        ) or (
-            # r10: STRING-declared plain-path outputs read the element
-            # variant for the M2 number normalization — without it the
-            # raw capture emits "1.0"/'{"k":1.0}' where the Python
-            # tier's marshaller prints "1"/'{"k":1}' (deep-fuzz find;
-            # the r9 tostring class on the M2 route)
-            ir.project is not None
-            and any(
-                _is_plain_path(s) and k in _str_decls
-                for k, s in ir.project.items()
-            )
-        ) or (ir.project is None and ir.single_call is None and bool(_str_decls)) or any(
-            # r12: whole-element predicates (select(has("k")) /
-            # select(. > 5) under an iterate) read the element's
-            # variant twin instead of a from_json field
+        ) or any(
             f.lhs_expr is None and not f.lhs
             for f in _each_filter(ir.post_filters)
         )
@@ -3519,7 +2991,7 @@ class NativePlan:
             txt_map_t = T.MapType(T.StringType(), T.StringType())
             var_map_t = T.MapType(T.StringType(), T.VariantType())
             var0 = F.try_variant_get(
-                _parse_doc(col), jsonpath, "array<variant>"
+                dv, jsonpath, "array<variant>"
             )
             # object-iterated level 0: the variant twin must come from
             # the SAME from_json parse as nav so the zip stays
@@ -3543,10 +3015,10 @@ class NativePlan:
                 nav.isNotNull(),
                 F.arrays_zip(nav.alias("t"), var0.alias("v"), txt0.alias("x")),
             )
-            gens = [(("__jq_elem0",), gen(zipped).alias("__jq_elem0"))]
-            ec = F.col("__jq_elem0").getField("t")
-            ev = F.col("__jq_elem0").getField("v")
-            ex = F.col("__jq_elem0").getField("x")
+            gens = [((f"{bind}_elem0",), gen(zipped).alias(f"{bind}_elem0"))]
+            ec = F.col(f"{bind}_elem0").getField("t")
+            ev = F.col(f"{bind}_elem0").getField("v")
+            ex = F.col(f"{bind}_elem0").getField("x")
             for lvl, mid in enumerate(ir.mid_paths, start=1):
                 c2 = ec
                 for s in mid:
@@ -3595,11 +3067,11 @@ class NativePlan:
                     c2.isNotNull(),
                     F.arrays_zip(c2.alias("t"), v2.alias("v"), x2.alias("x")),
                 )
-                name = f"__jq_elem{lvl}"
+                name = f"{bind}_elem{lvl}"
                 gens.append(((name,), gen(zipped).alias(name)))
-                ec = F.col(f"__jq_elem{lvl}").getField("t")
-                ev = F.col(f"__jq_elem{lvl}").getField("v")
-                ex = F.col(f"__jq_elem{lvl}").getField("x")
+                ec = F.col(name).getField("t")
+                ev = F.col(name).getField("v")
+                ex = F.col(name).getField("x")
             elem_var = ev  # last level's variant twin
             elem_txt = ex  # last level's raw-text twin
         elif needs_ev or needs_ex:
@@ -3609,7 +3081,7 @@ class NativePlan:
             # array the nav branch used, keeping index alignment)
             var_arr = F.coalesce(
                 F.try_variant_get(
-                    _parse_doc(col), jsonpath, "array<variant>"
+                    dv, jsonpath, "array<variant>"
                 ),
                 F.when(is_object, obj_vals),
             )
@@ -3632,15 +3104,15 @@ class NativePlan:
                 if lims and lims[0] is not None:
                     txt_arr = F.slice(txt_arr, F.lit(1), F.lit(lims[0]))
             pgen = F.posexplode_outer if outer else F.posexplode
-            names = ("__jq_pos0", "__jq_elem0")
-            gens = [(names, pgen(nav).alias(*names))]
-            ec = F.col("__jq_elem0")
-            elem_var = F.try_element_at(var_arr, F.col("__jq_pos0") + 1)
+            pos, name = f"{bind}_pos0", f"{bind}_elem0"
+            gens = [((pos, name), pgen(nav).alias(pos, name))]
+            ec = F.col(name)
+            elem_var = F.try_element_at(var_arr, F.col(pos) + 1)
             if txt_arr is not None:
-                elem_txt = F.try_element_at(txt_arr, F.col("__jq_pos0") + 1)
+                elem_txt = F.try_element_at(txt_arr, F.col(pos) + 1)
         else:
-            gens = [(("__jq_elem0",), gen(nav).alias("__jq_elem0"))]
-            ec = F.col("__jq_elem0")
+            gens = [((f"{bind}_elem0",), gen(nav).alias(f"{bind}_elem0"))]
+            ec = F.col(f"{bind}_elem0")
         def _elem_leaf(ff: Filter) -> Column:
             # r12: whole-element predicates read the variant twin —
             # the typed element (ec) cannot carry "the element itself"
@@ -3654,19 +3126,12 @@ class NativePlan:
         ]
 
         def _ev_at(path: Path):
-            if elem_var is None:  # pragma: no cover - needs_ev guards
+            # only the readers needs_ev lists use the value
+            if elem_var is None:
                 return F.lit(None).cast(T.VariantType())
             if path:
                 return F.try_variant_get(elem_var, _json_path(path), "variant")
             return elem_var
-
-        def _plain_out(c: Column, path: Path, dt: T.DataType) -> Column:
-            # r10: M2 number normalization for string-declared plain
-            # paths (the scalar tier's _scalar_out_col, element-side)
-            if isinstance(dt, T.StringType) and elem_var is not None:
-                s = c.try_cast("string")
-                return _m2_gate(s, _m2_string_view(s, _ev_at(path)))
-            return _elem_out_col(c, dt)
 
         out_cols = []
         if ir.single_call is not None:
@@ -3698,9 +3163,9 @@ class NativePlan:
             for s in ir.single_path:
                 c = _nav_step(c, s)
             out_cols.append(
-                _plain_out(
-                    c, ir.single_path, self.schema.fields[0].dataType
-                ).alias(self.schema.fields[0].name)
+                _elem_out_col(c, self.schema.fields[0].dataType).alias(
+                    self.schema.fields[0].name
+                )
             )
         elif ir.project is not None:
             for fdt in self.schema.fields:
@@ -3708,7 +3173,7 @@ class NativePlan:
                 if spec is None:
                     out_cols.append(F.lit(None).cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "lit":
-                    out_cols.append(F.lit(spec[1]).cast(fdt.dataType).alias(fdt.name))
+                    out_cols.append(_lit_col(spec[1], fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "expr":
                     _, ast, base = spec
 
@@ -3729,47 +3194,18 @@ class NativePlan:
                     if fns[0][0] == "type":
                         # element schema typed this path VARIANT (r11)
                         first = _variant_type_name(c)
-                        cc = (
-                            _apply_fnchain(first, fns[1:])
-                            if len(fns) > 1
-                            else first
-                        )
+                        cc = _apply_fnchain(first, fns[1:])
                         out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
                         continue
-                    if fns[0][0] in ("tostring", "tojson") and elem_var is not None:
-                        # leading tostring/tojson: number-normalized
-                        # view via the element's variant
-                        v = (
-                            F.try_variant_get(
-                                elem_var, _json_path(path), "variant"
-                            )
-                            if path
-                            else elem_var
-                        )
-                        view = (
-                            _tojson_view
-                            if fns[0][0] == "tojson"
-                            else _tostring_view
-                        )
-                        first = view(c.try_cast("string"), v)
-                        cc = (
-                            _apply_fnchain(first, fns[1:])
-                            if len(fns) > 1
-                            else first
-                        )
+                    if fns[0][0] == "tojson":
+                        # leading tojson quotes strings: the type comes
+                        # from the element's variant
+                        first = _tojson_view(c.try_cast("string"), _ev_at(path))
+                        cc = _apply_fnchain(first, fns[1:])
                         out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
                         continue
-                    if (
-                        fns[0][0] in _STR_ONLY_HEADS | _NUM_ONLY_HEADS
-                        and elem_var is not None
-                    ):
-                        v = (
-                            F.try_variant_get(
-                                elem_var, _json_path(path), "variant"
-                            )
-                            if path
-                            else elem_var
-                        )
+                    if fns[0][0] in _STR_ONLY_HEADS | _NUM_ONLY_HEADS:
+                        v = _ev_at(path)
                         first = (
                             _variant_string_only(v)
                             if fns[0][0] in _STR_ONLY_HEADS
@@ -3784,7 +3220,7 @@ class NativePlan:
                         vt = F.schema_of_variant(c)
                         s = c.try_cast("string")
                         full_c = _apply_fnchain(s, fns)
-                        rest = _apply_fnchain(s, fns[1:]) if len(fns) > 1 else s
+                        rest = _apply_fnchain(s, fns[1:], json_text=True)
                         cc = F.when(vt == F.lit("STRING"), full_c).otherwise(rest)
                     else:
                         # try_cast("string") first: a truthy filter on
@@ -3806,7 +3242,7 @@ class NativePlan:
                     out_cols.append(
                         F.when(
                             c.isNull() | (vt == F.lit("VOID")) | is_false,
-                            F.lit(dflt).try_cast(fdt.dataType),
+                            _lit_col(dflt, fdt.dataType),
                         )
                         .otherwise(c.try_cast(fdt.dataType))
                         .alias(fdt.name)
@@ -3829,21 +3265,8 @@ class NativePlan:
                         c2 = ec
                         for st in val:
                             c2 = _nav_step(c2, st)
-                        if elem_var is not None:
-                            v2 = (
-                                F.try_variant_get(
-                                    elem_var, _json_path(val), "variant"
-                                )
-                                if val
-                                else elem_var
-                            )
-                        else:  # pragma: no cover - needs_ev guards this
-                            v2 = F.lit(None).cast(T.VariantType())
-                        view = (
-                            _tojson_view if kind == "pathjson" else _tostring_view
-                        )(c2.try_cast("string"), v2)
                         segs.append(
-                            _b64_view(view) if kind == "pathb64" else view
+                            _interp_view(kind, c2.try_cast("string"), _ev_at(val))
                         )
                     out_cols.append(
                         F.concat(*segs).cast(fdt.dataType).alias(fdt.name)
@@ -3886,18 +3309,14 @@ class NativePlan:
                     c = ec
                     for s in spec:
                         c = _nav_step(c, s)
-                    out_cols.append(_plain_out(c, spec, fdt.dataType).alias(fdt.name))
+                    out_cols.append(_elem_out_col(c, fdt.dataType).alias(fdt.name))
         else:
             for fdt in self.schema.fields:
                 c = ec
                 for s in ir.single_path + (fdt.name,):
                     c = _nav_step(c, s)
-                out_cols.append(
-                    _plain_out(
-                        c, ir.single_path + (fdt.name,), fdt.dataType
-                    ).alias(fdt.name)
-                )
-        return pre, gens, post_conds, out_cols
+                out_cols.append(_elem_out_col(c, fdt.dataType).alias(fdt.name))
+        return gens, post_conds, out_cols
 
     def apply(
         self,
@@ -3908,15 +3327,15 @@ class NativePlan:
     ) -> DataFrame:
         """Apply the plan to a DataFrame, routing per row.
 
-        Every row binds its variant parse once (`_DOC_BINDING`).  Rows
-        that are well-formed JSON the variant parser rejects — under
-        the default conf, exactly the duplicate-key documents
-        (`_python_rows`) — go through ``python_tier``, the exact Python
-        tier; all other rows through the compiled Columns.  The two
-        branches are concatenated by position (``unionByName`` rejects
-        duplicate input column names), so rows of different input rows
-        may come out in a different order than one tier alone would
-        emit them; the rows of one input row keep jq's order.
+        Every row binds its variant parse once.  Rows the route flag
+        selects (`_python_rows`) — duplicate-key documents and rows
+        whose text-read values hold number text — go through
+        ``python_tier``, the exact Python tier; all other rows through
+        the compiled Columns.  The two branches are concatenated by
+        position (``unionByName`` rejects duplicate input column
+        names), so rows of different input rows may come out in a
+        different order than one tier alone would emit them; the rows
+        of one input row keep jq's order.
 
         r14 optimization (guide §1.2 "per-task work", driver-side):
         every Column the plan needs is built ONCE per (Spark context,
@@ -3929,8 +3348,10 @@ class NativePlan:
         JVM) never sees another JVM's py4j handles; Column-typed doc
         inputs (no stable identity) skip the cache."""
         col = F.col(column) if isinstance(column, str) else column
+        # the binding column and the generator columns named after it
+        # are fresh: no input column starts with the binding name
         bind = _BIND_COL
-        while bind in df.columns:
+        while any(c.startswith(bind) for c in df.columns):
             bind += "_"
         key = None
         if isinstance(column, str):
@@ -3943,25 +3364,12 @@ class NativePlan:
         with self._build_lock:
             recipe = self._recipes.get(key) if key is not None else None
             if recipe is None:
-                # while building, reads of the top-level doc column
-                # reference the per-row binding injected below
-                try:
-                    token = _DOC_BINDING.set((col._jc.toString(), bind))
-                except Exception:  # pragma: no cover - defensive
-                    token = None
-                try:
-                    recipe = (
-                        self._build_explode(col, outer)
-                        if self.ir.iterate
-                        else self._build_scalar(col)
-                    )
-                finally:
-                    if token is not None:
-                        _DOC_BINDING.reset(token)
+                recipe = self._build(col, bind, outer)
                 if key is not None:
                     if len(self._recipes) > 64:  # stale-context bound
                         self._recipes.clear()
                     self._recipes[key] = recipe
+        to_python, pre_conds, gens, post_conds, out_cols = recipe
         # one-element explode: array() is never NULL, so exactly one
         # row comes out per input row
         bound = df.select(
@@ -3970,20 +3378,73 @@ class NativePlan:
                 bind
             ),
         )
-        to_python = _python_rows(col, bind)
-        out = _run_pre_filters(bound.where(~to_python), recipe[0])
+        out = bound.where(~to_python)
+        for c in pre_conds:
+            out = out.where(c)
         internal = [bind]
-        if self.ir.iterate:
-            _, gens, post_conds, out_cols = recipe
-            for names, gcol in gens:
-                out = out.select("*", gcol)
-                internal += names
-            for c in post_conds:
-                out = out.where(c)
-        else:
-            _, out_cols = recipe
+        for names, gcol in gens:
+            out = out.select("*", gcol)
+            internal += names
+        for c in post_conds:
+            out = out.where(c)
         out = out.select("*", *out_cols).drop(*[F.col(c) for c in internal])
         return out.union(python_tier(bound.where(to_python).drop(F.col(bind))))
+
+    def _build(self, col: Column, bind: str, outer: bool) -> tuple:
+        """The plan's Columns over doc column ``col``, bound per row as
+        ``bind``: (route flag, pre-iterate conditions, generators,
+        post-iterate conditions, output Columns).  Pure
+        Column construction — no DataFrame access — so the result is
+        cacheable and replayable (`apply`)."""
+        ir = self.ir
+        dv = F.col(bind)["v"]
+        pre_conds = [
+            _cond_col(f, lambda ff: _filter_col(col, dv, ff))
+            for f in ir.pre_filters
+        ]
+        if ir.iterate:
+            levels = [ir.pre_path, *ir.mid_paths]
+            gens, post_conds, out_cols = self._build_explode(col, dv, bind, outer)
+        else:
+            levels, gens, post_conds = [], [], []
+            out_cols = self._build_scalar(col, dv)
+        to_python = _python_rows(col, dv, levels, self._text_paths())
+        return to_python, pre_conds, gens, post_conds, out_cols
+
+    def _text_paths(self) -> list:
+        """Paths of the values this plan reads as text (module
+        docstring, rule 1): from the document in a scalar plan, from
+        the last iterated element in an iterate plan."""
+        ir = self.ir
+        fields = self.schema.fields
+        if ir.single_call is not None:
+            return []  # keys are strings, length is numeric
+        if ir.project is None:
+            pairs = (
+                [(ir.single_path, fields[0].dataType)]
+                if self.single
+                else [(ir.single_path + (f.name,), f.dataType) for f in fields]
+            )
+            return [p for p, dt in pairs if _holds_text(dt)]
+        paths = []
+        for f in fields:
+            spec = ir.project.get(f.name)
+            if spec is None:
+                continue
+            kind = spec[0] if spec and spec[0] in _SPEC_KINDS else "path"
+            if kind == "fnchain" and spec[2][0][0] in (
+                "tostring", "tojson", "ltrimstr", "rtrimstr"
+            ):
+                paths.append(spec[1])
+            elif kind == "strinterp":
+                paths += [p for k, p in spec[1] if k != "lit"]
+            elif kind == "ifelse" and _holds_text(f.dataType):
+                paths += [b[1] for b in spec[2:] if b[0] == "path"]
+            elif kind in ("path", "alt", "arrayfn", "slicearr") and _holds_text(
+                f.dataType
+            ):
+                paths.append(spec if kind == "path" else spec[1])
+        return list(dict.fromkeys(paths))
 
 
 _PLAN_CACHE: dict[tuple[str, tuple[str, ...]], Optional[NativePlan]] = {}

@@ -67,9 +67,10 @@ def _route_filter(node):
 def collect_routed(df):
     """Collect ``df`` and return ``(rows, sent)``, where ``sent`` is
     how many rows its Python nodes received, asserting that every
-    Python node reads a Filter on the native tier's duplicate-key
-    route flag — a native jq plan's only Python node.  Must be the
-    first action on ``df``: plan metrics add up across actions."""
+    Python node reads a Filter on the native tier's route flag
+    (duplicate keys, number text) — a native jq plan's only Python
+    node.  Must be the first action on ``df``: plan metrics add up
+    across actions."""
     rows = df.collect()
     sent, stack = 0, [df._jdf.queryExecution().executedPlan()]
     while stack:

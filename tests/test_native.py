@@ -227,12 +227,10 @@ def test_native_unproven_arithmetic_falls_back(spark):
 
 def test_native_tostring_composite_number_canonicalization(spark):
     """r10 (ADVICE high): tostring / interpolation of OBJECT/ARRAY
-    values canonicalizes NESTED number tokens like jqlib's recursive
+    values prints NESTED numbers like jqlib's recursive
     canonical_number (1.0 -> 1, 2.50 -> 2.5, -0.0 -> 0) while number
-    lookalikes inside nested STRINGS pass through untouched (the
-    regex consumes string tokens atomically)."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    lookalikes inside nested STRINGS pass through untouched: every
+    value holding a non-integer number goes to the Python tier."""
     docs = [
         '{"v": {"x": 1.0}}',
         '{"v": [1.0, 2.50, "1.0", 3]}',
@@ -240,26 +238,24 @@ def test_native_tostring_composite_number_canonicalization(spark):
         '{"v": {"n": 100.250, "m": [-0, 7.0]}}',
         '{"v": 1.0}',
         '{"v": "1.0"}',
+        '{"v": {"s": "a:1.0,b", "n": [-0, 7]}}',
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
+    df = _indexed(spark, docs)
     for prog in ['{t: "p-\\(.v)"}', "{t: (.v | tostring)}"]:
-        nat = jq_explode(df, "j", prog, "t:string", native="require")
-        py = jq_explode(df, "j", prog, "t:string", native="never")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        assert [r.t for r in rows] == [r.t for r in py.collect()], prog
+        nat, py, sent = _tiers_by_input(df, prog, "t:string")
+        assert sent == 5, prog  # all but the string and integer docs
+        assert nat == py, prog
 
 
 def test_native_m2_stringify_number_normalization(spark):
     """r10 (deep-fuzz find): a PLAIN PATH projected to a
     STRING-declared output is M2 stringify (marshal.py::_as_string →
     jqlib tojson), so integral floats print without the fraction and
-    nested number tokens canonicalize — scalar tier, single-level
-    explode, destructure, and multi-level explode alike.  STRING
-    values (even "1.0") pass through; missing stays NULL (M2, unlike
+    nested numbers print like jq — scalar tier, single-level explode,
+    destructure, and multi-level explode alike: the rows whose value
+    holds a non-integer number go to the Python tier.  STRING values
+    (even "1.0") pass through; missing stays NULL (M2, unlike
     tostring's "null")."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
     docs = [
         '{"s": 1.0, "arr": [2.0, "2.0"], "items": [{"u": 3.0}, {"u": "3.0"}]}',
         '{"s": {"k": 1.0, "t": "1.0"}, "arr": [], "items": []}',
@@ -274,23 +270,18 @@ def test_native_m2_stringify_number_normalization(spark):
         '{"s": 9999999999999999.0, "arr": [], "items": []}',
         '{"s": "1.0E16", "arr": [], "items": []}',
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
-    cases = [
-        ("{o: .s}", ("o:string",)),            # scalar projection
-        (".s", ("string",)),                    # scalar single path
-        (".arr[]", ("string",)),                # bare scalar explode
-        (".items[] | {o: .u}", ("o:string",)),  # explode projection
-        (".items[] | .u", ("string",)),         # explode single path
+    df = _indexed(spark, docs)
+    cases = [  # with the count of docs whose rendered values hold floats
+        ("{o: .s}", ("o:string",), 4),            # scalar projection
+        (".s", ("string",), 4),                    # scalar single path
+        (".arr[]", ("string",), 3),                # bare scalar explode
+        (".items[] | {o: .u}", ("o:string",), 2),  # explode projection
+        (".items[] | .u", ("string",), 2),         # explode single path
     ]
-    for prog, decls in cases:
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        cols = [c for c in nat.columns if c != "j"]
-        rows, sent = collect_routed(nat.select(cols))
-        assert sent == 0, prog
-        assert sorted(map(tuple, rows), key=str) == sorted(
-            map(tuple, py.select(cols).collect()), key=str
-        ), prog
+    for prog, decls, routed in cases:
+        nat, py, sent = _tiers_by_input(df, prog, *decls)
+        assert sent == routed, prog
+        assert nat == py, prog
 
 
 def test_native_strcat_strinterp_corrupt_doc_is_null(spark):
@@ -1120,9 +1111,11 @@ def test_native_sort_unique_nested_elements_fall_back(spark):
     ):
         assert compile_native("{s: (.xs | sort)}", (decl,)) is None, decl
         assert compile_native("{s: (.xs | unique)}", (decl,)) is None, decl
-    # flat element types still compile
+    # flat element types still compile, except into text: jq orders
+    # and prints the numbers there (10 after 9), so those run on the
+    # Python tier
     assert compile_native("{s: (.xs | sort)}", ("s:array<double>",)) is not None
-    assert compile_native("{s: (.xs | unique)}", ("s:array<string>",)) is not None
+    assert compile_native("{s: (.xs | unique)}", ("s:array<string>",)) is None
 
 
 def test_native_sort_nested_require_raises(spark):
@@ -1628,22 +1621,13 @@ def test_native_keys_sorted_matches_python_tier(spark):
 
 
 def test_native_scientific_number_text_matches_python_tier(spark):
-    """r11 (VERDICT r10 #7): Jackson scientific-form number text
-    normalizes to the exact jq/Python float text on every scalar
-    stringify route — Jackson prints scientific for |v| >= 1e7 or
-    < 1e-3 while jq switches at >= 1e16 / < 1e-4, so the conversion
-    covers reformat ("1.0E20" → "1e+20", "1.5E-7" → "1.5e-07"),
-    digit-shift expansion ("1.23456789E7" → "12345678.9", "1.5E-4" →
-    "0.00015"), and 3-digit exponents ("1.5E300" → "1.5e+300" — a
-    plain lpad would truncate them).  Nested tokens close the
-    both-engines-scientific subclass (e >= 17 / e <= -5); nested
-    shift cases stay the documented residual.  EXCLUDED by design:
-    values where JDK 17 Double.toString emits non-shortest DIGITS
-    (integral |v| in [1e17,1e19), deep subnormals like 5e-324 →
-    "4.9E-324"; JDK-4511638) — a digit-level residual documented at
-    _sci_python_text."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    """r11 (VERDICT r10 #7): number text on every stringify route is
+    jq's: Jackson prints scientific for |v| >= 1e7 or < 1e-3 while jq
+    switches at >= 1e16 / < 1e-4 ("1.0E20" vs "1e+20", "1.23456789E7"
+    vs "12345678.9"), so every row whose value is a non-integer number
+    goes to the Python tier, which prints it exactly — 3-digit
+    exponents, BigDecimal re-prints and the JDK-4511638 digits
+    (integral |v| in [1e17,1e19), deep subnormals) included."""
     lex = [
         "1e20", "1.5e-7", "0.0001", "12345678.9", "0.1", "1e16",
         "123456789.25", "2.5e15", "1e-4", "0.00015", "1e7",
@@ -1655,32 +1639,23 @@ def test_native_scientific_number_text_matches_python_tier(spark):
         # BigDecimal re-prints (trailing-zero mantissa, explicit "+"
         # exponent): "1.50e-7" → raw "1.50E-7", "150e20" → "1.50E+22"
         "1.50e-7", "150e20", "-2.50e-9",
+        "1.7033882668101804e18", "5e-324",
     ]
-    df = spark.createDataFrame(
-        [('{"v": %s}' % l,) for l in lex], "j string"
-    )
+    df = _indexed(spark, ['{"v": %s}' % l for l in lex])
     shapes = [
         ("{t: (.v | tostring)}", ("t:string",)),
         ("{t: (.v | tojson)}", ("t:string",)),
         ("{t: .v}", ("t:string",)),  # M2 plain-path stringify
         ('{t: "x=\\(.v)"}', ("t:string",)),
         ('{t: @json "\\(.v)"}', ("t:string",)),
-        # non-leading tojson renders the running double via the same
-        # normalization (the cast otherwise prints Double.toString)
-        ("{t: (.v | fabs | tojson)}", ("t:string",)),
     ]
     for prog, decls in shapes:
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        a = [r.t for r in rows]
-        b = [r.t for r in py.collect()]
-        assert a == b, f"{prog}: {list(zip(lex, a, b))}"
-    # nested: the reformat subclass closes; plain fractions and the
-    # integral rewrite keep working through the marker passes (the
-    # string-token-safe alternation can't carry literal replacement
-    # text, so the rewrite inserts control-char markers first)
+        nat, py, sent = _tiers_by_input(df, prog, *decls)
+        assert sent == len(lex) - 1, prog  # every doc but "42"
+        assert nat == py, prog
+    # the text of a computed number does not compile
+    with pytest.raises(ValueError):
+        jq_explode(df, "j", "{t: (.v | fabs | tojson)}", "t:string", native="require")
     ndocs = [
         '{"v": {"x": 1e20}}',
         '{"v": {"x": 1.5e-7}}',
@@ -1693,13 +1668,11 @@ def test_native_scientific_number_text_matches_python_tier(spark):
         '{"v": {"k": "1.0E300", "w": 7e-6}}',
         '{"v": {"a": 1.50e-7, "b": 150e20}}',
     ]
-    ndf = spark.createDataFrame([(d,) for d in ndocs], "j string")
+    ndf = _indexed(spark, ndocs)
     for prog in ["{t: (.v | tostring)}", "{t: (.v | tojson)}", "{t: .v}"]:
-        nat = jq_explode(ndf, "j", prog, "t:string", native="require")
-        py = jq_explode(ndf, "j", prog, "t:string", native="never")
-        a = [r.t for r in nat.collect()]
-        b = [r.t for r in py.collect()]
-        assert a == b, f"{prog}: {list(zip(ndocs, a, b))}"
+        nat, py, sent = _tiers_by_input(ndf, prog, "t:string")
+        assert sent == len(ndocs), prog
+        assert nat == py, prog
 
 
 def test_native_format_interpolation_matches_python_tier(spark):
@@ -1707,11 +1680,9 @@ def test_native_format_interpolation_matches_python_tier(spark):
     interpolation (it IS tostring), `@json` compiles via the tojson
     view — strings come back QUOTED with JSON escaping (Jackson via
     to_json(struct(...)), matching jqlib's json.dumps shortcuts),
-    numbers canonicalize, composites keep document order.  Other
-    formats stay Python-tier."""
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    composites keep document order, and rows holding non-integer
+    numbers print them on the Python tier.  Other formats stay
+    Python-tier."""
     docs = [
         '{"s": "a\\"b\\\\c", "n": 2.0, "o": {"y": 1.50, "x": "1.0"}}',
         '{"s": "plain", "n": -0.0, "o": [1, "two"]}',
@@ -1723,18 +1694,16 @@ def test_native_format_interpolation_matches_python_tier(spark):
         '{"s": "caf\\u00e9 \\ud83d\\ude00", "n": 1, "o": {"k": "\\u00fc"}}',
         "{}",
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
-    for prog in (
-        '{t: @text "v=\\(.s)|\\(.n)"}',
-        '{t: @json "v=\\(.s)|\\(.n)|\\(.o)"}',
-        '{t: @json "\\(.o)"}',
-        '{t: @base64 "\\(.s)|\\(.n)"}',
+    df = _indexed(spark, docs)
+    for prog, routed in (  # docs whose .n or .o holds 2.0, -0.0, 0.25, 1.50
+        ('{t: @text "v=\\(.s)|\\(.n)"}', 3),
+        ('{t: @json "v=\\(.s)|\\(.n)|\\(.o)"}', 3),
+        ('{t: @json "\\(.o)"}', 1),
+        ('{t: @base64 "\\(.s)|\\(.n)"}', 3),
     ):
-        nat = jq_explode(df, "j", prog, "t:string", native="require")
-        py = jq_explode(df, "j", prog, "t:string", native="never")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        assert [r.t for r in rows] == [r.t for r in py.collect()], prog
+        nat, py, sent = _tiers_by_input(df, prog, "t:string")
+        assert sent == routed, prog
+        assert nat == py, prog
     # corrupt docs poison to NULL like plain interpolation
     bad = spark.createDataFrame([("{oops",)], "j string")
     out = jq_explode(bad, "j", '{t: @json "x\\(.s)"}', "t:string", native="require")
@@ -2044,15 +2013,13 @@ def test_native_randomized_program_differential(spark):
 
 
 def test_native_tostring_number_normalization(spark):
-    """r9: leading `tostring` normalizes NUMBERS like jq — integral
+    """r9: leading `tostring` prints NUMBERS like jq — integral
     floats below 1e17 print without the fraction (1.0 -> "1",
     1e2 -> "100", -0.0 -> "0") — while a STRING "1.0" passes through
-    untouched (the variant type gate).  Pinned on all three shapes:
-    scalar, single-level explode (posexplode + doc-variant indexing,
-    including the object-iterated level 0), and multi-level explode
-    (variant twin)."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    untouched.  Rows whose value is a non-integer number go to the
+    Python tier on all three shapes: scalar, single-level explode
+    (including the object-iterated level 0), and multi-level
+    explode."""
     cases = [
         (
             [
@@ -2060,31 +2027,36 @@ def test_native_tostring_number_normalization(spark):
                 '{"a": "1.0"}', '{"a": "s"}', '{"a": -0.0}', "{}",
             ],
             '{t: (.a | tostring)}',
+            4,
         ),
         (
             [
                 '{"xs": [{"v": 1.0}, {"v": "1.0"}, {"v": 7}, {"v": 2.5}]}',
                 '{"xs": {"k2": {"v": 100.0}, "k1": {"v": "z"}}}',
+                '{"xs": {"k2": {"v": 100}, "k1": {"v": "z"}}}',
             ],
             ".xs[] | {t: (.v | tostring)}",
+            2,
         ),
         (
-            ['{"a": [{"b": [{"v": 5.0}, {"v": "5.0"}]}]}'],
+            [
+                '{"a": [{"b": [{"v": 5.0}, {"v": "5.0"}]}]}',
+                '{"a": [{"b": [{"v": 5}, {"v": "5.0"}]}]}',
+            ],
             ".a[].b[] | {t: (.v | tostring)}",
+            1,
         ),
-        # tostring feeding a later fn keeps the normalized view
+        # tostring feeding a later fn keeps the jq text
         (
             ['{"a": 10.0}', '{"a": "UP"}'],
             "{t: (.a | tostring | ascii_downcase)}",
+            1,
         ),
     ]
-    for docs, prog in cases:
-        df = spark.createDataFrame([(d,) for d in docs], "j string")
-        nat = jq_explode(df, "j", prog, "t:string", native="require")
-        py = jq_explode(df, "j", prog, "t:string", native="never")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        assert [r.t for r in rows] == [r.t for r in py.collect()], prog
+    for docs, prog, routed in cases:
+        nat, py, sent = _tiers_by_input(_indexed(spark, docs), prog, "t:string")
+        assert sent == routed, prog
+        assert nat == py, prog
 
 
 def test_native_fnchain_head_type_gates(spark):
@@ -2128,13 +2100,10 @@ def test_native_fnchain_head_type_gates(spark):
 
 def test_native_string_interpolation_matches_python_tier(spark):
     """r9: jq string interpolation "a\\(.p)b" compiles natively —
-    each interpolant is the number-normalized tostring view
-    (_tostring_view), so floats print like jq ("1"), objects keep
-    document key order, and null/missing render "null".  Scalar and
-    explode shapes, compared value-for-value with the Python tier."""
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    each interpolant is the tostring view (_tostring_view), so objects
+    keep document key order, null/missing render "null", and floats
+    print like jq ("1") on the Python tier.  Scalar and explode
+    shapes, compared value-for-value with the Python tier."""
     docs = [
         '{"u": 7, "v": {"b": 2, "a": 1}}',
         '{"u": "id", "v": 1.0}',
@@ -2142,30 +2111,28 @@ def test_native_string_interpolation_matches_python_tier(spark):
         '{"v": true}',
         '{"u": 2.5, "v": ""}',
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
-    for prog, decls in [
-        ('{s: "u=\\(.u)|v=\\(.v)!"}', ("s:string",)),
-        ('{s: "\\(.u)"}', ("s:string",)),
-        ('{s: "x\\(.v)y", u: .u}', ("s:string", "u:string")),
+    df = _indexed(spark, docs)
+    for prog, decls, routed in [
+        ('{s: "u=\\(.u)|v=\\(.v)!"}', ("s:string",), 2),
+        ('{s: "\\(.u)"}', ("s:string",), 1),
+        ('{s: "x\\(.v)y", u: .u}', ("s:string", "u:string"), 2),
     ]:
         assert compile_native(prog, decls) is not None, prog
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        cols = [c for c in nat.columns if c != "j"]
-        rows, sent = collect_routed(nat.select(cols))
-        assert sent == 0, prog
-        assert rows == py.select(cols).collect(), prog
+        nat, py, sent = _tiers_by_input(df, prog, *decls)
+        assert sent == routed, prog  # the docs holding 1.0 or 2.5
+        assert nat == py, prog
     # explode tier
-    df2 = spark.createDataFrame(
-        [('{"xs": [{"id": 3, "w": 2.0}, {"id": "a", "w": {"z": 9, "y": 8}}]}',)],
-        "j string",
+    df2 = _indexed(
+        spark,
+        [
+            '{"xs": [{"id": 3, "w": 2.0}, {"id": "a", "w": {"z": 9, "y": 8}}]}',
+            '{"xs": [{"id": 3, "w": 2}, {"id": "a", "w": {"z": 9, "y": [8, "x"]}}]}',
+        ],
     )
     prog2 = '.xs[] | {s: "k-\\(.id):\\(.w)"}'
-    nat2 = jq_explode(df2, "j", prog2, "s:string", native="require")
-    py2 = jq_explode(df2, "j", prog2, "s:string", native="never")
-    rows, sent = collect_routed(nat2)
-    assert sent == 0
-    assert [r.s for r in rows] == [r.s for r in py2.collect()]
+    nat2, py2, sent = _tiers_by_input(df2, prog2, "s:string")
+    assert sent == 1
+    assert nat2 == py2
     # r10: @text/@json/@base64 compile now (see
     # test_native_format_interpolation_matches_python_tier); escaping
     # formats without a codegen twin stay Python-tier
@@ -2203,6 +2170,26 @@ def _rows_by_input(rows):
     for i, v in rows:
         out.setdefault(i, []).append(v)
     return out
+
+
+def _indexed(spark, docs):
+    """``docs`` as a frame of input row id ``i`` and document ``j``."""
+    return spark.createDataFrame(list(enumerate(docs)), "i int, j string")
+
+
+def _tiers_by_input(df, prog, *decls):
+    """Run ``prog`` on ``df`` (columns ``i``, ``j``) natively and on
+    the Python tier: (native rows, Python-tier rows, routed row
+    count), the rows grouped by input row (`_rows_by_input`)."""
+    nat = jq_explode(df, "j", prog, *decls, native="require")
+    py = jq_explode(df, "j", prog, *decls, native="never")
+    cols = [c for c in nat.columns if c != "j"]
+    rows, sent = collect_routed(nat.select(cols))
+
+    def group(rs):
+        return _rows_by_input([(r[0], tuple(r[1:])) for r in rs])
+
+    return group(rows), group(py.select(cols).collect()), sent
 
 
 def test_native_dup_key_last_wins(spark):
@@ -2374,7 +2361,10 @@ def test_native_dup_key_last_wins(spark):
         nat = jq_explode(df, "j", prog, decl, native="require")
         py = jq_explode(df, "j", prog, decl, native="never")
         rows, sent = collect_routed(nat.select("i", "v"))
-        assert sent == _dup_key_docs(docs), (prog, decl)
+        # a program reading .a as text also routes the clean float doc
+        # '{"a":1.5}'
+        text = docs is num_docs and decl == "v:string" and "type" not in prog
+        assert sent == _dup_key_docs(docs) + text, (prog, decl)
         a = _rows_by_input(rows)
         b = _rows_by_input(py.select("i", "v").collect())
         assert a == b, (prog, decl, a, b)
@@ -2465,11 +2455,9 @@ def test_native_dup_key_documented_residuals(spark):
 
 def test_native_nested_digit_shift_tokens(spark):
     """r12 (VERDICT r11 #4): NESTED scientific tokens whose jq form is
-    positional (0 <= e <= 16 / -4 <= e <= -1) now digit-shift in pure
-    codegen (`_shift_rebuild`) — the former documented residual class.
-    Tokens inside nested STRINGS stay untouched."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    positional (0 <= e <= 16 / -4 <= e <= -1) print like jq: every doc
+    here holds one, so every row goes to the Python tier.  Tokens
+    inside nested STRINGS stay untouched."""
     docs = [
         '{"v":{"a":1.23456789E7,"b":1.5E-4,"s":"keep 1.5E7 text","u":2.0E3}}',
         '{"v":[1.5E2,2.5E-3,1.0E16,"1.5E2",true,-1.75E7]}',
@@ -2486,22 +2474,18 @@ def test_native_nested_digit_shift_tokens(spark):
         '{"v":[1005E-1,12.500E3,10.00E2,20E0,"skip 21.5E-1",19E1]}',
         '{"v":{"lc":[1.5e-1,7e2,-7.25e+1,1.5e20],"w":119E-1}}',
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
+    df = _indexed(spark, docs)
     for prog in ["{t: (.v | tostring)}", "{t: (.v | tojson)}", '{t: "p-\\(.v)"}']:
-        nat = jq_explode(df, "j", prog, "t:string", native="require")
-        py = jq_explode(df, "j", prog, "t:string", native="never")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        a = [r.t for r in rows]
-        b = [r.t for r in py.collect()]
-        assert a == b, (prog, a, b)
+        nat, py, sent = _tiers_by_input(df, prog, "t:string")
+        assert sent == len(docs), prog
+        assert nat == py, prog
 
 
 def test_native_dup_key_false_positive_lexemes(spark):
     """A doc with NO true duplicate but repeated sibling keys in an
     array of objects, carrying a non-canonical number token (1.50E2,
-    trailing-zero decimals), stays native and keeps its document-order
-    raw text with canonical lexemes."""
+    trailing-zero decimals), does not trip the duplicate-key route and
+    keeps its document-order raw text with jq's number text."""
     docs = [
         # repeated "u" keys at different positions, non-canonical
         # 1.50E2 in the order-sensitive composite
@@ -2523,10 +2507,14 @@ def test_native_dup_key_false_positive_lexemes(spark):
         a = [tuple(r) for r in nat.select("v").collect()]
         b = [tuple(r) for r in py.select("v").collect()]
         assert a == b, (prog, decl, a, b)
-    # direct pins: document key order survives, lexemes canonicalize
+    # the repeated sibling keys stay native
+    keys = jq_explode(df, "j", "{v: (.x|keys_unsorted)}", "v:array<string>", native="require")
+    assert collect_routed(keys)[1] == 0
+    # direct pins: document key order survives, numbers print like jq;
+    # every .x holds a float, so every row reads on the Python tier
     out = jq_explode(df, "j", "{v: .x}", "v:string", native="require")
     rows, sent = collect_routed(out)
-    assert sent == 0
+    assert sent == 3
     assert [r.v for r in rows] == [
         '{"b":150,"a":2}',
         '{"m":2.5,"z":1}',
@@ -2539,15 +2527,11 @@ def test_native_dup_key_false_positive_lexemes(spark):
 
 
 def test_native_digit_shift_three_digit_true_exponent(spark):
-    """r14 (ADVICE r13 medium): the generalized digit-shift mantissa
-    admits true decimal exponents of 3 digits (token 12E99 → td 100);
-    the rebuild's exponent pad must not TRUNCATE them (Spark lpad
-    truncates strings longer than len — pre-fix '[12E99]' rendered
-    '[1.2e+10]', silently off by 10^90).  Direct unit pins on
-    _canon_composite_text so get_json_object's lexeme pre-
-    normalization can't mask the bug end-to-end."""
-    from hive_jq_udtf_spark.native import _canon_composite_text
-
+    """r14 (ADVICE r13 medium): tokens whose true decimal exponent has
+    3 digits (12E99 is 1.2e+100) print with the whole exponent —
+    pre-fix a truncating pad rendered '[12E99]' as '[1.2e+10]',
+    silently off by 10^90.  The Python tier (jqlib) is the semantics
+    oracle; every doc here holds a float, so every row goes there."""
     cases = [
         ("[12E99]", "[1.2e+100]"),
         ("[123E98]", "[1.23e+100]"),
@@ -2556,23 +2540,16 @@ def test_native_digit_shift_three_digit_true_exponent(spark):
         ("[1.5E2]", "[150]"),
         ("[12E2]", "[1200]"),
     ]
-    df = spark.createDataFrame([(t,) for t, _ in cases], "t string")
-    got = [
-        r.c
-        for r in df.select(
-            _canon_composite_text(F.col("t")).alias("c")
-        ).collect()
-    ]
-    assert got == [w for _, w in cases], got
-    # end-to-end: the Python tier (jqlib) is the semantics oracle
-    docs = ['{"v":[12E99,123E98,12E-99]}', '{"v":{"big":12.5E99}}']
-    jdf = spark.createDataFrame([(d,) for d in docs], "j string")
-    for prog in ["{t: (.v | tostring)}", '{t: "p-\\(.v)"}']:
-        nat = jq_explode(jdf, "j", prog, "t:string", native="require")
-        py = jq_explode(jdf, "j", prog, "t:string", native="never")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        assert [r.t for r in rows] == [r.t for r in py.collect()], prog
+    docs = ['{"v":%s}' % t for t, _ in cases]
+    docs += ['{"v":[12E99,123E98,12E-99]}', '{"v":{"big":12.5E99}}']
+    df = _indexed(spark, docs)
+    for prog, pfx in [("{t: (.v | tostring)}", ""), ('{t: "p-\\(.v)"}', "p-")]:
+        nat, py, sent = _tiers_by_input(df, prog, "t:string")
+        assert sent == len(docs), prog
+        assert nat == py, prog
+        assert [nat[i] for i in range(len(cases))] == [
+            [(pfx + w,)] for _, w in cases
+        ], prog
 
 
 def test_native_slice_missing_variant_raw_fallback(spark):
@@ -2786,17 +2763,35 @@ def test_native_allow_duplicate_keys_session_takes_python_tier(spark):
 
 @pytest.mark.parametrize("native", ["auto", "never"])
 def test_jq_explode_odd_input_columns(spark, native):
-    """An input column named like the internal binding column passes
-    through untouched, and duplicate input column names survive both
-    tiers (branches concatenate by position)."""
-    docs = [(7, '{"a":1,"xs":[1,2]}'), (8, '{"a":2,"a":5,"xs":[3]}')]
-    df = spark.createDataFrame(docs, "__jq_docbind int, j string")
-    for prog, decl in [("{v: .a}", "v:int"), (".xs[] | {v: .}", "v:int")]:
+    """Input columns named like the internal binding and generator
+    columns pass through untouched, and duplicate input column names
+    survive both tiers (branches concatenate by position)."""
+    docs = [
+        (7, '{"a":1,"xs":[1,2],"ys":[{"b":"p"}]}'),
+        (8, '{"a":2,"a":5,"xs":[3],"ys":[{"b":"q"}]}'),
+        (9, '{"a":3,"xs":[4],"ys":[{"b":"r"},{"b":1}]}'),
+    ]
+    names = ["__jq_docbind", "__jq_elem0", "__jq_pos0", "__jq_prefilter"]
+    df = spark.createDataFrame(
+        [(k, k, k, k, j) for k, j in docs],
+        ", ".join(f"{n} int" for n in names) + ", j string",
+    )
+    for prog, decl, want in [
+        ("{v: .a}", "v:int", [(7, 1), (8, 5), (9, 3)]),
+        (".xs[] | {v: .}", "v:int", [(7, 1), (7, 2), (8, 3), (9, 4)]),
+        ("select(.a > 1) | {v: .a}", "v:int", [(8, 5), (9, 3)]),
+        (
+            ".ys[] | {v: (.b | tojson)}",
+            "v:string",
+            [(7, '"p"'), (8, '"q"'), (9, "1"), (9, '"r"')],
+        ),
+    ]:
         out = jq_explode(df, "j", prog, decl, native=native)
-        assert out.columns == ["__jq_docbind", "j", "v"]
-        got = sorted((r[0], r[2]) for r in out.collect())
-        want = [(7, 1), (8, 5)] if prog == "{v: .a}" else [(7, 1), (7, 2), (8, 3)]
-        assert got == want, (prog, got)
+        assert out.columns == names + ["j", "v"]
+        rows = out.collect()
+        assert all(len(set(r[:4])) == 1 for r in rows), (prog, rows)
+        got = sorted((r[0], r[-1]) for r in rows)
+        assert got == sorted(want), (prog, got)
     # a join is the usual source of duplicate names
     left = spark.createDataFrame(docs, "k int, j string")
     right = spark.createDataFrame([(7, 70), (8, 80)], "k int, w int")
@@ -2809,3 +2804,75 @@ def test_jq_explode_odd_input_columns(spark, native):
         (7, 7, 1),
         (8, 8, 5),
     ]
+
+
+def test_native_number_text_matches_python_tier(spark):
+    """Number-to-text shapes: ``native="auto"`` equals ``"never"`` per
+    input row.  The native tier prints no number: rows whose
+    text-read value holds a non-integer number go to the Python tier,
+    computed numbers and the order-dependent array fns into a string
+    slot do not compile, and numeric literals render as jq text."""
+    docs = [
+        '{"s":"ab","k":7,"n":-2.5,"v":"12","b":[10,9],"w":null}',
+        '{"s":[1,2],"k":1.0,"n":1.0,"v":"2.5","b":[1.0,1e20],"w":1e20}',
+        '{"s":{"x":1.0},"k":2.5,"n":1e20,"v":"1e20","b":[-0.0,2.5,"a"],'
+        '"w":{"x":1.0}}',
+        '{"s":"é","k":-0.0,"n":-0.0,"v":1.0,"b":["b","a",null,true],"w":false}',
+        '{"s":"","k":-3,"n":3,"v":"7","b":[],"w":"t"}',
+        '{"s":null,"k":0,"n":10,"v":"-0.0","b":["x"],"w":2.5}',
+    ]
+    df = _indexed(spark, docs)
+    s, a = ("o:string",), ("o:array<string>",)
+    shapes = [
+        ("{o: (.s | length)}", s),
+        ("{o: (.k / 3)}", s),
+        ("{o: (.n | fabs)}", s),
+        ('{o: (.n | ltrimstr("x"))}', s),
+        ('{o: (.n | ltrimstr("x") | tojson)}', s),
+        ("{o: (.v | tonumber | tostring)}", s),
+        ("{o: (.v | tonumber | floor | tojson)}", s),
+        ("{o: (.b | max)}", s),
+        ("{o: (.b | min)}", s),
+        ("{o: (.b | first)}", s),
+        ("{o: (.b | last)}", s),
+        ('{o: (.b | join(","))}', s),
+        ("{o: (.w // 2.0)}", s),
+        ("{o: (.b | sort)}", a),
+        ("{o: (.b | unique)}", a),
+        ("{o: .b}", a),
+        ("{o: 1.0, k: .k}", ("o:string", "k:int")),
+        ('if .k > 0 then 1e20 else "x" end', ("string",)),
+    ]
+    for prog, decls in shapes:
+        got = jq_explode(df, "j", prog, *decls, native="auto")
+        want = jq_explode(df, "j", prog, *decls, native="never")
+        cols = [c for c in got.columns if c != "j"]
+
+        def by_input(out):
+            return _rows_by_input(
+                [(r[0], tuple(r[1:])) for r in out.select(cols).collect()]
+            )
+
+        assert by_input(got) == by_input(want), prog
+
+
+def test_native_integer_math_keeps_64_bit_values(spark):
+    """floor/ceil keep doubles beyond 2^63 (Spark's FLOOR/CEIL return a
+    clamped BIGINT), and % truncates its operands toward zero like
+    jq's int() in a type that holds them — never a CAST_OVERFLOW."""
+    df = _indexed(
+        spark,
+        [
+            '{"w": 1e20, "n": -2.5e19, "k": 1e20}',
+            '{"w": 2.5, "n": -7.5, "k": -7.5}',
+            '{"w": -2.5, "n": 7.5, "k": 23}',
+        ],
+    )
+    nat, py, sent = _tiers_by_input(
+        df,
+        "{a: (.w | floor), b: (.n | ceil), c: (.k % 7), d: (.n % 2), e: (.k % 10)}",
+        "a:double", "b:double", "c:double", "d:double", "e:int",
+    )
+    assert sent == 0
+    assert nat == py
+    assert nat[0] == [(1e20, -2.5e19, 2.0, 0.0, 0)]
