@@ -1096,6 +1096,9 @@ def compile_scalar(node: AST):
         if not _SCALAR_CALLS_OK:
             return None
         _, name, args = node
+        k = _scalar_kernel(name, args)
+        if k is not None:
+            return k
         if (name, len(args)) not in _SCALAR_CALL_WHITELIST:
             return None
         for a in args:
@@ -3391,11 +3394,165 @@ def _c_call_paths_like(node):
     return None
 
 
+# ---------------------------------------------------------------------------
+# Compile-time kernels: builtin calls with constant arguments, and the
+# prelude's reduce/select helpers, as native loops with the generic
+# path's semantics and error texts.  Sound only when the program has no
+# funcdefs that could shadow the builtin (_SCALAR_CALLS_OK).
+# ---------------------------------------------------------------------------
+
+try:
+    from re import _parser as _re_parser
+except ImportError:  # pragma: no cover - Python < 3.11
+    _re_parser = None
+
+
+def _not_matchable(v):
+    return JQError(f"{typename(v)} cannot be matched, as it is not a string")
+
+
+def _regex_kernel(name, args):
+    """``test``/``sub``/``gsub`` with a string-literal pattern (and
+    replacement), and string or null literal flags: one precompiled
+    ``search``/``sub`` call.  None when an argument is not such a
+    literal, the pattern does not compile (the generic path then fails
+    per row, only on the rows that reach it), or — for sub/gsub — the
+    pattern can match the empty string, where `_iter_matches`'
+    stepping and the ``n`` flag decide."""
+    nfix = 1 if name == "test" else 2
+    if not all(a[0] == "literal" and isinstance(a[1], str) for a in args[:nfix]):
+        return None
+    flags = None
+    if len(args) > nfix:
+        if args[nfix][0] != "literal" or not isinstance(args[nfix][1], (str, type(None))):
+            return None
+        flags = args[nfix][1]
+    if name == "gsub":
+        flags = (flags or "") + "g"
+    try:
+        rx, glob, _ignore_empty = _compile_regex(args[0][1], flags)
+    except JQError:
+        return None
+    if name == "test":
+        search = rx.search
+
+        def k_test(v, e):
+            if not isinstance(v, str):
+                raise _not_matchable(v)
+            return search(v) is not None
+
+        return k_test
+    if _re_parser is None or _re_parser.parse(rx.pattern, rx.flags).getwidth()[0] == 0:
+        return None
+    # the replacement is literal text, not a re template
+    repl = args[1][1].replace("\\", "\\\\")
+    sub, count = rx.sub, 0 if glob else 1
+
+    def k_sub(v, e):
+        if not isinstance(v, str):
+            raise _not_matchable(v)
+        return sub(repl, v, count=count)
+
+    return k_sub
+
+
+def _k_add(v, e):
+    acc = None
+    for x in do_iterate(v):
+        acc = op_add(acc, x)
+    return acc
+
+
+def _any_all_kernel(is_any, arg_fns):
+    """``any``/``all`` of arity 0-2.  Like the prelude's ``reduce``
+    (jq 1.5) they consume the whole stream: a later element's error
+    still raises after the answer is known."""
+    if len(arg_fns) == 2:
+        gen, cond = arg_fns
+
+        def stream(v, e):
+            for gv in gen(v, e):
+                yield from cond(gv, e)
+
+    elif arg_fns:
+        (cond,) = arg_fns
+
+        def stream(v, e):
+            for x in do_iterate(v):
+                yield from cond(x, e)
+
+    else:
+
+        def stream(v, e):
+            return do_iterate(v)
+
+    if is_any:
+
+        def k_any(v, e):
+            acc = False
+            for x in stream(v, e):
+                acc = acc or is_truthy(x)
+            return acc
+
+        return k_any
+
+    def k_all(v, e):
+        acc = True
+        for x in stream(v, e):
+            acc = acc and is_truthy(x)
+        return acc
+
+    return k_all
+
+
+_SELECTOR_KERNELS = {
+    "values": lambda v: v is not None,
+    "nulls": lambda v: v is None,
+    "booleans": lambda v: typename(v) == "boolean",
+    "numbers": lambda v: typename(v) == "number",
+    "strings": lambda v: typename(v) == "string",
+    "arrays": lambda v: typename(v) == "array",
+    "objects": lambda v: typename(v) == "object",
+    "iterables": lambda v: typename(v) in ("array", "object"),
+    "scalars": lambda v: typename(v) not in ("array", "object"),
+}
+
+
+def _scalar_kernel(name, args):
+    """A kernel ``fn(v, e) -> value`` for a call that always yields
+    exactly one value, or None (generic path)."""
+    if not _SCALAR_CALLS_OK or _DISABLE_SCALAR:
+        return None
+    arity = len(args)
+    if (name == "test" and arity in (1, 2)) or (name in ("sub", "gsub") and arity in (2, 3)):
+        return _regex_kernel(name, args)
+    if name == "add" and arity == 0:
+        return _k_add
+    if name in ("any", "all") and arity <= 2:
+        return _any_all_kernel(name == "any", [compile_node(a) for a in args])
+    return None
+
+
+def _call_kernel(name, args):
+    """A stream kernel ``fn(v, e) -> tuple`` for a builtin call, or
+    None (generic path)."""
+    if not _SCALAR_CALLS_OK or _DISABLE_SCALAR:
+        return None
+    keep = _SELECTOR_KERNELS.get(name)
+    if keep is not None and not args:
+        return lambda v, e: (v,) if keep(v) else ()
+    s = _scalar_kernel(name, args)
+    return None if s is None else (lambda v, e: (s(v, e),))
+
+
 _orig_c_call = _c_call
 
 
 def _c_call_dispatch(node):
     _, name, args = node
+    k = _call_kernel(name, args)
+    if k is not None:
+        return k
     if name == "select" and len(args) == 1 and _SCALAR_CALLS_OK:
         # lean select: scalar condition → no arg-stream machinery,
         # no runtime get_func lookup (sound only when the program has

@@ -42,7 +42,9 @@ text.  Three rules cover the rest:
 
 1. a row where such a value's ``schema_of_variant`` names DECIMAL,
    DOUBLE or FLOAT — or a mixed array's elements do (`_number_text`)
-   — goes to the exact Python tier (`_number_text_rows`);
+   — goes to the exact Python tier (`_number_text_rows`); so does an
+   object under an iterate where ``//`` or the trim pass-through casts
+   the element's variant to text, which would sort its keys;
 2. computed numbers (arithmetic, ``length``, ``tonumber``/``floor``/
    ``ceil``/``sqrt``/``fabs``, ``add``) and the order-dependent
    ``sort``/``unique``/``max``/``min`` into a string-typed slot do not
@@ -1570,18 +1572,20 @@ def _json_path(p: Path) -> str:
 _BIND_COL = "__jq_docbind"
 
 
-def _number_text(v: Column, depth: int = 2) -> Column:
+def _number_text(v: Column, objects: bool = False, depth: int = 2) -> Column:
     """Whether the raw text view of variant ``v`` may print a number
-    unlike jq: its schema names a non-integer number type.  A mixed
-    array's schema hides its element types (``[1.0, "a"]`` is
+    unlike jq: its schema names a non-integer number type — or, with
+    ``objects``, an object, whose keys a variant cast prints sorted.
+    A mixed array's schema hides its element types (``[1.0, "a"]`` is
     ``ARRAY<VARIANT>``), so a VARIANT in it looks ``depth`` levels
     further into the elements, and counts as number text below that."""
     s = F.schema_of_variant(v)
+    types = "DECIMAL|DOUBLE|FLOAT|OBJECT" if objects else "DECIMAL|DOUBLE|FLOAT"
     if depth == 0:
-        return s.rlike("DECIMAL|DOUBLE|FLOAT|VARIANT")
-    return s.rlike("DECIMAL|DOUBLE|FLOAT") | (
+        return s.rlike(types + "|VARIANT")
+    return s.rlike(types) | (
         s.contains("VARIANT")
-        & F.exists(_elements(v), lambda e: _number_text(e, depth - 1))
+        & F.exists(_elements(v), lambda e: _number_text(e, objects, depth - 1))
     )
 
 
@@ -1594,10 +1598,11 @@ def _elements(v: Column) -> Column:
     )
 
 
-def _number_text_rows(v: Column, levels: list, paths: list) -> Column:
+def _number_text_rows(v: Column, levels: list, paths: dict) -> Column:
     """Whether any value at ``paths`` that the plan reads as text holds
-    number text (`_number_text`).  ``levels`` are the paths to each
-    iterate (pre-path, then mid-paths) — empty for a scalar plan — and
+    number text (`_number_text`; ``paths`` maps each path to its
+    ``objects`` flag).  ``levels`` are the paths to each iterate
+    (pre-path, then mid-paths) — empty for a scalar plan — and
     ``paths`` are relative to the last iterated element; every element
     counts, also those a filter or limit drops."""
 
@@ -1607,15 +1612,15 @@ def _number_text_rows(v: Column, levels: list, paths: list) -> Column:
     def check(x: Column, lvl: int) -> Column:
         if lvl == len(levels):
             c = F.lit(False)
-            for p in paths:
-                c = c | _number_text(at(x, p))
+            for p, objects in paths.items():
+                c = c | _number_text(at(x, p), objects)
             return c
         return F.exists(_elements(at(x, levels[lvl])), lambda e: check(e, lvl + 1))
 
     return F.coalesce(check(v, 0), F.lit(False))
 
 
-def _python_rows(col: Column, dv: Column, levels: list, paths: list) -> Column:
+def _python_rows(col: Column, dv: Column, levels: list, paths: dict) -> Column:
     """Rows the exact Python tier must evaluate, over the bound variant
     ``dv`` of doc column ``col``:
 
@@ -2201,6 +2206,8 @@ def _validate_new_specs(project: Optional[dict], schema: T.StructType) -> None:
             or spec[0] == "length"
             or (spec[0] == "arrayfn" and spec[2] in ("max", "min", "sort", "unique"))
             or (spec[0] == "fnchain" and spec[2][-1][0] in _NUM_FNS)
+            # keys as text is Spark's array cast text, not jq's
+            or (spec[0] in ("keyssorted", "keysunsorted") and isinstance(dt, T.StringType))
         ):
             raise _SchemaConflict(spec)
         if spec[0] == "fnchain" and any(
@@ -3411,22 +3418,28 @@ class NativePlan:
         to_python = _python_rows(col, dv, levels, self._text_paths())
         return to_python, pre_conds, gens, post_conds, out_cols
 
-    def _text_paths(self) -> list:
+    def _text_paths(self) -> dict:
         """Paths of the values this plan reads as text (module
         docstring, rule 1): from the document in a scalar plan, from
-        the last iterated element in an iterate plan."""
+        the last iterated element in an iterate plan.  Each maps to
+        whether an object there routes too: under an iterate, ``//``
+        and the trim pass-through cast the element's variant to text."""
         ir = self.ir
         fields = self.schema.fields
         if ir.single_call is not None:
-            return []  # keys are strings, length is numeric
+            return {}  # keys are strings, length is numeric
         if ir.project is None:
             pairs = (
                 [(ir.single_path, fields[0].dataType)]
                 if self.single
                 else [(ir.single_path + (f.name,), f.dataType) for f in fields]
             )
-            return [p for p, dt in pairs if _holds_text(dt)]
-        paths = []
+            return {p: False for p, dt in pairs if _holds_text(dt)}
+        paths: dict = {}
+
+        def add(p, objects=False):
+            paths[p] = paths.get(p, False) or objects
+
         for f in fields:
             spec = ir.project.get(f.name)
             if spec is None:
@@ -3435,16 +3448,20 @@ class NativePlan:
             if kind == "fnchain" and spec[2][0][0] in (
                 "tostring", "tojson", "ltrimstr", "rtrimstr"
             ):
-                paths.append(spec[1])
+                add(spec[1], ir.iterate and spec[2][0][0] in ("ltrimstr", "rtrimstr"))
             elif kind == "strinterp":
-                paths += [p for k, p in spec[1] if k != "lit"]
+                for k, p in spec[1]:
+                    if k != "lit":
+                        add(p)
             elif kind == "ifelse" and _holds_text(f.dataType):
-                paths += [b[1] for b in spec[2:] if b[0] == "path"]
+                for b in spec[2:]:
+                    if b[0] == "path":
+                        add(b[1])
             elif kind in ("path", "alt", "arrayfn", "slicearr") and _holds_text(
                 f.dataType
             ):
-                paths.append(spec if kind == "path" else spec[1])
-        return list(dict.fromkeys(paths))
+                add(spec if kind == "path" else spec[1], ir.iterate and kind == "alt")
+        return paths
 
 
 _PLAN_CACHE: dict[tuple[str, tuple[str, ...]], Optional[NativePlan]] = {}

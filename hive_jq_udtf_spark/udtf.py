@@ -65,6 +65,11 @@ def compile_query(program: str, decls: tuple[str, ...], extended: bool = False):
     return hit
 
 
+# built once: json.loads builds a new decoder per call when given
+# any non-default keyword
+_DECODER = json.JSONDecoder(strict=False)
+
+
 def parse_document(json_str: Optional[str]) -> tuple[Any, Optional[dict]]:
     """Parse one JSON cell → (document, $error).
 
@@ -77,6 +82,9 @@ def parse_document(json_str: Optional[str]) -> tuple[Any, Optional[dict]]:
     if json_str is None:
         return None, None
     try:
+        if isinstance(json_str, str) and not json_str.startswith("\ufeff"):
+            return _DECODER.decode(json_str), None
+        # json.loads raises the BOM error and decodes bytes
         return json.loads(json_str, strict=False), None
     except ValueError as ex:
         return None, {

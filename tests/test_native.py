@@ -2856,6 +2856,37 @@ def test_native_number_text_matches_python_tier(spark):
         assert by_input(got) == by_input(want), prog
 
 
+def test_native_keys_and_iterated_objects_as_text_match_python_tier(spark):
+    """Text of object-shaped values: ``keys``/``keys_unsorted`` into a
+    string slot do not compile (Spark's array cast text is ``[a, z]``,
+    jq's ``["a","z"]``), and under an iterate an object that ``//`` or
+    the trim pass-through prints goes to the Python tier (a variant
+    cast sorts its keys; jq keeps document order).  ``auto`` equals
+    ``never`` per input row; only rows holding such an object route."""
+    docs = [
+        '{"m":{"z":1,"a":"q"},"xs":[{"m":{"z":1,"a":"q"}},{"m":"xy"},{}]}',
+        '{"m":{"b":1},"xs":[{"m":[{"z":2,"b":1}]},{"m":false}]}',
+        '{"m":{},"xs":[{"m":[1,{"z":2,"b":1}]}]}',
+        '{"m":{"y":2,"c":3},"xs":[{"m":"xq"},{"m":[1,"a",true]},{"m":null}]}',
+    ]
+    df = _indexed(spark, docs)
+    for prog in ("{o: (.m | keys)}", "{o: (.m | keys_unsorted)}"):
+        assert compile_native(prog, ("o:string",)) is None, prog
+        assert compile_native(prog, ("o:array<string>",)) is not None, prog
+    for prog in ("{o: (.m | keys)}", "{o: (.m | keys_unsorted)}",
+                 ".xs[] | {o: (.m // 1)}", '.xs[] | {o: (.m | ltrimstr("x"))}',
+                 '.xs[] | {o: (.m | rtrimstr("q"))}'):
+        got = jq_explode(df, "j", prog, "o:string", native="auto")
+        want = jq_explode(df, "j", prog, "o:string", native="never")
+        assert _rows_by_input([tuple(r) for r in got.select("i", "o").collect()]) == (
+            _rows_by_input([tuple(r) for r in want.select("i", "o").collect()])
+        ), prog
+    for prog in (".xs[] | {o: (.m // 1)}", '.xs[] | {o: (.m | ltrimstr("x"))}'):
+        nat, py, sent = _tiers_by_input(df, prog, "o:string")
+        assert nat == py, prog
+        assert sent == 3, prog  # the docs whose .xs hold an object
+
+
 def test_native_integer_math_keeps_64_bit_values(spark):
     """floor/ceil keep doubles beyond 2^63 (Spark's FLOOR/CEIL return a
     clamped BIGINT), and % truncates its operands toward zero like

@@ -96,6 +96,74 @@ PROGRAMS = [
     # funcdef gate: user shadowing of a whitelisted builtin MUST win
     ('def length: 99; .s | length', {"s": "abcdef"}),
     ('def add: "shadowed"; .xs | add', {"xs": [1, 2]}),
+    ('def gsub(a; b): "x"; gsub("a"; "b")', "banana"),
+    ('def any(g; f): 1; any(.[]; .)', [False]),
+    ('def numbers: "n"; [.[] | numbers]', [1, "a"]),
+    # compile-time kernels: literal-pattern regex builtins
+    ('gsub("[aeiou]"; "")', "education"),
+    ('sub("[aeiou]"; "")', "education"),
+    ('gsub("an"; "AN")', "banana"),
+    ('sub("(?<x>a)"; "<\\(.x)>")', "banana"),  # interpolated: generic
+    ('gsub("a"; "\\\\1\\\\g<0>")', "banana"),  # backslashes are literal
+    ('gsub("A"; "-"; "i")', "bAnana"),
+    ('gsub("a n"; "-"; "x")', "banana"),
+    ('sub("a"; "-"; "g")', "banana"),
+    ('gsub("a"; "-"; "n")', "banana"),
+    ('gsub("a"; "-"; null)', "banana"),
+    ('gsub("a"; "-"; "q")', "banana"),  # invalid flags: generic error
+    ('gsub("[aeiou]"; "")', 5),  # error text of a non-string input
+    ('sub("a"; "")', None),
+    ('[.[] | gsub("o"; "0")]', ["foo", ["o"]]),
+    # patterns that can match empty stay generic
+    ('gsub("a*"; "-")', "baaac"),
+    ('gsub("\\\\b"; "|")', "ab cd"),
+    ('gsub("(?=a)"; "^")', "banana"),
+    ('gsub("$"; "E")', "ab"),
+    ('gsub(""; "_")', "ab"),
+    ('gsub("a*"; "-"; "n")', "baaac"),
+    ('sub("x*"; "-")', "ab"),
+    ('test("A"; "i")', "xa"),
+    ('test("^t[0-4]$")', "t3"),
+    ('test("^t[0-4]$")', "t9"),
+    ('test("a"; null)', "bab"),
+    ('test("a b"; "x")', "xab"),
+    ('test("a")', 1),
+    ('[.[] | select(test("b"))]', ["ab", "cd", "bb"]),
+    ('test("(")', "a"),  # invalid pattern: generic, per row
+    ('if . == "x" then test("(") else "ok" end', "y"),  # ... dead branch
+    ('if . == "x" then gsub("("; "") else "ok" end', "y"),
+    # compile-time kernels: the prelude's reduce/select helpers
+    ('any', [False, None, 1]),
+    ('any', []),
+    ('all', [True, 1, "a"]),
+    ('all', [True, None]),
+    ('any', 5),
+    ('any(. > 2)', [1, 3]),
+    ('all(. > 0)', {"a": 1, "b": 0}),
+    ('any(.tags[]?; . == "t1")', {"tags": ["t0", "t1"]}),
+    ('any(.tags[]?; . == "t1")', {"tags": 7}),
+    ('all(.[]; . > 0)', []),
+    ('any(.[]; error("e"))', [True, 1]),  # no short-circuit: still raises
+    ('all(.[]; if . then error("f") else false end)', [False, True]),
+    ('any(.[]; (., .))', [False, True]),
+    ('add', [1, 2, 3]),
+    ('add', ["a", "b"]),
+    ('add', [[1], [2]]),
+    ('add', [{"a": 1}, {"b": 2}]),
+    ('add', []),
+    ('add', {"a": 1, "b": 2}),
+    ('add', [1, "a"]),
+    ('add', None),
+    ('[.. | numbers] | add', {"a": [1, {"b": 2.5}], "c": "x"}),
+    ('[.[] | values]', [1, None, False]),
+    ('[.[] | nulls]', [1, None, False]),
+    ('[.[] | booleans]', [1, None, False, True]),
+    ('[.[] | numbers]', [1, None, 2.5, True, "1"]),
+    ('[.[] | strings]', [1, "a", ["b"]]),
+    ('[.[] | arrays]', [1, [2], {"c": 3}]),
+    ('[.[] | objects]', [1, [2], {"c": 3}]),
+    ('[.[] | iterables]', [1, [2], {"c": 3}, "s"]),
+    ('[.[] | scalars]', [1, [2], {"c": 3}, "s", None]),
 ]
 
 
@@ -142,3 +210,41 @@ _values = st.sampled_from(
 def test_random_programs_match(src, value):
     a, b = both_ways(src, value)
     assert a == b, f"{src!r} on {value!r}: scalar {a!r} != generator {b!r}"
+
+
+# -- kernels vs generic on random strings ------------------------------
+
+_KERNEL_PROGRAMS = [
+    'gsub("[aeiou]"; "")', 'sub("ab"; "\\\\x")', 'gsub("a+b?"; "<>"; "i")',
+    'gsub("(?<=a)b"; "B")', 'gsub("\\\\s+"; " ")', 'sub("^a"; "")', 'gsub("b$"; "!")',
+    'gsub("a*"; "-")', 'gsub("\\\\b"; "|")', 'gsub(""; ".")', 'gsub("a*"; "-"; "n")',
+    'test("ab")', 'test("^A"; "i")', 'test("a b"; "x")',
+]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    src=st.sampled_from(_KERNEL_PROGRAMS),
+    value=st.text(alphabet="abAB \n\u00e9", max_size=12),
+)
+def test_kernels_match_generic_on_random_strings(src, value):
+    a, b = both_ways(src, value)
+    assert a == b, f"{src!r} on {value!r}: kernel {a!r} != generic {b!r}"
+
+
+def test_kernels_are_selected(monkeypatch):
+    """The literal-pattern gsub and the prelude's any/2 compile to their
+    kernels: the generic paths they replace are never entered."""
+
+    def boom(*_a, **_k):
+        raise AssertionError("generic path entered")
+
+    monkeypatch.setattr(E, "_sub_impl", boom)
+    monkeypatch.setattr(E, "_call_funcdef", boom)
+    E._COMPILE_CACHE.clear()
+    assert E.JQProgram('gsub("[aeiou]"; "")')("education") == ["dctn"]
+    assert E.JQProgram('any(.tags[]?; . == "t1")')({"tags": ["t1"]}) == [True]
+    assert E.JQProgram('[.[] | numbers] | add')([1, "a", 2]) == [3]
+    # an interpolated replacement stays on the generic path
+    with pytest.raises(AssertionError, match="generic path"):
+        E.JQProgram('gsub("a"; "\\(.)")')("a")

@@ -210,3 +210,29 @@ def test_dataframe_lateral_join_formulation(spark_jq):
     # (spark.tvf exposes only built-in table functions, so the
     # DataFrame lateralJoin surface composes with SQL-registered jq
     # via spark.sql subqueries — the LATERAL form above IS that path)
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        '{"a": 1',  # truncated
+        "{'a': 1}",  # not JSON
+        '{"a": 1} x',  # trailing data
+        "",
+        "\ufeff{}",  # BOM: json.loads' own error
+        '{"a": "x\ty\nz"}',  # raw control characters are allowed
+        '{"a": "\x00"}',
+        '[1, 2.5e3, "\\u00e9", null, true]',
+        b'{"a": 1}',
+    ],
+)
+def test_parse_document_matches_json_loads(text):
+    """The module-level decoder parses and fails like
+    ``json.loads(s, strict=False)``: same value, same ``$error``."""
+    import json
+
+    try:
+        want = (json.loads(text, strict=False), None)
+    except ValueError as ex:
+        want = (None, {"message": str(ex), "class": type(ex).__name__, "input": text})
+    assert jq_udtf.parse_document(text) == want
