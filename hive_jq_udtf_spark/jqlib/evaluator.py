@@ -1172,7 +1172,7 @@ def _c_slice_on(node):
 
 
 def _c_iterate_on(node):
-    stgt = compile_scalar(node[1])
+    stgt = None if _DISABLE_SCALAR else compile_scalar(node[1])
     if stgt is not None:
         # scalar target: hand back do_iterate's list directly — no
         # generator frame for the `.x[]` shape
@@ -3553,7 +3553,7 @@ def _c_call_dispatch(node):
     k = _call_kernel(name, args)
     if k is not None:
         return k
-    if name == "select" and len(args) == 1 and _SCALAR_CALLS_OK:
+    if name == "select" and len(args) == 1 and _SCALAR_CALLS_OK and not _DISABLE_SCALAR:
         # lean select: scalar condition → no arg-stream machinery,
         # no runtime get_func lookup (sound only when the program has
         # no funcdefs that could shadow `select` — same gate as the

@@ -14,69 +14,51 @@ ours).
 transparently and falls back to the Python UDTF for general
 programs.
 
-Semantics delta vs the Python tier (documented per D1): Spark casts
-produce NULL where Jackson-lenient marshalling produces 0/false for
-*non-coercible* garbage, and compiled arithmetic (`- * / %`) yields
-NULL on a null/missing operand where jq ABORTS the query (`+` keeps
-jq's null-identity; comparisons keep jq's null-below-everything
-order).  ALL of jq's arithmetic is polymorphic (``+`` concatenates
-strings/arrays and merges objects, ``-`` subtracts arrays, ``*``
-repeats strings and merges objects, ``/`` splits strings), so an
-arithmetic expression compiles numerically only when it PROVES
-number-valued-or-error (`_proves_num`, r10: numeric literal / neg /
-``%`` prove outright; ``+ - /`` propagate proof from either side;
-``*`` needs BOTH sides proven because string repetition pairs a
-string with a number).  A string literal in a ``+`` chain →
-concatenation (strcat spec: null/missing parts are the identity '',
-non-string parts yield NULL where jq aborts, corrupt docs yield
-NULL); unproven chains (``.a + .b``, ``.a + .b * 2``) fall back to
-the Python tier — compiling them numerically silently NULLed
-string results (r9 found the path-only ``+`` case, r10 closed the
-``- * /``-as-anchor case).
-Number text: this tier prints no number itself.  Strings, booleans,
-null and 64-bit integers read as text (a string-typed slot, or
-``tostring`` / ``tojson`` / ``@text`` / ``@json`` / ``@base64`` /
-interpolation / ``join`` / the ``ltrimstr``-``rtrimstr``
-pass-through) keep the raw text view, which already equals jq's
-text.  Three rules cover the rest:
+One semantics on both tiers: a native plan evaluates a row only where
+its Catalyst expressions give exactly jq's result, and sends every
+other row to the exact Python tier (`NativePlan.apply`), which raises
+where jq raises and marshals leniently where the reference does.  Three
+mechanisms decide which rows those are:
 
-1. a row where such a value's ``schema_of_variant`` names DECIMAL,
-   DOUBLE or FLOAT — or a mixed array's elements do (`_number_text`)
-   — goes to the exact Python tier (`_number_text_rows`); so does an
+1. guards (`_Guards`).  Each builder takes only the JSON kinds it
+   evaluates like jq: a string under ``ascii_*``, ``gsub``, ``test``,
+   ``split`` or a string slice; a number under ``floor``, ``ceil``,
+   ``sqrt`` (not negative) and arithmetic; no boolean under
+   ``length``; an object or array under ``keys`` and ``has``; an array
+   under ``add``/``sort``/``join``/``map``; an array or object at each
+   iterate level; null or an object (array) at each field (index) step.
+   A declared numeric slot takes numbers that fit it, a boolean slot
+   booleans, an array slot arrays (`_slot_bad`).  A row holding any
+   other value at a guarded path, at any iterate level and element —
+   also one a filter or limit would drop — takes the Python tier;
+2. number text.  This tier prints no number itself.  Strings,
+   booleans, null and 64-bit integers read as text (a string-typed
+   slot, ``tostring``/``tojson``/``@text``/``@json``/``@base64``,
+   interpolation, ``join``, the ``ltrimstr``-``rtrimstr``
+   pass-through) keep the raw text view, which already equals jq's
+   text.  A value whose ``schema_of_variant`` names DECIMAL, DOUBLE or
+   FLOAT (`_number_text`) is guarded like a wrong kind; so is an
    object under an iterate where ``//`` or the trim pass-through casts
-   the element's variant to text, which would sort its keys;
-2. computed numbers (arithmetic, ``length``, ``tonumber``/``floor``/
-   ``ceil``/``sqrt``/``fabs``, ``add``) and the order-dependent
-   ``sort``/``unique``/``max``/``min`` into a string-typed slot do not
-   compile (`_validate_new_specs`), so ``auto`` takes the Python tier;
-3. a numeric literal into a string slot is rendered once, at build
-   time, by the marshaller's own jq text (`_lit_col`).
+   the element's variant to text, which would sort its keys.  Computed
+   numbers into a string slot do not compile (`_validate_new_specs`),
+   and a numeric literal into a string slot is rendered at build time
+   by the marshaller's own jq text (`_lit_col`);
+3. the document.  Well-formed JSON the variant parser rejects — under
+   Spark's default ``spark.sql.variant.allowDuplicateKeys=false``
+   exactly the documents with a duplicate key at any depth — takes the
+   Python tier (`_python_rows`).  Corrupt and NULL cells bind jq's null
+   document: compiling runs the program once on null with jqlib, and
+   those cells emit its rows, or take the Python tier when jq fails on
+   null (`_null_doc_rows`).
 
-``tojson`` quotes strings with Jackson escaping (the same
-\\n/\\t/\\r/\\uXXXX shortcuts as jqlib's json.dumps), keys_unsorted
-reads json_object_keys over raw text for document order — under an
-iterate that raw text is the element's text twin.  DUPLICATE-KEY
-documents ({"a":1,"a":2}) never reach this tier's readers:
-`NativePlan.apply` routes every row that is well-formed JSON but that
-the variant parser rejects — under Spark's default
-``spark.sql.variant.allowDuplicateKeys=false`` exactly the documents
-with a duplicate key at any depth — to the exact Python tier, and
-jq_explode keeps a session that sets that conf off this tier.
-sqrt of a
-negative yields NaN natively where the Python tier raises the jq
-error — same class.  On clean data the tiers agree BIT-FOR-BIT —
-pinned by the property tests in tests/test_native.py; transcendental
-math fns stay Python-tier because JVM libm is not correctly rounded
-(see _NUM_FNS note).
-
-Iteration deltas: ``.[]``/``.path[]`` iterates BOTH arrays and
-objects at EVERY iterate level of a multi-iterate program — object
-values in document key order, matching the Python tier (first level
-r8; inner levels r9 via a raw-text twin threaded through the chained
-explodes, since Spark variants sort object keys and cannot carry
-document order).  ``.[]`` on scalars/null yields no rows where jq
-raises (the documented error-channel delta shared with missing
-paths).
+Shapes that no per-row guard covers do not compile (`_validate_new_specs`,
+`_elem_schema`), so ``auto`` takes the Python tier.  ``.[]``/``.path[]``
+iterates both arrays and objects at every iterate level, object values
+in document key order (a raw-text twin threaded through the chained
+explodes, since Spark variants sort object keys).  Transcendental math
+fns stay Python-tier because JVM libm is not correctly rounded (see
+_NUM_FNS note).  On every row it evaluates, the tier agrees with jq bit
+for bit — pinned by tests/test_native_differential.py.
 """
 
 from __future__ import annotations
@@ -324,10 +306,8 @@ _NUM_OPS = {"+", "-", "*", "/", "%"}
 _NULL_CMP = {"<": True, "<=": True, ">": False, ">=": False, "==": False, "!=": True}
 
 
-# Whitelisted scalar function chains compilable to Catalyst.  Value
-# semantics preserved on well-typed data; deltas are the documented
-# cast-garbage class (jq aborts on type errors, the native tier
-# passes through / NULLs).
+# Whitelisted scalar function chains compilable to Catalyst, exact on
+# the kinds `_Guards.fnchain` admits.
 _STR_FNS = {
     "ascii_downcase": 0,
     "ascii_upcase": 0,
@@ -385,7 +365,7 @@ def _capture_names(pat: str):
     Compilable means the Java/Python semantics are identical AND every
     named group PARTICIPATES in any overall match (jq renders a
     non-participating group as null; regexp_extract renders it '' —
-    a value divergence, not just a null-vs-error delta).  Enforced
+    a value divergence that no guard sees).  Enforced
     conservatively: every '(' is escaped, inside a character class, a
     named group ``(?<name>``, or non-capturing ``(?:``; no '|' outside
     character classes; no zero-admitting quantifier (?, *, {0...})
@@ -565,8 +545,8 @@ def _as_strcat(ast: AST):
     (at least one of each) → part list [("lit", s) | ("path", p)],
     else None.  The string literal anchors the chain's type: jq then
     either concatenates (string operands), passes null as the
-    identity, or ABORTS (any other operand type) — the abort maps to
-    the documented NULL-delta class in the compiled form."""
+    identity, or ABORTS (any other operand type) — a row the guards
+    send to the Python tier."""
     parts: list = []
 
     def walk(n: AST) -> bool:
@@ -623,30 +603,12 @@ def _as_strinterp(ast: AST):
     return parts
 
 
-def _strcat_col(parts, var_of) -> Column:
-    """Compile a strcat part list given ``var_of(path) -> variant
-    Column``.  Per part: string content for JSON strings, '' for
-    null/missing (jq's ``+`` null identity), and any OTHER type
-    poisons the whole result to NULL (jq aborts the row — the
-    documented error-channel delta class)."""
-    segs = []
-    poison = F.lit(False)
-    for kind, val in parts:
-        if kind == "lit":
-            segs.append(F.lit(val))
-        else:
-            v = var_of(val)
-            vt = F.schema_of_variant(v)
-            bad = (
-                vt.isNotNull()
-                & (vt != F.lit("STRING"))
-                & (vt != F.lit("VOID"))
-            )
-            poison = poison | bad
-            segs.append(
-                F.coalesce(F.try_variant_get(v, "$", "string"), F.lit(""))
-            )
-    return F.when(~poison, F.concat(*segs))
+def _strcat_col(parts, str_of) -> Column:
+    """Compile a strcat part list given ``str_of(path) -> string
+    Column``: null/missing parts are jq's ``+`` identity ''."""
+    return F.concat(
+        *[F.lit(val) if kind == "lit" else F.coalesce(str_of(val), F.lit("")) for kind, val in parts]
+    )
 
 
 def _integral(d: Column, fn) -> Column:
@@ -668,7 +630,7 @@ def _apply_fnchain(c: Column, fns, json_text: bool = False) -> Column:
     for name, args in fns:
         if name == "ascii_downcase":
             # jq's ascii_* fold ONLY A-Z — translate, not lower()
-            # (lower() would also fold unicode, a real semantic delta)
+            # (lower() would also fold unicode, unlike jq)
             c = F.translate(c, _string.ascii_uppercase, _string.ascii_lowercase)
         elif name == "ascii_upcase":
             c = F.translate(c, _string.ascii_lowercase, _string.ascii_uppercase)
@@ -716,8 +678,6 @@ def _apply_fnchain(c: Column, fns, json_text: bool = False) -> Column:
             # variant-gated _tojson_view)
             c = _tostring_view(c) if json_text else _json_quote(c)
         elif name == "tonumber":
-            # try_cast: garbage strings are the documented NULL-delta
-            # class (jq aborts the row); never an ANSI runtime crash
             c = c.try_cast("double")
         elif name == "floor":
             c = _integral(c.try_cast("double"), F.floor)
@@ -798,8 +758,7 @@ def _as_slice(ast: AST):
     column (`_slice_col`) gates on the EXACT-TYPED variant so each
     declared shape honors only its own type: ARRAY values slice under
     an array decl, STRING values substring (by codepoints) under a
-    string decl; the cross-type cases and OBJECT inputs are NULL (jq
-    errors on objects — the documented NULL-delta class)."""
+    string decl; the guards route the other kinds."""
     if ast[0] != "slice_on":
         return None
     base = _as_path(ast[1])
@@ -869,10 +828,8 @@ def _as_reduce(ast: AST):
     once-parsed array — custom reductions (sum of squares, weighted
     folds) stay JVM-side, generalizing the fixed ``add`` arrayfn.
 
-    jq deltas are the documented cast-garbage class shared by every
-    arrayfn: jq ABORTS on a null/typed-wrong element (number + null)
-    or division by zero, this tier propagates NULL / IEEE inf which
-    the declared-type try_cast turns into NULL."""
+    The guards route an array holding anything but numbers; an update
+    that divides by a value does not compile."""
     if ast[0] != "reduce":
         return None
     src, pat, init, upd = ast[1], ast[2], ast[3], ast[4]
@@ -906,9 +863,8 @@ def _reduce_update_ok(ast: AST, var: str) -> bool:
     return False
 
 
-def _reduce_col(json_col: Column, path: Path, init, upd: AST) -> Column:
-    raw = F.get_json_object(json_col, _json_path(path))
-    arr = F.from_json(raw, T.ArrayType(T.DoubleType()))
+def _reduce_col(arr: Column, init, upd: AST) -> Column:
+    """The fold over a double array Column."""
 
     def build(a: AST, acc: Column, x: Column) -> Column:
         tag = a[0]
@@ -1016,8 +972,8 @@ def _proves_num(ast: AST) -> bool:
       (negation and ``%`` have no non-number overload in jq);
     - ``+ - /``: ONE proven side suffices — every non-number
       overload of these pairs two non-numeric operands, so a proven
-      numeric side forces number-or-error (the error lands in the
-      documented abort-delta class);
+      numeric side forces number-or-error (the guards route the
+      error rows);
     - ``*``: BOTH sides must be proven, because string repetition
       ``"ab" * 3`` pairs a string with a NUMBER — a numeric literal
       operand proves nothing (r10 fix: the old rule treated any
@@ -1051,9 +1007,8 @@ def _expr_kind(ast: AST, in_arith: bool = False) -> Optional[str]:
     Catalyst) must reject so auto mode falls back to Python.
     ``in_arith`` marks nodes inside an arithmetic chain whose MAXIMAL
     root already passed the `_proves_num` check (checked once per
-    chain: inner unproven subtrees of a proven root can only produce
-    value/NULL-where-jq-aborts rows, the documented delta class —
-    never a different value where jq is valued)."""
+    chain: inner unproven subtrees of a proven root can only differ
+    on rows where jq errors, which the guards route)."""
     tag = ast[0]
     if tag == "literal":
         ok = isinstance(ast[1], (int, float)) and not isinstance(ast[1], bool)
@@ -1096,7 +1051,7 @@ def _expr_paths(ast: AST, acc: list) -> None:
     """Collect paths referenced by a compilable expression."""
     tag = ast[0]
     p = _as_path(ast)
-    if p is not None and tag != "identity":
+    if p is not None:
         acc.append(p)
         return
     if tag == "neg":
@@ -1112,9 +1067,8 @@ def _compile_expr(ast: AST, num_path_col) -> Column:
 
     jq semantics preserved: ``+`` treats null as identity (null+x=x,
     null+null=null); comparisons use jq's total order for null vs
-    literal.  Delta (documented): on `- * / %` with a null operand jq
-    ABORTS while this tier yields NULL; on non-numeric garbage values
-    the cast yields NULL where jq would abort."""
+    literal.  The guards route every row where jq errors: a null or
+    non-number operand of ``- * / %``, a zero divisor."""
     tag = ast[0]
     if tag == "literal":
         return F.lit(ast[1])
@@ -1148,8 +1102,7 @@ def _compile_expr(ast: AST, num_path_col) -> Column:
         # past that, where a cast fails with CAST_OVERFLOW); a larger
         # one is an integral double that decimal(38,0) holds below
         # 1e38, and the remainder then fits a long whenever one operand
-        # does.  Beyond that the result is NULL where jq keeps a value,
-        # and a zero divisor NULL where jq aborts.
+        # does; the guards route wider operands and zero divisors.
         ld, rd = lc.cast("double"), rc.cast("double")
         ll, rl = ld.try_cast("long"), rd.try_cast("long")
         wide = F.try_mod(ld.try_cast("decimal(38,0)"), rd.try_cast("decimal(38,0)"))
@@ -1572,14 +1525,14 @@ def _json_path(p: Path) -> str:
 _BIND_COL = "__jq_docbind"
 
 
-def _number_text(v: Column, objects: bool = False, depth: int = 2) -> Column:
+def _number_text(v: Column, objects: bool = False, depth: int = 2, s=None) -> Column:
     """Whether the raw text view of variant ``v`` may print a number
     unlike jq: its schema names a non-integer number type — or, with
     ``objects``, an object, whose keys a variant cast prints sorted.
     A mixed array's schema hides its element types (``[1.0, "a"]`` is
     ``ARRAY<VARIANT>``), so a VARIANT in it looks ``depth`` levels
     further into the elements, and counts as number text below that."""
-    s = F.schema_of_variant(v)
+    s = F.schema_of_variant(v) if s is None else s
     types = "DECIMAL|DOUBLE|FLOAT|OBJECT" if objects else "DECIMAL|DOUBLE|FLOAT"
     if depth == 0:
         return s.rlike(types + "|VARIANT")
@@ -1598,29 +1551,319 @@ def _elements(v: Column) -> Column:
     )
 
 
-def _number_text_rows(v: Column, levels: list, paths: dict) -> Column:
-    """Whether any value at ``paths`` that the plan reads as text holds
-    number text (`_number_text`; ``paths`` maps each path to its
-    ``objects`` flag).  ``levels`` are the paths to each iterate
-    (pre-path, then mid-paths) — empty for a scalar plan — and
-    ``paths`` are relative to the last iterated element; every element
-    counts, also those a filter or limit drops."""
+# --- per-row type guards ----------------------------------------------------
+# The builders below evaluate jq exactly only on the JSON kinds they
+# expect: ``ascii_downcase`` on a string, ``floor`` on a number, a
+# number into a numeric slot, ``.[]`` on an array or object.  Each plan
+# lists, per path it reads, the kinds its builders take there and any
+# further checks on the value (`_Guards`); a row holding anything else
+# goes to the exact Python tier (`_python_rows`), which raises where jq
+# raises and marshals leniently where the reference does.
 
-    def at(x: Column, p: Path) -> Column:
-        return F.try_variant_get(x, _json_path(p), "variant") if p else x
+# JSON kinds as ``schema_of_variant`` names them
+_KIND_RE = {
+    "null": "VOID",
+    "boolean": "BOOLEAN",
+    "number": "BIGINT|DECIMAL.*|DOUBLE|FLOAT",
+    "string": "STRING",
+    "array": "ARRAY<.*",
+    "object": "OBJECT<.*",
+}
+_ANY = frozenset(_KIND_RE)
+_STRING = frozenset({"string"})
+_NULL_NUM = frozenset({"null", "number"})
+_ITERABLE = frozenset({"array", "object"})
+# integral slots: the largest magnitude a double carries exactly into
+# the slot (the marshaller wraps wider values, Spark casts NULL them)
+_INT_BOUND = {
+    T.ByteType: 2.0**7, T.ShortType: 2.0**15, T.IntegerType: 2.0**31, T.LongType: 2.0**53,
+}
 
-    def check(x: Column, lvl: int) -> Column:
-        if lvl == len(levels):
-            c = F.lit(False)
-            for p, objects in paths.items():
-                c = c | _number_text(at(x, p), objects)
-            return c
-        return F.exists(_elements(at(x, levels[lvl])), lambda e: check(e, lvl + 1))
 
-    return F.coalesce(check(v, 0), F.lit(False))
+def _kind(v: Column, s: Column) -> Column:
+    """The schema ``s`` of variant ``v`` for a scalar; just ``OBJECT<``
+    or ``ARRAY<`` for a container, whose elements ``schema_of_variant``
+    would walk."""
+    return (
+        F.when(v.try_cast("map<string,variant>").isNotNull(), F.lit("OBJECT<"))
+        .when(v.try_cast("array<variant>").isNotNull(), F.lit("ARRAY<"))
+        .otherwise(s)
+    )
 
 
-def _python_rows(col: Column, dv: Column, levels: list, paths: dict) -> Column:
+def _not_kind(s: Column, kinds) -> Column:
+    """Whether a value with variant schema ``s`` is none of ``kinds``;
+    a missing value (NULL ``s``) counts as null."""
+    alts = "|".join(_KIND_RE[k] for k in sorted(kinds))
+    return ~F.coalesce(s.rlike(f"^({alts})$"), F.lit("null" in kinds))
+
+
+def _slot_bad(v: Column, dt: T.DataType, nested: bool = False, s=None) -> Column:
+    """Whether the marshaller coerces value ``v`` into declared type
+    ``dt`` where a Spark cast or parse would not: a string, boolean or
+    container into a number slot, a scalar into an array slot, an
+    integer too wide for its slot.  ``nested`` values are parsed
+    strictly, so an integral slot there takes only integers."""
+    s = F.schema_of_variant(v) if s is None else s
+    if isinstance(dt, T.StringType):
+        return F.lit(False)
+    if isinstance(dt, T.BooleanType):
+        return _not_kind(s, {"null", "boolean"})
+    if type(dt) in _INT_BOUND:
+        kind = ~s.rlike("^(BIGINT|VOID)$") if nested else _not_kind(s, _NULL_NUM)
+        return kind | (F.abs(v.try_cast("double")) >= F.lit(_INT_BOUND[type(dt)]))
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return _not_kind(s, _NULL_NUM)
+    if isinstance(dt, T.ArrayType):
+        return _not_kind(_kind(v, s), {"null", "array"}) | F.exists(
+            v.try_cast("array<variant>"), lambda e: _slot_bad(e, dt.elementType, True)
+        )
+    if isinstance(dt, T.MapType):
+        return F.exists(
+            F.map_values(v.try_cast("map<string,variant>")),
+            lambda e: _slot_bad(e, dt.valueType, True),
+        )
+    c = _not_kind(_kind(v, s), {"null", "object"})
+    for f in dt.fields:
+        fv = F.try_variant_get(v, _json_path((f.name,)), "variant")
+        c = c | _slot_bad(fv, f.dataType, True)
+    return c
+
+
+def _each_bad(kinds=None, slot=None) -> Callable:
+    """A check that some element of an array value is none of ``kinds``
+    or is bad for declared type ``slot`` (`_slot_bad`)."""
+
+    def bad(e: Column) -> Column:
+        c = F.lit(False) if slot is None else _slot_bad(e, slot)
+        return c if kinds is None else c | _not_kind(F.schema_of_variant(e), kinds)
+
+    return lambda v, s: F.exists(v.try_cast("array<variant>"), bad)
+
+
+def _variant_expr(ast: AST, base: Path, x: Column) -> Column:
+    """A compiled expression over the paths of level value ``x``."""
+    return _compile_expr(ast, lambda q: F.try_variant_get(x, _json_path(tuple(base) + q), "double"))
+
+
+class _Guards:
+    """The type guards of one level of a plan: the document, or the
+    element an iterate yields.  Per path read there, ``kinds`` holds
+    the JSON kinds the builders take and ``checks`` named checks
+    ``(value, its schema) -> bad``; specs reading one path share its
+    entry and its one ``schema_of_variant``.  ``exprs`` are checks over
+    the level's value itself (a zero divisor)."""
+
+    def __init__(self, iterate: bool):
+        # an iterated element's values can reach text through a variant
+        # cast, which prints object keys sorted
+        self.iterate = iterate
+        self.kinds: dict = {}
+        self.checks: dict = {}
+        self.texts: dict = {}  # text-read path -> objects always route
+        self.exprs: list = []
+
+    def read(self, p: Path, kinds=_ANY, **checks) -> None:
+        for i, step in enumerate(p):
+            # jq errors on a step into anything but null or its container
+            self.read(p[:i], {"null", "object" if isinstance(step, str) else "array"})
+        self.kinds[p] = self.kinds.get(p, _ANY) & frozenset(kinds)
+        self.checks.setdefault(p, {}).update(checks)
+
+    def text(self, p: Path, cast: bool = False) -> None:
+        """``p``'s value is read as text (module docstring, rule 2).
+        Under an iterate an object in it prints with sorted keys where
+        the builder casts a variant to text: always with ``cast``, and
+        below an iterated object, whose elements are variants
+        (`_build_explode`)."""
+        self.read(p)
+        self.texts[p] = self.texts.get(p, False) or (cast and self.iterate)
+
+    def slot(self, p: Path, dt: T.DataType, nested: bool = False) -> None:
+        """``p``'s value lands in declared type ``dt``."""
+        if isinstance(dt, T.StringType):
+            self.read(p)  # any kind prints as text
+        else:
+            self.read(p, **{f"slot {dt.simpleString()} {nested}": lambda v, s: _slot_bad(v, dt, nested, s)})
+        if _holds_text(dt):
+            self.text(p)
+
+    def wide(self, p: Path, dt: T.DataType, value=lambda v: v.try_cast("double")) -> None:
+        """The number computed from ``p``'s value must fit integral slot
+        ``dt``: the marshaller wraps a wider one where Spark gives NULL."""
+        b = _INT_BOUND.get(type(dt))
+        if b is not None:
+            self.read(p, wide=lambda v, s: F.abs(value(v)) >= F.lit(b - 1))
+
+    def filter(self, f: "Filter") -> None:
+        if f.lhs_expr is not None:
+            self.expr(f.lhs_expr, f.lhs)
+        elif f.fn == "length":
+            self.read(f.lhs, _ANY - {"boolean"})
+        elif f.op == "has":
+            self.read(f.lhs, {"object" if isinstance(f.lit, str) else "array"})
+        elif f.op in _STR_PREDS:
+            self.read(f.lhs, _STRING)
+        else:
+            self.read(f.lhs)  # truthiness and jq's total order take any kind
+
+    def expr(self, ast: AST, base: Path, kinds=_NULL_NUM) -> None:
+        """Arithmetic and comparisons read numbers; null is ``+``'s
+        identity and sorts first, and errors in ``- * / %`` and ``-x``."""
+        p = _as_path(ast)
+        if p is not None:
+            self.read(tuple(base) + p, kinds)
+        elif ast[0] == "neg":
+            self.expr(ast[1], base, {"number"})
+        elif ast[0] == "binop":
+            op = ast[1]
+            k = _NULL_NUM if op == "+" or op in _CMP_OPS else {"number"}
+            self.expr(ast[2], base, k)
+            self.expr(ast[3], base, k)
+            if op in ("/", "%"):
+                def zero(x, d=ast[3], op=op):
+                    c = _variant_expr(d, base, x)
+                    if op == "/":
+                        return c == 0
+                    # jq's % truncates the divisor first; past 1e38 the
+                    # compiled remainder has no exact operand type
+                    n = F.abs(_variant_expr(ast[2], base, x))
+                    return (F.abs(c) < 1) | (F.abs(c) >= 1e38) | (n >= 1e38)
+
+                self.exprs.append(zero)
+
+    def fnchain(self, p: Path, fns) -> None:
+        names = [n for n, _ in fns]
+        head = next((n for n in names if n not in ("ltrimstr", "rtrimstr")), None)
+        checks: dict = {}
+        if head in ("ascii_downcase", "ascii_upcase", "gsub", "sub"):
+            kinds = _STRING
+        elif head == "tonumber":
+            kinds = {"number", "string"}
+            checks["parse"] = lambda v, s: (s == "STRING") & ~v.try_cast("string").rlike(
+                r"^-?[0-9]{1,15}(\.[0-9]{1,15})?$"
+            )
+        elif head in _NUM_FNS:
+            kinds = {"number"}
+        else:
+            kinds = _ANY  # tostring, tojson, type and the trims take any value
+        if "sqrt" in names:
+            checks["negative"] = lambda v, s: v.try_cast("double") < 0
+        self.read(p, kinds, **checks)
+        if names[0] in ("tostring", "tojson", "ltrimstr", "rtrimstr"):
+            self.text(p, cast=names[0] in ("ltrimstr", "rtrimstr"))
+
+    def spec(self, spec, dt: T.DataType) -> None:
+        """Guards of one projection spec into declared type ``dt``."""
+        kind = spec[0] if spec and spec[0] in _SPEC_KINDS else "path"
+        if kind == "path":
+            # an element's fields parse strictly (`_elem_schema`)
+            self.slot(spec, dt, nested=self.iterate)
+        elif kind == "expr":
+            _, ast, base = spec
+            self.expr(ast, base)
+            b = _INT_BOUND.get(type(dt))
+            if b is not None:
+                self.exprs.append(lambda x: F.abs(_variant_expr(ast, base, x)) >= F.lit(b))
+        elif kind == "fnchain":
+            self.fnchain(spec[1], spec[2])
+            if spec[2][-1][0] in _NUM_FNS:
+                self.wide(spec[1], dt)
+        elif kind == "alt":
+            # only a jq-truthy value lands in the slot; under an iterate
+            # the element's variant is cast to text
+            key = f"alt {dt.simpleString()}"
+            bad = lambda v, s: _slot_bad(v, dt, self.iterate, s) & _variant_truthy(v)  # noqa: E731
+            self.read(spec[1], **{key: bad})
+            if _holds_text(dt):
+                self.text(spec[1], cast=True)
+        elif kind == "length":
+            self.read(spec[1], _ANY - {"boolean"})
+            self.wide(spec[1], dt)
+        elif kind in ("keyssorted", "keysunsorted"):
+            # object keys are strings: only a string element slot holds them
+            strings = isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StringType)
+            self.read(spec[1], _ITERABLE if strings else {"array"})
+        elif kind in ("strpred", "splitidx", "splitarr"):
+            self.read(spec[1], _STRING)
+        elif kind == "capture":
+            pat = spec[2]
+            # no match: jq's capture yields no value, so the object none
+            self.read(spec[1], _STRING, nomatch=lambda v, s: ~v.try_cast("string").rlike(pat))
+        elif kind == "strcat":
+            for k, p in spec[1]:
+                if k == "path":
+                    self.read(p, {"null", "string"})
+        elif kind == "strinterp":
+            for k, p in spec[1]:
+                if k != "lit":
+                    self.text(p)
+        elif kind == "ifelse":
+            for f in _each_filter(spec[1]):
+                self.filter(f)
+            for b in spec[2:]:
+                if b[0] == "path":
+                    self.slot(b[1], dt)
+        elif kind == "slicearr":
+            if isinstance(dt, T.ArrayType):
+                self.slot(spec[1], dt, nested=True)
+            else:
+                self.read(spec[1], {"null", "string"})
+        elif kind == "arrayfn":
+            self.arrayfn(spec[1], spec[2], spec[3], dt)
+        elif kind == "reduce":
+            _, p, init, upd, _var = spec
+            self.read(p, {"array"}, elems=_each_bad({"number"}))
+            self.wide(p, dt, lambda v: _reduce_col(v.try_cast("array<double>"), init, upd))
+
+    def arrayfn(self, p: Path, fn: str, args, dt: T.DataType) -> None:
+        top = {"null", "array"} if fn in ("first", "last", "reverse") else {"array"}
+        if fn == "join":
+            elems = _each_bad({"null", "string", "number", "boolean"})
+        elif fn == "map":
+            steps, leaf = args[0], dt.elementType
+
+            def bad(e: Column) -> Column:
+                c = F.lit(False)
+                for step in steps:
+                    c = c | _not_kind(F.schema_of_variant(e), {"null", "object"})
+                    e = F.try_variant_get(e, _json_path((step,)), "variant")
+                return c | _slot_bad(e, leaf)
+
+            elems = lambda v, s: F.exists(v.try_cast("array<variant>"), bad)  # noqa: E731
+        else:
+            et = dt.elementType if isinstance(dt, T.ArrayType) else dt
+            elems = _each_bad(_NULL_NUM if not isinstance(et, T.StringType) else None, et)
+        self.read(p, top, elems=elems)
+        if fn == "add":
+            self.wide(p, dt, lambda v: F.aggregate(v.try_cast("array<double>"), F.lit(0.0), lambda a, x: a + F.coalesce(x, F.lit(0.0))))
+        if _holds_text(dt):
+            self.text(p)
+
+    def bad(self, x: Column, in_object: Optional[Column]) -> Column:
+        """Whether level value ``x`` holds a value some builder would
+        not evaluate exactly; ``in_object``: an iterate above it ran
+        over an object (None: no iterate above it)."""
+        c = F.lit(False)
+        for p in sorted(self.kinds, key=lambda q: (len(q), repr(q))):
+            v = F.try_variant_get(x, _json_path(p), "variant") if p else x
+            s = F.schema_of_variant(v)
+            kinds = self.kinds[p]
+            if kinds != _ANY:
+                # a container expected here: tell it without walking it
+                c = c | _not_kind(_kind(v, s) if kinds & _ITERABLE else s, kinds)
+            for check in self.checks[p].values():
+                c = c | check(v, s)
+            if p in self.texts and (self.texts[p] or in_object is None):
+                c = c | _number_text(v, self.texts[p], s=s)
+            elif p in self.texts:
+                c = c | F.when(in_object, _number_text(v, True, s=s)).otherwise(_number_text(v, s=s))
+        for check in self.exprs:
+            c = c | check(x)
+        return c
+
+
+def _python_rows(col: Column, dv: Column, levels: list, guards: list, null_doc: bool) -> Column:
     """Rows the exact Python tier must evaluate, over the bound variant
     ``dv`` of doc column ``col``:
 
@@ -1628,16 +1871,31 @@ def _python_rows(col: Column, dv: Column, levels: list, paths: dict) -> Column:
       default ``spark.sql.variant.allowDuplicateKeys=false`` that is
       exactly a duplicate key at any depth, escape-spelled ones ("a" vs
       "\\u0061") included — jq reads those last-occurrence-wins,
-      get_json_object reads the first.  Corrupt and NULL cells fail
-      both parsers and stay native;
-    - a value the plan reads as text that holds number text
-      (`_number_text_rows`).
+      get_json_object reads the first;
+    - corrupt and NULL cells, when ``null_doc`` (jq fails on the null
+      document they bind; otherwise they stay native);
+    - a row where a guard fires (`_Guards`).  ``levels`` are the paths
+      to each iterate (pre-path, then mid-paths) — empty for a scalar
+      plan — and ``guards[k]`` guards the values at level ``k``; every
+      element counts, also those a filter or limit drops.
 
     Never NULL, so ``~`` selects the complement.  A CASE, not an OR:
     the optimizer would push the doc-only half below the binding
     Generate and re-read every row's text."""
-    return F.when(dv.isNull(), F.get_json_object(col, "$").isNotNull()).otherwise(
-        _number_text_rows(dv, levels, paths) if paths else F.lit(False)
+
+    def check(x: Column, lvl: int, in_object: Optional[Column]) -> Column:
+        c = guards[lvl].bad(x, in_object)
+        if lvl < len(levels):
+            p = levels[lvl]
+            at = F.try_variant_get(x, _json_path(p), "variant") if p else x
+            obj = at.try_cast("map<string,variant>").isNotNull()
+            obj = obj if in_object is None else in_object | obj
+            c = c | F.exists(_elements(at), lambda e: check(e, lvl + 1, obj))
+        return c
+
+    bad_doc = F.get_json_object(col, "$").isNotNull()
+    return F.when(dv.isNull(), bad_doc | F.lit(null_doc)).otherwise(
+        F.coalesce(check(dv, 0, None), F.lit(False))
     )
 
 
@@ -1674,9 +1932,8 @@ def _lit_col(value: Any, dt: T.DataType) -> Column:
 
 
 def _cast_extracted(raw: Column, dt: T.DataType) -> Column:
-    """get_json_object string → declared type.  try_cast, not cast:
-    non-coercible garbage must yield NULL (the documented delta vs
-    the lenient marshaller), never an ANSI runtime error."""
+    """get_json_object string → declared type (the guards route the
+    values the lenient marshaller coerces, `_slot_bad`)."""
     if isinstance(dt, T.StringType):
         return raw
     if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
@@ -1720,25 +1977,11 @@ def _variant_truthy(v: Column) -> Column:
 
 def _variant_has(v: Column, key) -> Column:
     """jq ``has`` on an exact-typed variant: string key → object-key
-    membership, int key → 0 <= key < array length.  jq errors on a
-    container/key-type mismatch (has("x") on an array, has(0) on an
-    object) and on scalars; here those rows drop (false) — the
-    documented NULL-delta class."""
-    vt = F.schema_of_variant(v)
+    membership of an object, int key → 0 <= key < length of an array
+    (the guards route every other kind)."""
     if isinstance(key, str):
-        return F.coalesce(
-            vt.startswith("OBJECT")
-            & F.array_contains(
-                F.map_keys(v.try_cast("map<string,variant>")), F.lit(key)
-            ),
-            F.lit(False),
-        )
-    return F.coalesce(
-        vt.startswith("ARRAY")
-        & F.lit(key >= 0)
-        & (F.size(v.try_cast("array<variant>")) > F.lit(key)),
-        F.lit(False),
-    )
+        return F.array_contains(F.map_keys(v.try_cast("map<string,variant>")), F.lit(key))
+    return F.lit(key >= 0) & (F.size(v.try_cast("array<variant>")) > F.lit(key))
 
 
 def _variant_leaf_filter(v: Column, f: "Filter") -> Column:
@@ -1758,7 +2001,7 @@ def _variant_leaf_filter(v: Column, f: "Filter") -> Column:
     if f.op == "has":
         return _variant_has(v, f.lit)
     if f.op in _STR_PREDS:
-        return _string_pred_col(_variant_string_only(v), f.op, f.lit)
+        return _string_pred_col(v, f.op, f.lit)
     if f.lit is None:
         vt = F.schema_of_variant(v)
         is_null = v.isNull() | (vt == F.lit("VOID"))
@@ -1769,16 +2012,15 @@ def _variant_leaf_filter(v: Column, f: "Filter") -> Column:
 def _variant_length(v: Column) -> Column:
     """jq ``length`` on an exact-typed variant: element count for
     arrays, key count for objects, codepoint count for strings, |n|
-    for numbers, 0 for null/missing; booleans (a jq error) are the
-    NULL-delta class.  Double-typed so one expression serves every
-    declared numeric column type."""
+    for numbers, 0 for null/missing (the guards route booleans).
+    Double-typed so one expression serves every declared numeric
+    column type."""
     vt = F.schema_of_variant(v)
     return (
         F.when(v.isNull() | (vt == F.lit("VOID")), F.lit(0).cast("double"))
         .when(vt.startswith("ARRAY"), F.size(v.try_cast("array<variant>")).cast("double"))
         .when(vt.startswith("OBJECT"), F.size(v.try_cast("map<string,variant>")).cast("double"))
         .when(vt == F.lit("STRING"), F.length(v.try_cast("string")).cast("double"))
-        .when(vt == F.lit("BOOLEAN"), F.lit(None).cast("double"))
         .otherwise(F.abs(v.try_cast("double")))
     )
 
@@ -1798,24 +2040,21 @@ def _variant_type_name(v: Column) -> Column:
     )
 
 
+def _index_keys(v: Column) -> Column:
+    """jq ``keys`` of an array variant: its index strings "0".."n-1"
+    (downstream try_cast turns them into the declared element type)."""
+    n = F.size(v.try_cast("array<variant>"))
+    idx = F.when(n > 0, F.sequence(F.lit(0), n - F.lit(1))).otherwise(F.array().cast("array<int>"))
+    return F.transform(idx, lambda i: i.cast("string"))
+
+
 def _variant_keys(v: Column) -> Column:
-    """jq ``keys`` on an exact-typed variant: SORTED key names for
-    objects — variant objects store fields sorted by key bytes, which
-    is jq's codepoint sort — and "0".."n-1" index strings for arrays
-    (downstream try_cast turns them back into the declared element
-    type).  Anything else (null/scalars, a jq error) is the NULL
-    delta class."""
-    vt = F.schema_of_variant(v)
-    arr_n = F.size(v.try_cast("array<variant>"))
-    idx = F.when(
-        arr_n > 0, F.sequence(F.lit(0), arr_n - F.lit(1))
-    ).otherwise(F.array().cast("array<int>"))
+    """jq ``keys`` of an object or array variant: an object's key names
+    SORTED — variant objects store fields sorted by key bytes, which is
+    jq's codepoint sort — else `_index_keys`."""
     return F.when(
-        vt.startswith("OBJECT"), F.map_keys(v.try_cast("map<string,variant>"))
-    ).when(
-        vt.startswith("ARRAY"),
-        F.transform(idx, lambda i: i.cast("string")),
-    )
+        F.schema_of_variant(v).startswith("OBJECT"), F.map_keys(v.try_cast("map<string,variant>"))
+    ).otherwise(_index_keys(v))
 
 
 def _elem_decl_type(dt: T.DataType) -> T.DataType:
@@ -1884,27 +2123,6 @@ def _variant_cmp(v: Column, op: str, lit: Any) -> Column:
     ).otherwise(_CMP_FN[op](val_rank, F.lit(lit_rank)))
 
 
-# fnchain HEADS with jq type constraints (r9): jq ERRORS when these
-# receive the wrong type, so the compiled form must yield NULL there
-# (the documented error-channel delta class) instead of operating on
-# the value's JSON serialization (a silent WRONG-VALUE divergence —
-# `7 | ascii_downcase` must not emit "7", `"5" | floor` must not
-# emit 5).  Exact types come from the variant reader.
-_STR_ONLY_HEADS = {"ascii_downcase", "ascii_upcase", "gsub"}
-_NUM_ONLY_HEADS = {"floor", "ceil"}
-
-
-def _num_only_view(raw: Column, v: Column) -> Column:
-    """The raw text view when the value IS a JSON number, else NULL."""
-    vt = F.schema_of_variant(v)
-    isnum = (
-        (vt == F.lit("DOUBLE"))
-        | vt.startswith("DECIMAL")
-        | (vt == F.lit("BIGINT"))
-    )
-    return F.when(isnum, raw)
-
-
 def _tostring_view(raw: Column) -> Column:
     """jq ``tostring`` of the value at a path: the raw text view, with
     null/missing as "null".  Number text never reaches it (`_python_rows`)."""
@@ -1949,51 +2167,25 @@ def _interp_view(kind: str, raw: Column, v: Column) -> Column:
 
 
 def _keys_unsorted_col(raw: Column, v: Column) -> Column:
-    """jq ``keys_unsorted``: object keys in DOCUMENT order —
+    """jq ``keys_unsorted``: an object's keys in DOCUMENT order —
     ``json_object_keys`` over the raw text preserves field order,
-    where variants sort keys (r10); arrays yield index strings like
-    ``keys``.  Anything else is the NULL delta class."""
-    vt = F.schema_of_variant(v)
-    arr_n = F.size(v.try_cast("array<variant>"))
-    idx = F.when(
-        arr_n > 0, F.sequence(F.lit(0), arr_n - F.lit(1))
-    ).otherwise(F.array().cast("array<int>"))
+    where variants sort keys (r10) — else `_index_keys`."""
     return F.when(
-        vt.startswith("OBJECT"), F.json_object_keys(raw)
-    ).when(
-        vt.startswith("ARRAY"),
-        F.transform(idx, lambda i: i.cast("string")),
-    )
-
-
-def _variant_string_only(v: Column) -> Column:
-    """The variant's string value when it IS a JSON string, else NULL
-    — so string predicates see NULL (→ false) for arrays / objects /
-    numbers / booleans instead of their JSON serialization."""
-    return F.when(
-        F.schema_of_variant(v) == F.lit("STRING"),
-        F.try_variant_get(v, "$", "string"),
-    )
+        F.schema_of_variant(v).startswith("OBJECT"), F.json_object_keys(raw)
+    ).otherwise(_index_keys(v))
 
 
 def _string_pred_col(c: Column, op: str, pat: str) -> Column:
-    """startswith/endswith/test on the string view.  NULL (missing /
-    null / non-string — callers pre-gate via _variant_string_only) →
-    false, dropping the row — jq instead errors on non-string input,
-    the documented NULL-delta class."""
+    """startswith/endswith/contains/test on a string (the guards route
+    every other kind; test's pattern portability is pre-checked)."""
     c = c.try_cast("string")
     if op == "startswith":
-        r = c.startswith(pat)
-    elif op == "endswith":
-        r = c.endswith(pat)
-    elif op == "contains":
-        # r12 growth: string containment (jq's contains on two
-        # strings; non-string inputs are the null->false delta like
-        # the other predicates — jq errors there)
-        r = c.contains(pat)
-    else:  # test — pattern portability pre-checked in _parse_filters
-        r = c.rlike(pat)
-    return F.coalesce(r, F.lit(False))
+        return c.startswith(pat)
+    if op == "endswith":
+        return c.endswith(pat)
+    if op == "contains":
+        return c.contains(pat)
+    return c.rlike(pat)
 
 
 def _nav_step(c: Column, s) -> Column:
@@ -2071,47 +2263,28 @@ def _slice_idx(idx, n: Column, default: Column) -> Column:
     return F.greatest(F.least(eff, n), F.lit(0))
 
 
-def _slice_col(
-    json_col: Column, dv: Column, path: Path, lo, hi, out_dt: T.DataType
-) -> Column:
-    """jq ``.path[lo:hi]`` at the scalar tier (r13 growth, VERDICT r12
-    #5).  Exact-typed variant gate: ARRAY values slice under an ARRAY
-    decl (from_json with the declared element type — same strict parse
-    as a plain-path read — then clamped index arithmetic, negatives
-    from the end); STRING values substring by CODEPOINTS under a
-    STRING decl (Spark length/substr count characters, matching
-    Python/jq).  Cross-type and OBJECT inputs are NULL — jq errors on
-    objects and slices the type the decl didn't ask for, the
-    documented NULL-delta class."""
-    v = F.try_variant_get(
-        dv, _json_path(path), "variant"
-    )
-    vt = F.schema_of_variant(v)
-    if isinstance(out_dt, T.ArrayType):
-        arr = F.from_json(F.get_json_object(json_col, _json_path(path)), out_dt)
-        n = F.size(arr)
-        lo_c = _slice_idx(lo, n, F.lit(0))
-        hi_c = _slice_idx(hi, n, n)
-        cnt = F.greatest(hi_c - lo_c, F.lit(0))
-        return F.when(vt.startswith("ARRAY"), F.slice(arr, lo_c + F.lit(1), cnt))
-    s = _variant_string_only(v)
-    n = F.length(s)
+def _slice_col(raw: Column, lo, hi, out_dt: T.DataType) -> Column:
+    """jq ``.path[lo:hi]`` at the scalar tier over the path's text
+    ``raw``: an array decl slices the array (from_json with the
+    declared element type, then clamped index arithmetic, negatives
+    from the end); a string decl substrings by codepoints (Spark
+    length/substr count characters, like jq)."""
+    val = F.from_json(raw, out_dt) if isinstance(out_dt, T.ArrayType) else raw
+    n = F.size(val) if isinstance(out_dt, T.ArrayType) else F.length(val)
     lo_c = _slice_idx(lo, n, F.lit(0))
-    hi_c = _slice_idx(hi, n, n)
-    cnt = F.greatest(hi_c - lo_c, F.lit(0))
-    return s.substr(lo_c + F.lit(1), cnt)
+    cnt = F.greatest(_slice_idx(hi, n, n) - lo_c, F.lit(0))
+    if isinstance(out_dt, T.ArrayType):
+        return F.slice(val, lo_c + F.lit(1), cnt)
+    return val.substr(lo_c + F.lit(1), cnt)
 
 
-def _arrayfn_col(json_col: Column, path: Path, fn: str, args, out_dt: T.DataType) -> Column:
+def _arrayfn_col(raw: Column, fn: str, args, out_dt: T.DataType) -> Column:
     """Array-function projection over the scalar (non-iterate) tier.
 
     The array is parsed ONCE via from_json with the element type taken
     from the declared output, then the function is a builtin Catalyst
     expression (array_max / reverse / sort_array / slice / transform /
-    array_join) or an aggregate() fold for add.  jq deltas are the
-    documented cast-garbage class: jq aborts on wrong-typed input,
-    this tier yields NULL."""
-    raw = F.get_json_object(json_col, _json_path(path))
+    array_join) or an aggregate() fold for add."""
 
     def lenient(dt: T.DataType) -> T.DataType:
         # integral decls parse as double then truncate, matching the
@@ -2210,12 +2383,20 @@ def _validate_new_specs(project: Optional[dict], schema: T.StructType) -> None:
             or (spec[0] in ("keyssorted", "keysunsorted") and isinstance(dt, T.StringType))
         ):
             raise _SchemaConflict(spec)
-        if spec[0] == "fnchain" and any(
-            a in _NUM_FNS and b not in _NUM_FNS
-            for (a, _), (b, _) in zip(spec[2], spec[2][1:])
+        if spec[0] == "fnchain" and (
+            # a string fn over a computed number (tonumber | tojson), a
+            # number fn over a computed string (tostring | tonumber), or
+            # a string into a non-string slot: each depends on the text
+            any((x in _NUM_FNS) != (y in _NUM_FNS) for (x, _), (y, _) in zip(spec[2], spec[2][1:]))
+            or (spec[2][-1][0] not in _NUM_FNS and not isinstance(dt, T.StringType))
         ):
-            # a string fn over a computed number (tonumber | tojson)
             raise _SchemaConflict(spec)
+        if (spec[0] == "length" and not isinstance(dt, _NUMERIC_TYPES)) or (
+            spec[0] in ("keyssorted", "keysunsorted") and not isinstance(dt, T.ArrayType)
+        ):
+            raise _SchemaConflict(spec)
+        if spec[0] == "reduce" and _divides_by_value(spec[3]):
+            raise _SchemaConflict(spec)  # a zero divisor mid-fold: no row guard
         if spec[0] in ("strcat", "strinterp") and not isinstance(dt, T.StringType):
             # concat/interpolation results are strings; numeric
             # declared targets would need Jackson-lenient coercion —
@@ -2280,6 +2461,132 @@ def _validate_new_specs(project: Optional[dict], schema: T.StructType) -> None:
             raise _SchemaConflict(spec)
 
 
+def _var_at(dv: Column, path: Path) -> Column:
+    return F.try_variant_get(dv, _json_path(path), "variant") if path else dv
+
+
+def _scalar_path_col(col: Column, dv: Column, path: Path, dt: T.DataType) -> Column:
+    if isinstance(dt, T.MapType):
+        return _scalar_map_col(dv, path, dt)
+    return _scalar_out_col(col, path, dt)
+
+
+def _scalar_spec_col(col: Column, dv: Column, spec, dt: T.DataType) -> Column:
+    """One projection spec at the scalar tier.  The plan's guards
+    (`_Guards.spec`) route every row whose values this does not take."""
+    kind = spec[0] if spec and spec[0] in _SPEC_KINDS else "path"
+    if kind == "path":
+        return _scalar_path_col(col, dv, spec, dt)
+    if kind == "lit":
+        return _lit_col(spec[1], dt)
+    if kind == "expr":
+        _, ast, base = spec
+        return _compile_expr(ast, lambda p: _num_at(col, tuple(base) + p)).cast(dt)
+    path = spec[1]
+    raw = F.get_json_object(col, _json_path(path))
+    v = _var_at(dv, path)
+    if kind == "fnchain":
+        fns = spec[2]
+        head = fns[0][0]
+        if head in ("ltrimstr", "rtrimstr"):
+            # jq passes NON-string values through these unchanged
+            c = F.when(
+                F.schema_of_variant(v) == F.lit("STRING"), _apply_fnchain(raw, fns)
+            ).otherwise(_apply_fnchain(raw, fns[1:], json_text=True))
+            return c.cast(dt)
+        if head == "type":
+            first, fns = _variant_type_name(v), fns[1:]
+        elif head == "tojson":
+            first, fns = _tojson_view(raw, v), fns[1:]
+        elif head == "tostring":
+            first, fns = _tostring_view(raw), fns[1:]
+        else:
+            first = raw
+        return _apply_fnchain(first, fns).cast(dt)
+    if kind == "alt":
+        # jq // substitutes when the value is not jq-truthy.  Both
+        # branches pre-cast to the declared type so when() type
+        # unification can't introduce a stricter common type
+        return F.when(~_variant_truthy(v), _lit_col(spec[2], dt)).otherwise(
+            _scalar_out_col(col, path, dt)
+        )
+    if kind == "strcat":
+        return _strcat_col(spec[1], lambda p: F.get_json_object(col, _json_path(p))).cast(dt)
+    if kind == "strinterp":
+        segs = [
+            F.lit(val)
+            if k == "lit"
+            else _interp_view(k, F.get_json_object(col, _json_path(val)), _var_at(dv, val))
+            for k, val in spec[1]
+        ]
+        return F.concat(*segs).cast(dt)
+    if kind == "length":
+        return _variant_length(v).try_cast(dt)
+    if kind == "keyssorted":
+        return _variant_keys(v).try_cast(dt)
+    if kind == "keysunsorted":
+        return _keys_unsorted_col(raw, v).try_cast(dt)
+    if kind == "strpred":
+        return _string_pred_col(raw, spec[2], spec[3]).cast(dt)
+    if kind == "capture":
+        # one regexp_extract per declared named group (group index =
+        # order of appearance: the gate admits only named groups)
+        _, _, pat, names = spec
+        return F.struct(
+            *[
+                F.regexp_extract(raw, pat, names.index(f.name) + 1).alias(f.name)
+                for f in dt.fields
+            ]
+        )
+    if kind == "arrayfn":
+        return _arrayfn_col(raw, spec[2], spec[3], dt).try_cast(dt)
+    if kind == "slicearr":
+        return _slice_col(raw, spec[2], spec[3], dt).try_cast(dt)
+    if kind == "reduce":
+        return _reduce_col(F.from_json(raw, T.ArrayType(T.DoubleType())), spec[2], spec[3]).try_cast(dt)
+    if kind == "splitidx":
+        parts = F.split(raw, _java_quote(spec[2]), -1)
+        return F.try_element_at(parts, F.lit(spec[3] + 1)).cast(dt)
+    if kind == "splitarr":
+        # limit -1 keeps trailing empty fields, matching jq
+        return F.split(raw, _java_quote(spec[2]), -1).cast(dt)
+    # ifelse
+    cond = None
+    for item in spec[1]:
+        cc = _cond_col(item, lambda ff: _filter_col(col, dv, ff))
+        cond = cc if cond is None else (cond & cc)
+
+    def branch(sp):
+        return _lit_col(sp[1], dt) if sp[0] == "lit" else _scalar_out_col(col, sp[1], dt)
+
+    return F.when(cond, branch(spec[2])).otherwise(branch(spec[3]))
+
+
+def _null_doc_rows(program: str, decls: tuple) -> Optional[list]:
+    """The rows jq gives for the null document, when they are scalars;
+    None when jq fails on it."""
+    from .udtf import run_jq
+
+    try:
+        rows = run_jq(program, None, *decls)
+    except Exception:
+        return None
+    scalar = (type(None), bool, int, float, str)
+    return rows if all(isinstance(v, scalar) for r in rows for v in r) else None
+
+
+def _divides_by_value(ast: AST) -> bool:
+    """Whether a reduce update divides by anything but a nonzero literal."""
+    if ast[0] == "neg":
+        return _divides_by_value(ast[1])
+    if ast[0] != "binop":
+        return False
+    d = ast[3]
+    if ast[1] == "/" and not (d[0] == "literal" and d[1] != 0):
+        return True
+    return _divides_by_value(ast[2]) or _divides_by_value(d)
+
+
 class _SchemaConflict(Exception):
     """Element-schema conflict: program falls back to the Python tier."""
 
@@ -2288,11 +2595,12 @@ class NativePlan:
     """Executable plan: apply(df, column, python_tier, outer) →
     DataFrame with the same shape jq_explode produces."""
 
-    def __init__(self, ir: NativeIR, decls: tuple[str, ...]):
+    def __init__(self, ir: NativeIR, decls: tuple[str, ...], program: str):
         self.ir = ir
         self.decls = decls
         self.schema, self.single = parse_output_schema(list(decls))
         _validate_new_specs(ir.project, self.schema)
+        self.null_rows = _null_doc_rows(program, decls)
         if ir.iterate:
             self._elem_schema()  # raises _SchemaConflict on mixed shapes
         # recipe cache: (applicationId, column, outer, binding column)
@@ -2306,305 +2614,37 @@ class NativePlan:
     # -- scalar (no explode) path --------------------------------------
     def _build_scalar(self, col: Column, dv: Column) -> list:
         """Build the scalar-path output Columns over the doc column and
-        its bound variant ``dv``."""
+        its bound variant ``dv``, one per declared field."""
         ir = self.ir
-        out_cols = []
+        fields = self.schema.fields
         if ir.single_call is not None:
-            # ``.path | keys`` / ``| keys_unsorted`` as the WHOLE
-            # program (r11): keys of the path's value into the one
-            # declared column.  Gate on the exact-typed variant;
-            # keys_unsorted reads the raw text for document order.
-            fdt = self.schema.fields[0]
+            # ``.path | keys`` / ``keys_unsorted`` / ``length`` as the
+            # whole program (r11), into the one declared column
             path = ir.single_path or ()
-            jp = _json_path(path) if path else "$"
-            v = F.try_variant_get(dv, jp, "variant")
+            v = _var_at(dv, path)
             if ir.single_call == "keys":
                 kc = _variant_keys(v)
             elif ir.single_call == "length":
                 kc = _variant_length(v)
             else:
-                raw = F.get_json_object(col, jp) if path else col
-                kc = _keys_unsorted_col(raw, v)
-            out_cols.append(kc.try_cast(fdt.dataType).alias(fdt.name))
-        elif self.single and ir.project is None:
-            # (wrapped_single projects fall through to the project
-            # branch below — the synthetic {col1: <tail>} form)
-            fdt = self.schema.fields[0]
-            src = ir.single_path
-            if isinstance(fdt.dataType, T.MapType):
-                out_cols.append(
-                    _scalar_map_col(dv, src or (), fdt.dataType).alias(fdt.name)
-                )
-            else:
-                out_cols.append(
-                    _scalar_out_col(col, src or (), fdt.dataType).alias(fdt.name)
-                )
-        elif ir.project is not None:
-            for fdt in self.schema.fields:
-                spec = ir.project.get(fdt.name)
-                if spec is None:
-                    out_cols.append(F.lit(None).cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "lit":
-                    out_cols.append(_lit_col(spec[1], fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "expr":
-                    _, ast, base = spec
-                    c = _compile_expr(ast, lambda p: _num_at(col, tuple(base) + p))
-                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "fnchain":
-                    _, path, fns = spec
-                    raw0 = F.get_json_object(col, _json_path(path))
-                    if fns[0][0] == "type":
-                        # r11: type name from the exact-typed variant;
-                        # corrupt docs poison to NULL like the sibling
-                        # heads (tostring/tojson gate)
-                        v = F.try_variant_get(
-                            dv, _json_path(path), "variant"
-                        )
-                        first = F.when(
-                            dv.isNotNull(),
-                            _variant_type_name(v),
-                        )
-                        c = _apply_fnchain(first, fns[1:])
-                        out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                        continue
-                    if fns[0][0] in ("tostring", "tojson"):
-                        # leading tostring/tojson: the raw text view
-                        # (tojson quotes strings, read from the
-                        # variant).  Corrupt (unparseable) docs must
-                        # yield NULL like every other spec — without
-                        # the gate the missing-path → "null" identity
-                        # would fabricate a value where the Python
-                        # tier errors the row (r10, ADVICE class)
-                        if fns[0][0] == "tojson":
-                            view = _tojson_view(
-                                raw0, F.try_variant_get(dv, _json_path(path), "variant")
-                            )
-                        else:
-                            view = _tostring_view(raw0)
-                        first = F.when(dv.isNotNull(), view)
-                        c = _apply_fnchain(first, fns[1:])
-                        out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                        continue
-                    if fns[0][0] in _STR_ONLY_HEADS | _NUM_ONLY_HEADS:
-                        # exact-type gate: wrong-typed values yield
-                        # NULL where jq aborts, never a value computed
-                        # from their serialization
-                        v = F.try_variant_get(
-                            dv, _json_path(path), "variant"
-                        )
-                        if fns[0][0] in _STR_ONLY_HEADS:
-                            c = _apply_fnchain(_variant_string_only(v), fns)
-                        else:
-                            c = _apply_fnchain(_num_only_view(raw0, v), fns)
-                        out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                        continue
-                    c = _apply_fnchain(raw0, fns)
-                    if fns[0][0] in ("ltrimstr", "rtrimstr"):
-                        # jq passes NON-string values through these
-                        # unchanged (no abort) — gate on exact type
-                        vt = F.schema_of_variant(
-                            F.try_variant_get(
-                                dv, _json_path(path), "variant"
-                            )
-                        )
-                        rest = _apply_fnchain(raw0, fns[1:], json_text=True)
-                        c = F.when(vt == F.lit("STRING"), c).otherwise(rest)
-                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "alt":
-                    _, path, dflt = spec
-                    # jq // substitutes when the value is null/missing
-                    # OR boolean false — exactly NOT jq-truthy, read
-                    # from the exact-typed variant.  Both branches
-                    # pre-cast to the declared type so when() type
-                    # unification can't introduce a stricter common
-                    # type (ANSI cast crash).
-                    v = F.try_variant_get(
-                        dv, _json_path(path), "variant"
-                    )
-                    c = F.when(
-                        ~_variant_truthy(v),
-                        _lit_col(dflt, fdt.dataType),
-                    ).otherwise(_scalar_out_col(col, path, fdt.dataType))
-                    out_cols.append(c.alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "strcat":
-                    # doc-validity gate: a corrupt doc parses to a
-                    # NULL variant at every path, which the '' +
-                    # identity would turn into a literals-only value
-                    # ("L-") where the Python tier errors the row —
-                    # poison the whole result to NULL instead (r10,
-                    # ADVICE fix)
-                    c = F.when(
-                        dv.isNotNull(),
-                        _strcat_col(
-                            spec[1],
-                            lambda p: F.try_variant_get(
-                                dv, _json_path(p), "variant"
-                            ),
-                        ),
-                    )
-                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "strinterp":
-                    segs = [
-                        F.lit(val)
-                        if kind == "lit"
-                        else _interp_view(
-                            kind,
-                            F.get_json_object(col, _json_path(val)),
-                            F.try_variant_get(dv, _json_path(val), "variant"),
-                        )
-                        for kind, val in spec[1]
-                    ]
-                    # same corrupt-doc gate as strcat: interpolation's
-                    # null → "null" identity would otherwise fabricate
-                    # literals+"null" text for unparseable docs
-                    out_cols.append(
-                        F.when(
-                            dv.isNotNull(),
-                            F.concat(*segs),
-                        )
-                        .cast(fdt.dataType)
-                        .alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "length":
-                    vv = F.try_variant_get(
-                        dv, _json_path(spec[1]), "variant"
-                    )
-                    out_cols.append(
-                        _variant_length(vv).try_cast(fdt.dataType).alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "keyssorted":
-                    vv = F.try_variant_get(
-                        dv, _json_path(spec[1]), "variant"
-                    )
-                    out_cols.append(
-                        _variant_keys(vv).try_cast(fdt.dataType).alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "keysunsorted":
-                    vv = F.try_variant_get(
-                        dv, _json_path(spec[1]), "variant"
-                    )
-                    out_cols.append(
-                        _keys_unsorted_col(
-                            F.get_json_object(col, _json_path(spec[1])), vv
-                        )
-                        .try_cast(fdt.dataType)
-                        .alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "strpred":
-                    _, path, pname, plit = spec
-                    # exact-type gate: non-string values project the
-                    # null→false delta instead of substring-matching
-                    # their JSON serialization
-                    s = _variant_string_only(
-                        F.try_variant_get(
-                            dv, _json_path(path), "variant"
-                        )
-                    )
-                    if pname == "contains":
-                        c = F.coalesce(s.contains(plit), F.lit(False))
-                    else:
-                        c = _string_pred_col(s, pname, plit)
-                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "capture":
-                    # r14 growth (VERDICT r13 #4): one regexp_extract
-                    # per declared named group (group index = order of
-                    # appearance — the gate admits ONLY named capturing
-                    # groups).  Non-matching / non-string / missing
-                    # values yield a NULL struct (jq errors the row —
-                    # the documented NULL-delta class); rlike and
-                    # regexp_extract both java.util.regex-search
-                    # unanchored, like jq's capture.
-                    _, path, pat, names = spec
-                    s = _variant_string_only(
-                        F.try_variant_get(
-                            dv, _json_path(path), "variant"
-                        )
-                    )
-                    fields = [
-                        F.regexp_extract(s, pat, names.index(f.name) + 1).alias(
-                            f.name
-                        )
-                        for f in fdt.dataType.fields
-                    ]
-                    c = F.when(s.rlike(pat), F.struct(*fields))
-                    out_cols.append(c.alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "arrayfn":
-                    _, path, fn, fargs = spec
-                    c = _arrayfn_col(col, path, fn, fargs, fdt.dataType)
-                    out_cols.append(c.try_cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "slicearr":
-                    _, path, lo, hi = spec
-                    c = _slice_col(col, dv, path, lo, hi, fdt.dataType)
-                    out_cols.append(c.try_cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "reduce":
-                    _, path, init, upd, _var = spec
-                    c = _reduce_col(col, path, init, upd)
-                    out_cols.append(c.try_cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "splitidx":
-                    _, path, sep, idx = spec
-                    # split is string-only in jq: non-strings gate to
-                    # NULL (jq aborts) instead of splitting their
-                    # serialization (r9)
-                    s = _variant_string_only(
-                        F.try_variant_get(
-                            dv, _json_path(path), "variant"
-                        )
-                    )
-                    parts = F.split(s, _java_quote(sep), -1)
-                    c = F.try_element_at(parts, F.lit(idx + 1))
-                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "splitarr":
-                    # r12 growth: the FULL split array (split is
-                    # string-only in jq — non-strings gate to NULL
-                    # where jq aborts, like splitidx; limit -1 keeps
-                    # trailing empty fields, matching jq)
-                    _, path, sep = spec
-                    s = _variant_string_only(
-                        F.try_variant_get(
-                            dv, _json_path(path), "variant"
-                        )
-                    )
-                    c = F.split(s, _java_quote(sep), -1)
-                    out_cols.append(c.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "ifelse":
-                    _, filters, t_spec, e_spec = spec
-                    cond = None
-                    for item in filters:
-                        cc = _cond_col(item, lambda ff: _filter_col(col, dv, ff))
-                        cond = cc if cond is None else (cond & cc)
-
-                    def _branch(sp, _dt=fdt.dataType):
-                        if sp[0] == "lit":
-                            return _lit_col(sp[1], _dt)
-                        return _scalar_out_col(col, sp[1], _dt)
-
-                    c = F.when(cond, _branch(t_spec)).otherwise(_branch(e_spec))
-                    out_cols.append(c.alias(fdt.name))
-                elif isinstance(fdt.dataType, T.MapType):
-                    out_cols.append(
-                        _scalar_map_col(dv, spec, fdt.dataType).alias(fdt.name)
-                    )
-                else:
-                    out_cols.append(
-                        _scalar_out_col(col, spec, fdt.dataType).alias(fdt.name)
-                    )
-        else:
+                kc = _keys_unsorted_col(F.get_json_object(col, _json_path(path)), v)
+            return [kc.try_cast(fields[0].dataType)]
+        if self.single and ir.project is None:
+            # (wrapped_single projects take the project branch: the
+            # synthetic {col1: <tail>} form)
+            return [_scalar_path_col(col, dv, ir.single_path or (), fields[0].dataType)]
+        if ir.project is None:
             # bare path + NAME:TYPE decls → destructure result object
             base = ir.single_path or ()
-            for fdt in self.schema.fields:
-                if isinstance(fdt.dataType, T.MapType):
-                    out_cols.append(
-                        _scalar_map_col(dv, base + (fdt.name,), fdt.dataType).alias(
-                            fdt.name
-                        )
-                    )
-                    continue
-                out_cols.append(
-                    _scalar_out_col(col, base + (fdt.name,), fdt.dataType).alias(
-                        fdt.name
-                    )
-                )
-        return out_cols
+            return [_scalar_path_col(col, dv, base + (f.name,), f.dataType) for f in fields]
+        out = []
+        for fdt in fields:
+            spec = ir.project.get(fdt.name)
+            if spec is None:
+                out.append(F.lit(None).cast(fdt.dataType))
+            else:
+                out.append(_scalar_spec_col(col, dv, spec, fdt.dataType))
+        return out
 
     # -- explode path ---------------------------------------------------
     def _elem_schema(self) -> T.DataType:
@@ -2614,6 +2654,8 @@ class NativePlan:
         whole_elem: Optional[T.DataType] = None
 
         def add(path: Path, dt: T.DataType):
+            if not path:
+                raise _SchemaConflict(())  # the element itself: not a struct field
             cur = needed
             for s in path[:-1]:
                 cur = cur.setdefault(s, {})
@@ -2622,25 +2664,25 @@ class NativePlan:
                     # type — mixed-shape access is not representable in
                     # one from_json schema
                     raise _SchemaConflict(path)
-            if path:
-                prev = cur.get(path[-1])
-                if isinstance(prev, dict):
-                    raise _SchemaConflict(path)  # leaf vs struct
-                if prev is not None and prev != dt:
-                    if isinstance(prev, T.VariantType) or isinstance(dt, T.VariantType):
-                        # a truthy filter needs the exact JSON type;
-                        # variant also casts cleanly to every scalar
-                        # consumer type, so variant wins the conflict
-                        cur[path[-1]] = T.VariantType()
-                    else:
-                        # two specs want different scalar types for the
-                        # same path: read the string view and let each
-                        # consumer cast (string → numeric casts are safe
-                        # for clean data; garbage is the documented
-                        # delta class)
-                        cur[path[-1]] = T.StringType()
+            prev = cur.get(path[-1])
+            if isinstance(prev, dict):
+                raise _SchemaConflict(path)  # leaf vs struct
+            if prev is not None and prev != dt:
+                if any(isinstance(t, (T.ArrayType, T.MapType, T.StructType)) for t in (prev, dt)):
+                    raise _SchemaConflict(path)  # no common view to cast from
+                if isinstance(prev, T.VariantType) or isinstance(dt, T.VariantType):
+                    # a truthy filter needs the exact JSON type;
+                    # variant also casts cleanly to every scalar
+                    # consumer type, so variant wins the conflict
+                    cur[path[-1]] = T.VariantType()
                 else:
-                    cur[path[-1]] = dt
+                    # two specs want different scalar types for the
+                    # same path: read the string view and let each
+                    # consumer cast (the guards route the values a
+                    # cast would not take)
+                    cur[path[-1]] = T.StringType()
+            else:
+                cur[path[-1]] = dt
 
         if ir.single_call is not None:
             # keys/keys_unsorted of the element (or a path under it):
@@ -2747,7 +2789,10 @@ class NativePlan:
                         # (checked below); add() on an empty path
                         # would silently type the element STRUCT<>
                         # and crash at apply (r12 find)
-                        whole_elem = _elem_decl_type(fdt.dataType)
+                        t = _elem_decl_type(fdt.dataType)
+                        if whole_elem not in (None, t):
+                            raise _SchemaConflict(())  # two types for the element
+                        whole_elem = t
                         continue
                     add(spec, _elem_decl_type(fdt.dataType))
         else:
@@ -2767,10 +2812,6 @@ class NativePlan:
                 # (needs_ev picks these up)
                 continue
             elif f.op in _STR_PREDS:
-                # variant, not string: a StringType field would capture
-                # the raw serialization of non-string values and the
-                # predicate could falsely match it (see
-                # _variant_string_only)
                 add(f.lhs, T.VariantType())
             else:
                 # truthy and plain comparisons both need the exact JSON
@@ -2810,7 +2851,8 @@ class NativePlan:
                 # fields for other specs/filters — Python tier
                 raise _SchemaConflict(())
             return whole_elem
-        return to_struct(needed)
+        # nothing read from the element: a variant takes any element
+        return to_struct(needed) if needed else T.VariantType()
 
     def _build_explode(
         self, col: Column, dv: Column, bind: str, outer: bool
@@ -2840,24 +2882,8 @@ class NativePlan:
         nav = parsed
         for s in ir.pre_path:
             nav = _nav_step(nav, s)
-        # from_json nulls the WHOLE typed array when any element
-        # mismatches the element schema (a scalar where a struct is
-        # declared, a string in a numeric array, ...), which would DROP
-        # rows the reference marshals as null-field rows (M1/M3: field
-        # of a non-object → NULL).  Rebuild through an array<variant>
-        # parse: each element keeps its exact JSON type, so well-typed
-        # elements still yield their values (try_variant_get casts
-        # support nested struct/array targets) while mismatched
-        # elements yield NULLs — including strings whose CONTENT looks
-        # like JSON (the text view cannot tell those apart; the
-        # variant gate can).  Applies to EVERY element shape: struct
-        # elements (flat or nested — an earlier revision fabricated
-        # all-NULL rows for nested/mid-path element schemas, nulling
-        # valid object elements) and bare scalar elements (which
-        # previously had no fallback at all, dropping every row of a
-        # mixed array).  Garbage-value casts (non-numeric string into
-        # a numeric field → NULL here vs Jackson-lenient 0 in the
-        # Python tier) remain the documented cast-leniency delta.
+        # the guards route every row whose values the typed parse
+        # would not take, so it never nulls an array of a native row
         jsonpath = _json_path(ir.pre_path) if ir.pre_path else "$"
         # raw text source for the object-iterate route and the text
         # twins (document key order)
@@ -2866,12 +2892,6 @@ class NativePlan:
             if ir.pre_path
             else col
         )
-        # only rebuild when the value at the path IS a JSON array —
-        # get_json_object strips quotes from string values, so a
-        # string "[1,2]" would otherwise fabricate rows
-        is_array = F.schema_of_variant(
-            F.try_variant_get(dv, jsonpath, "variant")
-        ).startswith("ARRAY")
         et = lvl0.elementType
 
         def _rebuild(e, t=et):
@@ -2894,10 +2914,6 @@ class NativePlan:
                 return e
             return F.try_variant_get(e, "$", t.simpleString())
 
-        fallback = F.transform(
-            F.from_json(src, T.ArrayType(T.VariantType())),
-            lambda e: _rebuild(e),
-        )
         # `.[]` over an OBJECT iterates its VALUES (jq semantics; the
         # Python tier has always done this — the native tier used to
         # silently drop such rows).  The values come from a from_json
@@ -2918,31 +2934,26 @@ class NativePlan:
         # reads a JSON object where array<struct> is declared as a
         # single-element array (its lenient convenience), which would
         # emit the object itself as one row instead of iterating its
-        # values.  A null/false is_object (array, scalar, corrupt)
-        # keeps the pre-r8 behavior bit-for-bit.
-        nav = F.when(is_object, obj_fallback).otherwise(
-            F.coalesce(nav, F.when(is_array, fallback))
-        )
+        # values.
+        nav = F.when(is_object, obj_fallback).otherwise(nav)
         lims = ir.iter_limits or []
         if lims and lims[0] is not None:
             # limit(n; .[]) — jq's lazy "first n outputs" is a slice
             # BEFORE the explode: the dropped elements never become rows
             nav = F.slice(nav, F.lit(1), F.lit(lims[0]))
         gen = F.explode_outer if outer else F.explode
-        # the element's VARIANT twin: tojson quotes only strings, the
-        # string-/number-only fnchain heads gate on the exact type, and
+        # the element's VARIANT twin: tojson quotes only strings, and
         # whole-element predicates (select(has("k")) / select(. > 5),
         # r12) read it instead of a from_json field.  Multi-level
         # programs already thread a variant twin, single-level ones
         # switch to posexplode and index the doc-level variant array
-        gated_heads = {"tojson"} | _STR_ONLY_HEADS | _NUM_ONLY_HEADS
         needs_ev = (
             ir.project is not None
             and any(
                 isinstance(s, tuple)
                 and s
                 and (
-                    (s[0] == "fnchain" and s[2][0][0] in gated_heads)
+                    (s[0] == "fnchain" and s[2][0][0] == "tojson")
                     or (s[0] == "strinterp" and any(k == "pathjson" for k, _ in s[1]))
                 )
                 for s in ir.project.values()
@@ -3211,16 +3222,6 @@ class NativePlan:
                         cc = _apply_fnchain(first, fns[1:])
                         out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
                         continue
-                    if fns[0][0] in _STR_ONLY_HEADS | _NUM_ONLY_HEADS:
-                        v = _ev_at(path)
-                        first = (
-                            _variant_string_only(v)
-                            if fns[0][0] in _STR_ONLY_HEADS
-                            else _num_only_view(c.try_cast("string"), v)
-                        )
-                        cc = _apply_fnchain(first, fns)
-                        out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
-                        continue
                     if fns[0][0] in ("ltrimstr", "rtrimstr"):
                         # the element schema typed this path VARIANT:
                         # jq passes NON-strings through trims unchanged
@@ -3255,13 +3256,13 @@ class NativePlan:
                         .alias(fdt.name)
                     )
                 elif isinstance(spec, tuple) and spec and spec[0] == "strcat":
-                    def _var_of(p, _ec=ec):
+                    def _str_of(p, _ec=ec):
                         c2 = _ec
                         for st in p:
                             c2 = _nav_step(c2, st)
-                        return c2
+                        return F.try_variant_get(c2, "$", "string")
 
-                    cc = _strcat_col(spec[1], _var_of)
+                    cc = _strcat_col(spec[1], _str_of)
                     out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
                 elif isinstance(spec, tuple) and spec and spec[0] == "strinterp":
                     segs = []
@@ -3409,59 +3410,62 @@ class NativePlan:
             _cond_col(f, lambda ff: _filter_col(col, dv, ff))
             for f in ir.pre_filters
         ]
+        levels = [ir.pre_path, *ir.mid_paths] if ir.iterate else []
         if ir.iterate:
-            levels = [ir.pre_path, *ir.mid_paths]
             gens, post_conds, out_cols = self._build_explode(col, dv, bind, outer)
         else:
-            levels, gens, post_conds = [], [], []
+            gens, post_conds = [], []
             out_cols = self._build_scalar(col, dv)
-        to_python = _python_rows(col, dv, levels, self._text_paths())
+        # corrupt and NULL cells bind jq's null document: they take the
+        # rows jqlib gave for it at compile time, or the Python tier
+        # when those cannot be replayed (jq failed, or outer needs a row)
+        rows = self.null_rows
+        if rows is None or (outer and not rows) or (rows and (ir.iterate or len(rows) > 1)):
+            rows = None
+        elif not rows:
+            pre_conds.append(dv.isNotNull())
+        else:
+            pre_conds = [dv.isNull() | c for c in pre_conds]
+            out_cols = [
+                F.when(dv.isNull(), F.lit(val).cast(f.dataType)).otherwise(c)
+                for f, val, c in zip(self.schema.fields, rows[0], out_cols)
+            ]
+        if not ir.iterate:
+            out_cols = [c.alias(f.name) for f, c in zip(self.schema.fields, out_cols)]
+        to_python = _python_rows(col, dv, levels, self._guards(), rows is None)
         return to_python, pre_conds, gens, post_conds, out_cols
 
-    def _text_paths(self) -> dict:
-        """Paths of the values this plan reads as text (module
-        docstring, rule 1): from the document in a scalar plan, from
-        the last iterated element in an iterate plan.  Each maps to
-        whether an object there routes too: under an iterate, ``//``
-        and the trim pass-through cast the element's variant to text."""
+    def _guards(self) -> list:
+        """The plan's type guards (`_Guards`) per level: the document,
+        then each iterate's element; paths are relative to the level."""
         ir = self.ir
         fields = self.schema.fields
+        gs = [_Guards(ir.iterate) for _ in range(len(ir.mid_paths) + 2 if ir.iterate else 1)]
+        if ir.iterate:
+            for g, p in zip(gs, [ir.pre_path, *ir.mid_paths]):
+                g.read(p, _ITERABLE)
+        for f in _each_filter(ir.pre_filters):
+            gs[0].filter(f)
+        last = gs[-1]
+        for f in _each_filter(ir.post_filters):
+            last.filter(f)
         if ir.single_call is not None:
-            return {}  # keys are strings, length is numeric
-        if ir.project is None:
+            kind = "length" if ir.single_call == "length" else "keyssorted"
+            last.spec((kind, ir.single_path), fields[0].dataType)
+        elif ir.project is None:
             pairs = (
                 [(ir.single_path, fields[0].dataType)]
                 if self.single
                 else [(ir.single_path + (f.name,), f.dataType) for f in fields]
             )
-            return {p: False for p, dt in pairs if _holds_text(dt)}
-        paths: dict = {}
-
-        def add(p, objects=False):
-            paths[p] = paths.get(p, False) or objects
-
-        for f in fields:
-            spec = ir.project.get(f.name)
-            if spec is None:
-                continue
-            kind = spec[0] if spec and spec[0] in _SPEC_KINDS else "path"
-            if kind == "fnchain" and spec[2][0][0] in (
-                "tostring", "tojson", "ltrimstr", "rtrimstr"
-            ):
-                add(spec[1], ir.iterate and spec[2][0][0] in ("ltrimstr", "rtrimstr"))
-            elif kind == "strinterp":
-                for k, p in spec[1]:
-                    if k != "lit":
-                        add(p)
-            elif kind == "ifelse" and _holds_text(f.dataType):
-                for b in spec[2:]:
-                    if b[0] == "path":
-                        add(b[1])
-            elif kind in ("path", "alt", "arrayfn", "slicearr") and _holds_text(
-                f.dataType
-            ):
-                add(spec if kind == "path" else spec[1], ir.iterate and kind == "alt")
-        return paths
+            for p, dt in pairs:
+                last.slot(p, dt, nested=last.iterate)
+        else:
+            for f in fields:
+                spec = ir.project.get(f.name)
+                if spec is not None:
+                    last.spec(spec, f.dataType)
+        return gs
 
 
 _PLAN_CACHE: dict[tuple[str, tuple[str, ...]], Optional[NativePlan]] = {}
@@ -3532,7 +3536,7 @@ def _compile_native_uncached(
     if ir.iterate and single and ir.project is None and not ir.single_path and ir.post_filters:
         return None
     try:
-        return NativePlan(ir, tuple(decls))
+        return NativePlan(ir, tuple(decls), program)
     except _SchemaConflict:
         # mixed leaf/struct access of the same path — not representable
         # in one from_json schema; the Python tier handles it

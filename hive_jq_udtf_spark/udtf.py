@@ -264,16 +264,19 @@ def jq_explode(
 
     native: "auto" compiles simple-path programs to pure Catalyst
     expressions (SURVEY §4.2); "never" forces the Python UDTF tier;
-    "require" raises if the program can't compile natively.  A native
-    plan carries one Python node, which only rows the variant parser
-    rejects although they are well-formed JSON reach — under Spark's
-    default conf, exactly the duplicate-key documents, which jq reads
-    last-occurrence-wins.  A session with
-    ``spark.sql.variant.allowDuplicateKeys=true`` parses those rows
-    itself, so the route cannot find them: "auto" then takes the
-    Python tier and "require" raises.  Nothing here changes a session
-    conf.  Both branches of a native plan evaluate ``df``, so persist
-    a nondeterministic input first.
+    "require" raises if the program can't compile natively.  Both
+    tiers give jq's rows, and both raise where jq raises: a native plan
+    carries one Python node, which the rows its expressions would not
+    evaluate exactly reach — duplicate-key documents (which jq reads
+    last-occurrence-wins), values of a kind a guard rejects (a string
+    under ``floor``, a string in a numeric slot, a scalar at an
+    iterate), number text read as text, and corrupt or NULL cells when
+    jq fails on the null document (native.py's module docstring).  A
+    session with ``spark.sql.variant.allowDuplicateKeys=true`` parses
+    duplicate-key rows itself, so the route cannot find them: "auto"
+    then takes the Python tier and "require" raises.  Nothing here
+    changes a session conf.  Both branches of a native plan evaluate
+    ``df``, so persist a nondeterministic input first.
 
     min_parallelism: repartition the input up to this many partitions
     BEFORE the (expensive, per-row) Python tier when the scan came in

@@ -68,9 +68,10 @@ def collect_routed(df):
     """Collect ``df`` and return ``(rows, sent)``, where ``sent`` is
     how many rows its Python nodes received, asserting that every
     Python node reads a Filter on the native tier's route flag
-    (duplicate keys, number text) — a native jq plan's only Python
-    node.  Must be the first action on ``df``: plan metrics add up
-    across actions."""
+    (duplicate keys, a value a type guard rejects, number text, and
+    corrupt or NULL cells where jq fails on null) — a native jq plan's
+    only Python node.  Must be the first action on ``df``: plan metrics
+    add up across actions."""
     rows = df.collect()
     sent, stack = 0, [df._jdf.queryExecution().executedPlan()]
     while stack:
@@ -81,3 +82,35 @@ def collect_routed(df):
             continue
         stack.extend(_children(node))
     return rows, sent
+
+
+def native_rows(spark, plan, texts):
+    """Run native ``plan`` over the JSON cells ``texts`` in one Spark
+    job, with a stand-in for the Python tier that only tags the rows it
+    receives.  Returns, per cell, None when the cell was routed to the
+    Python tier, else the list of output row tuples the native tier
+    gave for it (in order)."""
+    from pyspark.sql import functions as F
+
+    # a local relation (one small task per branch), built by one call
+    values = ", ".join(f"({i}, :j{i}, false)" for i in range(len(texts)))
+    df = spark.sql(
+        f"SELECT i, CAST(j AS STRING) AS j, routed FROM VALUES {values} AS t(i, j, routed)",
+        args={f"j{i}": t for i, t in enumerate(texts)},
+    )
+    fields = plan.schema.fields
+
+    def tag(rows):
+        return rows.select(
+            "i", "j", F.lit(True).alias("routed"),
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields],
+        )
+
+    names = [f.name for f in fields]
+    out: list = [[] for _ in texts]
+    for r in plan.apply(df, "j", tag).select("i", "routed", *names).collect():
+        if r[1]:
+            out[r[0]] = None
+        elif out[r[0]] is not None:
+            out[r[0]].append(tuple(r[2:]))
+    return out

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from hive_jq_udtf_spark.native import analyze_program, compile_native
 from hive_jq_udtf_spark.udtf import jq_explode
 
-from conftest import collect_routed
+from conftest import collect_routed, native_rows
 
 
 def test_analyze_accepts_simple_paths():
@@ -181,20 +181,6 @@ def test_native_strcat_matches_python_tier(spark):
         ), prog
 
 
-def test_native_strcat_nonstring_operand_is_null_delta(spark):
-    # jq ABORTS on number + "x"; the native tier emits NULL for that
-    # row (the documented error-channel delta class) and keeps others
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    df = spark.createDataFrame(
-        [('{"a": 7}',), ('{"a": "s"}',), ('{"a": [1]}',), ('{"a": true}',)],
-        "j string",
-    )
-    out = jq_explode(df, "j", '{s: (.a + "x")}', "s:string", native="require")
-    vals = [r.s for r in out.collect()]
-    assert vals == [None, "sx", None, None]
-
-
 def test_native_unproven_arithmetic_falls_back(spark):
     """r10 (ADVICE medium): `- * /` are NOT numeric anchors — jq
     defines `-` on arrays, `*` on strings/objects, `/` on strings.
@@ -284,23 +270,21 @@ def test_native_m2_stringify_number_normalization(spark):
         assert nat == py, prog
 
 
-def test_native_strcat_strinterp_corrupt_doc_is_null(spark):
-    """r10 (ADVICE low): corrupt (unparseable) docs yield NULL from
-    strcat / strinterp / leading-tostring — never a fabricated
-    literals-only value ("L-", "p-null") — matching every other
-    compiled spec (the Python tier errors the row)."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    df = spark.createDataFrame([("{oops",), ('{"a": "x"}',)], "j string")
-    expect = {
-        '{s: ("L-" + .a)}': "L-x",
-        '{s: "p-\\(.a)"}': "p-x",
-        "{s: (.a | tostring)}": "x",
-    }
-    for prog, good in expect.items():
-        out = jq_explode(df, "j", prog, "s:string", native="require")
-        vals = [r.s for r in out.collect()]
-        assert vals == [None, good], prog
+def test_native_corrupt_doc_takes_null_document_rows(spark):
+    """Corrupt and NULL cells bind jq's null document: a plan whose
+    program jq runs on null emits those rows natively (strcat's null
+    identity gives "L-", interpolation "p-null", tostring "null"); one
+    that jq fails on null routes them to the Python tier."""
+    texts = ["{oops", None, '{"a": "x"}']
+    for prog, null_row, good in [
+        ('{s: ("L-" + .a)}', "L-", "L-x"),
+        ('{s: "p-\\(.a)"}', "p-null", "p-x"),
+        ("{s: (.a | tostring)}", "null", "x"),
+    ]:
+        got = native_rows(spark, compile_native(prog, ("s:string",)), texts)
+        assert got == [[(null_row,)], [(null_row,)], [(good,)]], prog
+    plan = compile_native("{s: (.a | ascii_downcase)}", ("s:string",))
+    assert native_rows(spark, plan, texts) == [None, None, [("x",)]]
 
 
 def test_native_expression_filters_equivalence(spark):
@@ -450,60 +434,6 @@ def test_native_mixed_shape_access_falls_back(spark):
     assert compile_native(".arr[] | {x: .a, y: .a.b}", ("x:double", "y:double")) is None
 
 
-def test_native_dirty_data_fuzz(spark):
-    """Seeded fuzz: random native-compilable programs over docs with
-    nulls / strings / missing keys — the native tier must agree with
-    jqlib wherever jq itself does not abort."""
-    import json as _json
-    import random
-
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    rng = random.Random(7)
-    fields = ["a", "b", "c"]
-
-    def rand_doc():
-        return {
-            f: rng.choice([rng.randint(0, 99), rng.uniform(0, 10), "Wo rd X", None])
-            for f in fields
-            if rng.random() > 0.2
-        }
-
-    def rand_prog():
-        k = rng.choice(fields)
-        return rng.choice(
-            [
-                (f"{{v: .{k}}}", "v:string"),
-                (f"{{v: (.{k} // {rng.randint(-5, 5)})}}", "v:string"),
-                (f"{{v: (.{k} | ascii_downcase)}}", "v:string"),
-                (f'{{v: (.{k} | ltrimstr("W"))}}', "v:string"),
-                (f'{{v: (.{k} | ascii_upcase | rtrimstr("X"))}}', "v:string"),
-            ]
-        )
-
-    compared = 0
-    for _ in range(25):
-        prog, decl = rand_prog()
-        if compile_native(prog, (decl,)) is None:
-            continue
-        docs = [(_json.dumps(rand_doc()),) for _ in range(20)]
-        df = spark.createDataFrame(docs, "j string")
-        try:
-            py = sorted(map(tuple, jq_explode(df, "j", prog, decl, native="never").drop("j").collect()), key=str)
-        except Exception as ex:
-            # jq aborts on type errors (e.g. ascii_downcase of a
-            # number) — the documented delta class where the native
-            # tier instead operates on the text view; equality is only
-            # required where jq itself succeeds
-            assert "jq error" in str(ex), f"unexpected python-tier failure: {ex}"
-            continue
-        nat = sorted(map(tuple, jq_explode(df, "j", prog, decl, native="require").drop("j").collect()), key=str)
-        assert nat == py, prog
-        compared += 1
-    assert compared >= 8
-
-
 def test_native_single_wrap_dispatch_pins(spark):
     """r11 jq1-widening edges: the synthetic single-field wrap only
     applies to bare single-TYPE decls — NAMED decls marshal
@@ -617,8 +547,8 @@ _TRUTHY_DOCS = [
 
 
 _STRPRED_TYPE_DOCS = [
-    # ADVICE r3 low: a non-string value must take the null→false delta,
-    # not substring-match its JSON serialization
+    # ADVICE r3 low: a non-string value must not substring-match its
+    # JSON serialization
     '{"tag": "src1x", "items":[{"tag":"src1x","v":1}], "v": 1}',
     '{"tag": ["src1x"], "items":[{"tag":["src1x"],"v":2}], "v": 2}',
     '{"tag": {"src1x": 1}, "items":[{"tag":{"src1x":1},"v":3}], "v": 3}',
@@ -627,34 +557,19 @@ _STRPRED_TYPE_DOCS = [
 ]
 
 
-def test_native_strpred_nonstring_is_false_scalar_tier(spark):
-    """Projected/select string predicates over non-string values yield
-    the null→false delta — never a match against the value's JSON text
-    (e.g. '["src1x"]' would otherwise satisfy contains/test/startswith)."""
-    df = spark.createDataFrame([(d,) for d in _STRPRED_TYPE_DOCS], "j string")
+def test_native_strpred_nonstring_routes(spark):
+    """Projected and select string predicates over a non-string value
+    route the row to the Python tier (jq raises there) — never a match
+    against the value's JSON text ('["src1x"]' would satisfy
+    contains/test/startswith), on the scalar and the explode tier."""
     prog = '{c: (.tag | contains("src")), s: (.tag | startswith("s")), t: (.tag | test("src1"))}'
-    decls = ("c:boolean", "s:boolean", "t:boolean")
-    assert compile_native(prog, decls) is not None
-    out = jq_explode(df, "j", prog, *decls, native="require")
-    rows = sorted(tuple(r) for r in out.drop("j").collect())
-    assert rows == sorted(
-        [(True, True, True)] + [(False, False, False)] * 4
-    )
-    sel = 'select(.tag | startswith("s")) | {v: .v}'
-    nat = jq_explode(df, "j", sel, "v:int", native="require")
-    assert [r.v for r in nat.collect()] == [1]
-
-
-def test_native_strpred_nonstring_is_false_explode_tier(spark):
-    """Same gate under an iterate: the element schema must type strpred
-    paths VARIANT so the exact-type check survives from_json."""
-    df = spark.createDataFrame([(d,) for d in _STRPRED_TYPE_DOCS], "j string")
-    prog = '.items[] | select(.tag | startswith("s")) | {v: .v}'
-    assert compile_native(prog, ("v:int",)) is not None
-    nat_df = jq_explode(df, "j", prog, "v:int", native="require")
-    rows, sent = collect_routed(nat_df)
-    assert sent == 0
-    assert [r.v for r in rows] == [1]
+    plan = compile_native(prog, ("c:boolean", "s:boolean", "t:boolean"))
+    got = native_rows(spark, plan, _STRPRED_TYPE_DOCS)
+    assert got == [[(True, True, True)], None, None, None, None]
+    sel = compile_native('select(.tag | startswith("s")) | {v: .v}', ("v:int",))
+    assert native_rows(spark, sel, _STRPRED_TYPE_DOCS) == [[(1,)], None, None, None, None]
+    it = compile_native('.items[] | select(.tag | startswith("s")) | {v: .v}', ("v:int",))
+    assert native_rows(spark, it, _STRPRED_TYPE_DOCS) == [[(1,)], None, None, None, None]
 
 
 def test_native_truthy_select_scalar_tier(spark):
@@ -962,40 +877,16 @@ def test_native_growth_matches_python_tier(nested_df, program, decls):
     assert a == b
 
 
-def test_native_slice_deltas_and_dispatch(spark):
-    """r13 slice growth (VERDICT r12 #5) — the documented edges:
-    cross-type slices are the NULL-delta class (jq slices the type
-    the decl didn't ask for, then the marshaller leniently coerces;
-    the native variant gate yields NULL instead), object slices are
-    the abort-delta class (jq errors the row), non-array/string decls
-    fall back to the Python tier, and slices UNDER AN ITERATE stay
-    Python-tier (r13 scope)."""
+def test_native_slice_dispatch(spark):
+    """r13 slice growth (VERDICT r12 #5): non-array/string decls fall
+    back to the Python tier, and so do slices UNDER AN ITERATE (r13
+    scope).  A cross-type or object value routes its row
+    (tests/test_native_differential.py's probe table)."""
     from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
 
-    # dispatch pins
     assert compile_native("{v: .a[1:3]}", ("v:int",)) is None
     assert compile_native(".items[] | {v: .a[1:3]}", ("v:array<int>",)) is None
     assert compile_native("{v: .a[1:3]}", ("v:array<int>",)) is not None
-    # data-dependent deltas
-    df = spark.createDataFrame(
-        [
-            ('{"a":"notarray"}',),   # string under array decl
-            ('{"a":[1,2,3]}',),      # array under string decl
-            ('{"a":{"k":1}}',),      # object: jq aborts the row
-        ],
-        "j string",
-    )
-    arr = jq_explode(df, "j", "{v: .a[1:3]}", "v:array<int>", native="require")
-    vals = [r.v for r in arr.collect()]
-    assert vals[0] is None  # jq: "ot" -> lenient []; native NULL delta
-    assert vals[1] == [2, 3]
-    assert vals[2] is None  # jq: error; native NULL (abort-delta class)
-    s = jq_explode(df, "j", "{v: .a[1:3]}", "v:string", native="require")
-    svals = [r.v for r in s.collect()]
-    assert svals[0] == "ot"
-    assert svals[1] is None  # jq: [2,3] -> "[2,3]" M2; native NULL delta
-    assert svals[2] is None
 
 
 def test_native_elementwide_predicate_compiles(nested_df):
@@ -1163,103 +1054,6 @@ def test_native_projected_strpred_array_not_serialized_match(spark):
     assert rows == [(False,), (False,), (False,), (True,)]
 
 
-def test_native_generated_differential(spark):
-    """Systematic gate-gap detector: pseudo-randomly generated
-    simple-path programs over pseudo-random dirty-ish documents; every
-    program that the native tier ACCEPTS must produce exactly the
-    Python tier's rows.  (The restored sort/unique nested gate was a
-    class of bug this sweep would have caught — a program compiling
-    natively with divergent semantics.)"""
-    import json
-    import random
-
-    rng = random.Random(20260814)
-
-    def rand_doc():
-        def val(depth):
-            r = rng.random()
-            if depth > 2 or r < 0.25:
-                return rng.choice(
-                    [None, True, False, rng.randint(-50, 50),
-                     round(rng.uniform(-5, 5), 3), "s%d" % rng.randint(0, 9),
-                     "URGENT", "x-y"]
-                )
-            if r < 0.55:
-                return [val(depth + 1) for _ in range(rng.randint(0, 4))]
-            return {k: val(depth + 1) for k in rng.sample("abcde", rng.randint(1, 3))}
-
-        # documented text-view deltas stay OUT of the generator (bool
-        # under a numeric decl: lenient marshals 1/0, the native text
-        # tier nulls — native.py:18); dedicated unit tests pin those.
-        return {
-            "k": rng.choice([rng.randint(-99, 99), None, "55"]),
-            "s": rng.choice(["URGENT-1", "low", "", None]),
-            "xs": rng.choice(
-                [[rng.randint(0, 9) for _ in range(rng.randint(0, 5))],
-                 [round(rng.uniform(0, 9), 2) for _ in range(3)], None, 3,
-                 ["a", "b", "a"]]
-            ),
-            "o": val(0),
-        }
-
-    docs = [json.dumps(rand_doc()) for _ in range(60)]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
-
-    programs = [
-        ("{v: .k}", ("v:bigint",)),
-        ("{v: .k, s: .s}", ("v:double", "s:string")),
-        ('select(.s == "URGENT-1") | {v: .k}', ("v:bigint",)),
-        ("select(.k > 10) | {k: .k}", ("k:bigint",)),
-        ("{n: (.xs | length)}", ("n:bigint",)),
-        ("{t: (.k | tostring)}", ("t:string",)),
-        ("{a: (.xs | add)}", ("a:double",)),
-        ("{m: (.xs | max), mn: (.xs | min)}", ("m:double", "mn:double")),
-        ("{f: (.xs | first), l: (.xs | last)}", ("f:double", "l:double")),
-        ("{r: (.xs | reverse)}", ("r:array<double>",)),
-        ("{s: (.xs | sort)}", ("s:array<double>",)),
-        ("{u: (.xs | unique)}", ("u:array<string>",)),
-        # string fns guarded by a null-filter: jq raises a REAL type
-        # error on null|contains(...), which would skip the whole
-        # frame; the guard keeps both tiers comparable while still
-        # exercising the predicates on every non-null shape
-        ('select(.s != null) | {p: (.s | test("URG"))}', ("p:boolean",)),
-        ('select(.s != null) | {c: (.s | contains("ow"))}', ("c:boolean",)),
-        ('select(.s != null) | {h: (.s | split("-")[0])}', ("h:string",)),
-        ('select(.s != null) | {g: (.s | gsub("[-x]"; "_"))}', ("g:string",)),
-        ('{b: (if .k > 0 then "pos" else "neg" end)}', ("b:string",)),
-        ("{v: (.k // -1)}", ("v:bigint",)),
-        ("{v: .o.a}", ("v:string",)),
-        ('select(.k != null) | {v: .k}', ("v:bigint",)),
-    ]
-
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    checked = 0
-    for prog, decls in programs:
-        if compile_native(prog, decls) is None:
-            continue  # python-tier only: nothing to diff
-        def rows(native):
-            try:
-                out = jq_explode(df, "j", prog, *decls, native=native)
-                rows = [tuple(r) for r in out.drop("j").collect()]
-                return sorted(rows, key=repr), None
-            except Exception as ex:
-                return None, type(ex).__name__
-
-        a, ea = rows("require")
-        b, eb = rows("never")
-        if eb is not None:
-            # the python tier raises real jq type errors the native
-            # tier maps to nulls — the documented cast-leniency delta;
-            # only assert when BOTH tiers produce rows
-            continue
-        assert ea is None, f"{prog}: native raised {ea}, python did not"
-        assert a == b, f"{prog}: native {a[:3]} != python {b[:3]}"
-        checked += 1
-    assert checked >= 10  # the sweep must actually exercise the tier
-
-
 def test_native_iterate_scalar_elements_preserve_rows(spark):
     """from_json nulls a typed array wholesale when an element is a
     scalar, which used to DROP rows the reference marshals as
@@ -1313,8 +1107,8 @@ def test_native_mixed_arrays_nested_and_multi_level(spark):
     ]
 
     # bare scalar element schema: a mixed array must still yield one
-    # row per element (the off-type element is the documented
-    # cast-leniency delta: native NULL vs Jackson-lenient 0)
+    # row per element (the off-type element routes the row to the
+    # Python tier, which marshals it leniently to 0)
     df2 = spark.createDataFrame(
         [(1, '{"xs": [1, "mix", 2]}'), (2, '{"xs": [3, 4]}')],
         "id long, j string",
@@ -1322,7 +1116,7 @@ def test_native_mixed_arrays_nested_and_multi_level(spark):
     nat = jq_explode(df2, "j", ".xs[]", "bigint", native="require")
     assert sorted(
         ((r.id, r.col1) for r in nat.select("id", "col1").collect()), key=repr
-    ) == [(1, 1), (1, 2), (1, None), (2, 3), (2, 4)]
+    ) == [(1, 0), (1, 1), (1, 2), (2, 3), (2, 4)]
 
     # chained multi-iterate: from_json nulls only the DEEPEST
     # mismatching node, so the inner level needs its own variant
@@ -1343,7 +1137,7 @@ def test_native_mixed_arrays_nested_and_multi_level(spark):
         (1, 1), (1, 2), (2, 3), (2, None),
     ]
 
-    # inner scalar decl: rows preserved, off-type element NULL (delta)
+    # inner scalar decl: rows preserved, off-type element lenient 0
     df4 = spark.createDataFrame(
         [(1, '{"evs":[{"tags":[1,2]},{"tags":[3]}]}'), (2, '{"evs":[{"tags":[4,"x"]}]}')],
         "id long, j string",
@@ -1351,7 +1145,7 @@ def test_native_mixed_arrays_nested_and_multi_level(spark):
     nat4 = jq_explode(df4, "j", ".evs[].tags[]", "bigint", native="require")
     assert sorted(
         ((r.id, r.col1) for r in nat4.select("id", "col1").collect()), key=repr
-    ) == [(1, 1), (1, 2), (1, 3), (2, 4), (2, None)]
+    ) == [(1, 1), (1, 2), (1, 3), (2, 0), (2, 4)]
 
 
 def test_native_ceil_matches_python_tier_and_log_stays_python(spark):
@@ -1704,10 +1498,10 @@ def test_native_format_interpolation_matches_python_tier(spark):
         nat, py, sent = _tiers_by_input(df, prog, "t:string")
         assert sent == routed, prog
         assert nat == py, prog
-    # corrupt docs poison to NULL like plain interpolation
+    # a corrupt doc binds jq's null document, like on the Python tier
     bad = spark.createDataFrame([("{oops",)], "j string")
     out = jq_explode(bad, "j", '{t: @json "x\\(.s)"}', "t:string", native="require")
-    assert [r.t for r in out.collect()] == [None]
+    assert [r.t for r in out.collect()] == ["xnull"]
     # other @formats stay on the Python tier
     assert compile_native('{t: @csv "\\(.s)"}', ("t:string",)) is None
     assert compile_native('{t: @html "\\(.s)"}', ("t:string",)) is None
@@ -1809,207 +1603,12 @@ def test_native_inner_object_iteration_fuzz(spark):
         ) == sorted(r.col1 for r in py.collect() if r.col1 is not None)
 
 
-def test_native_inner_null_iterate_emits_no_rows(spark):
-    # documented error-channel delta: jq aborts iterating null/missing;
-    # the native tier emits no rows for those elements and keeps the rest
-    df = spark.createDataFrame(
-        [('{"a": [{"b": {"w": 3}}, {"c": 9}, {"b": null}]}',)], "j string"
-    )
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    nat = jq_explode(df, "j", ".a[].b[]", "int", native="require")
-    assert [r.col1 for r in nat.collect()] == [3]
-
-
-def test_native_randomized_program_differential(spark):
-    """Randomized native-vs-ground-truth differential over the whole
-    projection surface (r9): random docs (clean and dirty) x random
-    programs drawn from the native subset's grammar.  Ground truth is
-    run_jq (the engine-free UDTF pipeline — jq evaluation + reference
-    marshalling); docs where jq ABORTS are excluded per program (the
-    error-channel delta is pinned by dedicated tests, not here).
-    Catches silent auto-mode divergences of the kind ADVICE r8 found
-    in nested limit and r9 found in path-only `+` chains."""
-    import json as _json
-    import random
-
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode, run_jq
-
-    rng = random.Random(71)
-    crng = random.Random(172)
-    drng = random.Random(404)
-
-    def rand_doc(dirty: bool):
-        d = {
-            "s": rng.choice(["abc", "Xy", "", "tru"]),
-            "t": rng.choice(["zz", "q-1", ""]),
-            "n": rng.randint(-5, 99),
-            "x": rng.choice([0.5, 2.25, -1.75, 10.0]),
-            "arr": [rng.randint(0, 9) for _ in range(rng.randint(0, 4))],
-            "items": [
-                {"u": rng.choice(["a", "bb", ""]), "v": rng.randint(0, 20)}
-                for _ in range(rng.randint(0, 3))
-            ],
-        }
-        if dirty:
-            # type chaos on a random field; may make jq abort — the
-            # harness drops those docs per program
-            f = rng.choice(["s", "n", "arr", "items"])
-            d[f] = rng.choice([None, 7, "str", [1, 2], {"k": 1}, True])
-        if rng.random() < 0.3:
-            d.pop(rng.choice(list(d)), None)
-        # composite with nested floats: integral floats canonicalize
-        # INSIDE objects/arrays too (r10 ADVICE), number lookalikes
-        # inside strings do not.  Drawn from a SEPARATE rng so the
-        # main sequence (and the r9-pinned doc/program pairings that
-        # dodge the documented marshal-leniency delta) is unchanged
-        d["cmp"] = {
-            "f": crng.choice([1.0, 2.25, -0.0, 3, 10.0]),
-            "g": [crng.choice([4.0, 0.5])],
-            "s": crng.choice(["x1.0,", "a"]),
-        }
-        if crng.random() < 0.2:
-            d.pop("cmp")
-        # bare-path-to-string M2 route (r10 deep-fuzz class): integral
-        # floats incl. Jackson's >=1e7 scientific re-print, a
-        # float-looking STRING, and a float-bearing composite
-        d["sf"] = crng.choice(
-            [1.0, 2.5, 12345678.0, "1.0", 3, {"w": 10.0}, None]
-        )
-        return d
-
-    def doc_text(d) -> str:
-        """Serialize + r12 raw-text mutations the dict route can't
-        express: DUPLICATE top-level keys (a decoy FIRST occurrence —
-        json.loads and jq both keep the LAST, so ground truth is
-        unchanged and the native tier must route through the variant)
-        and scientific-notation number tokens in the digit-shift
-        exponent range (jq prints them positionally)."""
-        txt = _json.dumps(d)
-        if crng.random() < 0.3 and "n" in d:
-            txt = "{" + '"n": -777, ' + txt[1:]
-        if crng.random() < 0.3 and "s" in d:
-            txt = "{" + '"s": "DECOY", ' + txt[1:]
-        sci = crng.choice(
-            [
-                "1.23456789E7",
-                "1.5E-4",
-                "2.5E2",
-                "1.5E300",
-                "7.0E3",
-                # r13 (ADVICE r12 high): multi-digit integer parts,
-                # integer-part zeros, lowercase exponents — the
-                # boundary-bug shapes, now exact via the rebuild
-                "21.5E-1",
-                "20E3",
-                "-31.5E-2",
-                "12.5e3",
-                "9.9E16",
-                "250E-2",
-            ]
-        )
-        txt = txt[:-1] + ', "sci": {"a": %s, "b": [1.5E-1]}}' % sci
-        # r14 (VERDICT r13 #3): COMPOSITE duplicate-key shapes — a
-        # decoy FIRST-occurrence .cmp object (last wins on both sides)
-        # and a "dup" key whose object carries internal duplicates /
-        # a type-changing duplicated sibling.  Drawn from a THIRD rng
-        # so the r9/r12-pinned doc/program pairings above are
-        # untouched.
-        if drng.random() < 0.25:
-            txt = "{" + '"cmp": {"zz": 1, "aa": 2}, ' + txt[1:]
-        if drng.random() < 0.5:
-            inner = drng.choice(
-                [
-                    '{"w":1,"q":2,"w":3}',
-                    '{"z":9,"b":{"m":1,"m":2},"z":{"k":5,"a":6}}',
-                    '[{"u":1,"u":2},4]',
-                    '{"s":"x","s":"y","n":1.50E2}',
-                ]
-            )
-            txt = txt[:-1] + ', "dup": %s}' % inner
-        return txt
-
-    programs = [
-        ("{o: .s}", ("o:string",)),
-        ("{o: .n, p: .x}", ("o:int", "p:double")),
-        ("{o: (.n + 3)}", ("o:int",)),
-        ("{o: (.n * 2 - 1), p: (.x / 2)}", ("o:int", "p:double")),
-        ('{o: (.s + "#" + .t)}', ("o:string",)),
-        ('{o: ("L" + .s)}', ("o:string",)),
-        ("select(.n > 10) | {o: .n}", ("o:int",)),
-        ("select(.n + 5 <= 20) | {o: .n}", ("o:int",)),
-        ("{o: (.arr | length)}", ("o:int",)),
-        ("{o: (.arr | add)}", ("o:int",)),
-        ("{o: (.s | ascii_downcase)}", ("o:string",)),
-        ("{o: (.x | tostring)}", ("o:string",)),
-        ("{o: (.n | tostring)}", ("o:string",)),
-        ('{o: (.s | gsub("a"; "@"))}', ("o:string",)),
-        ('{o: (.t | split("-")[0])}', ("o:string",)),
-        ("{o: (.x | floor), p: (.x | ceil)}", ("o:bigint", "p:bigint")),
-        ('{o: "id-\\(.n)-\\(.s)"}', ("o:string",)),
-        ('{o: "c-\\(.cmp)"}', ("o:string",)),
-        ("{o: (.cmp | tostring)}", ("o:string",)),
-        ('{o: @json "c-\\(.cmp)-\\(.s)"}', ("o:string",)),
-        ('{o: @text "t-\\(.s)-\\(.n)"}', ("o:string",)),
-        ('{o: @base64 "b-\\(.s)"}', ("o:string",)),
-        ("{o: (.cmp | keys_unsorted)}", ("o:array<string>",)),
-        ("{o: (.s | tojson), p: (.x | tojson)}", ("o:string", "p:string")),
-        ("{o: .sf}", ("o:string",)),
-        (".sf", ("string",)),
-        ('.items[] | {o: "\\(.u)#\\(.v)"}', ("o:string",)),
-        (".items[] | {u: .u, v: .v}", ("u:string", "v:int")),
-        (".items[] | select(.v > 5) | {u: .u}", ("u:string",)),
-        ("limit(2; .items[]) | {u: .u}", ("u:string",)),
-        (".items[].u", ("string",)),
-        ('{o: (.s // "dflt")}', ("o:string",)),
-        # r12: dup-key last-wins reads, digit-shift sci tokens,
-        # contains in select, full split arrays, whole-element has
-        ("{o: .n, p: .s}", ("o:int", "p:string")),
-        ("{o: (.sci | tostring)}", ("o:string",)),
-        ('{o: "c-\\(.sci)"}', ("o:string",)),
-        ('select(.s | contains("b")) | {o: .s}', ("o:string",)),
-        ('{o: (.t | split("-"))}', ("o:array<string>",)),
-        ('.items[] | select(has("v")) | {o: .v}', ("o:int",)),
-        # r13: slices, trims composed in chains, regex select (the
-        # growth constructs enter the randomized harness like r12's);
-        # slice targets use fields the dirty-chaos mutator never
-        # touches (cmp.g / t) so cross-type slice deltas — pinned in
-        # test_native_slice_deltas_and_dispatch — can't false-fail
-        ("{o: .cmp.g[0:1]}", ("o:array<double>",)),
-        ("{o: .cmp.g[-1:]}", ("o:array<double>",)),
-        ("{o: .t[0:2]}", ("o:string",)),
-        ("{o: .t[-2:]}", ("o:string",)),
-        ('{o: (.t | ltrimstr("q") | rtrimstr("z"))}', ("o:string",)),
-        ('select(.t | test("^q|z$")) | {o: .t}', ("o:string",)),
-        # r14: composite dup-key reads (string render, tostring,
-        # interpolation, keys)
-        ("{o: .dup}", ("o:string",)),
-        ("{o: (.dup | tostring)}", ("o:string",)),
-        ('{o: "d-\\(.dup)"}', ("o:string",)),
-        ("{o: (.dup | keys_unsorted)}", ("o:array<string>",)),
-    ]
-    compared = 0
-    for pi, (prog, decls) in enumerate(programs):
-        assert compile_native(prog, decls) is not None, prog
-        docs, expected = [], []
-        for di in range(14):
-            doc = doc_text(rand_doc(dirty=di % 3 == 2))
-            try:
-                rows = run_jq(prog, doc, *decls)
-            except Exception:
-                continue  # jq aborted: error-channel delta, excluded
-            docs.append((doc,))
-            expected.extend(rows)
-        if not docs:
-            continue
-        df = spark.createDataFrame(docs, "j string")
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        cols = [c for c in nat.columns if c != "j"]
-        got = sorted(map(tuple, nat.select(cols).collect()), key=str)
-        assert got == sorted(expected, key=str), (prog, got, sorted(expected, key=str))
-        compared += len(docs)
-    assert compared > 150
+def test_native_inner_null_iterate_routes(spark):
+    # jq raises iterating null/missing at an inner level: the row takes
+    # the Python tier; a row whose every level iterates stays native
+    plan = compile_native(".a[].b[]", ("int",))
+    texts = ['{"a": [{"b": {"w": 3}}, {"c": 9}, {"b": null}]}', '{"a": [{"b": [1, 2]}]}']
+    assert native_rows(spark, plan, texts) == [None, [(1,), (2,)]]
 
 
 def test_native_tostring_number_normalization(spark):
@@ -2060,17 +1659,15 @@ def test_native_tostring_number_normalization(spark):
 
 
 def test_native_fnchain_head_type_gates(spark):
-    """r9: jq type-constrained fnchain HEADS gate on the exact JSON
-    type — wrong-typed values yield NULL (jq aborts there), never a
-    value computed from their serialization: `7 | ascii_downcase`
-    must not emit "7", `"5" | floor` must not emit 5."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
+    """r9: jq type-constrained fnchain HEADS take only their type —
+    a wrong-typed value routes its row to the Python tier (jq raises
+    there), never a value computed from its serialization:
+    `7 | ascii_downcase` must not emit "7", `"5" | floor` must not
+    emit 5."""
     docs = [
         '{"a": 7}', '{"a": "Ab"}', '{"a": [1]}', '{"a": true}',
         '{"a": "5"}', '{"a": 5.0}', '{"a": null}',
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
     for prog, decl, expect in [
         ('{o: (.a | ascii_downcase)}', "o:string",
          [None, "ab", None, None, "5", None, None]),
@@ -2083,19 +1680,12 @@ def test_native_fnchain_head_type_gates(spark):
         ("{o: (.a | ceil)}", "o:bigint",
          [7, None, None, None, None, 5, None]),
     ]:
-        nat = jq_explode(df, "j", prog, decl, native="require")
-        rows, sent = collect_routed(nat)
-        assert sent == 0, prog
-        assert [r.o for r in rows] == expect, prog
-    # explode tier: same gate via the element variant
-    df2 = spark.createDataFrame(
-        [('{"xs": [{"v": "Qq"}, {"v": 3}, {"v": "x,y"}]}',)], "j string"
-    )
-    out = jq_explode(
-        df2, "j", '.xs[] | {o: (.v | ascii_downcase)}', "o:string",
-        native="require",
-    )
-    assert [r.o for r in out.collect()] == ["qq", None, "x,y"]
+        got = native_rows(spark, compile_native(prog, (decl,)), docs)
+        assert got == [None if e is None else [(e,)] for e in expect], prog
+    # explode tier: one off-type element routes the whole row
+    plan = compile_native('.xs[] | {o: (.v | ascii_downcase)}', ("o:string",))
+    texts = ['{"xs": [{"v": "Qq"}, {"v": 3}]}', '{"xs": [{"v": "x,y"}]}']
+    assert native_rows(spark, plan, texts) == [None, [("x,y",)]]
 
 
 def test_native_string_interpolation_matches_python_tier(spark):
@@ -2565,14 +2155,13 @@ def test_native_slice_missing_variant_raw_fallback(spark):
     assert [r.v for r in rows] == ["ell"] and sent == 1
 
 
-def test_native_sub_capture_dispatch_and_deltas(spark):
-    """r14 growth (VERDICT r13 #4) — dispatch pins and documented
-    deltas for sub/capture.  Non-portable or participation-unsafe
-    capture patterns (alternation, zero-admitting quantifiers, plain
-    capturing groups, inline flags) fall back to the Python tier; a
-    non-matching / non-string / missing input yields a NULL struct
-    natively where jq ERRORS the row (the abort-delta class, like
-    object slices)."""
+def test_native_sub_capture_dispatch():
+    """r14 growth (VERDICT r13 #4) — dispatch pins for sub/capture.
+    Non-portable or participation-unsafe capture patterns
+    (alternation, zero-admitting quantifiers, plain capturing groups,
+    inline flags) fall back to the Python tier.  A non-matching,
+    non-string or missing input routes its row (jq yields no value or
+    raises), which tests/test_native_differential.py checks."""
     from hive_jq_udtf_spark.native import _capture_names, compile_native
 
     # pattern-gate pins
@@ -2612,23 +2201,6 @@ def test_native_sub_capture_dispatch_and_deltas(spark):
     assert compile_native(
         '{v: (.s | sub("x"; "y"))}', ("v:string",)
     ) is not None
-    # delta pins: jq aborts, native NULLs
-    df = spark.createDataFrame(
-        [('{"t":"nomatch","n":5}',), ('{"n":1}',)], "j string"
-    )
-    out = jq_explode(
-        df,
-        "j",
-        '{c: (.t | capture("(?<d>[0-9]+)"))}',
-        "c:struct<d:string>",
-        native="require",
-    )
-    assert [r.c for r in out.collect()] == [None, None]
-    # sub on a missing path: NULL (jq: "null cannot be matched" abort)
-    out2 = jq_explode(
-        df, "j", '{v: (.t | sub("x"; "y"))}', "v:string", native="require"
-    )
-    assert [r.v for r in out2.collect()] == ["nomatch", None]
 
 
 def test_native_recipe_cache_identical_plans_and_results(spark):
@@ -2644,7 +2216,7 @@ def test_native_recipe_cache_identical_plans_and_results(spark):
     rows = [
         ('{"ids": [1,2,3,4,5], "tags":[{"id":1.0,"w":2.0},{"w":1.0}]}',),
         ('{"ids": [9], "tags":[{"w":1.0}]}',),
-        ("not json",),
+        ('{"ids": [], "tags": []}',),
     ]
     df = spark.createDataFrame(rows, "doc string")
     df2 = spark.createDataFrame(rows, "other string")
@@ -2687,7 +2259,7 @@ def test_native_recipe_cache_identical_plans_and_results(spark):
     _, outer_rows = run(
         df, "doc", ".tags[] | {w: .w}", "w:double", outer=True
     )
-    assert len(outer_rows) > len(inner_rows) - 1  # corrupt row kept
+    assert len(outer_rows) > len(inner_rows)  # the empty-tags row kept
     # Column-typed doc input (uncached path) still works
     out = jq_explode(
         df, F.col("doc"), "{n: (.ids | length)}", "n:int", native="require"

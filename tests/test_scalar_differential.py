@@ -248,3 +248,22 @@ def test_kernels_are_selected(monkeypatch):
     # an interpolated replacement stays on the generic path
     with pytest.raises(AssertionError, match="generic path"):
         E.JQProgram('gsub("a"; "\\(.)")')("a")
+
+
+def test_disable_hook_skips_scalar_everywhere(monkeypatch):
+    """With ``_DISABLE_SCALAR`` set, no shape compiles through
+    ``compile_scalar`` — the lean select and the iterate specialization
+    included — so the differential above compares two different code
+    paths."""
+
+    def boom(*_a, **_k):
+        raise AssertionError("compile_scalar entered")
+
+    monkeypatch.setattr(E, "compile_scalar", boom)
+    monkeypatch.setattr(E, "_DISABLE_SCALAR", True)
+    E._COMPILE_CACHE.clear()
+    try:
+        prog = E.JQProgram(".xs[] | select(.a == 1)")
+        assert prog({"xs": [{"a": 1}, {"a": 2}]}) == [{"a": 1}]
+    finally:
+        E._COMPILE_CACHE.clear()

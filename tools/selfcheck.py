@@ -2,11 +2,16 @@
 queries() entry on Spark AND its oracle_sql() on DuckDB at sf0.01,
 compare row count, column names, and order-insensitive values.
 
-Usage: python tools/selfcheck.py [sf_dir] [query ...]
+Usage: python tools/selfcheck.py [sf_dir] [pattern ...]
+
+Each pattern is a query name or a shell-style pattern (``fnmatch``):
+``python tools/selfcheck.py /root/testdata/sf0.01 'jq*'`` checks every
+jq query.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -46,7 +51,7 @@ def norm_rows(cols, rows):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    patterns = sys.argv[2:]
 
     from pyspark.sql import SparkSession
 
@@ -77,7 +82,7 @@ def main():
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in queries.items():
-        if only and name not in only:
+        if patterns and not any(fnmatch.fnmatchcase(name, p) for p in patterns):
             continue
         t0 = time.time()
         try:
