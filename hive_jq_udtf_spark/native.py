@@ -2930,11 +2930,8 @@ class NativePlan:
             F.from_json(src, T.MapType(T.StringType(), T.VariantType()))
         )
         obj_fallback = F.transform(obj_vals, lambda e: _rebuild(e))
-        # the is_object branch must PRE-empt the typed parse: Jackson
-        # reads a JSON object where array<struct> is declared as a
-        # single-element array (its lenient convenience), which would
-        # emit the object itself as one row instead of iterating its
-        # values.
+        # objects first: Jackson reads an object where array<struct> is
+        # declared as a one-element array, emitting the object itself
         nav = F.when(is_object, obj_fallback).otherwise(nav)
         lims = ir.iter_limits or []
         if lims and lims[0] is not None:
@@ -2962,10 +2959,9 @@ class NativePlan:
             f.lhs_expr is None and not f.lhs
             for f in _each_filter(ir.post_filters)
         )
-        # r11: keys_unsorted under an iterate needs the element's RAW
-        # text (document key order — variants sort object keys).  The
-        # mid-path route already threads a text twin (``ex``); the
-        # single-level route builds a posexplode-indexed text array.
+        # r11: keys_unsorted under an iterate reads the element's RAW
+        # text (document key order; variants sort object keys): the
+        # mid-path twin ``ex``, or a posexplode-indexed text array.
         needs_ex = ir.single_call == "keys_unsorted" or (
             ir.project is not None
             and any(
