@@ -557,17 +557,22 @@ _STRPRED_TYPE_DOCS = [
 ]
 
 
-def test_native_strpred_nonstring_routes(spark):
+def test_native_strpred_nonstring_routes_scalar_tier(spark):
     """Projected and select string predicates over a non-string value
     route the row to the Python tier (jq raises there) — never a match
     against the value's JSON text ('["src1x"]' would satisfy
-    contains/test/startswith), on the scalar and the explode tier."""
+    contains/test/startswith)."""
     prog = '{c: (.tag | contains("src")), s: (.tag | startswith("s")), t: (.tag | test("src1"))}'
     plan = compile_native(prog, ("c:boolean", "s:boolean", "t:boolean"))
     got = native_rows(spark, plan, _STRPRED_TYPE_DOCS)
     assert got == [[(True, True, True)], None, None, None, None]
     sel = compile_native('select(.tag | startswith("s")) | {v: .v}', ("v:int",))
     assert native_rows(spark, sel, _STRPRED_TYPE_DOCS) == [[(1,)], None, None, None, None]
+
+
+def test_native_strpred_nonstring_routes_explode_tier(spark):
+    """Same routing under an iterate: the element schema types strpred
+    paths VARIANT so the exact-type check survives from_json."""
     it = compile_native('.items[] | select(.tag | startswith("s")) | {v: .v}', ("v:int",))
     assert native_rows(spark, it, _STRPRED_TYPE_DOCS) == [[(1,)], None, None, None, None]
 
