@@ -1,18 +1,18 @@
 """jq → native Catalyst expression compiler (SURVEY §4.2 tier 2).
 
-A large fraction of real jq programs are "simple paths":
-``.a.b``, ``.a[]``, ``.a[0]``, ``{x: .p, y: .q}``,
+A large fraction of real jq programs are "simple paths" that yield one
+value per document: ``.a.b``, ``.a[0]``, ``{x: .p, y: .q}``,
 ``select(.k == lit)`` pipelines of J1–J7.  These compile to pure
-Spark expressions (``get_json_object`` / ``from_json`` + ``explode``
-+ ``filter``) and skip the Python worker entirely — whole-stage
-codegen keeps the hot path JVM-side, the single biggest lever at
-100 TB (the reference had no JVM↔Python boundary; this tier removes
-ours).
+Spark expressions (``get_json_object`` / variant reads + ``filter``)
+and skip the Python worker for the rows they evaluate.
 
 ``compile_native(program, decls)`` returns a plan or None; the
 `jq_explode(..., native="auto")` entry point in udtf.py uses it
 transparently and falls back to the Python UDTF for general
-programs.
+programs.  A program that iterates (``.[]``/``.path[]``, also under
+``limit``/``first``) yields 0..N rows per document, which is what the
+Python tier does by running jq itself; it does not compile here, and
+measured faster on the Python tier on every suite query that had one.
 
 One semantics on both tiers: a native plan evaluates a row only where
 its Catalyst expressions give exactly jq's result, and sends every
@@ -25,21 +25,18 @@ mechanisms decide which rows those are:
    ``split`` or a string slice; a number under ``floor``, ``ceil``,
    ``sqrt`` (not negative) and arithmetic; no boolean under
    ``length``; an object or array under ``keys`` and ``has``; an array
-   under ``add``/``sort``/``join``/``map``; an array or object at each
-   iterate level; null or an object (array) at each field (index) step.
-   A declared numeric slot takes numbers that fit it, a boolean slot
-   booleans, an array slot arrays (`_slot_bad`).  A row holding any
-   other value at a guarded path, at any iterate level and element —
-   also one a filter or limit would drop — takes the Python tier;
+   under ``add``/``sort``/``join``/``map``; null or an object (array)
+   at each field (index) step.  A declared numeric slot takes numbers
+   that fit it, a boolean slot booleans, an array slot arrays
+   (`_slot_bad`).  A row holding any other value at a guarded path —
+   also one a filter would drop — takes the Python tier;
 2. number text.  This tier prints no number itself.  Strings,
    booleans, null and 64-bit integers read as text (a string-typed
    slot, ``tostring``/``tojson``/``@text``/``@json``/``@base64``,
    interpolation, ``join``, the ``ltrimstr``-``rtrimstr``
    pass-through) keep the raw text view, which already equals jq's
    text.  A value whose ``schema_of_variant`` names DECIMAL, DOUBLE or
-   FLOAT (`_number_text`) is guarded like a wrong kind; so is an
-   object under an iterate where ``//`` or the trim pass-through casts
-   the element's variant to text, which would sort its keys.  Computed
+   FLOAT (`_number_text`) is guarded like a wrong kind.  Computed
    numbers into a string slot do not compile (`_validate_new_specs`),
    and a numeric literal into a string slot is rendered at build time
    by the marshaller's own jq text (`_lit_col`);
@@ -51,14 +48,12 @@ mechanisms decide which rows those are:
    those cells emit its rows, or take the Python tier when jq fails on
    null (`_null_doc_rows`).
 
-Shapes that no per-row guard covers do not compile (`_validate_new_specs`,
-`_elem_schema`), so ``auto`` takes the Python tier.  ``.[]``/``.path[]``
-iterates both arrays and objects at every iterate level, object values
-in document key order (a raw-text twin threaded through the chained
-explodes, since Spark variants sort object keys).  Transcendental math
-fns stay Python-tier because JVM libm is not correctly rounded (see
-_NUM_FNS note).  On every row it evaluates, the tier agrees with jq bit
-for bit — pinned by tests/test_native_differential.py.
+Shapes that no per-row guard covers do not compile
+(`_validate_new_specs`), so ``auto`` takes the Python tier.
+Transcendental math fns stay Python-tier because JVM libm is not
+correctly rounded (see _NUM_FNS note).  On every row it evaluates, the
+tier agrees with jq bit for bit — pinned by
+tests/test_native_differential.py.
 """
 
 from __future__ import annotations
@@ -131,27 +126,12 @@ class OrGroup:
 
 @dataclass
 class NativeIR:
-    pre_path: Path = ()
-    iterate: bool = False
-    # steps between consecutive iterates for multi-level explode
-    # (.a[].b[] → pre_path=(a,), mid_paths=[(b,)]); empty for the
-    # single-iterate case.  Filters/projections are always relative
-    # to the LAST iterated element.
-    mid_paths: list = field(default_factory=list)
-    # per-iterate output cap from limit(n; ...)/first(...): entry k
-    # caps the k-th iterate (None = unlimited).  jq's generator
-    # laziness maps to a pre-explode array slice — the explode never
-    # materializes the elements limit() would not have pulled.
-    iter_limits: list = field(default_factory=list)
-    pre_filters: list[Filter] = field(default_factory=list)
-    post_filters: list[Filter] = field(default_factory=list)
+    filters: list[Filter] = field(default_factory=list)
     # projection: None = identity; {name: Path|("lit", v)} = object construct
     project: Optional[dict[str, Any]] = None
     single_path: Optional[Path] = None  # trailing bare path
-    # trailing bare ``keys`` / ``keys_unsorted`` call applied to
-    # single_path's value (r11: both tiers, incl. under iterates —
-    # ``.[] | keys_unsorted`` reads the element's raw-text twin for
-    # document order); None = no trailing call
+    # trailing bare ``keys`` / ``keys_unsorted`` / ``length`` call
+    # applied to single_path's value; None = no trailing call
     single_call: Optional[str] = None
     # r11: this project was SYNTHESIZED by wrapping a bare
     # single-TYPE program's tail as a one-field object (jq1-style
@@ -179,11 +159,6 @@ def _flatten(ast: AST, out: list) -> bool:
             out.append(("step", idx[1]))
             return True
         return False
-    if tag == "iterate_on":
-        if not _flatten(ast[1], out):
-            return False
-        out.append(("iterate",))
-        return True
     if tag == "call" and ast[1] == "select" and len(ast[2]) == 1:
         f = _parse_filters(ast[2][0])
         if f is None:
@@ -193,56 +168,6 @@ def _flatten(ast: AST, out: list) -> bool:
     if tag == "call" and ast[1] == "first" and len(ast[2]) == 0:
         # jq: `first` == `.[0]`
         out.append(("step", 0))
-        return True
-    if tag == "call" and ast[1] in ("limit", "first") and len(ast[2]) in (1, 2):
-        # limit(n; <path chain with one iterate>) / first(<same>):
-        # the first n stream outputs of a pure path chain are the
-        # first n array elements — a pre-explode slice.  Bodies with
-        # select() stay Python-tier (their per-element output count
-        # is data-dependent, not slice-able).
-        if ast[1] == "limit":
-            if len(ast[2]) != 2:
-                return False
-            n_ast, body = ast[2]
-            if n_ast[0] == "neg" and n_ast[1][0] == "literal":
-                n_ast = ("literal", -n_ast[1][1]) if isinstance(
-                    n_ast[1][1], int
-                ) and not isinstance(n_ast[1][1], bool) else n_ast
-            if (
-                n_ast[0] != "literal"
-                or not isinstance(n_ast[1], int)
-                or isinstance(n_ast[1], bool)
-            ):
-                return False
-            # jqlib pins limit(n <= 0; f) -> empty
-            n = max(n_ast[1], 0)
-        else:
-            if len(ast[2]) != 1:
-                return False
-            body = ast[2][0]
-            n = 1
-        sub: list = []
-        if not _flatten(body, sub):
-            return False
-        if any(s[0] not in ("step", "iterate") for s in sub):
-            return False
-        iters = [i for i, s in enumerate(sub) if s[0] == "iterate"]
-        if len(iters) == 0:
-            # body is a bare path: one output, so limit(n>=1) is the
-            # identity on it; n == 0 (empty) is not expressible here
-            if n < 1:
-                return False
-            out.extend(sub)
-            return True
-        if len(iters) != 1:
-            return False
-        # Nested limit/first (e.g. limit(5; first(.a[]))): the inner
-        # call already capped this iterate — the composed stream cap
-        # is the MIN of the two, never the outer overwrite.
-        prev = sub[iters[0]]
-        eff = n if len(prev) < 2 or prev[1] is None else min(n, prev[1])
-        sub[iters[0]] = ("iterate", eff)
-        out.extend(sub)
         return True
     if tag == "object":
         proj = {}
@@ -451,9 +376,7 @@ def _as_keys_chain(ast: AST):
     (path, sorted?) else None.  ``keys`` sorts by codepoint — exactly
     the order variant objects store their fields in (`_variant_keys`);
     ``keys_unsorted`` is document order, which variants LOSE — it
-    reads `json_object_keys` over the raw text instead (r10 scalar
-    tier; r11 under iterates too, via the element raw-text twin —
-    posexplode-indexed at level 0, the r9 ``ex`` twin at mid levels)."""
+    reads `json_object_keys` over the raw text instead."""
     nodes: list = []
     _pipe_list(ast, nodes)
     last = nodes[-1]
@@ -691,7 +614,7 @@ def _apply_fnchain(c: Column, fns, json_text: bool = False) -> Column:
     return c
 
 
-# array functions compilable in projections (scalar, non-iterate tier)
+# array functions compilable in projections
 _ARRAY_FNS = {"add", "max", "min", "first", "last", "reverse", "sort", "unique", "join", "map"}
 # string predicates compilable as PROJECTED booleans
 _PROJ_STR_PREDS = {"test", "contains", "startswith", "endswith"}
@@ -1047,20 +970,6 @@ def _expr_ok(ast: AST) -> bool:
     return _expr_kind(ast) is not None
 
 
-def _expr_paths(ast: AST, acc: list) -> None:
-    """Collect paths referenced by a compilable expression."""
-    tag = ast[0]
-    p = _as_path(ast)
-    if p is not None:
-        acc.append(p)
-        return
-    if tag == "neg":
-        _expr_paths(ast[1], acc)
-    elif tag == "binop":
-        _expr_paths(ast[2], acc)
-        _expr_paths(ast[3], acc)
-
-
 def _compile_expr(ast: AST, num_path_col) -> Column:
     """Expression AST → Column.  ``num_path_col(path)`` must return
     the path's value as a double Column (NULL when missing).
@@ -1302,134 +1211,61 @@ def analyze_program(program: str) -> Optional[NativeIR]:
     return _analyze_ast(ast, single_call)
 
 
+def _rebase(item, base: Path):
+    """A filter (or OrGroup) read relative to ``base``."""
+    if isinstance(item, OrGroup):
+        return OrGroup([_rebase(f, base) for f in item.filters])
+    return Filter(tuple(base) + item.lhs, item.op, item.lit, lhs_expr=item.lhs_expr, fn=item.fn)
+
+
 def _analyze_ast(ast: AST, single_call: Optional[str] = None) -> Optional[NativeIR]:
     stages: list = []
     if not _flatten(ast, stages):
         return None
     ir = NativeIR()
-    seen_iterate = False
-    post_steps: list = []
+    base: Path = ()
     for st in stages:
         kind = st[0]
         if kind == "step":
             # filters record absolute paths at select-time, so steps
             # before/after a select can both extend the base path
-            if seen_iterate:
-                post_steps.append(st[1])
-            else:
-                ir.pre_path = ir.pre_path + (st[1],)
-        elif kind == "iterate":
-            lim = st[1] if len(st) > 1 else None
-            if seen_iterate:
-                if ir.post_filters:
-                    # select BETWEEN iterates — not expressible as a
-                    # last-element filter; Python tier handles it
-                    return None
-                ir.mid_paths.append(tuple(post_steps))
-                post_steps = []
-            else:
-                seen_iterate = True
-            ir.iter_limits.append(lim)
+            base = base + (st[1],)
         elif kind == "select":
-            fl = st[1]
-
-            def rebase(item, base):
-                if isinstance(item, OrGroup):
-                    return OrGroup([rebase(f, base) for f in item.filters])
-                return Filter(base + item.lhs, item.op, item.lit, lhs_expr=item.lhs_expr, fn=item.fn)
-
-            if seen_iterate:
-                base = tuple(post_steps)
-                ir.post_filters.extend(rebase(f, base) for f in fl)
-            else:
-                if post_steps:
-                    return None
-                ir.pre_filters.extend(rebase(f, ir.pre_path) for f in fl)
+            ir.filters.extend(_rebase(f, base) for f in st[1])
         elif kind == "project":
-            base = tuple(post_steps) if seen_iterate else ir.pre_path
             proj = {}
             for k, v in st[1].items():
                 if isinstance(v, tuple) and v and v[0] == "lit":
                     proj[k] = v
                 elif isinstance(v, tuple) and v and v[0] == "expr":
                     proj[k] = ("expr", v[1], base)  # paths inside are base-relative
-                elif isinstance(v, tuple) and v and v[0] == "fnchain":
-                    proj[k] = ("fnchain", tuple(base) + v[1], v[2])
-                elif isinstance(v, tuple) and v and v[0] == "alt":
-                    proj[k] = ("alt", tuple(base) + v[1], v[2])
-                elif isinstance(v, tuple) and v and v[0] == "length":
-                    proj[k] = ("length", tuple(base) + v[1])
-                elif isinstance(v, tuple) and v and v[0] in (
-                    "keyssorted",
-                    "keysunsorted",
-                ):
-                    proj[k] = (v[0], tuple(base) + v[1])
-                elif isinstance(v, tuple) and v and v[0] in (
-                    "strpred",
-                    "arrayfn",
-                    "splitidx",
-                    "splitarr",
-                    "reduce",
-                ):
-                    proj[k] = (v[0], tuple(base) + v[1]) + v[2:]
-                elif isinstance(v, tuple) and v and v[0] in (
-                    "slicearr",
-                    "capture",
-                ):
-                    if seen_iterate:
-                        # slices/captures under an iterate stay
-                        # Python-tier (r13/r14 scope: scalar
-                        # projections only)
-                        return None
-                    proj[k] = (v[0], tuple(base) + v[1]) + v[2:]
                 elif isinstance(v, tuple) and v and v[0] in ("strcat", "strinterp"):
                     proj[k] = (
                         v[0],
-                        tuple(
-                            (pk, tuple(base) + pv) if pk != "lit" else (pk, pv)
-                            for pk, pv in v[1]
-                        ),
+                        tuple((pk, base + pv) if pk != "lit" else (pk, pv) for pk, pv in v[1]),
                     )
                 elif isinstance(v, tuple) and v and v[0] == "ifelse":
                     _, fl, t_spec, e_spec = v
-
-                    def rebase_f(item, b):
-                        if isinstance(item, OrGroup):
-                            return OrGroup([rebase_f(f, b) for f in item.filters])
-                        return Filter(
-                            tuple(b) + item.lhs, item.op, item.lit,
-                            lhs_expr=item.lhs_expr, fn=item.fn,
-                        )
-
-                    def rebase_b(sp, b):
-                        if sp[0] == "path":
-                            return ("path", tuple(b) + sp[1])
-                        return sp
-
                     proj[k] = (
                         "ifelse",
-                        [rebase_f(f, base) for f in fl],
-                        rebase_b(t_spec, base),
-                        rebase_b(e_spec, base),
+                        [_rebase(f, base) for f in fl],
+                        *(("path", base + b[1]) if b[0] == "path" else b for b in (t_spec, e_spec)),
                     )
+                elif isinstance(v, tuple) and v and v[0] in _SPEC_KINDS:
+                    # every other spec kind reads the path in its slot 1
+                    proj[k] = (v[0], base + v[1]) + v[2:]
                 else:
                     full = base + v
                     if full and isinstance(full[0], str) and full[0] in _SPEC_KINDS:
                         return None  # field name collides with a spec tag
                     proj[k] = full
             ir.project = proj
-            ir.iterate = seen_iterate
             if single_call is not None:
                 # keys over a CONSTRUCTED object — Python tier
                 return None
             # projection must be final
             return ir if st is stages[-1] else None
-    ir.iterate = seen_iterate
-    if seen_iterate:
-        ir.single_path = tuple(post_steps) if post_steps else ()
-    else:
-        ir.single_path = ir.pre_path
-        ir.pre_path = ()
+    ir.single_path = base
     ir.single_call = single_call
     return ir
 
@@ -1438,15 +1274,15 @@ def analyze_program_single_wrap(
     program: str, fname: str
 ) -> Optional[NativeIR]:
     """r11: bare single-TYPE programs whose TAIL is a projection-value
-    shape — the jq1 style ``.a | tostring``, ``.x[] | .a | floor``,
+    shape — the jq1 style ``.a | tostring``, ``.a | floor``,
     ``"pfx-\\(.a)"`` — wrap that tail as a synthetic one-field object
     (``{col1: (<tail>)}``) and run the standard project analysis.
     Sound because both tiers marshal a single-TYPE output and a
     project field through the same rules (the bare-vs-named
     differential pins the DISPATCH side; the spec compilers pin the
-    value side).  The split point keeps every iterate / select /
-    limit stage in the pipe PREFIX, since project values cannot
-    contain them; a tail that is itself an object construct is
+    value side).  The split point keeps every select / limit / first
+    stage in the pipe PREFIX, since project values cannot contain
+    them; a tail that is itself an object construct is
     rejected (a real user object marshals the WHOLE object into
     col1 — the long-standing exclusion)."""
     try:
@@ -1455,22 +1291,10 @@ def analyze_program_single_wrap(
         return None
     nodes: list = []
     _pipe_list(ast, nodes)
-
-    def _has_iter(n) -> bool:
-        if isinstance(n, (list, tuple)):
-            if isinstance(n, tuple) and n and n[0] == "iterate_on":
-                return True
-            return any(_has_iter(x) for x in n)
-        return False
-
     split = 0
     for i, n in enumerate(nodes):
-        if _has_iter(n) or (
-            isinstance(n, tuple)
-            and n
-            and n[0] == "call"
-            and n[1] in ("select", "limit", "first")
-        ):
+        # a bare reduce iterates outside a projection: Python tier
+        if n[0] == "reduce" or (n[0] == "call" and n[1] in ("select", "limit", "first")):
             split = i + 1
     tail = nodes[split:]
     if not tail:
@@ -1525,26 +1349,24 @@ def _json_path(p: Path) -> str:
 _BIND_COL = "__jq_docbind"
 
 
-def _number_text(v: Column, objects: bool = False, depth: int = 2, s=None) -> Column:
+def _number_text(v: Column, depth: int = 2, s=None) -> Column:
     """Whether the raw text view of variant ``v`` may print a number
-    unlike jq: its schema names a non-integer number type — or, with
-    ``objects``, an object, whose keys a variant cast prints sorted.
-    A mixed array's schema hides its element types (``[1.0, "a"]`` is
+    unlike jq: its schema names a non-integer number type.  A mixed
+    array's schema hides its element types (``[1.0, "a"]`` is
     ``ARRAY<VARIANT>``), so a VARIANT in it looks ``depth`` levels
     further into the elements, and counts as number text below that."""
     s = F.schema_of_variant(v) if s is None else s
-    types = "DECIMAL|DOUBLE|FLOAT|OBJECT" if objects else "DECIMAL|DOUBLE|FLOAT"
+    types = "DECIMAL|DOUBLE|FLOAT"
     if depth == 0:
         return s.rlike(types + "|VARIANT")
     return s.rlike(types) | (
-        s.contains("VARIANT")
-        & F.exists(_elements(v), lambda e: _number_text(e, objects, depth - 1))
+        s.contains("VARIANT") & F.exists(_elements(v), lambda e: _number_text(e, depth - 1))
     )
 
 
 def _elements(v: Column) -> Column:
-    """The values ``.[]`` iterates in variant ``v``: an array's
-    elements or an object's values; NULL for anything else."""
+    """An array's elements or an object's values in variant ``v``;
+    NULL for anything else."""
     return F.coalesce(
         v.try_cast("array<variant>"),
         F.map_values(v.try_cast("map<string,variant>")),
@@ -1554,7 +1376,7 @@ def _elements(v: Column) -> Column:
 # --- per-row type guards ----------------------------------------------------
 # The builders below evaluate jq exactly only on the JSON kinds they
 # expect: ``ascii_downcase`` on a string, ``floor`` on a number, a
-# number into a numeric slot, ``.[]`` on an array or object.  Each plan
+# number into a numeric slot.  Each plan
 # lists, per path it reads, the kinds its builders take there and any
 # further checks on the value (`_Guards`); a row holding anything else
 # goes to the exact Python tier (`_python_rows`), which raises where jq
@@ -1647,20 +1469,17 @@ def _variant_expr(ast: AST, base: Path, x: Column) -> Column:
 
 
 class _Guards:
-    """The type guards of one level of a plan: the document, or the
-    element an iterate yields.  Per path read there, ``kinds`` holds
-    the JSON kinds the builders take and ``checks`` named checks
-    ``(value, its schema) -> bad``; specs reading one path share its
-    entry and its one ``schema_of_variant``.  ``exprs`` are checks over
-    the level's value itself (a zero divisor)."""
+    """The type guards of a plan over the document.  Per path read
+    there, ``kinds`` holds the JSON kinds the builders take and
+    ``checks`` named checks ``(value, its schema) -> bad``; specs
+    reading one path share its entry and its one ``schema_of_variant``.
+    ``texts`` are the paths read as text, ``exprs`` checks over the
+    document itself (a zero divisor)."""
 
-    def __init__(self, iterate: bool):
-        # an iterated element's values can reach text through a variant
-        # cast, which prints object keys sorted
-        self.iterate = iterate
+    def __init__(self):
         self.kinds: dict = {}
         self.checks: dict = {}
-        self.texts: dict = {}  # text-read path -> objects always route
+        self.texts: set = set()
         self.exprs: list = []
 
     def read(self, p: Path, kinds=_ANY, **checks) -> None:
@@ -1670,14 +1489,10 @@ class _Guards:
         self.kinds[p] = self.kinds.get(p, _ANY) & frozenset(kinds)
         self.checks.setdefault(p, {}).update(checks)
 
-    def text(self, p: Path, cast: bool = False) -> None:
-        """``p``'s value is read as text (module docstring, rule 2).
-        Under an iterate an object in it prints with sorted keys where
-        the builder casts a variant to text: always with ``cast``, and
-        below an iterated object, whose elements are variants
-        (`_build_explode`)."""
+    def text(self, p: Path) -> None:
+        """``p``'s value is read as text (module docstring, rule 2)."""
         self.read(p)
-        self.texts[p] = self.texts.get(p, False) or (cast and self.iterate)
+        self.texts.add(p)
 
     def slot(self, p: Path, dt: T.DataType, nested: bool = False) -> None:
         """``p``'s value lands in declared type ``dt``."""
@@ -1751,14 +1566,13 @@ class _Guards:
             checks["negative"] = lambda v, s: v.try_cast("double") < 0
         self.read(p, kinds, **checks)
         if names[0] in ("tostring", "tojson", "ltrimstr", "rtrimstr"):
-            self.text(p, cast=names[0] in ("ltrimstr", "rtrimstr"))
+            self.text(p)
 
     def spec(self, spec, dt: T.DataType) -> None:
         """Guards of one projection spec into declared type ``dt``."""
         kind = spec[0] if spec and spec[0] in _SPEC_KINDS else "path"
         if kind == "path":
-            # an element's fields parse strictly (`_elem_schema`)
-            self.slot(spec, dt, nested=self.iterate)
+            self.slot(spec, dt)
         elif kind == "expr":
             _, ast, base = spec
             self.expr(ast, base)
@@ -1770,13 +1584,12 @@ class _Guards:
             if spec[2][-1][0] in _NUM_FNS:
                 self.wide(spec[1], dt)
         elif kind == "alt":
-            # only a jq-truthy value lands in the slot; under an iterate
-            # the element's variant is cast to text
+            # only a jq-truthy value lands in the slot
             key = f"alt {dt.simpleString()}"
-            bad = lambda v, s: _slot_bad(v, dt, self.iterate, s) & _variant_truthy(v)  # noqa: E731
+            bad = lambda v, s: _slot_bad(v, dt, s=s) & _variant_truthy(v)  # noqa: E731
             self.read(spec[1], **{key: bad})
             if _holds_text(dt):
-                self.text(spec[1], cast=True)
+                self.text(spec[1])
         elif kind == "length":
             self.read(spec[1], _ANY - {"boolean"})
             self.wide(spec[1], dt)
@@ -1840,10 +1653,9 @@ class _Guards:
         if _holds_text(dt):
             self.text(p)
 
-    def bad(self, x: Column, in_object: Optional[Column]) -> Column:
-        """Whether level value ``x`` holds a value some builder would
-        not evaluate exactly; ``in_object``: an iterate above it ran
-        over an object (None: no iterate above it)."""
+    def bad(self, x: Column) -> Column:
+        """Whether document ``x`` holds a value some builder would not
+        evaluate exactly."""
         c = F.lit(False)
         for p in sorted(self.kinds, key=lambda q: (len(q), repr(q))):
             v = F.try_variant_get(x, _json_path(p), "variant") if p else x
@@ -1854,16 +1666,14 @@ class _Guards:
                 c = c | _not_kind(_kind(v, s) if kinds & _ITERABLE else s, kinds)
             for check in self.checks[p].values():
                 c = c | check(v, s)
-            if p in self.texts and (self.texts[p] or in_object is None):
-                c = c | _number_text(v, self.texts[p], s=s)
-            elif p in self.texts:
-                c = c | F.when(in_object, _number_text(v, True, s=s)).otherwise(_number_text(v, s=s))
+            if p in self.texts:
+                c = c | _number_text(v, s=s)
         for check in self.exprs:
             c = c | check(x)
         return c
 
 
-def _python_rows(col: Column, dv: Column, levels: list, guards: list, null_doc: bool) -> Column:
+def _python_rows(col: Column, dv: Column, guards: _Guards, null_doc: bool) -> Column:
     """Rows the exact Python tier must evaluate, over the bound variant
     ``dv`` of doc column ``col``:
 
@@ -1874,28 +1684,14 @@ def _python_rows(col: Column, dv: Column, levels: list, guards: list, null_doc: 
       get_json_object reads the first;
     - corrupt and NULL cells, when ``null_doc`` (jq fails on the null
       document they bind; otherwise they stay native);
-    - a row where a guard fires (`_Guards`).  ``levels`` are the paths
-      to each iterate (pre-path, then mid-paths) — empty for a scalar
-      plan — and ``guards[k]`` guards the values at level ``k``; every
-      element counts, also those a filter or limit drops.
+    - a row where a guard fires (`_Guards`), also one a filter drops.
 
     Never NULL, so ``~`` selects the complement.  A CASE, not an OR:
     the optimizer would push the doc-only half below the binding
     Generate and re-read every row's text."""
-
-    def check(x: Column, lvl: int, in_object: Optional[Column]) -> Column:
-        c = guards[lvl].bad(x, in_object)
-        if lvl < len(levels):
-            p = levels[lvl]
-            at = F.try_variant_get(x, _json_path(p), "variant") if p else x
-            obj = at.try_cast("map<string,variant>").isNotNull()
-            obj = obj if in_object is None else in_object | obj
-            c = c | F.exists(_elements(at), lambda e: check(e, lvl + 1, obj))
-        return c
-
     bad_doc = F.get_json_object(col, "$").isNotNull()
     return F.when(dv.isNull(), bad_doc | F.lit(null_doc)).otherwise(
-        F.coalesce(check(dv, 0, None), F.lit(False))
+        F.coalesce(guards.bad(dv), F.lit(False))
     )
 
 
@@ -1985,10 +1781,9 @@ def _variant_has(v: Column, key) -> Column:
 
 
 def _variant_leaf_filter(v: Column, f: "Filter") -> Column:
-    """One select() leaf evaluated directly on a VARIANT value — the
-    r12 whole-element predicate route (``.items[] | select(has("k"))``,
-    ``select(. > 5)``, ``select(length > 2)`` under an iterate), where
-    the typed element struct cannot represent "the element itself"."""
+    """One select() leaf evaluated on the exact-typed VARIANT value at
+    its path (``select(has("k"))``, ``select(.a > 5)``,
+    ``select(.tags | length > 2)``)."""
     if f.fn == "length":
         return F.coalesce(
             _CMP_FN[f.op](_variant_length(v), F.lit(float(f.lit))),
@@ -2055,26 +1850,6 @@ def _variant_keys(v: Column) -> Column:
     return F.when(
         F.schema_of_variant(v).startswith("OBJECT"), F.map_keys(v.try_cast("map<string,variant>"))
     ).otherwise(_index_keys(v))
-
-
-def _elem_decl_type(dt: T.DataType) -> T.DataType:
-    """Element-schema type for a declared output type: map-typed
-    outputs read a VARIANT so the marshaller's M4 rule (object → map,
-    null → NULL, any other value → EMPTY map) is expressible; other
-    types parse directly."""
-    return T.VariantType() if isinstance(dt, T.MapType) else dt
-
-
-def _elem_out_col(c: Column, dt: T.DataType) -> Column:
-    """Declared-type output column from an exploded element field."""
-    if isinstance(dt, T.MapType):  # c is a variant (_elem_decl_type)
-        vt = F.schema_of_variant(c)
-        return (
-            F.when(c.isNull() | (vt == F.lit("VOID")), F.lit(None).cast(dt))
-            .when(vt.startswith("OBJECT"), c.try_cast(dt))
-            .otherwise(F.create_map().cast(dt))  # M4: non-object → {}
-        )
-    return c.try_cast(dt)
 
 
 def _scalar_map_col(dv: Column, path: Path, dt: T.MapType) -> Column:
@@ -2188,16 +1963,6 @@ def _string_pred_col(c: Column, op: str, pat: str) -> Column:
     return c.rlike(pat)
 
 
-def _nav_step(c: Column, s) -> Column:
-    """One navigation step on a typed column: field access for string
-    steps, NULL-tolerant element access for int steps (ANSI getItem
-    throws on out-of-bounds; jq yields null — try_element_at is
-    1-based and supports jq's negative-from-end indices)."""
-    if isinstance(s, int):
-        return F.try_element_at(c, F.lit(s + 1 if s >= 0 else s))
-    return c.getField(s)
-
-
 def _filter_col(json_col: Column, dv: Column, f: Filter) -> Column:
     """One select() leaf at the scalar tier: expression filters read
     doubles from the text view, every other leaf reads the value's
@@ -2227,22 +1992,6 @@ def _cmp_with_null_order(c: Column, op: str, lit: Any) -> Column:
     """jq's total order places null below every number, so a null
     path value has a DEFINED comparison result, not SQL NULL."""
     return F.coalesce(_CMP_FN[op](c, F.lit(lit)), F.lit(_NULL_CMP[op]))
-
-
-def _struct_filter_col(struct_col: Column, f: Filter) -> Column:
-    """One select() leaf on an iterated element: the element schema
-    types every non-expression filter path VARIANT (`_elem_schema`), so
-    the leaf reads the exact JSON type like the scalar tier."""
-    def nav(p: Path) -> Column:
-        c = struct_col
-        for s in p:
-            c = _nav_step(c, s)
-        return c
-
-    if f.lhs_expr is not None:
-        c = _compile_expr(f.lhs_expr, lambda p: nav(f.lhs + p).try_cast("double"))
-        return _cmp_with_null_order(c, f.op, f.lit)
-    return _variant_leaf_filter(nav(f.lhs), f)
 
 
 def _java_quote(s: str) -> str:
@@ -2279,7 +2028,7 @@ def _slice_col(raw: Column, lo, hi, out_dt: T.DataType) -> Column:
 
 
 def _arrayfn_col(raw: Column, fn: str, args, out_dt: T.DataType) -> Column:
-    """Array-function projection over the scalar (non-iterate) tier.
+    """Array-function projection.
 
     The array is parsed ONCE via from_json with the element type taken
     from the declared output, then the function is a builtin Catalyst
@@ -2588,7 +2337,8 @@ def _divides_by_value(ast: AST) -> bool:
 
 
 class _SchemaConflict(Exception):
-    """Element-schema conflict: program falls back to the Python tier."""
+    """A spec no builder evaluates exactly into its declared type: the
+    program falls back to the Python tier."""
 
 
 class NativePlan:
@@ -2601,8 +2351,6 @@ class NativePlan:
         self.schema, self.single = parse_output_schema(list(decls))
         _validate_new_specs(ir.project, self.schema)
         self.null_rows = _null_doc_rows(program, decls)
-        if ir.iterate:
-            self._elem_schema()  # raises _SchemaConflict on mixed shapes
         # recipe cache: (applicationId, column, outer, binding column)
         # → built Columns (see apply); the lock serializes builds so
         # concurrent sessions build each recipe once
@@ -2611,7 +2359,6 @@ class NativePlan:
 
         self._build_lock = threading.Lock()
 
-    # -- scalar (no explode) path --------------------------------------
     def _build_scalar(self, col: Column, dv: Column) -> list:
         """Build the scalar-path output Columns over the doc column and
         its bound variant ``dv``, one per declared field."""
@@ -2646,682 +2393,6 @@ class NativePlan:
                 out.append(_scalar_spec_col(col, dv, spec, fdt.dataType))
         return out
 
-    # -- explode path ---------------------------------------------------
-    def _elem_schema(self) -> T.DataType:
-        """Schema of one iterated element for from_json."""
-        ir = self.ir
-        needed: dict = {}
-        whole_elem: Optional[T.DataType] = None
-
-        def add(path: Path, dt: T.DataType):
-            if not path:
-                raise _SchemaConflict(())  # the element itself: not a struct field
-            cur = needed
-            for s in path[:-1]:
-                cur = cur.setdefault(s, {})
-                if not isinstance(cur, dict):
-                    # a leaf already claimed this prefix with a scalar
-                    # type — mixed-shape access is not representable in
-                    # one from_json schema
-                    raise _SchemaConflict(path)
-            prev = cur.get(path[-1])
-            if isinstance(prev, dict):
-                raise _SchemaConflict(path)  # leaf vs struct
-            if prev is not None and prev != dt:
-                if any(isinstance(t, (T.ArrayType, T.MapType, T.StructType)) for t in (prev, dt)):
-                    raise _SchemaConflict(path)  # no common view to cast from
-                if isinstance(prev, T.VariantType) or isinstance(dt, T.VariantType):
-                    # a truthy filter needs the exact JSON type;
-                    # variant also casts cleanly to every scalar
-                    # consumer type, so variant wins the conflict
-                    cur[path[-1]] = T.VariantType()
-                else:
-                    # two specs want different scalar types for the
-                    # same path: read the string view and let each
-                    # consumer cast (the guards route the values a
-                    # cast would not take)
-                    cur[path[-1]] = T.StringType()
-            else:
-                cur[path[-1]] = dt
-
-        if ir.single_call is not None:
-            # keys/keys_unsorted of the element (or a path under it):
-            # the element schema only carries the exact-typed VARIANT
-            # for the object/array gate; keys_unsorted's document
-            # order additionally reads the raw-text twin at apply time
-            if not ir.single_path:
-                if ir.post_filters:
-                    # bare-variant element can't also carry the
-                    # filters' struct fields
-                    raise _SchemaConflict(())
-                return T.VariantType()
-            add(ir.single_path, T.VariantType())
-        elif self.single and ir.project is None:
-            if not ir.single_path:
-                if isinstance(self.schema.fields[0].dataType, T.MapType):
-                    # whole-element map needs a variant element — not
-                    # representable as the bare element type
-                    raise _SchemaConflict(())
-                # scalar elements (filters unsupported; guarded in compile)
-                return self.schema.fields[0].dataType
-            add(ir.single_path, _elem_decl_type(self.schema.fields[0].dataType))
-        elif ir.project is not None:
-            for fdt in self.schema.fields:
-                spec = ir.project.get(fdt.name)
-                if spec is None or (isinstance(spec, tuple) and spec and spec[0] == "lit"):
-                    continue
-                if isinstance(spec, tuple) and spec and spec[0] == "expr":
-                    _, ast, base = spec
-                    refs: list = []
-                    _expr_paths(ast, refs)
-                    for p in refs:
-                        add(tuple(base) + p, T.DoubleType())
-                elif isinstance(spec, tuple) and spec and spec[0] == "fnchain":
-                    if spec[2][0][0] in ("ltrimstr", "rtrimstr", "type"):
-                        # leading trims gate on the exact JSON type
-                        # (jq passes NON-strings through unchanged);
-                        # `type` reads the type name from the exact-
-                        # typed variant (r11)
-                        if not spec[1]:
-                            raise _SchemaConflict(spec)
-                        add(spec[1], T.VariantType())
-                    else:
-                        if not spec[1]:
-                            # whole-element fn chain ({v: (.|tojson)}):
-                            # add(()) is a no-op, which silently typed
-                            # the element STRUCT<> and mis-executed
-                            # (r12 find) — Python tier
-                            raise _SchemaConflict(spec)
-                        add(spec[1], T.StringType())  # string view
-                elif isinstance(spec, tuple) and spec and spec[0] == "alt":
-                    # `//` substitutes on null/missing OR boolean false —
-                    # needs the exact JSON type, so read a variant
-                    if not spec[1]:
-                        raise _SchemaConflict(spec)
-                    add(spec[1], T.VariantType())
-                elif isinstance(spec, tuple) and spec and spec[0] == "strcat":
-                    # each path part gates on the exact JSON type
-                    for pk, pv in spec[1]:
-                        if pk == "path":
-                            if not pv:
-                                raise _SchemaConflict(spec)
-                            add(pv, T.VariantType())
-                elif isinstance(spec, tuple) and spec and spec[0] == "strinterp":
-                    # raw text view for the value (document order for
-                    # objects); the type gate reads the element
-                    # variant (elem_var) instead.  @json interpolants
-                    # ("pathjson") read the same views — the quoted
-                    # string renders from the variant's string value
-                    for pk, pv in spec[1]:
-                        if pk != "lit":
-                            if not pv:
-                                raise _SchemaConflict(spec)
-                            add(pv, T.StringType())
-                elif isinstance(spec, tuple) and spec and spec[0] in (
-                    "length",
-                    "keyssorted",
-                    # r11: keys_unsorted compiles under iterates too —
-                    # the variant here is only the type gate; document
-                    # order comes from the element's raw-text twin
-                    # (mid-path ``ex`` or the posexplode-indexed text
-                    # array in _apply_explode)
-                    "keysunsorted",
-                ):
-                    if not spec[1]:
-                        raise _SchemaConflict(spec)  # of the element itself
-                    add(spec[1], T.VariantType())
-                elif isinstance(spec, tuple) and spec and spec[0] in (
-                    "arrayfn",
-                    "strpred",
-                    "ifelse",
-                    "splitidx",
-                    "splitarr",
-                    "reduce",
-                ):
-                    # scalar-tier-only spec kinds: under an iterate the
-                    # program falls back to the Python tier
-                    raise _SchemaConflict(spec)
-                else:
-                    if spec == ():
-                        # whole-element projection ({v: .}): the
-                        # element IS the value — representable only
-                        # when nothing else needs struct fields
-                        # (checked below); add() on an empty path
-                        # would silently type the element STRUCT<>
-                        # and crash at apply (r12 find)
-                        t = _elem_decl_type(fdt.dataType)
-                        if whole_elem not in (None, t):
-                            raise _SchemaConflict(())  # two types for the element
-                        whole_elem = t
-                        continue
-                    add(spec, _elem_decl_type(fdt.dataType))
-        else:
-            for fdt in self.schema.fields:
-                add(ir.single_path + (fdt.name,), _elem_decl_type(fdt.dataType))
-        for f in _each_filter(ir.post_filters):
-            if f.lhs_expr is not None:
-                refs: list = []
-                _expr_paths(f.lhs_expr, refs)
-                for p in refs:
-                    add(tuple(f.lhs) + p, T.DoubleType())
-            elif not f.lhs:
-                # predicate over the element itself (select(has("k")),
-                # select(. > 5), select(length > 2), ...): r12 — reads
-                # the element's VARIANT twin (elem_var) at apply time,
-                # so the from_json schema carries nothing for it
-                # (needs_ev picks these up)
-                continue
-            elif f.op in _STR_PREDS:
-                add(f.lhs, T.VariantType())
-            else:
-                # truthy and plain comparisons both need the exact JSON
-                # type (jq truthiness / total-order ranking) — variant
-                add(f.lhs, T.VariantType())
-
-        def to_struct(d: dict) -> T.DataType:
-            if d and all(isinstance(k, int) for k in d):
-                # integer steps ([0], [2]) → the level is an ARRAY; the
-                # element type is the merge of every index's needs
-                ets = [to_struct(v) if isinstance(v, dict) else v for v in d.values()]
-                et = ets[0]
-                for other in ets[1:]:
-                    if other != et:
-                        if isinstance(et, T.VariantType) or isinstance(
-                            other, T.VariantType
-                        ):
-                            et = T.VariantType()
-                        elif isinstance(et, T.StructType) or isinstance(
-                            other, T.StructType
-                        ):
-                            raise _SchemaConflict(tuple(d))
-                        else:
-                            et = T.StringType()  # consumers re-cast
-                return T.ArrayType(et)
-            if any(isinstance(k, int) for k in d):
-                # mixed array-index and field access of one level
-                raise _SchemaConflict(tuple(d))
-            fields = []
-            for k, v in d.items():
-                fields.append(T.StructField(str(k), to_struct(v) if isinstance(v, dict) else v))
-            return T.StructType(fields)
-
-        if whole_elem is not None:
-            if needed:
-                # the element cannot be a scalar AND carry struct
-                # fields for other specs/filters — Python tier
-                raise _SchemaConflict(())
-            return whole_elem
-        # nothing read from the element: a variant takes any element
-        return to_struct(needed) if needed else T.VariantType()
-
-    def _build_explode(
-        self, col: Column, dv: Column, bind: str, outer: bool
-    ) -> tuple:
-        """Build the explode-path recipe over the doc column and its
-        bound variant ``dv``: (gens, post_conds, out_cols) where gens
-        is a list of (generated column names, aliased generator
-        Column), named after the binding column ``bind``."""
-        ir = self.ir
-
-        def wrap_steps(steps: Path, inner: T.DataType) -> T.DataType:
-            for s in reversed(steps):
-                if isinstance(s, int):
-                    inner = T.ArrayType(inner)
-                else:
-                    inner = T.StructType([T.StructField(s, inner)])
-            return inner
-
-        elem = self._elem_schema()
-        # wrap the LAST element's schema in each iterate level's array
-        # + the steps leading to it, innermost-out, then the pre-path
-        lvl0: T.DataType = T.ArrayType(elem)
-        for mid in reversed(ir.mid_paths):
-            lvl0 = T.ArrayType(wrap_steps(mid, lvl0))
-        arr_t = wrap_steps(ir.pre_path, lvl0)
-        parsed = F.from_json(col, arr_t)
-        nav = parsed
-        for s in ir.pre_path:
-            nav = _nav_step(nav, s)
-        # the guards route every row whose values the typed parse
-        # would not take, so it never nulls an array of a native row
-        jsonpath = _json_path(ir.pre_path) if ir.pre_path else "$"
-        # raw text source for the object-iterate route and the text
-        # twins (document key order)
-        src = (
-            F.get_json_object(col, _json_path(ir.pre_path))
-            if ir.pre_path
-            else col
-        )
-        et = lvl0.elementType
-
-        def _rebuild(e, t=et):
-            if isinstance(t, T.StructType):
-                cols = []
-                for f in t.fields:
-                    fp = _json_path((f.name,))
-                    if isinstance(f.dataType, T.VariantType):
-                        cols.append(
-                            F.try_variant_get(e, fp, "variant").alias(f.name)
-                        )
-                    else:
-                        cols.append(
-                            F.try_variant_get(
-                                e, fp, f.dataType.simpleString()
-                            ).alias(f.name)
-                        )
-                return F.struct(*cols)
-            if isinstance(t, T.VariantType):
-                return e
-            return F.try_variant_get(e, "$", t.simpleString())
-
-        # `.[]` over an OBJECT iterates its VALUES (jq semantics; the
-        # Python tier has always done this — the native tier used to
-        # silently drop such rows).  The values come from a from_json
-        # map parse, which preserves the document's key insertion
-        # order exactly like the Python tier; the variant route would
-        # NOT (variant objects sort their keys), so it is only used
-        # for the is-object gate.  Mid-level iterates get the same
-        # document-order treatment from the raw-text twin threaded
-        # through the chained explodes below (r9).
-        is_object = F.schema_of_variant(
-            F.try_variant_get(dv, jsonpath, "variant")
-        ).startswith("OBJECT")
-        obj_vals = F.map_values(
-            F.from_json(src, T.MapType(T.StringType(), T.VariantType()))
-        )
-        obj_fallback = F.transform(obj_vals, lambda e: _rebuild(e))
-        # objects first: Jackson reads an object where array<struct> is
-        # declared as a one-element array, emitting the object itself
-        nav = F.when(is_object, obj_fallback).otherwise(nav)
-        lims = ir.iter_limits or []
-        if lims and lims[0] is not None:
-            # limit(n; .[]) — jq's lazy "first n outputs" is a slice
-            # BEFORE the explode: the dropped elements never become rows
-            nav = F.slice(nav, F.lit(1), F.lit(lims[0]))
-        gen = F.explode_outer if outer else F.explode
-        # the element's VARIANT twin: tojson quotes only strings, and
-        # whole-element predicates (select(has("k")) / select(. > 5),
-        # r12) read it instead of a from_json field.  Multi-level
-        # programs already thread a variant twin, single-level ones
-        # switch to posexplode and index the doc-level variant array
-        needs_ev = (
-            ir.project is not None
-            and any(
-                isinstance(s, tuple)
-                and s
-                and (
-                    (s[0] == "fnchain" and s[2][0][0] == "tojson")
-                    or (s[0] == "strinterp" and any(k == "pathjson" for k, _ in s[1]))
-                )
-                for s in ir.project.values()
-            )
-        ) or any(
-            f.lhs_expr is None and not f.lhs
-            for f in _each_filter(ir.post_filters)
-        )
-        # r11: keys_unsorted under an iterate reads the element's RAW
-        # text (document key order; variants sort object keys): the
-        # mid-path twin ``ex``, or a posexplode-indexed text array.
-        needs_ex = ir.single_call == "keys_unsorted" or (
-            ir.project is not None
-            and any(
-                isinstance(s, tuple) and s and s[0] == "keysunsorted"
-                for s in ir.project.values()
-            )
-        )
-        elem_var = None
-        elem_txt = None
-        if ir.mid_paths:
-            # chained explode for multi-iterate programs (.a[].b[]).
-            # from_json nulls the DEEPEST mismatching node (an inner
-            # array with one off-type element nulls just that array,
-            # keeping the outer parse), so the level-0 coalesce above
-            # cannot see inner losses.  Thread a variant twin through
-            # every explode level via arrays_zip: each level re-derives
-            # its array from the element's variant (per-element-lenient
-            # nested cast) when the typed navigation lost it.
-            #
-            # r9: ALSO thread a raw-TEXT twin.  Inner-level `.[]` over
-            # an OBJECT must iterate its values in DOCUMENT key order
-            # (jq semantics; the Python tier does), and variants sort
-            # object keys — the only order-preserving route is a
-            # from_json map parse of the element's raw JSON text.
-            # get_json_object preserves object field order in the
-            # extracted text, and from_json to array<string> /
-            # map<string,string> captures each element's raw text, so
-            # the text twin stays index-aligned with the typed and
-            # variant twins (all three parse the same JSON).  The
-            # object gate reads the VARIANT's type, never the text
-            # (get_json_object strips quotes from string leaves, so a
-            # string whose content looks like "{...}" would fool a
-            # text sniff).
-            lvl_types = [T.ArrayType(elem)]
-            for mid in reversed(ir.mid_paths):
-                lvl_types.append(T.ArrayType(wrap_steps(mid, lvl_types[-1])))
-            lvl_types.reverse()  # lvl_types[lvl] = array type exploded at lvl
-            null_var = F.lit(None).cast(T.VariantType())
-            null_txt = F.lit(None).cast(T.StringType())
-            txt_arr_t = T.ArrayType(T.StringType())
-            txt_map_t = T.MapType(T.StringType(), T.StringType())
-            var_map_t = T.MapType(T.StringType(), T.VariantType())
-            var0 = F.try_variant_get(
-                dv, jsonpath, "array<variant>"
-            )
-            # object-iterated level 0: the variant twin must come from
-            # the SAME from_json parse as nav so the zip stays
-            # index-aligned (variant object access would re-order)
-            var0 = F.coalesce(
-                var0,
-                F.when(is_object, obj_vals),
-                F.array_repeat(null_var, F.size(nav)),
-            )
-            txt0 = F.coalesce(
-                F.when(is_object, F.map_values(F.from_json(src, txt_map_t))).otherwise(
-                    F.from_json(src, txt_arr_t)
-                ),
-                F.array_repeat(null_txt, F.size(nav)),
-            )
-            if lims and lims[0] is not None:
-                # keep the twins aligned with the sliced nav
-                var0 = F.slice(var0, F.lit(1), F.lit(lims[0]))
-                txt0 = F.slice(txt0, F.lit(1), F.lit(lims[0]))
-            zipped = F.when(
-                nav.isNotNull(),
-                F.arrays_zip(nav.alias("t"), var0.alias("v"), txt0.alias("x")),
-            )
-            gens = [((f"{bind}_elem0",), gen(zipped).alias(f"{bind}_elem0"))]
-            ec = F.col(f"{bind}_elem0").getField("t")
-            ev = F.col(f"{bind}_elem0").getField("v")
-            ex = F.col(f"{bind}_elem0").getField("x")
-            for lvl, mid in enumerate(ir.mid_paths, start=1):
-                c2 = ec
-                for s in mid:
-                    c2 = _nav_step(c2, s)
-                vpath = _json_path(mid)
-                v2 = F.try_variant_get(ev, vpath, "array<variant>")
-                tx2 = F.get_json_object(ex, vpath)
-                is_obj2 = F.schema_of_variant(
-                    F.try_variant_get(ev, vpath, "variant")
-                ).startswith("OBJECT")
-                v_obj = F.map_values(F.from_json(tx2, var_map_t))
-                lvl_et = lvl_types[lvl].elementType
-                c2 = F.coalesce(
-                    c2,
-                    F.when(
-                        v2.isNotNull(),
-                        F.try_variant_get(
-                            ev, vpath, lvl_types[lvl].simpleString()
-                        ),
-                    ),
-                    F.when(
-                        is_obj2,
-                        # NOTE: F.transform dispatches on lambda arity
-                        # (2 params = element,index), so bind the level
-                        # type via closure, not a defaulted parameter
-                        F.transform(v_obj, (lambda _t: lambda e: _rebuild(e, _t))(lvl_et)),
-                    ),
-                )
-                v2 = F.coalesce(
-                    v2,
-                    F.when(is_obj2, v_obj),
-                    F.array_repeat(null_var, F.size(c2)),
-                )
-                x2 = F.coalesce(
-                    F.when(
-                        is_obj2, F.map_values(F.from_json(tx2, txt_map_t))
-                    ).otherwise(F.from_json(tx2, txt_arr_t)),
-                    F.array_repeat(null_txt, F.size(c2)),
-                )
-                limn = lims[lvl] if lvl < len(lims) else None
-                if limn is not None:
-                    c2 = F.slice(c2, F.lit(1), F.lit(limn))
-                    v2 = F.slice(v2, F.lit(1), F.lit(limn))
-                    x2 = F.slice(x2, F.lit(1), F.lit(limn))
-                zipped = F.when(
-                    c2.isNotNull(),
-                    F.arrays_zip(c2.alias("t"), v2.alias("v"), x2.alias("x")),
-                )
-                name = f"{bind}_elem{lvl}"
-                gens.append(((name,), gen(zipped).alias(name)))
-                ec = F.col(name).getField("t")
-                ev = F.col(name).getField("v")
-                ex = F.col(name).getField("x")
-            elem_var = ev  # last level's variant twin
-            elem_txt = ex  # last level's raw-text twin
-        elif needs_ev or needs_ex:
-            # posexplode keeps the element index so the element's
-            # variant can be read from the doc-level variant array
-            # (object-iterated level 0 uses the SAME map-parse value
-            # array the nav branch used, keeping index alignment)
-            var_arr = F.coalesce(
-                F.try_variant_get(
-                    dv, jsonpath, "array<variant>"
-                ),
-                F.when(is_object, obj_vals),
-            )
-            if lims and lims[0] is not None:
-                var_arr = F.slice(var_arr, F.lit(1), F.lit(lims[0]))
-            txt_arr = None
-            if needs_ex:
-                # raw element text, index-aligned with nav: objects
-                # via a map parse (from_json preserves document key
-                # order), arrays via array<string> (each element's
-                # raw JSON text)
-                txt_arr = F.when(
-                    is_object,
-                    F.map_values(
-                        F.from_json(
-                            src, T.MapType(T.StringType(), T.StringType())
-                        )
-                    ),
-                ).otherwise(F.from_json(src, T.ArrayType(T.StringType())))
-                if lims and lims[0] is not None:
-                    txt_arr = F.slice(txt_arr, F.lit(1), F.lit(lims[0]))
-            pgen = F.posexplode_outer if outer else F.posexplode
-            pos, name = f"{bind}_pos0", f"{bind}_elem0"
-            gens = [((pos, name), pgen(nav).alias(pos, name))]
-            ec = F.col(name)
-            elem_var = F.try_element_at(var_arr, F.col(pos) + 1)
-            if txt_arr is not None:
-                elem_txt = F.try_element_at(txt_arr, F.col(pos) + 1)
-        else:
-            gens = [((f"{bind}_elem0",), gen(nav).alias(f"{bind}_elem0"))]
-            ec = F.col(f"{bind}_elem0")
-        def _elem_leaf(ff: Filter) -> Column:
-            # r12: whole-element predicates read the variant twin —
-            # the typed element (ec) cannot carry "the element itself"
-            # alongside the projection struct in one from_json schema
-            if ff.lhs_expr is None and not ff.lhs and elem_var is not None:
-                return _variant_leaf_filter(elem_var, ff)
-            return _struct_filter_col(ec, ff)
-
-        post_conds = [
-            _cond_col(f, _elem_leaf) for f in ir.post_filters
-        ]
-
-        def _ev_at(path: Path):
-            # only the readers needs_ev lists use the value
-            if elem_var is None:
-                return F.lit(None).cast(T.VariantType())
-            if path:
-                return F.try_variant_get(elem_var, _json_path(path), "variant")
-            return elem_var
-
-        out_cols = []
-        if ir.single_call is not None:
-            # ``.[] ... | keys`` / ``| keys_unsorted`` — keys of the
-            # element (or a path under it).  The typed parse carries
-            # the exact-typed variant for the object/array gate;
-            # document order for keys_unsorted comes from elem_txt.
-            fdt0 = self.schema.fields[0]
-            c = ec
-            for s in ir.single_path:
-                c = _nav_step(c, s)
-            if ir.single_call == "keys":
-                kc = _variant_keys(c)
-            elif ir.single_call == "length":
-                kc = _variant_length(c)
-            else:
-                if elem_txt is None:  # pragma: no cover - needs_ex guards
-                    raw = F.lit(None).cast(T.StringType())
-                elif ir.single_path:
-                    raw = F.get_json_object(
-                        elem_txt, _json_path(ir.single_path)
-                    )
-                else:
-                    raw = elem_txt
-                kc = _keys_unsorted_col(raw, c)
-            out_cols.append(kc.try_cast(fdt0.dataType).alias(fdt0.name))
-        elif self.single and ir.project is None:
-            c = ec
-            for s in ir.single_path:
-                c = _nav_step(c, s)
-            out_cols.append(
-                _elem_out_col(c, self.schema.fields[0].dataType).alias(
-                    self.schema.fields[0].name
-                )
-            )
-        elif ir.project is not None:
-            for fdt in self.schema.fields:
-                spec = ir.project.get(fdt.name)
-                if spec is None:
-                    out_cols.append(F.lit(None).cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "lit":
-                    out_cols.append(_lit_col(spec[1], fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "expr":
-                    _, ast, base = spec
-
-                    def nav(p, _base=tuple(base)):
-                        c = ec
-                        for s in _base + p:
-                            c = _nav_step(c, s)
-                        return c.try_cast("double")
-
-                    out_cols.append(
-                        _compile_expr(ast, nav).cast(fdt.dataType).alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "fnchain":
-                    _, path, fns = spec
-                    c = ec
-                    for st in path:
-                        c = _nav_step(c, st)
-                    if fns[0][0] == "type":
-                        # element schema typed this path VARIANT (r11)
-                        first = _variant_type_name(c)
-                        cc = _apply_fnchain(first, fns[1:])
-                        out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
-                        continue
-                    if fns[0][0] == "tojson":
-                        # leading tojson quotes strings: the type comes
-                        # from the element's variant
-                        first = _tojson_view(c.try_cast("string"), _ev_at(path))
-                        cc = _apply_fnchain(first, fns[1:])
-                        out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
-                        continue
-                    if fns[0][0] in ("ltrimstr", "rtrimstr"):
-                        # the element schema typed this path VARIANT:
-                        # jq passes NON-strings through trims unchanged
-                        vt = F.schema_of_variant(c)
-                        s = c.try_cast("string")
-                        full_c = _apply_fnchain(s, fns)
-                        rest = _apply_fnchain(s, fns[1:], json_text=True)
-                        cc = F.when(vt == F.lit("STRING"), full_c).otherwise(rest)
-                    else:
-                        # try_cast("string") first: a truthy filter on
-                        # the same path retypes it VARIANT; for a
-                        # string column this is a no-op
-                        cc = _apply_fnchain(c.try_cast("string"), fns)
-                    out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "alt":
-                    # path typed VARIANT by the element schema — exact
-                    # type gates the boolean-false substitution
-                    _, path, dflt = spec
-                    c = ec
-                    for st in path:
-                        c = _nav_step(c, st)
-                    vt = F.schema_of_variant(c)
-                    is_false = (vt == F.lit("BOOLEAN")) & ~F.try_variant_get(
-                        c, "$", "boolean"
-                    )
-                    out_cols.append(
-                        F.when(
-                            c.isNull() | (vt == F.lit("VOID")) | is_false,
-                            _lit_col(dflt, fdt.dataType),
-                        )
-                        .otherwise(c.try_cast(fdt.dataType))
-                        .alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "strcat":
-                    def _str_of(p, _ec=ec):
-                        c2 = _ec
-                        for st in p:
-                            c2 = _nav_step(c2, st)
-                        return F.try_variant_get(c2, "$", "string")
-
-                    cc = _strcat_col(spec[1], _str_of)
-                    out_cols.append(cc.cast(fdt.dataType).alias(fdt.name))
-                elif isinstance(spec, tuple) and spec and spec[0] == "strinterp":
-                    segs = []
-                    for kind, val in spec[1]:
-                        if kind == "lit":
-                            segs.append(F.lit(val))
-                            continue
-                        c2 = ec
-                        for st in val:
-                            c2 = _nav_step(c2, st)
-                        segs.append(
-                            _interp_view(kind, c2.try_cast("string"), _ev_at(val))
-                        )
-                    out_cols.append(
-                        F.concat(*segs).cast(fdt.dataType).alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "length":
-                    _, path = spec
-                    c = ec
-                    for st in path:
-                        c = _nav_step(c, st)
-                    out_cols.append(
-                        _variant_length(c).try_cast(fdt.dataType).alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "keyssorted":
-                    _, path = spec
-                    c = ec
-                    for st in path:
-                        c = _nav_step(c, st)
-                    out_cols.append(
-                        _variant_keys(c).try_cast(fdt.dataType).alias(fdt.name)
-                    )
-                elif isinstance(spec, tuple) and spec and spec[0] == "keysunsorted":
-                    # r11: document-order keys under an iterate — the
-                    # raw text of the path comes from the element's
-                    # text twin, the gate from the typed variant
-                    _, path = spec
-                    c = ec
-                    for st in path:
-                        c = _nav_step(c, st)
-                    raw = (
-                        F.get_json_object(elem_txt, _json_path(path))
-                        if elem_txt is not None
-                        else F.lit(None).cast(T.StringType())
-                    )
-                    out_cols.append(
-                        _keys_unsorted_col(raw, c)
-                        .try_cast(fdt.dataType)
-                        .alias(fdt.name)
-                    )
-                else:
-                    c = ec
-                    for s in spec:
-                        c = _nav_step(c, s)
-                    out_cols.append(_elem_out_col(c, fdt.dataType).alias(fdt.name))
-        else:
-            for fdt in self.schema.fields:
-                c = ec
-                for s in ir.single_path + (fdt.name,):
-                    c = _nav_step(c, s)
-                out_cols.append(_elem_out_col(c, fdt.dataType).alias(fdt.name))
-        return gens, post_conds, out_cols
-
     def apply(
         self,
         df: DataFrame,
@@ -3352,10 +2423,9 @@ class NativePlan:
         JVM) never sees another JVM's py4j handles; Column-typed doc
         inputs (no stable identity) skip the cache."""
         col = F.col(column) if isinstance(column, str) else column
-        # the binding column and the generator columns named after it
-        # are fresh: no input column starts with the binding name
+        # the binding column is fresh: no input column has its name
         bind = _BIND_COL
-        while any(c.startswith(bind) for c in df.columns):
+        while bind in df.columns:
             bind += "_"
         key = None
         if isinstance(column, str):
@@ -3373,7 +2443,7 @@ class NativePlan:
                     if len(self._recipes) > 64:  # stale-context bound
                         self._recipes.clear()
                     self._recipes[key] = recipe
-        to_python, pre_conds, gens, post_conds, out_cols = recipe
+        to_python, conds, out_cols = recipe
         # one-element explode: array() is never NULL, so exactly one
         # row comes out per input row
         bound = df.select(
@@ -3383,71 +2453,55 @@ class NativePlan:
             ),
         )
         out = bound.where(~to_python)
-        for c in pre_conds:
+        for c in conds:
             out = out.where(c)
-        internal = [bind]
-        for names, gcol in gens:
-            out = out.select("*", gcol)
-            internal += names
-        for c in post_conds:
-            out = out.where(c)
-        out = out.select("*", *out_cols).drop(*[F.col(c) for c in internal])
+        out = out.select("*", *out_cols).drop(F.col(bind))
         return out.union(python_tier(bound.where(to_python).drop(F.col(bind))))
 
     def _build(self, col: Column, bind: str, outer: bool) -> tuple:
         """The plan's Columns over doc column ``col``, bound per row as
-        ``bind``: (route flag, pre-iterate conditions, generators,
-        post-iterate conditions, output Columns).  Pure
+        ``bind``: (route flag, select conditions, output Columns).  Pure
         Column construction — no DataFrame access — so the result is
         cacheable and replayable (`apply`)."""
         ir = self.ir
         dv = F.col(bind)["v"]
-        pre_conds = [
-            _cond_col(f, lambda ff: _filter_col(col, dv, ff))
-            for f in ir.pre_filters
-        ]
-        levels = [ir.pre_path, *ir.mid_paths] if ir.iterate else []
-        if ir.iterate:
-            gens, post_conds, out_cols = self._build_explode(col, dv, bind, outer)
-        else:
-            gens, post_conds = [], []
-            out_cols = self._build_scalar(col, dv)
+        conds = [_cond_col(f, lambda ff: _filter_col(col, dv, ff)) for f in ir.filters]
+        out_cols = self._build_scalar(col, dv)
         # corrupt and NULL cells bind jq's null document: they take the
-        # rows jqlib gave for it at compile time, or the Python tier
-        # when those cannot be replayed (jq failed, or outer needs a row)
+        # row jqlib gave for it at compile time, or the Python tier
+        # when that cannot be replayed (jq failed, or outer needs a row)
         rows = self.null_rows
-        if rows is None or (outer and not rows) or (rows and (ir.iterate or len(rows) > 1)):
+        if rows is None or (outer and not rows) or len(rows) > 1:
             rows = None
         elif not rows:
-            pre_conds.append(dv.isNotNull())
+            conds.append(dv.isNotNull())
         else:
-            pre_conds = [dv.isNull() | c for c in pre_conds]
+            conds = [dv.isNull() | c for c in conds]
             out_cols = [
                 F.when(dv.isNull(), F.lit(val).cast(f.dataType)).otherwise(c)
                 for f, val, c in zip(self.schema.fields, rows[0], out_cols)
             ]
-        if not ir.iterate:
-            out_cols = [c.alias(f.name) for f, c in zip(self.schema.fields, out_cols)]
-        to_python = _python_rows(col, dv, levels, self._guards(), rows is None)
-        return to_python, pre_conds, gens, post_conds, out_cols
+        if outer and conds:
+            # LATERAL VIEW OUTER keeps a row select() drops, with NULLs
+            keep = conds[0]
+            for c in conds[1:]:
+                keep = keep & c
+            out_cols, conds = [F.when(keep, c) for c in out_cols], []
+        out_cols = [c.alias(f.name) for f, c in zip(self.schema.fields, out_cols)]
+        to_python = _python_rows(col, dv, self._guards(), rows is None)
+        return to_python, conds, out_cols
 
-    def _guards(self) -> list:
-        """The plan's type guards (`_Guards`) per level: the document,
-        then each iterate's element; paths are relative to the level."""
+    def _guards(self) -> _Guards:
+        """The plan's type guards (`_Guards`); paths are relative to
+        the document."""
         ir = self.ir
         fields = self.schema.fields
-        gs = [_Guards(ir.iterate) for _ in range(len(ir.mid_paths) + 2 if ir.iterate else 1)]
-        if ir.iterate:
-            for g, p in zip(gs, [ir.pre_path, *ir.mid_paths]):
-                g.read(p, _ITERABLE)
-        for f in _each_filter(ir.pre_filters):
-            gs[0].filter(f)
-        last = gs[-1]
-        for f in _each_filter(ir.post_filters):
-            last.filter(f)
+        g = _Guards()
+        for f in _each_filter(ir.filters):
+            g.filter(f)
         if ir.single_call is not None:
             kind = "length" if ir.single_call == "length" else "keyssorted"
-            last.spec((kind, ir.single_path), fields[0].dataType)
+            g.spec((kind, ir.single_path), fields[0].dataType)
         elif ir.project is None:
             pairs = (
                 [(ir.single_path, fields[0].dataType)]
@@ -3455,13 +2509,13 @@ class NativePlan:
                 else [(ir.single_path + (f.name,), f.dataType) for f in fields]
             )
             for p, dt in pairs:
-                last.slot(p, dt, nested=last.iterate)
+                g.slot(p, dt)
         else:
             for f in fields:
                 spec = ir.project.get(f.name)
                 if spec is not None:
-                    last.spec(spec, f.dataType)
-        return gs
+                    g.spec(spec, f.dataType)
+        return g
 
 
 _PLAN_CACHE: dict[tuple[str, tuple[str, ...]], Optional[NativePlan]] = {}
@@ -3527,13 +2581,9 @@ def _compile_native_uncached(
         )
     ):
         return None
-    # guard: scalar-element explode with post filters/steps is fine,
-    # but filters on a *scalar* element (no struct) aren't expressible
-    if ir.iterate and single and ir.project is None and not ir.single_path and ir.post_filters:
-        return None
     try:
         return NativePlan(ir, tuple(decls), program)
     except _SchemaConflict:
-        # mixed leaf/struct access of the same path — not representable
-        # in one from_json schema; the Python tier handles it
+        # a (function, declared type) pair no builder evaluates exactly
+        # (`_validate_new_specs`); the Python tier handles it
         return None

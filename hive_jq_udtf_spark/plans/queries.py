@@ -51,8 +51,9 @@ def q_jq_extract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_jq_native_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same extraction via the native Catalyst tier (no Python in
-    plan) — §4.2; oracle identical to the UDTF variant."""
+    """Same extraction via the native Catalyst tier (§4.2; only routed
+    rows reach the plan's Python node); oracle identical to the UDTF
+    variant."""
     events = load_table(spark, sf_dir, "events")
     x = jq_explode(events, "props", "{k: .k}", "k:int", native="require")
     return (
@@ -2195,10 +2196,11 @@ ORACLES["jq_scalar_functions"] = _ORACLE_JQ_SCALAR
 
 
 def q_jq_native_multicol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multicol destructure + computed fields program compiled
-    ENTIRELY to Catalyst expressions (native="require" — no Python
-    node; arithmetic/comparison projection compilation, §4.2
-    expansion).  Oracle identical to the Python-tier variant."""
+    """The multicol destructure + computed fields program compiled to
+    Catalyst expressions (native="require"; arithmetic/comparison
+    projection compilation, §4.2 expansion).  Only the rows the route
+    flag selects reach the plan's Python node.  Oracle identical to the
+    Python-tier variant."""
     events = load_table(spark, sf_dir, "events")
     x = jq_explode(
         events,
@@ -2241,7 +2243,7 @@ ORACLES["jq_native_select"] = _ORACLE_JQ_SELECT
 
 def q_jq_native_expr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic select condition compiled natively:
-    select(.k % 2 == 0) runs as a codegen WHERE — no Python."""
+    select(.k % 2 == 0) runs as a WHERE on the native rows."""
     events = load_table(spark, sf_dir, "events")
     x = jq_explode(
         events, "props", "select(.k % 2 == 0) | {k: .k}", "k:int", native="require"
@@ -2323,8 +2325,8 @@ ORACLES["stratified_sample"] = _ORACLE_STRATIFIED
 def q_jq_native_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function chains compiled natively: JSON built from
     documents, jq normalizes via ascii case folding (A-Z ONLY, jq
-    semantics — unicode untouched) + rtrimstr, all as codegen
-    translate/substr expressions.  Python tier never runs."""
+    semantics — unicode untouched) + rtrimstr, all as Catalyst
+    translate/substr expressions on the native rows."""
     docs = load_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",
@@ -2397,15 +2399,14 @@ ORACLES["jq_native_alternative"] = _ORACLE_JQ_NATIVE_ALT
 
 
 def q_jq_native_multi_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chained explode compiled natively: per-user nested docs where
-    ``.tags`` is an ARRAY ``[k, k+1000]`` for even users and an
-    OBJECT ``{"t1": k, "t2": k+1000}`` for odd users, iterated by the
-    two-level ``.evs[].tags[]`` — two generate nodes over one
-    from_json parse, no Python stage anywhere.  The odd-user half
-    exercises the r9 inner-level OBJECT iteration (values in document
-    key order via the threaded raw-text twin, native.py
-    ``_apply_explode``); both shapes contribute the same k/k+1000
-    pair, so the oracle is shape-blind."""
+    """A two-level iterate: per-user nested docs where ``.tags`` is an
+    ARRAY ``[k, k+1000]`` for even users and an OBJECT ``{"t1": k,
+    "t2": k+1000}`` for odd users, iterated by ``.evs[].tags[]``.  The
+    odd-user half exercises inner-level OBJECT iteration (values in
+    document key order); both shapes contribute the same k/k+1000
+    pair, so the oracle is shape-blind.  Iterating programs run on the
+    Python tier, which measured faster than the former native explode
+    plan."""
     events = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     tags_json = F.when(
@@ -2421,14 +2422,11 @@ def q_jq_native_multi_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.concat_ws(",", F.collect_list("ev")).alias("evs"))
         .select(F.concat(F.lit('{"evs":['), F.col("evs"), F.lit("]}")).alias("doc"))
-        # materialization barrier: without it CollapseProject inlines
-        # the doc-concat into EVERY json-parse reference inside the
-        # native explode (nav + variant/text twins + gates), rebuilding
-        # the concat ~10x per row — measured 3.3 s vs 0.93 s at sf0.1.
-        # The exchange also spreads the per-user docs across cores.
+        # the exchange spreads the per-user docs across cores (the
+        # aggregate's output would otherwise run jq in few tasks)
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    x = jq_explode(nested, "doc", ".evs[].tags[]", "bigint", native="require")
+    x = jq_explode(nested, "doc", ".evs[].tags[]", "bigint")
     return x.agg(
         F.count("*").alias("n"),
         F.sum("col1").alias("sum_k"),
@@ -2492,10 +2490,11 @@ ORACLES["jq_native_length"] = _ORACLE_JQ_NATIVE_LENGTH
 
 
 def q_jq_native_map_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String predicates in select (startswith + test → codegen
-    StartsWith/RLike) and a map-typed projection, all native under an
-    explode: items tagged by lang and source, keep tags matching
-    ^src1x, emit the kv object as a real map column."""
+    """String predicates in select (startswith + test) and a map-typed
+    projection under an iterate: items tagged by lang and source, keep
+    tags matching ^src1x, emit the kv object as a real map column.
+    Iterating programs run on the Python tier; on this one-row-group
+    input a ``min_parallelism`` repartition measured slower than none."""
     docs = load_table(spark, sf_dir, "documents")
     kv = F.struct(F.col("n_chars").alias("a"))
     j = docs.select(
@@ -2516,7 +2515,6 @@ def q_jq_native_map_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
         " | {tag: .tag, m: .kv}",
         "tag:string",
         "m:map<string,bigint>",
-        native="require",
     )
     return (
         x.select(
@@ -3105,8 +3103,8 @@ ORACLES["format_roundtrip"] = _ORACLE_FORMAT_ROUNDTRIP
 def q_jq_native_has_not(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`has()` and `| not` select predicates compiled natively: the
     program filters on object-key membership plus negated jq
-    truthiness, entirely as codegen variant expressions (native.py
-    _variant_has / _variant_truthy) — no Python worker.  The JSON is
+    truthiness, as Catalyst variant expressions (native.py
+    _variant_has / _variant_truthy) on the native rows.  The JSON is
     synthesized from events.k so the key-presence and flag-type mix
     is controlled: flag cycles true/false/null/"x", m gains key v
     when k % 3 == 0."""

@@ -303,25 +303,24 @@ ORACLES.update({"jpeg_decode_stats": _ORACLE_JPEG_STATS})
 
 
 # ---------------------------------------------------------------------------
-# jq_keys_explode — native keys/keys_unsorted UNDER AN ITERATE (r11)
+# jq_keys_explode — keys/keys_unsorted UNDER AN ITERATE (r11)
 # ---------------------------------------------------------------------------
 
 
 def q_jq_keys_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``.items[] | keys_unsorted`` and ``.items[] | keys`` compiled
-    natively (r11, VERDICT r10 #6) over DATA-DEPENDENT object keys.
+    """``.items[] | keys_unsorted`` and ``.items[] | keys`` (r11,
+    VERDICT r10 #6) over DATA-DEPENDENT object keys.
 
     Each document becomes ``{"items": [m1, m2]}`` where m1 is a
     2-entry JSON object keyed by (source, lang) IN THAT ORDER — NOT
-    codepoint order, so keys_unsorted (document order, via the
-    explode's raw-text twin) and keys (codepoint-sorted, via the
-    variant reader) genuinely differ — and m2 is a 1-entry object
-    with a composite key.  Both programs run ``native="require"``:
-    the whole explode is Catalyst codegen, no Python worker.
+    codepoint order, so keys_unsorted (document order) and keys
+    (codepoint-sorted) genuinely differ — and m2 is a 1-entry object
+    with a composite key.  Iterating programs run on the Python tier,
+    which measured faster than the former native explode plans.
 
-    Scale shape: one pruned scan per program, a per-row from_json +
-    posexplode (narrow), and a low-cardinality groupBy — one shuffle
-    of (variant, joined-keys) pairs after map-side partials."""
+    Scale shape: one pruned scan per program, a per-row jq pass
+    (narrow), and a low-cardinality groupBy — one shuffle of
+    (variant, joined-keys) pairs after map-side partials."""
     docs = load_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",
@@ -340,16 +339,17 @@ def q_jq_keys_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("doc"),
     )
+    # no min_parallelism: a repartition of this one-row-group input
+    # measured slower than the two branches' parallel scans
     xu = jq_explode(
         j, "doc", ".items[] | keys_unsorted", "array<string>",
-        native="require",
     ).select(
         F.lit("unsorted").alias("variant"),
         F.array_join("col1", ",").alias("ks"),
         "doc_id",
     )
     xs = jq_explode(
-        j, "doc", ".items[] | keys", "array<string>", native="require"
+        j, "doc", ".items[] | keys", "array<string>"
     ).select(
         F.lit("sorted").alias("variant"),
         F.array_join("col1", ",").alias("ks"),

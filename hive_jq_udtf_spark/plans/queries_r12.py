@@ -1,14 +1,13 @@
 """Round-12 queries.
 
-- ``jq_native_growth`` — driver gate for the r12 native-tier growth
-  (VERDICT r11 #5): ``contains`` in select position, whole-element
-  ``has`` under an iterate (the element-variant-twin route replacing
-  the r8 guaranteed-Python fallback), and full ``split`` arrays in
-  projections.  All three programs run ``native="require"`` — the
-  whole pipeline is Catalyst codegen, zero Python workers — over
-  JSON synthesized from raw ``documents`` columns, so the plain-SQL
-  oracle recomputes every value from those columns without parsing
-  any JSON (a dropped row, a first-occurrence ``has`` miss, or a
+- ``jq_native_growth`` — driver gate for the r12 growth (VERDICT r11
+  #5): ``contains`` in select position, whole-element ``has`` under
+  an iterate, and full ``split`` arrays in projections.  The two
+  scalar programs run ``native="require"`` (only routed rows reach
+  their plans' Python node); the iterating one runs on the Python
+  tier.  All read JSON synthesized from raw ``documents`` columns, so
+  the plain-SQL oracle recomputes every value from those columns
+  without parsing any JSON (a dropped row, a first-occurrence ``has`` miss, or a
   wrong split boundary is a value mismatch).
 
 Registers into plans.queries.QUERIES/ORACLES on import.
@@ -25,7 +24,7 @@ from .queries import ORACLES, QUERIES
 
 
 def q_jq_native_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three r12-growth jq constructs compiled natively, one output.
+    """Three r12-growth jq constructs, one output.
 
     Per document the JSON is ``{"title": source-lang, "csv":
     "lang,source,n_chars", "tags": [{"id":…, "w":…}, {"w":1}]}``:
@@ -33,16 +32,15 @@ def q_jq_native_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``select(.title | contains("en"))`` — contains joins the
       select-position string predicates (scalar tier);
     * ``.tags[] | select(has("id"))`` — a whole-element predicate
-      under an iterate reads the element's variant twin (only the
-      first tags entry carries "id", so ``has`` prunes exactly one
-      of two exploded rows per doc);
+      under an iterate, on the Python tier (only the first tags entry
+      carries "id", so ``has`` prunes exactly one of two exploded
+      rows per doc);
     * ``.csv | split(",")`` — the full split array (``splitarr``);
       the output pins both the part count and the first part.
 
     Scale shape: three pruned scans of documents, each a narrow
-    per-row projection (from_json/posexplode at most), then one
-    low-cardinality (op, lang) groupBy — map-side partials, one
-    small shuffle, no Python tier anywhere."""
+    per-row projection or jq pass, then one low-cardinality (op,
+    lang) groupBy — map-side partials, one small shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",
@@ -87,7 +85,6 @@ def q_jq_native_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             '.tags[] | select(has("id")) | {id: .id, w: .w}',
             "id:double",
             "w:double",
-            native="require",
         )
         .groupBy(F.lit("has_id").alias("op"), "lang")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))

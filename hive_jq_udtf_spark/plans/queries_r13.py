@@ -5,8 +5,8 @@
   the end, open ends, exact-typed variant gate), ``ltrimstr``/
   ``rtrimstr`` composed inside fn chains, and ``test("re")`` in select
   position (Oniguruma→re-portable regex compiled to ``rlike``).  All
-  four programs run ``native="require"`` — the whole pipeline is
-  Catalyst codegen, zero Python workers — over JSON synthesized from
+  four programs run ``native="require"`` — only routed rows reach
+  their plans' Python node — over JSON synthesized from
   raw ``documents`` columns, so the plain-SQL oracle recomputes every
   value from those columns without parsing any JSON (a wrong slice
   boundary, an unstripped prefix, or a regex mismatch is a value
@@ -45,9 +45,8 @@ def q_jq_native_growth2(spark: SparkSession, sf_dir: str) -> DataFrame:
       compiled to ``rlike``.
 
     Scale shape: four pruned scans of documents, each a narrow
-    per-row codegen projection, then one low-cardinality (op, k)
-    groupBy — map-side partials, one small shuffle, no Python tier
-    anywhere."""
+    per-row Catalyst projection, then one low-cardinality (op, k)
+    groupBy — map-side partials, one small shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",

@@ -6,12 +6,13 @@
   named groups compiled to per-group ``regexp_extract`` under a
   participation-safe pattern gate (declared struct resolves groups by
   NAME, so a reordered declaration is part of the gate).  The whole
-  program runs ``native="require"`` — one Catalyst codegen pass, zero
-  Python workers — over JSON synthesized from raw ``documents``
-  columns, so the plain-SQL oracle recomputes every value from those
-  columns without parsing JSON.  The ``sub`` leg is first-occurrence-
-  SENSITIVE: ``.code`` carries two digit runs and the filter pins the
-  second run untouched (a gsub-like over-replace drops every row).
+  program runs ``native="require"`` — one Catalyst pass, with only
+  routed rows reaching the plan's Python node — over JSON synthesized
+  from raw ``documents`` columns, so the plain-SQL oracle recomputes
+  every value from those columns without parsing JSON.  The ``sub``
+  leg is first-occurrence-SENSITIVE: ``.code`` carries two digit runs
+  and the filter pins the second run untouched (a gsub-like
+  over-replace drops every row).
 
 Registers into plans.queries.QUERIES/ORACLES on import.
 """
@@ -44,9 +45,9 @@ def q_jq_native_growth3(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``a``) to pin resolve-by-name; sums of the parsed groups equal
       sums of the raw columns.
 
-    Scale shape: one pruned scan of documents, one per-row codegen
+    Scale shape: one pruned scan of documents, one per-row Catalyst
     projection, one low-cardinality groupBy — map-side partials, one
-    small shuffle, no Python tier anywhere."""
+    small shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",

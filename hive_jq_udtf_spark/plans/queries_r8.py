@@ -1,11 +1,10 @@
 """Round-8 queries.
 
-- ``jq_native_limit`` — generator laziness on the native tier:
-  ``limit(n; .[])``/``first(...)`` compile to a pre-explode array
-  slice, and ``.[]`` over an OBJECT iterates its values (both r8
-  native-tier growth, SURVEY §4.2 item 4; the reference reaches the
-  same behavior through jackson-jq's limit/first builtins and relies
-  on Hive for everything after the UDTF).
+- ``jq_native_limit`` — generator laziness: ``limit(n; .[])`` and
+  ``first(...)`` pull only the elements they emit, and ``.[]`` over an
+  OBJECT iterates its values in document key order (the reference
+  reaches the same behavior through jackson-jq's limit/first builtins
+  and relies on Hive for everything after the UDTF).
 - ``embedding_pca_topk`` — top-k principal components by deflated
   power iteration (VERDICT r7 #7): the same distributed d x d moment
   aggregate as embedding_pca_power, iterated driver-side with
@@ -23,18 +22,16 @@ from ..sources.tables import load_table
 from .queries import ORACLES, QUERIES
 
 # ---------------------------------------------------------------------------
-# jq_native_limit — limit/first + object iteration on the native tier
+# jq_native_limit — limit/first + object iteration
 # ---------------------------------------------------------------------------
 
 
 def q_jq_native_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three native-tier programs over the same per-document JSON:
-    ``limit(3; .toks[])`` (first 3 tokens — the slice happens BEFORE
-    the explode, so elements limit() would never pull never become
-    rows), ``first(.toks[])`` (= limit 1), and ``.kv[]`` (value
-    iteration over an OBJECT, in document key order).  All three are
-    ``native="require"`` — the no-Python plan gate in
-    tests/test_plans.py pins that none of them fall back."""
+    """Three iterating programs over the same per-document JSON:
+    ``limit(3; .toks[])`` (first 3 tokens), ``first(.toks[])`` (=
+    limit 1), and ``.kv[]`` (value iteration over an OBJECT, in
+    document key order).  Iterating programs run on the Python tier,
+    which measured faster than the former native explode plans."""
     from ..udtf import jq_explode
 
     docs = load_table(spark, sf_dir, "documents")
@@ -49,9 +46,11 @@ def q_jq_native_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("doc"),
     )
-    lim = jq_explode(j, "doc", "limit(3; .toks[])", "string", native="require")
-    fst = jq_explode(j, "doc", "first(.toks[])", "string", native="require")
-    obj = jq_explode(j, "doc", ".kv[]", "string", native="require")
+    # no min_parallelism: the three branches already scan in parallel,
+    # and a repartition of this one-row-group input measured slower
+    lim = jq_explode(j, "doc", "limit(3; .toks[])", "string")
+    fst = jq_explode(j, "doc", "first(.toks[])", "string")
+    obj = jq_explode(j, "doc", ".kv[]", "string")
     out = (
         lim.select("doc_id", F.lit("lim").alias("k"), F.col("col1").alias("v"))
         .unionByName(

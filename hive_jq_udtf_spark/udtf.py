@@ -269,9 +269,10 @@ def jq_explode(
     carries one Python node, which the rows its expressions would not
     evaluate exactly reach — duplicate-key documents (which jq reads
     last-occurrence-wins), values of a kind a guard rejects (a string
-    under ``floor``, a string in a numeric slot, a scalar at an
-    iterate), number text read as text, and corrupt or NULL cells when
-    jq fails on the null document (native.py's module docstring).  A
+    under ``floor``, a string in a numeric slot), number text read as
+    text, and corrupt or NULL cells when jq fails on the null document
+    (native.py's module docstring).  Programs that iterate do not
+    compile natively, so "auto" runs them on the Python tier.  A
     session with ``spark.sql.variant.allowDuplicateKeys=true`` parses
     duplicate-key rows itself, so the route cannot find them: "auto"
     then takes the Python tier and "require" raises.  Nothing here

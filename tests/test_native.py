@@ -4,12 +4,14 @@ node in the physical plan)."""
 
 import json
 import random
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hive_jq_udtf_spark.native import analyze_program, compile_native
-from hive_jq_udtf_spark.udtf import jq_explode
+from hive_jq_udtf_spark.udtf import jq_explode, run_jq
 
 from conftest import collect_routed, native_rows
 
@@ -17,9 +19,7 @@ from conftest import collect_routed, native_rows
 def test_analyze_accepts_simple_paths():
     assert analyze_program(".k") is not None
     assert analyze_program(".a.b[0]") is not None
-    assert analyze_program(".arr[]") is not None
     assert analyze_program("{x: .a, y: .b}") is not None
-    assert analyze_program('.tz[] | select(.name == "T") | .offset') is not None
     assert analyze_program("select(.k > 5) | {k: .k}") is not None
 
 
@@ -29,6 +29,42 @@ def test_analyze_rejects_general_programs():
     assert analyze_program(".[] | .a + 1") is None
     assert analyze_program("if .a then .b else .c end") is None
     assert analyze_program("to_entries") is None
+    # programs that iterate run on the Python tier
+    assert analyze_program(".arr[]") is None
+    assert analyze_program('.tz[] | select(.name == "T") | .offset') is None
+    assert analyze_program("limit(2; .a)") is None
+
+
+def _python_tier_only(spark, cases):
+    """Each ``(program, decls, docs)`` case does not compile natively,
+    ``native="require"`` raises on it, and ``native="auto"`` gives for
+    every document, in order, the rows ``run_jq`` gives (jq must not
+    fail on any of them).  All cases run in one Spark job."""
+    src = spark.createDataFrame(
+        [(k, i, d) for k, (_, _, docs) in enumerate(cases) for i, d in enumerate(docs)],
+        "__case int, __row int, __doc string",
+    )
+    frames, want = [], {}
+    for k, (prog, decls, docs) in enumerate(cases):
+        assert compile_native(prog, decls) is None, prog
+        with pytest.raises(ValueError):
+            jq_explode(src, "__doc", prog, *decls, native="require")
+        out = jq_explode(src.where(F.col("__case") == k), "__doc", prog, *decls)
+        names = out.columns[len(src.columns):]
+        row = F.to_json(F.struct(*names), {"ignoreNullFields": "false"})
+        frames.append(out.select("__case", "__row", row))
+        for i, d in enumerate(docs):
+            want[k, i] = [dict(zip(names, r)) for r in run_jq(prog, d, *decls)]
+    got: dict = {key: [] for key in want}
+    for k, i, r in reduce(DataFrame.union, frames).collect():
+        got[k, i].append(json.loads(r))
+    for (k, i), rows in want.items():
+        assert got[k, i] == rows, (cases[k][0], cases[k][2][i])
+
+
+def _docs(df):
+    """The ``j`` documents of a fixture frame, by ``id``."""
+    return [r.j for r in df.orderBy("id").select("j").collect()]
 
 
 @pytest.fixture(scope="module")
@@ -56,19 +92,26 @@ TIER_CASES = [
     (".k", ("int",)),
     (".name", ("string",)),
     (".nested.v", ("double",)),
+    ("select(.k > 50) | {k: .k}", ("k:int",)),
+    ('select(.name == "Tokyo") | .k', ("int",)),
+    ("{v: .nested.v, first_tag: .tags[0]}", ("v:double", "first_tag:string")),
+]
+TIER_ITERATE_CASES = [
     (".arr[]", ("name:string", "offset:int")),
     (".arr[] | .offset", ("int",)),
     (".tags[]", ("string",)),
     ('.arr[] | select(.name == "a") | {offset}', ("offset:int",)),
     ('.arr[] | select(.offset > 0)', ("name:string", "offset:int")),
-    ("select(.k > 50) | {k: .k}", ("k:int",)),
-    ('select(.name == "Tokyo") | .k', ("int",)),
-    ("{v: .nested.v, first_tag: .tags[0]}", ("v:double", "first_tag:string")),
 ]
 
 
-@pytest.mark.parametrize("program,decls", TIER_CASES, ids=[c[0] for c in TIER_CASES])
+@pytest.mark.parametrize(
+    "program,decls", TIER_CASES + TIER_ITERATE_CASES, ids=[c[0] for c in TIER_CASES + TIER_ITERATE_CASES]
+)
 def test_native_matches_python_tier(docs_df, program, decls):
+    if (program, decls) in TIER_ITERATE_CASES:
+        _python_tier_only(docs_df.sparkSession, [(program, decls, _docs(docs_df))])
+        return
     plan = compile_native(program, decls)
     assert plan is not None, f"expected native compilation for {program!r}"
     nat = jq_explode(docs_df, "j", program, *decls, native="require")
@@ -154,22 +197,20 @@ def test_native_string_concat_compiles_and_gates(spark):
     assert [r.s for r in out] == ["xxyy"]
 
 
-def test_native_strcat_matches_python_tier(spark):
-    from hive_jq_udtf_spark.udtf import jq_explode
+_STRCAT_DOCS = [
+    '{"a": "x", "b": "y", "items": [{"t": "u"}, {"t": ""}]}',
+    '{"a": "", "b": "q", "items": []}',
+    '{"a": null, "b": "z", "items": [{"t": "w"}]}',  # null identity
+    '{"b": "only", "items": [{}]}',  # missing a AND missing t
+]
 
-    rows = [
-        ('{"a": "x", "b": "y", "items": [{"t": "u"}, {"t": ""}]}',),
-        ('{"a": "", "b": "q", "items": []}',),
-        ('{"a": null, "b": "z", "items": [{"t": "w"}]}',),  # null identity
-        ('{"b": "only", "items": [{}]}',),  # missing a AND missing t
-    ]
-    df = spark.createDataFrame(rows, "j string")
+
+def test_native_strcat_matches_python_tier(spark):
+    df = spark.createDataFrame([(d,) for d in _STRCAT_DOCS], "j string")
     for prog, decls in [
         ('{s: (.a + "-")}', ("s:string",)),
         ('{s: ("<" + .a + "|" + .b + ">")}', ("s:string",)),
         ('{s: (.a + .b + "!")}', ("s:string",)),
-        ('.items[] | {s: (.t + "#")}', ("s:string",)),
-        ('.items[] | {s: ("pre" + .t)}', ("s:string",)),
     ]:
         nat = jq_explode(df, "j", prog, *decls, native="require")
         py = jq_explode(df, "j", prog, *decls, native="never")
@@ -233,36 +274,34 @@ def test_native_tostring_composite_number_canonicalization(spark):
         assert nat == py, prog
 
 
+_M2_DOCS = [
+    '{"s": 1.0, "arr": [2.0, "2.0"], "items": [{"u": 3.0}, {"u": "3.0"}]}',
+    '{"s": {"k": 1.0, "t": "1.0"}, "arr": [], "items": []}',
+    '{"s": "1.0", "arr": [2.5], "items": [{"u": true}]}',
+    '{"arr": [10.0], "items": [{}]}',
+    # Jackson re-prints parsed doubles >= 1e7 in scientific form
+    # ("1.23456789012345E14") — the variant path must still print
+    # integer text for SCALAR integral floats below 1e17, incl.
+    # the double-rounding case (9999999999999999.0 -> 1e16); a
+    # scientific-looking STRING passes through untouched
+    '{"s": 12345678.0, "arr": [1], "items": [{"u": 123456789012345.0}]}',
+    '{"s": 9999999999999999.0, "arr": [], "items": []}',
+    '{"s": "1.0E16", "arr": [], "items": []}',
+]
+
+
 def test_native_m2_stringify_number_normalization(spark):
     """r10 (deep-fuzz find): a PLAIN PATH projected to a
     STRING-declared output is M2 stringify (marshal.py::_as_string →
     jqlib tojson), so integral floats print without the fraction and
-    nested numbers print like jq — scalar tier, single-level explode,
-    destructure, and multi-level explode alike: the rows whose value
-    holds a non-integer number go to the Python tier.  STRING values
-    (even "1.0") pass through; missing stays NULL (M2, unlike
-    tostring's "null")."""
-    docs = [
-        '{"s": 1.0, "arr": [2.0, "2.0"], "items": [{"u": 3.0}, {"u": "3.0"}]}',
-        '{"s": {"k": 1.0, "t": "1.0"}, "arr": [], "items": []}',
-        '{"s": "1.0", "arr": [2.5], "items": [{"u": true}]}',
-        '{"arr": [10.0], "items": [{}]}',
-        # Jackson re-prints parsed doubles >= 1e7 in scientific form
-        # ("1.23456789012345E14") — the variant path must still print
-        # integer text for SCALAR integral floats below 1e17, incl.
-        # the double-rounding case (9999999999999999.0 -> 1e16); a
-        # scientific-looking STRING passes through untouched
-        '{"s": 12345678.0, "arr": [1], "items": [{"u": 123456789012345.0}]}',
-        '{"s": 9999999999999999.0, "arr": [], "items": []}',
-        '{"s": "1.0E16", "arr": [], "items": []}',
-    ]
-    df = _indexed(spark, docs)
+    nested numbers print like jq: the rows whose value holds a
+    non-integer number go to the Python tier.  STRING values (even
+    "1.0") pass through; missing stays NULL (M2, unlike tostring's
+    "null")."""
+    df = _indexed(spark, _M2_DOCS)
     cases = [  # with the count of docs whose rendered values hold floats
         ("{o: .s}", ("o:string",), 4),            # scalar projection
         (".s", ("string",), 4),                    # scalar single path
-        (".arr[]", ("string",), 3),                # bare scalar explode
-        (".items[] | {o: .u}", ("o:string",), 2),  # explode projection
-        (".items[] | .u", ("string",), 2),         # explode single path
     ]
     for prog, decls, routed in cases:
         nat, py, sent = _tiers_by_input(df, prog, *decls)
@@ -287,18 +326,17 @@ def test_native_corrupt_doc_takes_null_document_rows(spark):
     assert native_rows(spark, plan, texts) == [None, None, [("x",)]]
 
 
-def test_native_expression_filters_equivalence(spark):
-    from hive_jq_udtf_spark.udtf import jq_explode
+_EXPR_FILTER_DOCS = [f'{{"k": {i}, "a": [{{"b": {i % 7}}}]}}' for i in range(40)]
 
-    df = spark.createDataFrame(
-        [(f'{{"k": {i}, "a": [{{"b": {i % 7}}}]}}',) for i in range(40)], "j string"
-    )
+
+def test_native_expression_filters_equivalence(spark):
+    df = spark.createDataFrame([(d,) for d in _EXPR_FILTER_DOCS], "j string")
     for prog, decls in [
         ("select(.k % 2 == 0) | {k: .k}", ("k:int",)),
         ("select(.k + 10 > 30) | {k: .k}", ("k:int",)),
         # `.b * 2` alone is unproven (string repetition overload);
         # the `+ 1` literal proves the chain number-or-error (r10)
-        (".a[] | select(.b * 2 + 1 >= 7) | {b: .b}", ("b:int",)),
+        ("select(.a[0].b * 2 + 1 >= 7) | {k: .k}", ("k:int",)),
     ]:
         nat = sorted(map(tuple, jq_explode(df, "j", prog, *decls, native="require").drop("j").collect()), key=str)
         py = sorted(map(tuple, jq_explode(df, "j", prog, *decls, native="never").drop("j").collect()), key=str)
@@ -306,17 +344,15 @@ def test_native_expression_filters_equivalence(spark):
 
 
 def test_native_expr_filter_with_projection_of_other_field(spark):
-    # regression: expr post-filter paths must register in the element
-    # schema even when the projection doesn't reference them
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    df = spark.createDataFrame(
-        [('{"items": [{"k": 2, "v": 20}, {"k": 3, "v": 30}]}',)], "j string"
-    )
-    out = jq_explode(
-        df, "j", ".items[] | select(.k % 2 == 0) | {v: .v}", "v:int", native="require"
-    ).collect()
+    # an expression filter on one field, a projection of another
+    prog = "select(.k % 2 == 0) | {v: .v}"
+    df = spark.createDataFrame([('{"k": 2, "v": 20}',), ('{"k": 3, "v": 30}',)], "j string")
+    out = jq_explode(df, "j", prog, "v:int", native="require").collect()
     assert [r.v for r in out] == [20]
+    # under an iterate it runs on the Python tier
+    _python_tier_only(spark, [(
+        ".items[] | " + prog, ("v:int",), ['{"items": [{"k": 2, "v": 20}, {"k": 3, "v": 30}]}'],
+    )])
 
 
 def test_native_rejects_boolean_in_arithmetic(spark):
@@ -360,13 +396,8 @@ def test_native_fnchain_equivalence_and_unicode(spark):
 
 
 def test_native_fnchain_in_explode(spark):
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    df = spark.createDataFrame([('{"a": [{"n": "AA x"}, {"n": "Bb"}]}',)], "j string")
     prog = '.a[] | {s: (.n | ascii_downcase | rtrimstr(" x"))}'
-    nat = jq_explode(df, "j", prog, "s:string", native="require").drop("j").collect()
-    py = jq_explode(df, "j", prog, "s:string", native="never").drop("j").collect()
-    assert nat == py == [__import__("pyspark").sql.Row(s="aa"), __import__("pyspark").sql.Row(s="bb")]
+    _python_tier_only(spark, [(prog, ("s:string",), ['{"a": [{"n": "AA x"}, {"n": "Bb"}]}'])])
 
 
 def test_native_unknown_fn_falls_back(spark):
@@ -389,19 +420,10 @@ def test_native_alternative_operator(spark):
 
 
 def test_native_alternative_under_iterate(spark):
-    # // under iterate compiles natively since the element schema can
-    # type the path VARIANT (exact per-value JSON types) — boolean
-    # false and null/missing substitute, everything else passes
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    prog = ".a[] | {v: (.v // 9)}"
-    assert compile_native(prog, ("v:int",)) is not None
-    df = spark.createDataFrame([('{"a": [{"v": 1}, {}, {"v": false}]}',)], "j string")
-    for mode in ("require", "never"):
-        out = jq_explode(df, "j", prog, "v:int", native=mode).drop("j").collect()
-        assert [r.v for r in out] == [1, 9, 9], mode
-    assert collect_routed(jq_explode(df, "j", prog, "v:int", native="require"))[1] == 0
+    # boolean false and null/missing substitute, everything else passes
+    doc = '{"a": [{"v": 1}, {}, {"v": false}]}'
+    assert run_jq(".a[] | {v: (.v // 9)}", doc, "v:int") == [(1,), (9,), (9,)]
+    _python_tier_only(spark, [(".a[] | {v: (.v // 9)}", ("v:int",), [doc])])
 
 
 def test_native_alt_string_false_not_substituted(spark):
@@ -455,15 +477,11 @@ def test_native_single_wrap_dispatch_pins(spark):
 
 def test_native_keys_under_iterate_fuzz(spark):
     """Seeded fuzz (r11): keys/keys_unsorted under iterates over
-    randomized key ORDERS and container shapes — document order must
-    survive the raw-text twin at level 0 (posexplode-indexed text
-    array), at mid levels (the r9 ``ex`` twin), and through the
-    object-iterated route (``.[]`` over an object iterates values)."""
+    randomized key ORDERS and container shapes, at one and two iterate
+    levels and through an object iterate (``.[]`` over an object
+    iterates values): keys_unsorted keeps document order."""
     import json as _json
     import random
-
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
 
     rng = random.Random(1106)
     pool = ["zz", "aa", "Mm", "b2", "B1", "x", "_u", "k9"]
@@ -486,9 +504,8 @@ def test_native_keys_under_iterate_fuzz(spark):
         (".lvls[].b[] | keys_unsorted", ("array<string>",), "mid"),
         (".obj[] | keys_unsorted", ("array<string>",), "objiter"),
     ]
-    compared = 0
+    cases = []
     for prog, decls, fam in progs:
-        assert compile_native(prog, decls) is not None, prog
         docs = []
         for _ in range(12):
             if fam == "arr":
@@ -513,21 +530,9 @@ def test_native_keys_under_iterate_fuzz(spark):
                         for k in rng.sample(pool, rng.randint(1, 3))
                     }
                 }
-            docs.append((_json.dumps(doc),))
-        df = spark.createDataFrame(docs, "j string")
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        cols = [c for c in nat.columns if c != "j"]
-        rows, sent = collect_routed(nat.select(cols))
-        assert sent == 0, prog
-        # rows sorted (cross-partition collect order is not part of
-        # the contract) but each keys ARRAY keeps its order — that is
-        # where document order lives, so the compare stays sensitive
-        a = sorted(map(tuple, rows), key=str)
-        b = sorted(map(tuple, py.select(cols).collect()), key=str)
-        assert a == b, prog
-        compared += 1
-    assert compared == len(progs)
+            docs.append(_json.dumps(doc))
+        cases.append((prog, decls, docs))
+    _python_tier_only(spark, cases)
 
 
 # ---------------------------------------------------------------------------
@@ -571,10 +576,13 @@ def test_native_strpred_nonstring_routes_scalar_tier(spark):
 
 
 def test_native_strpred_nonstring_routes_explode_tier(spark):
-    """Same routing under an iterate: the element schema types strpred
-    paths VARIANT so the exact-type check survives from_json."""
-    it = compile_native('.items[] | select(.tag | startswith("s")) | {v: .v}', ("v:int",))
-    assert native_rows(spark, it, _STRPRED_TYPE_DOCS) == [[(1,)], None, None, None, None]
+    """Under an iterate the program runs on the Python tier, which
+    raises on a non-string value."""
+    prog, decls = '.items[] | select(.tag | startswith("s")) | {v: .v}', ("v:int",)
+    _python_tier_only(spark, [(prog, decls, _STRPRED_TYPE_DOCS[:1])])
+    bad = spark.createDataFrame([(d,) for d in _STRPRED_TYPE_DOCS[1:]], "j string")
+    with pytest.raises(Exception, match="jq error"):
+        jq_explode(bad, "j", prog, *decls).collect()
 
 
 def test_native_truthy_select_scalar_tier(spark):
@@ -590,46 +598,22 @@ def test_native_truthy_select_scalar_tier(spark):
 
 
 def test_native_truthy_select_explode_tier(spark):
-    """Explode-tier truthy select on a string-valued field must not
-    ANSI-crash (ADVICE r1 high: string→boolean cast) and must match
-    jq truthiness exactly."""
-    df = spark.createDataFrame([(d,) for d in _TRUTHY_DOCS], "j string")
-    prog, decls = ".items[] | select(.flag) | {v: .v}", ("v:int",)
-    assert compile_native(prog, decls) is not None
-    nat_df = jq_explode(df, "j", prog, *decls, native="require")
-    rows, sent = collect_routed(nat_df)
-    assert sent == 0
-    nat = sorted(r.v for r in rows)
-    py = sorted(r.v for r in jq_explode(df, "j", prog, *decls, native="never").collect())
-    assert nat == py == [1, 3, 5, 7, 8]
+    """Truthy select on an iterated element's string-valued field: jq
+    truthiness, on the Python tier."""
+    _python_tier_only(spark, [(".items[] | select(.flag) | {v: .v}", ("v:int",), _TRUTHY_DOCS)])
 
 
 def test_native_truthy_select_shared_path_projection(spark):
-    """Truthy filter and projection share a path: the element schema
-    resolves the conflict to VARIANT and consumers cast from it."""
-    df = spark.createDataFrame([(d,) for d in _TRUTHY_DOCS], "j string")
+    """Truthy filter and projection share a path."""
     prog, decls = ".items[] | select(.flag) | {f: .flag, v: .v}", ("f:string", "v:int")
-    plan = compile_native(prog, decls)
-    if plan is None:
-        pytest.skip("shared-path truthy falls back to Python tier")
-    nat = sorted(
-        map(tuple, jq_explode(df, "j", prog, *decls, native="require").select("f", "v").collect())
-    )
-    py = sorted(
-        map(tuple, jq_explode(df, "j", prog, *decls, native="never").select("f", "v").collect())
-    )
-    assert nat == py
+    _python_tier_only(spark, [(prog, decls, _TRUTHY_DOCS)])
 
 
 def test_native_truthy_then_numeric_filter_same_elem(spark):
-    """Mixed truthy + comparison post-filters on different fields."""
-    df = spark.createDataFrame([(d,) for d in _TRUTHY_DOCS], "j string")
+    """Mixed truthy + comparison filters on different fields."""
     prog, decls = ".items[] | select(.flag) | select(.v > 2) | {v: .v}", ("v:int",)
-    if compile_native(prog, decls) is None:
-        pytest.skip("multi-filter program falls back to Python tier")
-    nat = sorted(r.v for r in jq_explode(df, "j", prog, *decls, native="require").collect())
-    py = sorted(r.v for r in jq_explode(df, "j", prog, *decls, native="never").collect())
-    assert nat == py == [3, 5, 7, 8]
+    assert sorted(v for d in _TRUTHY_DOCS for (v,) in run_jq(prog, d, *decls)) == [3, 5, 7, 8]
+    _python_tier_only(spark, [(prog, decls, _TRUTHY_DOCS)])
 
 
 # ---------------------------------------------------------------------------
@@ -675,38 +659,25 @@ def nested_df(spark):
 
 
 GROWTH_CASES = [
-    # multi-iterate (chained explode)
-    (".orders[].lines[]", ("sku:string", "qty:int")),
-    (".orders[] | .lines[] | {sku: .sku, qty: .qty}", ("sku:string", "qty:int")),
-    (".orders[].lines[].qty", ("int",)),
-    (".orders[].lines[] | select(.qty > 5) | {sku}", ("sku:string",)),
-    # string predicates in select — scalar and explode tier
+    # string predicates in select
     ('select(.name | startswith("T")) | {name}', ("name:string",)),
     ('select(.name | endswith("o")) | {name}', ("name:string",)),
     ('select(.name | test("^T.*o$")) | {name}', ("name:string",)),
-    ('.orders[] | select(.tag | startswith("r")) | {oid: .oid}', ("oid:int",)),
-    ('.orders[] | select(.tag | test("l")) | {oid: .oid}', ("oid:int",)),
     # length in projections (array/object/string/number/null via variant)
     ("{n: (.orders | length)}", ("n:int",)),
     ("{n: (.s | length)}", ("n:double",)),
-    (".orders[] | {n: (.lines | length), oid: .oid}", ("n:int", "oid:int")),
     # tostring (string view == jq compact tojson; null → "null")
     ("{t: (.s | tostring)}", ("t:string",)),
-    (".orders[] | {t: (.oid | tostring)}", ("t:string",)),
-    # map-typed projections, both tiers (M4: object → map, else {})
+    # map-typed projections (M4: object → map, else {})
     ("{m: .s}", ("m:map<string,int>",)),
-    (".orders[] | {m: .lines[0]}", ("m:map<string,string>",)),
     # native reduce → aggregate() fold (numeric custom reductions)
     ("{s: (reduce .nums[] as $v (0; . + $v))}", ("s:double",)),
     ("{q: (reduce .nums[] as $v (0; . + $v * $v)), n: (.nums | length)}",
      ("q:double", "n:int")),
     ("{w: (reduce .nums[] as $v (1; . * 2 - $v / 2))}", ("w:double",)),
-    # `not` (negated jq truthiness) and `has` in select — both tiers
+    # `not` (negated jq truthiness) and `has` in select
     ('select(.name | not) | {name}', ("name:string",)),
     ('select(.orders | has(1)) | {name}', ("name:string",)),
-    (".orders[] | select(.lines | has(0)) | {oid: .oid}", ("oid:int",)),
-    (".orders[] | select(.lines | has(2)) | {oid: .oid}", ("oid:int",)),
-    (".orders[] | select(.lines[0] | not) | {oid: .oid}", ("oid:int",)),
     # round-3 growth: if/else projections, gsub, array fns, projected
     # string predicates, split-index
     ('{hi: (if .s > 2 then "big" else "small" end)}', ("hi:string",)),
@@ -725,22 +696,6 @@ GROWTH_CASES = [
     ('{t: (.name | test("^T")), c: (.name | contains("or"))}', ("t:boolean", "c:boolean")),
     ('{p: (.name | split("o")[0])}', ("p:string",)),
     ('{p: (.name | split("o")[2])}', ("p:string",)),
-    # round-8 growth: limit/first generator laziness -> pre-explode
-    # slice (SURVEY §4.2 item 4)
-    ("limit(2; .orders[]) | {oid: .oid}", ("oid:int",)),
-    ("limit(3; .nums[])", ("double",)),
-    ("limit(0; .nums[])", ("double",)),
-    (".orders[] | limit(2; .lines[]) | {sku: .sku, qty: .qty}",
-     ("sku:string", "qty:int")),
-    ("first(.nums[])", ("double",)),
-    ("limit(2; .name)", ("string",)),
-    # round-9: nested limit/first — caps MIN-combine (ADVICE r8 high:
-    # the outer cap must not overwrite an inner, tighter cap)
-    ("limit(5; first(.nums[]))", ("double",)),
-    ("limit(5; limit(2; .nums[]))", ("double",)),
-    ("limit(1; limit(3; .orders[])) | {oid: .oid}", ("oid:int",)),
-    ("limit(2; limit(0; .nums[]))", ("double",)),
-    ("first(limit(3; .nums[]))", ("double",)),
     # round-8 growth: `keys` (sorted) via the variant reader — array
     # input yields index keys (jq semantics); object cases live in
     # test_native_keys_sorted_matches_python_tier (nested_df has no
@@ -756,51 +711,32 @@ GROWTH_CASES = [
     # @base64 is utf-8 base64 of the tostring view)
     ('{t: @text "n-\\(.name)"}', ("t:string",)),
     ('{t: @json "q-\\(.name)-\\(.orders)"}', ("t:string",)),
-    ('.orders[] | {t: @json "o-\\(.tag)-\\(.oid)"}', ("t:string",)),
     ('{t: @base64 "\\(.name)"}', ("t:string",)),
-    ('.orders[] | {t: @base64 "\\(.tag)-\\(.oid)"}', ("t:string",)),
     # round-10 growth: tojson (leading: variant-gated canonical view
     # incl. quoted strings; non-leading: quotes the running string /
     # renders numbers bare)
     ("{t: (.s | tojson)}", ("t:string",)),
     ("{t: (.name | tojson)}", ("t:string",)),
-    (".orders[] | {t: (.lines | tojson)}", ("t:string",)),
     ("{t: (.name | ascii_downcase | tojson)}", ("t:string",)),
-    # round-11 growth: keys/keys_unsorted under ITERATES (raw-text
-    # twin for document order) and as trailing bare calls in the
-    # single-TYPE decl form; order-sensitive comparisons live in
-    # test_native_keys_sorted_matches_python_tier (orders[] elements
-    # are always objects, so the Python tier never aborts here)
-    (".orders[] | keys", ("array<string>",)),
-    (".orders[] | keys_unsorted", ("array<string>",)),
-    (".orders[].lines[] | keys_unsorted", ("array<string>",)),
-    (".orders[] | {oid: .oid, k: (.lines | keys)}", ("oid:int", "k:array<int>")),
-    (".orders[] | {oid: .oid, k: (.lines | keys_unsorted)}",
-     ("oid:int", "k:array<int>")),
+    # round-11 growth: keys/keys_unsorted as trailing bare calls in
+    # the single-TYPE decl form; order-sensitive comparisons live in
+    # test_native_keys_sorted_matches_python_tier
     (".nums | keys", ("array<int>",)),
     (".words | keys_unsorted", ("array<int>",)),
     ("keys", ("array<string>",)),
     ("keys_unsorted", ("array<string>",)),
-    ("limit(2; .orders[]) | keys_unsorted", ("array<string>",)),
     # trailing bare `length` (same single-call plumbing; numeric decl)
-    (".orders[] | length", ("int",)),
-    (".orders[].lines[] | length", ("int",)),
     (".s | length", ("double",)),
     ("length", ("int",)),
-    ("limit(2; .orders[]) | length", ("int",)),
     # round-11: jq1-style bare single-TYPE programs — the tail wraps
-    # as a synthetic {col1: <tail>} project (iterate/select/limit
-    # stay in the pipe prefix); same spec compilers as projections
+    # as a synthetic {col1: <tail>} project (select stays in the pipe
+    # prefix); same spec compilers as projections
     (".name | ascii_downcase", ("string",)),
     (".nums | add", ("double",)),
     ('.name | gsub("o"; "0")', ("string",)),
     ('"p-\\(.name)"', ("string",)),
     (".nums | reverse", ("array<double>",)),
     (".name | tostring", ("string",)),
-    (".orders[] | .oid | tostring", ("string",)),
-    (".orders[] | .tag | ascii_upcase", ("string",)),
-    ('.orders[] | select(.oid > 5) | .tag | ascii_downcase', ("string",)),
-    ("limit(2; .orders[]) | .oid | tostring", ("string",)),
     ('.name | split("o")[0]', ("string",)),
     # round-11: length-predicate selects (pipe binds looser than the
     # comparison, so both parse shapes must land) and the `type` head
@@ -808,25 +744,15 @@ GROWTH_CASES = [
     ("select((.nums | length) > 2) | {name}", ("name:string",)),
     ("select(.nums | length == 0) | {name}", ("name:string",)),
     ("select(.name | length >= 2) | {name}", ("name:string",)),
-    (".orders[] | select(.lines | length > 1) | {oid: .oid}", ("oid:int",)),
     ("select(2 < (.nums | length)) | {name}", ("name:string",)),
     ("{t: (.s | type)}", ("t:string",)),
     ("{t: (.nums | type), u: (.name | type), w: (.missing | type)}",
      ("t:string", "u:string", "w:string")),
-    (".orders[] | {t: (.lines | type), oid: .oid}", ("t:string", "oid:int")),
     (".s | type", ("string",)),
     ("{T: (.name | type | ascii_upcase)}", ("T:string",)),
-    # round-12 growth (VERDICT r11 #5): contains in select (both
-    # tiers), whole-element predicates under an iterate (elem_var
-    # route), whole-element plain projection, full split arrays
+    # round-12 growth (VERDICT r11 #5): contains in select, full
+    # split arrays
     ('select(.name | contains("or")) | {name}', ("name:string",)),
-    ('.orders[] | select(.tag | contains("re")) | {oid: .oid}', ("oid:int",)),
-    ('.orders[] | select(has("oid")) | {oid: .oid}', ("oid:int",)),
-    ('.orders[] | select(has("missing")) | {oid: .oid}', ("oid:int",)),
-    (".orders[] | select(not) | {oid: .oid}", ("oid:int",)),
-    (".nums[] | select(. > 2) | {v: .}", ("v:double",)),
-    (".nums[] | {v: .}", ("v:double",)),
-    (".orders[] | select(length > 2) | {oid: .oid}", ("oid:int",)),
     ('{parts: (.name | split("o"))}', ("parts:array<string>",)),
     ('{p2: (.name | split("or")), oid0: (.orders | length)}',
      ("p2:array<string>", "oid0:int")),
@@ -846,7 +772,7 @@ GROWTH_CASES = [
     (".nums[0:2]", ("array<double>",)),
     # round-14 growth (VERDICT r13 #4): sub (FIRST-occurrence replace,
     # spliced around regexp_instr — replacement inserted verbatim, $
-    # and \ included) in fn chains, both tiers; capture (named groups
+    # and \ included) in fn chains; capture (named groups
     # → struct of regexp_extract, subset/reordered decls resolve by
     # name) in scalar projections
     ('{v: (.name | sub("o"; "0"))}', ("v:string",)),
@@ -855,8 +781,6 @@ GROWTH_CASES = [
     ('{v: (.name | ascii_downcase | sub("o"; "Q"))}', ("v:string",)),
     ('{v: (.name | sub("[A-Z]"; "x") | ascii_upcase)}', ("v:string",)),
     ('.name | sub("o"; "0")', ("string",)),
-    ('.orders[] | {t: (.tag | sub("e"; "3")), oid: .oid}',
-     ("t:string", "oid:int")),
     ('{c: (.name | capture("^(?<h>.)(?<rest>.*)$"))}',
      ("c:struct<h:string,rest:string>",)),
     ('{c: (.name | capture("^(?<h>.)(?<rest>.*)$"))}',
@@ -867,9 +791,79 @@ GROWTH_CASES = [
      ("c:struct<a:string,b:string>",)),
 ]
 
+# programs that iterate (or ``limit``/``first`` over a path) run on the
+# Python tier: ``auto`` gives jq's rows for every document
+GROWTH_ITERATE_CASES = [
+    # multi-level iterates
+    (".orders[].lines[]", ("sku:string", "qty:int")),
+    (".orders[] | .lines[] | {sku: .sku, qty: .qty}", ("sku:string", "qty:int")),
+    (".orders[].lines[].qty", ("int",)),
+    (".orders[].lines[] | select(.qty > 5) | {sku}", ("sku:string",)),
+    ('.orders[] | select(.tag | startswith("r")) | {oid: .oid}', ("oid:int",)),
+    ('.orders[] | select(.tag | test("l")) | {oid: .oid}', ("oid:int",)),
+    (".orders[] | {n: (.lines | length), oid: .oid}", ("n:int", "oid:int")),
+    (".orders[] | {t: (.oid | tostring)}", ("t:string",)),
+    (".orders[] | {m: .lines[0]}", ("m:map<string,string>",)),
+    (".orders[] | select(.lines | has(0)) | {oid: .oid}", ("oid:int",)),
+    (".orders[] | select(.lines | has(2)) | {oid: .oid}", ("oid:int",)),
+    (".orders[] | select(.lines[0] | not) | {oid: .oid}", ("oid:int",)),
+    # limit/first pull only the elements they emit; nested caps
+    # MIN-combine (the outer cap must not overwrite a tighter inner one)
+    ("limit(2; .orders[]) | {oid: .oid}", ("oid:int",)),
+    ("limit(3; .nums[])", ("double",)),
+    ("limit(0; .nums[])", ("double",)),
+    (".orders[] | limit(2; .lines[]) | {sku: .sku, qty: .qty}",
+     ("sku:string", "qty:int")),
+    ("first(.nums[])", ("double",)),
+    ("limit(2; .name)", ("string",)),
+    ("limit(5; first(.nums[]))", ("double",)),
+    ("limit(5; limit(2; .nums[]))", ("double",)),
+    ("limit(1; limit(3; .orders[])) | {oid: .oid}", ("oid:int",)),
+    ("limit(2; limit(0; .nums[]))", ("double",)),
+    ("first(limit(3; .nums[]))", ("double",)),
+    ('.orders[] | {t: @json "o-\\(.tag)-\\(.oid)"}', ("t:string",)),
+    ('.orders[] | {t: @base64 "\\(.tag)-\\(.oid)"}', ("t:string",)),
+    (".orders[] | {t: (.lines | tojson)}", ("t:string",)),
+    # keys/keys_unsorted/length of each element (orders[] elements are
+    # always objects, so jq never aborts here)
+    (".orders[] | keys", ("array<string>",)),
+    (".orders[] | keys_unsorted", ("array<string>",)),
+    (".orders[].lines[] | keys_unsorted", ("array<string>",)),
+    (".orders[] | {oid: .oid, k: (.lines | keys)}", ("oid:int", "k:array<int>")),
+    (".orders[] | {oid: .oid, k: (.lines | keys_unsorted)}",
+     ("oid:int", "k:array<int>")),
+    ("limit(2; .orders[]) | keys_unsorted", ("array<string>",)),
+    (".orders[] | length", ("int",)),
+    (".orders[].lines[] | length", ("int",)),
+    ("limit(2; .orders[]) | length", ("int",)),
+    (".orders[] | .oid | tostring", ("string",)),
+    (".orders[] | .tag | ascii_upcase", ("string",)),
+    ('.orders[] | select(.oid > 5) | .tag | ascii_downcase', ("string",)),
+    ("limit(2; .orders[]) | .oid | tostring", ("string",)),
+    (".orders[] | select(.lines | length > 1) | {oid: .oid}", ("oid:int",)),
+    (".orders[] | {t: (.lines | type), oid: .oid}", ("t:string", "oid:int")),
+    ('.orders[] | select(.tag | contains("re")) | {oid: .oid}', ("oid:int",)),
+    # whole-element predicates and projections
+    ('.orders[] | select(has("oid")) | {oid: .oid}', ("oid:int",)),
+    ('.orders[] | select(has("missing")) | {oid: .oid}', ("oid:int",)),
+    (".orders[] | select(not) | {oid: .oid}", ("oid:int",)),
+    (".nums[] | select(. > 2) | {v: .}", ("v:double",)),
+    (".nums[] | {v: .}", ("v:double",)),
+    (".orders[] | select(length > 2) | {oid: .oid}", ("oid:int",)),
+    ('.orders[] | {t: (.tag | sub("e"; "3")), oid: .oid}',
+     ("t:string", "oid:int")),
+]
 
-@pytest.mark.parametrize("program,decls", GROWTH_CASES, ids=[c[0] for c in GROWTH_CASES])
+
+@pytest.mark.parametrize(
+    "program,decls",
+    GROWTH_CASES + GROWTH_ITERATE_CASES,
+    ids=[c[0] for c in GROWTH_CASES + GROWTH_ITERATE_CASES],
+)
 def test_native_growth_matches_python_tier(nested_df, program, decls):
+    if (program, decls) in GROWTH_ITERATE_CASES:
+        _python_tier_only(nested_df.sparkSession, [(program, decls, _docs(nested_df))])
+        return
     plan = compile_native(program, decls)
     assert plan is not None, f"expected native compilation for {program!r}"
     nat = jq_explode(nested_df, "j", program, *decls, native="require")
@@ -892,26 +886,6 @@ def test_native_slice_dispatch(spark):
     assert compile_native("{v: .a[1:3]}", ("v:int",)) is None
     assert compile_native(".items[] | {v: .a[1:3]}", ("v:array<int>",)) is None
     assert compile_native("{v: .a[1:3]}", ("v:array<int>",)) is not None
-
-
-def test_native_elementwide_predicate_compiles(nested_df):
-    # r12 growth (VERDICT r11 #5): has/not/truthy/comparisons over the
-    # exploded element itself now read the element's VARIANT twin
-    # (elem_var) instead of requiring a from_json field — previously a
-    # guaranteed Python fallback (the r8 pin this test replaces)
-    for prog in (
-        '.orders[] | select(has("oid")) | {oid: .oid}',
-        ".orders[] | select(not) | {oid: .oid}",
-    ):
-        plan = compile_native(prog, ("oid:int",))
-        assert plan is not None, prog
-        nat = jq_explode(nested_df, "j", prog, "oid:int", native="require")
-        py = jq_explode(nested_df, "j", prog, "oid:int", native="never")
-        rows, sent = collect_routed(nat.select("oid"))
-        assert sent == 0, prog
-        a = sorted(map(tuple, rows), key=str)
-        b = sorted(map(tuple, py.select("oid").collect()), key=str)
-        assert a == b, prog
 
 
 def test_native_has_key_object_membership(spark):
@@ -955,13 +929,20 @@ OR_CASES = [
     ("select(.k > 50 or .k < 10) | {k: .k}", ("k:int",)),
     ('select((.name | startswith("T")) or .k < 20) | {k: .k}', ("k:int",)),
     ('select(.k > 30 and (.name == "Tokyo" or .name == "NY")) | {k: .k}', ("k:int",)),
+]
+OR_ITERATE_CASES = [
     ('.orders[] | select(.tag == "red" or .tag == "blue") | {oid: .oid}', ("oid:int",)),
     ('.orders[] | select((.tag | test("^r")) or (.tag | endswith("n"))) | {oid: .oid}', ("oid:int",)),
 ]
 
 
-@pytest.mark.parametrize("program,decls", OR_CASES, ids=[c[0] for c in OR_CASES])
+@pytest.mark.parametrize(
+    "program,decls", OR_CASES + OR_ITERATE_CASES, ids=[c[0] for c in OR_CASES + OR_ITERATE_CASES]
+)
 def test_native_or_conditions(nested_df, program, decls):
+    if (program, decls) in OR_ITERATE_CASES:
+        _python_tier_only(nested_df.sparkSession, [(program, decls, _docs(nested_df))])
+        return
     plan = compile_native(program, decls)
     assert plan is not None, program
     nat = jq_explode(nested_df, "j", program, *decls, native="require")
@@ -1060,97 +1041,33 @@ def test_native_projected_strpred_array_not_serialized_match(spark):
 
 
 def test_native_iterate_scalar_elements_preserve_rows(spark):
-    """from_json nulls a typed array wholesale when an element is a
-    scalar, which used to DROP rows the reference marshals as
-    null-field rows (M1/M3).  The string-array fallback rebuilds flat
-    element structs per element, so the native tier matches the
-    marshaller exactly — including mixed object/scalar arrays."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    df = spark.createDataFrame(
-        [
-            (1, '{"xs": [10, 20]}'),        # all scalars
-            (2, '{"xs": []}'),               # empty
-            (3, '{"xs": [{"v": 7}]}'),       # object
-            (4, '{"xs": [{"v": 3}, "mix", 5]}'),  # mixed
-            (5, '{"xs": [null, {"v": 1}]}'),  # null element
-        ],
-        "id long, j string",
-    )
-
-    def rows(native):
-        out = jq_explode(df, "j", ".xs[]", "v:int", native=native)
-        return sorted(((r.id, r.v) for r in out.select("id", "v").collect()), key=repr)
-
-    assert rows("require") == rows("never") == [
-        (1, None), (1, None), (3, 7), (4, 3), (4, None), (4, None),
-        (5, 1), (5, None),
+    """A scalar element marshals into named decls as a null-field row
+    (M1/M3), so mixed object/scalar arrays keep one row per element."""
+    docs = [
+        '{"xs": [10, 20]}',        # all scalars
+        '{"xs": []}',               # empty
+        '{"xs": [{"v": 7}]}',       # object
+        '{"xs": [{"v": 3}, "mix", 5]}',  # mixed
+        '{"xs": [null, {"v": 1}]}',  # null element
     ]
+    assert run_jq(".xs[]", docs[3], "v:int") == [(3,), (None,), (None,)]
+    _python_tier_only(spark, [(".xs[]", ("v:int",), docs)])
 
 
 def test_native_mixed_arrays_nested_and_multi_level(spark):
-    """ADVICE r5 (native.py non-flat fallback): the rebuild must keep
-    valid object elements when the declared element schema has NESTED
-    fields, and must preserve rows for bare-scalar element schemas and
-    chained multi-iterate programs.  An earlier revision fabricated
-    all-NULL rows (nested decls) or dropped the rows outright (scalar
-    decls, inner arrays) whenever from_json nulled the typed parse."""
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    # nested field type in the element schema + mixed object/scalar
-    df = spark.createDataFrame(
-        [(4, '{"xs": [{"v": [3]}, "mix", 5]}'), (6, '{"xs": [{"v": [1, 2]}]}')],
-        "id long, j string",
-    )
-
-    def rows(native):
-        out = jq_explode(df, "j", ".xs[]", "v:array<int>", native=native)
-        return sorted(((r.id, r.v) for r in out.select("id", "v").collect()), key=repr)
-
-    assert rows("require") == rows("never") == [
-        (4, None), (4, None), (4, [3]), (6, [1, 2]),
-    ]
-
-    # bare scalar element schema: a mixed array must still yield one
-    # row per element (the off-type element routes the row to the
-    # Python tier, which marshals it leniently to 0)
-    df2 = spark.createDataFrame(
-        [(1, '{"xs": [1, "mix", 2]}'), (2, '{"xs": [3, 4]}')],
-        "id long, j string",
-    )
-    nat = jq_explode(df2, "j", ".xs[]", "bigint", native="require")
-    assert sorted(
-        ((r.id, r.col1) for r in nat.select("id", "col1").collect()), key=repr
-    ) == [(1, 0), (1, 1), (1, 2), (2, 3), (2, 4)]
-
-    # chained multi-iterate: from_json nulls only the DEEPEST
-    # mismatching node, so the inner level needs its own variant
-    # fallback; struct decls at the inner level must match exactly
-    df3 = spark.createDataFrame(
-        [
-            (1, '{"evs":[{"tags":[{"v":1},{"v":2}]}]}'),
-            (2, '{"evs":[{"tags":[{"v":3},"mix"]}]}'),
-        ],
-        "id long, j string",
-    )
-
-    def rows3(native):
-        out = jq_explode(df3, "j", ".evs[].tags[]", "v:int", native=native)
-        return sorted(((r.id, r.v) for r in out.select("id", "v").collect()), key=repr)
-
-    assert rows3("require") == rows3("never") == [
-        (1, 1), (1, 2), (2, 3), (2, None),
-    ]
-
-    # inner scalar decl: rows preserved, off-type element lenient 0
-    df4 = spark.createDataFrame(
-        [(1, '{"evs":[{"tags":[1,2]},{"tags":[3]}]}'), (2, '{"evs":[{"tags":[4,"x"]}]}')],
-        "id long, j string",
-    )
-    nat4 = jq_explode(df4, "j", ".evs[].tags[]", "bigint", native="require")
-    assert sorted(
-        ((r.id, r.col1) for r in nat4.select("id", "col1").collect()), key=repr
-    ) == [(1, 1), (1, 2), (1, 3), (2, 0), (2, 4)]
+    """Mixed object/scalar arrays keep one row per element: under a
+    NESTED named decl, under a bare scalar decl (an off-type element
+    marshals leniently to 0), and at the inner level of a two-level
+    iterate."""
+    _python_tier_only(spark, [
+        (".xs[]", ("v:array<int>",), ['{"xs": [{"v": [3]}, "mix", 5]}', '{"xs": [{"v": [1, 2]}]}']),
+        (".xs[]", ("bigint",), ['{"xs": [1, "mix", 2]}', '{"xs": [3, 4]}']),
+        (".evs[].tags[]", ("v:int",),
+         ['{"evs":[{"tags":[{"v":1},{"v":2}]}]}', '{"evs":[{"tags":[{"v":3},"mix"]}]}']),
+        (".evs[].tags[]", ("bigint",),
+         ['{"evs":[{"tags":[1,2]},{"tags":[3]}]}', '{"evs":[{"tags":[4,"x"]}]}']),
+    ])
+    assert run_jq(".xs[]", '{"xs": [1, "mix", 2]}', "bigint") == [(1,), (0,), (2,)]
 
 
 def test_native_ceil_matches_python_tier_and_log_stays_python(spark):
@@ -1175,58 +1092,23 @@ def test_native_ceil_matches_python_tier_and_log_stays_python(spark):
 
 
 def test_native_object_iteration_matches_python_tier(spark):
-    # `.[]` over OBJECTS iterates values (r8): before this the native
-    # tier silently dropped object rows the Python tier iterates.
-    # Order matters: jq emits object values in document key order, so
-    # compare UNSORTED sequences on single-row frames.
-    for doc, decls, prog in (
-        ('{"b": 2, "a": 1, "c": 3}', ("int",), ".[]"),
-        ('{"b": 2, "a": 1, "c": 3}', ("int",), "limit(2; .[])"),
-        ('{"x": {"n": 1}, "y": {"n": 2}}', ("n:int",), ".[] | {n: .n}"),
-        ('{"items": {"k2": 10, "k1": 9}}', ("int",), ".items[]"),
-        ("{}", ("int",), ".[]"),
-    ):
-        df = spark.createDataFrame([(doc,)], "j string")
-        plan = compile_native(prog, decls)
-        assert plan is not None, prog
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        cols = [c for c in nat.columns if c != "j"]
-        rows, sent = collect_routed(nat.select(cols))
-        assert sent == 0
-        assert rows == py.select(cols).collect(), (
-            doc,
-            prog,
-        )
-    # mixed array/object corpus, multi-row (order-insensitive)
-    rows = [
-        ('{"a": 11, "b": 22}',),
-        ("[5, 6, 7]",),
-        ('{"z": 7}',),
-        ("{}",),
-        ("[]",),
-    ]
-    df = spark.createDataFrame(rows, "j string")
-    nat = jq_explode(df, "j", ".[]", "int", native="require")
-    py = jq_explode(df, "j", ".[]", "int", native="never")
-    assert sorted(r.col1 for r in nat.collect()) == sorted(
-        r.col1 for r in py.collect()
-    ) == [5, 6, 7, 7, 11, 22]
+    # `.[]` over OBJECTS iterates values in document key order
+    assert run_jq("limit(2; .[])", '{"b": 2, "a": 1, "c": 3}', "int") == [(2,), (1,)]
+    _python_tier_only(spark, [
+        (".[]", ("int",), ['{"b": 2, "a": 1, "c": 3}', "{}", '{"a": 11, "b": 22}', "[5, 6, 7]", "[]"]),
+        ("limit(2; .[])", ("int",), ['{"b": 2, "a": 1, "c": 3}']),
+        (".[] | {n: .n}", ("n:int",), ['{"x": {"n": 1}, "y": {"n": 2}}']),
+        (".items[]", ("int",), ['{"items": {"k2": 10, "k1": 9}}']),
+    ])
 
 
 def test_native_iterate_fuzz_arrays_objects_limit(spark):
-    """Seeded fuzz for the r8 iterate growth: `.items[]` /
-    `limit(n; .items[])` / `first(.items[])` over docs whose .items
-    is randomly an ARRAY or an OBJECT (plus dirty batches with
-    scalars/null/missing, where jq aborts and only the error class is
-    checked).  Tiers must agree wherever jq itself succeeds; value
-    ORDER is pinned separately by
-    test_native_object_iteration_matches_python_tier."""
+    """Seeded fuzz: `.items[]` / `limit(n; .items[])` /
+    `first(.items[])` over docs whose .items is randomly an ARRAY or an
+    OBJECT give jq's rows in order; dirty batches (scalars, null,
+    missing) make jq abort, and the query with it."""
     import json as _json
     import random
-
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
 
     rng = random.Random(17)
 
@@ -1252,35 +1134,22 @@ def test_native_iterate_fuzz_arrays_objects_limit(spark):
         ("first(.items[])", "string"),
         ("limit(0; .items[])", "string"),
     ]
-    compared = 0
+    cases, dirty = [], []
     for batch in range(16):
         allow_dirty = batch % 3 == 2
         prog, decl = progs[batch % len(progs)]
-        assert compile_native(prog, (decl,)) is not None, prog
         docs = []
         for _ in range(15):
             d = {"items": rand_items(allow_dirty)}
             if allow_dirty and rng.random() < 0.2:
                 d = {}  # .items missing entirely -> jq iterate error
-            docs.append((_json.dumps(d),))
-        df = spark.createDataFrame(docs, "j string")
-        try:
-            py = sorted(
-                r.col1
-                for r in jq_explode(df, "j", prog, decl, native="never").collect()
-                if r.col1 is not None
-            )
-        except Exception as ex:
-            assert "jq error" in str(ex), f"unexpected failure: {ex}"
-            continue
-        nat = sorted(
-            r.col1
-            for r in jq_explode(df, "j", prog, decl, native="require").collect()
-            if r.col1 is not None
-        )
-        assert nat == py, (prog, docs)
-        compared += 1
-    assert compared >= 8
+            docs.append(_json.dumps(d))
+        (dirty if allow_dirty else cases).append((prog, (decl,), docs))
+    _python_tier_only(spark, cases)
+    prog, decls, docs = dirty[0]
+    df = spark.createDataFrame([(d,) for d in docs], "j string")
+    with pytest.raises(Exception, match="jq error"):
+        jq_explode(df, "j", prog, *decls).collect()
 
 
 def test_layout_ring_is_thread_local_and_correct_concurrently(spark):
@@ -1339,19 +1208,13 @@ def test_native_keys_sorted_matches_python_tier(spark):
     fields sorted by key bytes, which IS jq's codepoint sort; arrays
     yield index lists.  r10: `keys_unsorted` compiles at the SCALAR
     tier too — json_object_keys over the raw text preserves DOCUMENT
-    order where variants sort.  r11: under ITERATES too — the
-    explode threads a raw-text twin (posexplode-indexed text array
-    at level 0, the r9 `ex` twin at mid levels), and trailing bare
-    `keys`/`keys_unsorted` compile as a whole program in the
-    single-TYPE decl form (`.[] | keys_unsorted`)."""
+    order where variants sort.  Under an iterate they run on the
+    Python tier (test_iterate_programs_take_python_tier)."""
     cases = [
         ("{k: (.m | keys)}", ("k:array<string>",), [
             ('{"m": {"zz": 1, "aa": 2, "Mm": 3}}',),
             ('{"m": {}}',),
             ('{"m": [10, 20, 30]}',),
-        ]),
-        (".items[] | {k: (.m | keys)}", ("k:array<string>",), [
-            ('{"items": [{"m": {"y": 1, "x": 2}}, {"m": {"q": 0}}]}',),
         ]),
         ("{k: (.m | keys)}", ("k:array<int>",), [('{"m": ["a", "b"]}',)]),
         # keys_unsorted: DOCUMENT order, not sorted — the zz/aa/Mm doc
@@ -1374,39 +1237,6 @@ def test_native_keys_sorted_matches_python_tier(spark):
         cols = [c for c in nat.columns if c != "j"]
         rows, sent = collect_routed(nat.select(cols))
         assert sent == 0
-        assert rows == py.select(cols).collect(), prog
-    # r11: keys_unsorted under an iterate — DOCUMENT order through
-    # the element's raw-text twin.  Order matters, so compare
-    # UNSORTED sequences on single-row frames (deterministic order).
-    order_cases = [
-        # in-projection under a single-level iterate (posexplode text)
-        (".items[] | {k: (.m | keys_unsorted)}", ("k:array<string>",),
-         '{"items": [{"m": {"zz": 1, "aa": 2}}, {"m": {"q2": 0, "q1": 1}}]}'),
-        # trailing bare call: keys of the element itself
-        (".items[] | keys_unsorted", ("array<string>",),
-         '{"items": [{"zz": 1, "aa": 2, "Mm": 3}, {"b": 0, "a": 1}]}'),
-        (".items[] | keys", ("array<string>",),
-         '{"items": [{"zz": 1, "aa": 2, "Mm": 3}, {"b": 0, "a": 1}]}'),
-        # object-iterated doc: `.[]` over an object iterates VALUES
-        (".m[] | keys_unsorted", ("array<string>",),
-         '{"m": {"first": {"y": 1, "x": 2}, "second": {"q": 0}}}'),
-        # mid-level iterate: raw text rides the r9 `ex` twin
-        (".a[].b[] | keys_unsorted", ("array<string>",),
-         '{"a": [{"b": [{"s1": 1, "s0": 2}, {"zz": 1}]}, {"b": [{"m": 3}]}]}'),
-        (".a[].b[] | {k: (.c | keys_unsorted)}", ("k:array<string>",),
-         '{"a": [{"b": [{"c": {"w2": 1, "w1": 2}}]}]}'),
-        # path under the element for the trailing form
-        (".items[].m | keys_unsorted", ("array<string>",),
-         '{"items": [{"m": {"n2": 1, "n1": 2}}]}'),
-    ]
-    for prog, decls, doc in order_cases:
-        df = spark.createDataFrame([(doc,)], "j string")
-        assert compile_native(prog, decls) is not None, prog
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        cols = [c for c in nat.columns if c != "j"]
-        rows, sent = collect_routed(nat.select(cols))
-        assert sent == 0, prog
         assert rows == py.select(cols).collect(), prog
     # NAMED single decls stay Python-tier: keys output is an array
     # (non-object), which marshals into a named column as a
@@ -1514,14 +1344,8 @@ def test_native_format_interpolation_matches_python_tier(spark):
 
 def test_native_inner_object_iteration_matches_python_tier(spark):
     """r9 (VERDICT r8 #4): `.a[].b[]` where the INNER iterate target
-    is an OBJECT iterates its values in document key order — the r8
-    fix covered only the first iterate level; inner levels silently
-    emitted no rows for object targets.  Order matters, so compare
-    UNSORTED sequences on single-row frames."""
-    from hive_jq_udtf_spark.native import compile_native
-    from hive_jq_udtf_spark.udtf import jq_explode
-
-    for doc, decls, prog in (
+    is an OBJECT iterates its values in document key order."""
+    cases = [(prog, decls, [doc]) for doc, decls, prog in (
         # inner object of scalars, document key order
         ('{"a": [{"b": {"z": 1, "m": 2}}, {"b": {"q": 3}}]}', ("int",), ".a[].b[]"),
         # inner object of OBJECTS, projected
@@ -1530,10 +1354,7 @@ def test_native_inner_object_iteration_matches_python_tier(spark):
             ("n:int",),
             ".a[] | .b[] | {n: .n}",
         ),
-        # mixed: some inner targets arrays, some objects (a MISSING .b
-        # would abort jq/the Python tier — the native no-rows-on-null
-        # behavior there is the documented error-channel delta, pinned
-        # below, not a tier-equality case)
+        # mixed: some inner targets arrays, some objects
         (
             '{"a": [{"b": [1, 2]}, {"b": {"w": 3, "v": 4}}]}',
             ("int",),
@@ -1558,62 +1379,39 @@ def test_native_inner_object_iteration_matches_python_tier(spark):
             ("int",),
             ".a[].b[]",
         ),
-    ):
-        df = spark.createDataFrame([(doc,)], "j string")
-        plan = compile_native(prog, decls)
-        assert plan is not None, prog
-        nat = jq_explode(df, "j", prog, *decls, native="require")
-        py = jq_explode(df, "j", prog, *decls, native="never")
-        cols = [c for c in nat.columns if c != "j"]
-        rows, sent = collect_routed(nat.select(cols))
-        assert sent == 0
-        assert rows == py.select(cols).collect(), (doc, prog)
+    )]
+    _python_tier_only(spark, cases)
 
 
 def test_native_inner_object_iteration_fuzz(spark):
     """Seeded fuzz over 2-level iterates whose inner target is
-    randomly an array / object / missing; tiers must agree on the
-    multiset wherever jq succeeds."""
+    randomly an array or an object."""
     import json as _json
     import random
-
-    from hive_jq_udtf_spark.udtf import jq_explode
 
     rng = random.Random(29)
 
     def rand_inner():
-        # arrays/objects only: a null/missing .b aborts jq and the
-        # Python tier (native's no-rows there is the documented
-        # error-channel delta, not an equality case)
         if rng.random() < 0.5:
             return [rng.randint(0, 99) for _ in range(rng.randint(0, 3))]
         return {
             "k%d" % i: rng.randint(0, 99) for i in range(rng.randint(0, 3))
         }
 
-    for batch in range(6):
-        docs = []
-        for _ in range(12):
-            doc = {
-                "a": [
-                    {"b": rand_inner()} for _ in range(rng.randint(0, 3))
-                ]
-            }
-            docs.append((_json.dumps(doc),))
-        df = spark.createDataFrame(docs, "j string")
-        nat = jq_explode(df, "j", ".a[].b[]", "int", native="require")
-        py = jq_explode(df, "j", ".a[].b[]", "int", native="never")
-        assert sorted(
-            r.col1 for r in nat.collect() if r.col1 is not None
-        ) == sorted(r.col1 for r in py.collect() if r.col1 is not None)
+    docs = [
+        _json.dumps({"a": [{"b": rand_inner()} for _ in range(rng.randint(0, 3))]})
+        for _ in range(72)
+    ]
+    _python_tier_only(spark, [(".a[].b[]", ("int",), docs)])
 
 
 def test_native_inner_null_iterate_routes(spark):
-    # jq raises iterating null/missing at an inner level: the row takes
-    # the Python tier; a row whose every level iterates stays native
-    plan = compile_native(".a[].b[]", ("int",))
-    texts = ['{"a": [{"b": {"w": 3}}, {"c": 9}, {"b": null}]}', '{"a": [{"b": [1, 2]}]}']
-    assert native_rows(spark, plan, texts) == [None, [(1,), (2,)]]
+    # jq raises iterating null/missing at an inner level, and so does
+    # the query
+    _python_tier_only(spark, [(".a[].b[]", ("int",), ['{"a": [{"b": [1, 2]}]}'])])
+    bad = spark.createDataFrame([('{"a": [{"b": {"w": 3}}, {"c": 9}, {"b": null}]}',)], "j string")
+    with pytest.raises(Exception, match="jq error"):
+        jq_explode(bad, "j", ".a[].b[]", "int").collect()
 
 
 def test_native_tostring_number_normalization(spark):
@@ -1621,9 +1419,7 @@ def test_native_tostring_number_normalization(spark):
     floats below 1e17 print without the fraction (1.0 -> "1",
     1e2 -> "100", -0.0 -> "0") — while a STRING "1.0" passes through
     untouched.  Rows whose value is a non-integer number go to the
-    Python tier on all three shapes: scalar, single-level explode
-    (including the object-iterated level 0), and multi-level
-    explode."""
+    Python tier."""
     cases = [
         (
             [
@@ -1632,23 +1428,6 @@ def test_native_tostring_number_normalization(spark):
             ],
             '{t: (.a | tostring)}',
             4,
-        ),
-        (
-            [
-                '{"xs": [{"v": 1.0}, {"v": "1.0"}, {"v": 7}, {"v": 2.5}]}',
-                '{"xs": {"k2": {"v": 100.0}, "k1": {"v": "z"}}}',
-                '{"xs": {"k2": {"v": 100}, "k1": {"v": "z"}}}',
-            ],
-            ".xs[] | {t: (.v | tostring)}",
-            2,
-        ),
-        (
-            [
-                '{"a": [{"b": [{"v": 5.0}, {"v": "5.0"}]}]}',
-                '{"a": [{"b": [{"v": 5}, {"v": "5.0"}]}]}',
-            ],
-            ".a[].b[] | {t: (.v | tostring)}",
-            1,
         ),
         # tostring feeding a later fn keeps the jq text
         (
@@ -1687,18 +1466,14 @@ def test_native_fnchain_head_type_gates(spark):
     ]:
         got = native_rows(spark, compile_native(prog, (decl,)), docs)
         assert got == [None if e is None else [(e,)] for e in expect], prog
-    # explode tier: one off-type element routes the whole row
-    plan = compile_native('.xs[] | {o: (.v | ascii_downcase)}', ("o:string",))
-    texts = ['{"xs": [{"v": "Qq"}, {"v": 3}]}', '{"xs": [{"v": "x,y"}]}']
-    assert native_rows(spark, plan, texts) == [None, [("x,y",)]]
 
 
 def test_native_string_interpolation_matches_python_tier(spark):
     """r9: jq string interpolation "a\\(.p)b" compiles natively —
     each interpolant is the tostring view (_tostring_view), so objects
     keep document key order, null/missing render "null", and floats
-    print like jq ("1") on the Python tier.  Scalar and explode
-    shapes, compared value-for-value with the Python tier."""
+    print like jq ("1") on the Python tier.  Compared value-for-value
+    with the Python tier."""
     docs = [
         '{"u": 7, "v": {"b": 2, "a": 1}}',
         '{"u": "id", "v": 1.0}',
@@ -1716,18 +1491,6 @@ def test_native_string_interpolation_matches_python_tier(spark):
         nat, py, sent = _tiers_by_input(df, prog, *decls)
         assert sent == routed, prog  # the docs holding 1.0 or 2.5
         assert nat == py, prog
-    # explode tier
-    df2 = _indexed(
-        spark,
-        [
-            '{"xs": [{"id": 3, "w": 2.0}, {"id": "a", "w": {"z": 9, "y": 8}}]}',
-            '{"xs": [{"id": 3, "w": 2}, {"id": "a", "w": {"z": 9, "y": [8, "x"]}}]}',
-        ],
-    )
-    prog2 = '.xs[] | {s: "k-\\(.id):\\(.w)"}'
-    nat2, py2, sent = _tiers_by_input(df2, prog2, "s:string")
-    assert sent == 1
-    assert nat2 == py2
     # r10: @text/@json/@base64 compile now (see
     # test_native_format_interpolation_matches_python_tier); escaping
     # formats without a codegen twin stay Python-tier
@@ -1894,18 +1657,6 @@ def test_native_dup_key_last_wins(spark):
             "{v: (.a|keys)}",
             "v:array<string>",
         ),
-        # ITERATES over a duplicated-ancestor ARRAY see the last
-        # occurrence
-        (
-            ['{"xs":[1],"xs":[5,6]}', '{"xs":[9]}'],
-            ".xs[] | {v: .}",
-            "v:int",
-        ),
-        (
-            ['{"xs":["a"],"xs":["b","c"]}', '{"xs":["d"]}'],
-            ".xs[] | {v: .}",
-            "v:string",
-        ),
         # multi-key nested objects render in jq's key order (first
         # position, last value), subtree-internal duplicates included
         (
@@ -1918,7 +1669,6 @@ def test_native_dup_key_last_wins(spark):
             "{v: (.a|keys_unsorted)}",
             "v:array<string>",
         ),
-        (['{"a":{"k":1},"a":{"z":2,"k":3}}'], ".a[] | {v: .}", "v:int"),
         (['{"a":{"k":1,"k":3,"z":2}}'], "{v: .a}", "v:string"),
         (['{"a":{"b":1,"a":2,"b":3}}'], "{v: .a}", "v:string"),
         (
@@ -1947,9 +1697,6 @@ def test_native_dup_key_last_wins(spark):
             "{v: .a[0]}",
             "v:string",
         ),
-        # object iteration over an internally-duplicated object emits
-        # jq's row set (no phantom duplicate-entry rows)
-        (['{"a":{"z":1,"b":2,"z":3}}'], ".a[] | {v: .}", "v:int"),
     ]
     for docs, prog, decl in cases:
         df = spark.createDataFrame(list(enumerate(docs)), "i int, j string")
@@ -2001,9 +1748,8 @@ def test_native_dup_key_gate_false_positive_safe(spark):
 
 def test_native_dup_key_documented_residuals(spark):
     """Key order of a duplicate nested more than two levels below the
-    read, escape-spelled duplicate keys and keys_unsorted under two
-    iterate levels are jq-exact: duplicate-key rows run on the Python
-    tier."""
+    read and escape-spelled duplicate keys are jq-exact: duplicate-key
+    rows run on the Python tier."""
     from hive_jq_udtf_spark.udtf import jq_explode
 
     df = spark.createDataFrame(
@@ -2015,16 +1761,6 @@ def test_native_dup_key_documented_residuals(spark):
     assert [r.v for r in out.collect()] == [["z", "k"]]
     out2 = jq_explode(df, "j", "{v: .a}", "v:string", native="require")
     assert [r.v for r in out2.collect()] == ['{"z":2,"k":3}']
-    out5 = jq_explode(df, "j", ".a[] | {v: .}", "v:int", native="require")
-    assert [r.v for r in out5.collect()] == [2, 3]
-    dfn = spark.createDataFrame(
-        [('{"xs":[{"ys":[{"z":1,"b":2,"z":3}]}]}',)], "j string"
-    )
-    outn = jq_explode(
-        dfn, "j", ".xs[].ys[] | keys_unsorted", "array<string>",
-        native="require",
-    )
-    assert [r.col1 for r in outn.collect()] == [["z", "b"]]
     # a duplicate THREE levels below the read keeps jq's key order
     deep = '{"a":{"l1":{"l2":{"l3":{"z":1,"b":2,"z":3}}}},"q":{"l1":0}}'
     dfd = spark.createDataFrame([(deep,)], "j string")
@@ -2076,21 +1812,23 @@ def test_native_nested_digit_shift_tokens(spark):
         assert nat == py, prog
 
 
+_LEXEME_DOCS = [
+    # repeated "u" keys at different positions, non-canonical
+    # 1.50E2 in the order-sensitive composite
+    '{"items":[{"u":1},{"u":2}],"x":{"b":1.50E2,"a":2}}',
+    # trailing-zero decimal variant of the same shape
+    '{"p":{"q":1},"r":{"q":2},"x":{"m":2.50,"z":1}}',
+    # negative-zero-scale / plus-exponent lexemes
+    '{"p":{"q":1},"r":{"q":2},"x":{"w":1E+2,"v":3.0}}',
+]
+
+
 def test_native_dup_key_false_positive_lexemes(spark):
     """A doc with NO true duplicate but repeated sibling keys in an
     array of objects, carrying a non-canonical number token (1.50E2,
     trailing-zero decimals), does not trip the duplicate-key route and
     keeps its document-order raw text with jq's number text."""
-    docs = [
-        # repeated "u" keys at different positions, non-canonical
-        # 1.50E2 in the order-sensitive composite
-        '{"items":[{"u":1},{"u":2}],"x":{"b":1.50E2,"a":2}}',
-        # trailing-zero decimal variant of the same shape
-        '{"p":{"q":1},"r":{"q":2},"x":{"m":2.50,"z":1}}',
-        # negative-zero-scale / plus-exponent lexemes
-        '{"p":{"q":1},"r":{"q":2},"x":{"w":1E+2,"v":3.0}}',
-    ]
-    df = spark.createDataFrame([(d,) for d in docs], "j string")
+    df = spark.createDataFrame([(d,) for d in _LEXEME_DOCS], "j string")
     for prog, decl in [
         ("{v: .x}", "v:string"),
         ("{v: (.x|tostring)}", "v:string"),
@@ -2115,10 +1853,6 @@ def test_native_dup_key_false_positive_lexemes(spark):
         '{"m":2.5,"z":1}',
         '{"w":100,"v":3}',
     ]
-    # iterate over the false-positive composite keeps document order
-    it = jq_explode(df, "j", ".x[] | {v: .}", "v:double", native="require")
-    py_it = jq_explode(df, "j", ".x[] | {v: .}", "v:double", native="never")
-    assert [r.v for r in it.collect()] == [r.v for r in py_it.collect()]
 
 
 def test_native_digit_shift_three_digit_true_exponent(spark):
@@ -2211,8 +1945,8 @@ def test_native_sub_capture_dispatch():
 def test_native_recipe_cache_identical_plans_and_results(spark):
     """r14 optimization: NativePlan memoization + recipe caching must
     be invisible — repeated jq_explode calls return the same plan
-    (explain text) and the same rows as the first, across the scalar
-    and explode paths, outer variants, and distinct column names."""
+    (explain text) and the same rows as the first, across outer
+    variants and distinct column names."""
     from pyspark.sql import functions as F
 
     from hive_jq_udtf_spark.native import compile_native
@@ -2247,9 +1981,9 @@ def test_native_recipe_cache_identical_plans_and_results(spark):
     for prog, decls, outer in [
         ("{mid: .ids[1:4], tail: .ids[-2:]}",
          ("mid:array<double>", "tail:array<double>"), False),
-        ('.tags[] | select(has("id")) | {id: .id, w: .w}',
+        ("select(.tags[0].id) | {id: .tags[0].id, w: .tags[0].w}",
          ("id:double", "w:double"), False),
-        ('.tags[] | select(has("id")) | {id: .id}', ("id:double",), True),
+        ("select(.tags[0].id) | {id: .tags[0].id}", ("id:double",), True),
     ]:
         plan_a, rows_a = run(df, "doc", prog, *decls, outer=outer)
         plan_b, rows_b = run(df, "doc", prog, *decls, outer=outer)
@@ -2260,16 +1994,29 @@ def test_native_recipe_cache_identical_plans_and_results(spark):
         assert [r.split(", ", 1)[1] if ", " in r else r for r in rows_c]
 
     # outer=False vs outer=True are distinct cache entries
-    _, inner_rows = run(df, "doc", ".tags[] | {w: .w}", "w:double")
-    _, outer_rows = run(
-        df, "doc", ".tags[] | {w: .w}", "w:double", outer=True
-    )
-    assert len(outer_rows) > len(inner_rows)  # the empty-tags row kept
+    prog = "select(.ids | length > 0) | {w: .tags[0].w}"
+    _, inner_rows = run(df, "doc", prog, "w:double")
+    _, outer_rows = run(df, "doc", prog, "w:double", outer=True)
+    assert len(outer_rows) > len(inner_rows)  # the empty-ids row kept
     # Column-typed doc input (uncached path) still works
     out = jq_explode(
         df, F.col("doc"), "{n: (.ids | length)}", "n:int", native="require"
     )
     assert sorted(r.n for r in out.collect() if r.n is not None) == [0, 1, 5]
+
+
+def test_native_outer_select_keeps_dropped_rows(spark):
+    """LATERAL VIEW OUTER keeps an input row that select() drops, with
+    NULL generated columns, on both tiers."""
+    df = spark.createDataFrame([(1, '{"k": 1, "b": 2}'), (2, '{"k": 5, "b": 3}')], "id int, j string")
+    got = {
+        tier: sorted(
+            map(tuple, jq_explode(df, "j", "select(.k == 1) | {b: .b}", "b:int", outer=True,
+                                  native=tier).select("id", "b").collect())
+        )
+        for tier in ("require", "never")
+    }
+    assert got["require"] == got["never"] == [(1, 2), (2, None)]
 
 
 def test_native_doc_binding_evaluates_suspect_and_parse_once(spark):
@@ -2433,35 +2180,28 @@ def test_native_number_text_matches_python_tier(spark):
         assert by_input(got) == by_input(want), prog
 
 
+_OBJECT_TEXT_DOCS = [
+    '{"m":{"z":1,"a":"q"},"xs":[{"m":{"z":1,"a":"q"}},{"m":"xy"},{}]}',
+    '{"m":{"b":1},"xs":[{"m":[{"z":2,"b":1}]},{"m":false}]}',
+    '{"m":{},"xs":[{"m":[1,{"z":2,"b":1}]}]}',
+    '{"m":{"y":2,"c":3},"xs":[{"m":"xq"},{"m":[1,"a",true]},{"m":null}]}',
+]
+
+
 def test_native_keys_and_iterated_objects_as_text_match_python_tier(spark):
     """Text of object-shaped values: ``keys``/``keys_unsorted`` into a
     string slot do not compile (Spark's array cast text is ``[a, z]``,
-    jq's ``["a","z"]``), and under an iterate an object that ``//`` or
-    the trim pass-through prints goes to the Python tier (a variant
-    cast sorts its keys; jq keeps document order).  ``auto`` equals
-    ``never`` per input row; only rows holding such an object route."""
-    docs = [
-        '{"m":{"z":1,"a":"q"},"xs":[{"m":{"z":1,"a":"q"}},{"m":"xy"},{}]}',
-        '{"m":{"b":1},"xs":[{"m":[{"z":2,"b":1}]},{"m":false}]}',
-        '{"m":{},"xs":[{"m":[1,{"z":2,"b":1}]}]}',
-        '{"m":{"y":2,"c":3},"xs":[{"m":"xq"},{"m":[1,"a",true]},{"m":null}]}',
-    ]
-    df = _indexed(spark, docs)
+    jq's ``["a","z"]``); ``auto`` equals ``never`` per input row."""
+    df = _indexed(spark, _OBJECT_TEXT_DOCS)
     for prog in ("{o: (.m | keys)}", "{o: (.m | keys_unsorted)}"):
         assert compile_native(prog, ("o:string",)) is None, prog
         assert compile_native(prog, ("o:array<string>",)) is not None, prog
-    for prog in ("{o: (.m | keys)}", "{o: (.m | keys_unsorted)}",
-                 ".xs[] | {o: (.m // 1)}", '.xs[] | {o: (.m | ltrimstr("x"))}',
-                 '.xs[] | {o: (.m | rtrimstr("q"))}'):
+    for prog in ("{o: (.m | keys)}", "{o: (.m | keys_unsorted)}"):
         got = jq_explode(df, "j", prog, "o:string", native="auto")
         want = jq_explode(df, "j", prog, "o:string", native="never")
         assert _rows_by_input([tuple(r) for r in got.select("i", "o").collect()]) == (
             _rows_by_input([tuple(r) for r in want.select("i", "o").collect()])
         ), prog
-    for prog in (".xs[] | {o: (.m // 1)}", '.xs[] | {o: (.m | ltrimstr("x"))}'):
-        nat, py, sent = _tiers_by_input(df, prog, "o:string")
-        assert nat == py, prog
-        assert sent == 3, prog  # the docs whose .xs hold an object
 
 
 def test_native_integer_math_keeps_64_bit_values(spark):
@@ -2484,3 +2224,75 @@ def test_native_integer_math_keeps_64_bit_values(spark):
     assert sent == 0
     assert nat == py
     assert nat[0] == [(1e20, -2.5e19, 2.0, 0.0, 0)]
+
+
+# Programs that iterate, with the documents that pinned each behaviour
+# when the native tier had explode plans: object values in document key
+# order, limit's laziness, keys_unsorted order, number text, duplicate
+# keys read last-occurrence-wins.
+ITERATE_CASES = [
+    ('.items[] | {s: (.t + "#")}', ("s:string",), _STRCAT_DOCS),
+    ('.items[] | {s: ("pre" + .t)}', ("s:string",), _STRCAT_DOCS),
+    (".arr[]", ("string",), _M2_DOCS),
+    (".items[] | {o: .u}", ("o:string",), _M2_DOCS),
+    (".items[] | .u", ("string",), _M2_DOCS),
+    (".a[] | select(.b * 2 + 1 >= 7) | {b: .b}", ("b:int",), _EXPR_FILTER_DOCS),
+    ('.orders[] | select(has("oid")) | {oid: .oid}', ("oid:int",),
+     ['{"orders": [{"oid": 1}, {"x": 2}, {}]}', '{"orders": {"b": {"oid": 3}, "a": {"oid": 4}}}']),
+    (".orders[] | select(not) | {oid: .oid}", ("oid:int",),
+     ['{"orders": [null, {"oid": 5}, 0, {"oid": false}]}', '{"orders": []}']),
+    (".items[] | {k: (.m | keys)}", ("k:array<string>",),
+     ['{"items": [{"m": {"y": 1, "x": 2}}, {"m": {"q": 0}}]}']),
+    (".items[] | {k: (.m | keys_unsorted)}", ("k:array<string>",),
+     ['{"items": [{"m": {"zz": 1, "aa": 2}}, {"m": {"q2": 0, "q1": 1}}]}']),
+    (".items[] | keys_unsorted", ("array<string>",),
+     ['{"items": [{"zz": 1, "aa": 2, "Mm": 3}, {"b": 0, "a": 1}]}']),
+    (".items[] | keys", ("array<string>",),
+     ['{"items": [{"zz": 1, "aa": 2, "Mm": 3}, {"b": 0, "a": 1}]}']),
+    (".m[] | keys_unsorted", ("array<string>",),
+     ['{"m": {"first": {"y": 1, "x": 2}, "second": {"q": 0}}}']),
+    (".a[].b[] | keys_unsorted", ("array<string>",),
+     ['{"a": [{"b": [{"s1": 1, "s0": 2}, {"zz": 1}]}, {"b": [{"m": 3}]}]}']),
+    (".a[].b[] | {k: (.c | keys_unsorted)}", ("k:array<string>",),
+     ['{"a": [{"b": [{"c": {"w2": 1, "w1": 2}}]}]}']),
+    (".items[].m | keys_unsorted", ("array<string>",), ['{"items": [{"m": {"n2": 1, "n1": 2}}]}']),
+    (".xs[] | {t: (.v | tostring)}", ("t:string",), [
+        '{"xs": [{"v": 1.0}, {"v": "1.0"}, {"v": 7}, {"v": 2.5}]}',
+        '{"xs": {"k2": {"v": 100.0}, "k1": {"v": "z"}}}',
+        '{"xs": {"k2": {"v": 100}, "k1": {"v": "z"}}}',
+    ]),
+    (".a[].b[] | {t: (.v | tostring)}", ("t:string",), [
+        '{"a": [{"b": [{"v": 5.0}, {"v": "5.0"}]}]}',
+        '{"a": [{"b": [{"v": 5}, {"v": "5.0"}]}]}',
+    ]),
+    ('.xs[] | {o: (.v | ascii_downcase)}', ("o:string",), ['{"xs": [{"v": "x,y"}]}']),
+    ('.xs[] | {s: "k-\\(.id):\\(.w)"}', ("s:string",), [
+        '{"xs": [{"id": 3, "w": 2.0}, {"id": "a", "w": {"z": 9, "y": 8}}]}',
+        '{"xs": [{"id": 3, "w": 2}, {"id": "a", "w": {"z": 9, "y": [8, "x"]}}]}',
+    ]),
+    (".xs[] | {v: .}", ("v:int",), ['{"xs":[1],"xs":[5,6]}', '{"xs":[9]}']),
+    (".xs[] | {v: .}", ("v:string",), ['{"xs":["a"],"xs":["b","c"]}', '{"xs":["d"]}']),
+    (".a[] | {v: .}", ("v:int",), ['{"a":{"k":1},"a":{"z":2,"k":3}}', '{"a":{"z":1,"b":2,"z":3}}']),
+    (".xs[].ys[] | keys_unsorted", ("array<string>",), ['{"xs":[{"ys":[{"z":1,"b":2,"z":3}]}]}']),
+    (".x[] | {v: .}", ("v:double",), _LEXEME_DOCS),
+    (".xs[] | {o: (.m // 1)}", ("o:string",), _OBJECT_TEXT_DOCS),
+    ('.xs[] | {o: (.m | ltrimstr("x"))}', ("o:string",), _OBJECT_TEXT_DOCS),
+    ('.xs[] | {o: (.m | rtrimstr("q"))}', ("o:string",), _OBJECT_TEXT_DOCS),
+    (".u[] | {f: .}", ("f:string",), ['{"u": {"a": {"z": 1, "b": 2}, "c": "s"}}']),
+]
+
+
+def test_iterate_programs_take_python_tier(spark):
+    """A program that iterates — also under ``limit``/``first`` — does
+    not compile natively: ``native="require"`` raises and ``auto``
+    gives jq's rows per document, where jq raises too."""
+    for prog in ("limit(3; .toks[])", "first(.toks[])", ".kv[]", ".evs[].tags[]"):
+        assert compile_native(prog, ("string",)) is None, prog
+    _python_tier_only(spark, ITERATE_CASES)
+    for prog, decls, doc in [
+        ('.xs[] | {o: (.v | ascii_downcase)}', ("o:string",), '{"xs": [{"v": "Qq"}, {"v": 3}]}'),
+        (".xs[] | {v: .}", ("v:int",), '{"xs":3}'),
+    ]:
+        df = spark.createDataFrame([(doc,)], "j string")
+        with pytest.raises(Exception, match="jq error"):
+            jq_explode(df, "j", prog, *decls).collect()

@@ -1,7 +1,7 @@
 """Generated differential of the native tier against jq.
 
 Hypothesis draws programs from the shapes the native compiler accepts
-(every projection spec kind, ``select`` and iterates) and documents
+(every projection spec kind and ``select``) and documents
 from ``perfbench/corpus.py``'s kinds, with type-swapped leaves and
 corrupt and NULL cells.  One Spark job per example runs the native
 plan with a tagging stand-in for the Python tier, so each input row is
@@ -85,34 +85,25 @@ def _doc_text(seed: int):
 # programs
 # ---------------------------------------------------------------------------
 
-# value paths by the kind the corpus puts there, per iterate context
+# value paths by the kind the corpus puts there
 _DOC = {
     "num": [".id", ".score", ".deep.d.d.v", ".items[0].qty", ".items[0].price"],
     "str": [".user.name", ".user.tier", ".meta.cat", ".meta.color", ".text", ".tags[0]"],
     "arr": [".tags", ".items"],
     "obj": [".user", ".meta", ".deep", "."],
 }
-_ITERS = [
-    (".items[]", {"num": [".qty", ".price"], "str": [".sku"], "arr": [], "obj": ["."]}),
-    (".tags[]", {"num": [], "str": ["."], "arr": [], "obj": []}),
-    (".user[]", {"num": [], "str": ["."], "arr": [], "obj": []}),
-    (".[]", {"num": ["."], "str": ["."], "arr": ["."], "obj": ["."]}),
-    (".deep[] | .d[]", {"num": ["."], "str": [], "arr": [], "obj": ["."]}),
-    ("limit(2; .items[])", {"num": [".qty"], "str": [".sku"], "arr": [], "obj": ["."]}),
-    ("first(.tags[])", {"num": [], "str": ["."], "arr": [], "obj": []}),
-]
 _SCALAR_TYPES = ["string", "bigint", "int", "double", "boolean"]
 
 
-def _pick(draw, pools, *kinds):
-    cands = [p for k in kinds for p in pools[k]] or [".missing"]
+def _pick(draw, *kinds):
+    cands = [p for k in kinds for p in _DOC[k]] or [".missing"]
     return draw(st.sampled_from(cands))
 
 
 @st.composite
-def _value(draw, pools):
+def _value(draw):
     """(jq value expression, declared type) for one projected field."""
-    pick = lambda *k: _pick(draw, pools, *k)  # noqa: E731
+    pick = lambda *k: _pick(draw, *k)  # noqa: E731
     kind = draw(st.sampled_from([
         "path", "path", "lit", "expr", "fnchain", "fnchain", "alt", "length",
         "keys", "arrayfn", "slice", "strpred", "capture", "ifelse", "split",
@@ -181,7 +172,7 @@ def _value(draw, pools):
             return f'({p} | split("e")[0])', "string"
         return f'({p} | split("e"))', "array<string>"
     if kind == "reduce":
-        p = draw(st.sampled_from([q for q in pools["arr"] if q != "."] or [".xs"]))
+        p = draw(st.sampled_from([q for q in _DOC["arr"] if q != "."] or [".xs"]))
         upd = draw(st.sampled_from([". + $x", ". * 2 + $x", ". - $x"]))
         return f"(reduce {p}[] as $x (0; {upd}))", draw(st.sampled_from(["bigint", "double"]))
     if kind == "strcat":
@@ -193,8 +184,8 @@ def _value(draw, pools):
 
 
 @st.composite
-def _filter(draw, pools):
-    pick = lambda *k: _pick(draw, pools, *k)  # noqa: E731
+def _filter(draw):
+    pick = lambda *k: _pick(draw, *k)  # noqa: E731
     f = draw(st.sampled_from([
         f"{pick('num')} > 3", f'{pick("str")} == "gold"', f"{pick('num', 'str', 'obj')}",
         f"{pick('num', 'str')} | not", f'{pick("obj")} | has("name")', f'{pick("arr")} | has(0)',
@@ -211,32 +202,26 @@ def _filter(draw, pools):
 def cases(draw):
     """(program, declarations, document cells)."""
     form = draw(st.sampled_from(["project", "project", "project", "single", "call", "named"]))
-    it = draw(st.sampled_from([None, None] + _ITERS))
-    pools = _DOC if it is None else it[1]
     stages = []
     if draw(st.booleans()):
-        stages.append(draw(_filter(_DOC)))
-    if it is not None:
-        stages.append(it[0])
-        if draw(st.booleans()):
-            stages.append(draw(_filter(pools)))
+        stages.append(draw(_filter()))
     if form == "project":
-        fields = draw(st.lists(_value(pools), min_size=1, max_size=3))
+        fields = draw(st.lists(_value(), min_size=1, max_size=3))
         body = ", ".join(f"f{i}: {v}" for i, (v, _) in enumerate(fields))
         stages.append("{" + body + "}")
         decls = tuple(f"f{i}:{dt}" for i, (_, dt) in enumerate(fields))
     elif form == "single":
-        v, dt = draw(_value(pools))
+        v, dt = draw(_value())
         stages.append(v)
         decls = (dt,)
     elif form == "call":
-        p = _pick(draw, pools, "arr", "obj", "str")
+        p = _pick(draw, "arr", "obj", "str")
         call, dt = draw(st.sampled_from([("keys", "array<string>"), ("keys_unsorted", "array<string>"),
                                          ("length", "bigint")]))
         stages.append(f"{p} | {call}")
         decls = (dt,)
     else:
-        stages.append(_pick(draw, pools, "obj"))
+        stages.append(_pick(draw, "obj"))
         decls = draw(st.sampled_from([("name:string", "tier:string"), ("sku:string", "qty:int"),
                                       ("cat:string", "color:string")]))
     seeds = draw(st.lists(st.integers(0, 10**6), min_size=4, max_size=8))
@@ -270,11 +255,7 @@ _PROBES = [
     ("{n: (.a | length)}", ("n:int",), ['{"a":true}']),
     ("{s: .a[1:3]}", ("s:array<int>",), ['{"a":"notarray"}']),
     ("{v: .a}", ("v:bigint",), ['{"a":"abc"}', '{"a":true}']),
-    (".xs[] | {v: .}", ("v:int",), ['{"xs":3}']),
     ("{u: (.s | ascii_upcase)}", ("u:string",), ['{"s":7}']),
-    # the values of an iterated object reach text through a variant
-    # cast, which sorts object keys
-    (".u[] | {f: .}", ("f:string",), ['{"u": {"a": {"z": 1, "b": 2}, "c": "s"}}']),
 ]
 
 

@@ -21,6 +21,27 @@ SF_DIR = "/root/testdata/sf0.001"
 PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "PythonUDTF", "FlatMapGroupsInPandas")
 
 
+def oracle_rows(name: str) -> list:
+    """The DuckDB oracle's rows for query ``name`` at ``SF_DIR``."""
+    import duckdb
+
+    from hive_jq_udtf_spark.plans.queries import ORACLES
+
+    con = duckdb.connect()
+    for t in ("events", "documents"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    return sorted(map(tuple, con.execute(ORACLES[name]).fetchall()))
+
+
+def python_tier_rows(spark, name: str) -> list:
+    """Query ``name``'s rows, asserting its jq stages run on the Python
+    tier: no native plan binds a document."""
+    df = QUERIES[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan and "__jq_docbind" not in plan, name
+    return sorted(map(tuple, df.collect()))
+
+
 def formatted_plan(spark, name: str) -> str:
     df = QUERIES[name](spark, SF_DIR)
     qe = df._jdf.queryExecution()
@@ -710,27 +731,17 @@ def test_knn_eval_ivf_past_gate_degrades_to_shuffle_joins(spark):
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
 
 
-def test_jq_native_limit_no_python_node(spark):
-    # all three programs (limit / first / object-iterate) must stay on
-    # the native tier: Python nodes only read duplicate-key rows (none
-    # here), and the limit is a pre-explode slice (no row-limit
-    # operator after a Python stage)
-    assert collect_routed(QUERIES["jq_native_limit"](spark, SF_DIR))[1] == 0
-    assert "slice(" in formatted_plan(spark, "jq_native_limit")
+def test_jq_native_limit_python_tier_matches_oracle(spark):
+    # limit / first / object-iterate programs iterate, so they run on
+    # the Python tier
+    assert python_tier_rows(spark, "jq_native_limit") == oracle_rows("jq_native_limit")
 
 
-def test_jq_native_multi_iterate_object_branch_pythonfree(spark):
-    """r9: the redefined jq_native_multi_iterate feeds OBJECT inner
-    targets through `.evs[].tags[]` — the whole pipeline (including
-    the inner-object text-twin route) must stay native: Python nodes
-    only read duplicate-key rows, and this data has none."""
-    from hive_jq_udtf_spark.plans.queries import QUERIES
-
-    df = QUERIES["jq_native_multi_iterate"](spark, "/root/testdata/sf0.001")
-    rows, sent = collect_routed(df)
-    assert sent == 0
-    row = rows[0]
-    assert row.n > 0 and row.sum_k is not None
+def test_jq_native_multi_iterate_python_tier_matches_oracle(spark):
+    """`.evs[].tags[]` over OBJECT and ARRAY inner targets runs on the
+    Python tier and gives the oracle's rows."""
+    rows = python_tier_rows(spark, "jq_native_multi_iterate")
+    assert rows == oracle_rows("jq_native_multi_iterate") and rows[0][0] > 0
 
 
 def test_semantic_dedup_whitened_no_cartesian(spark):
@@ -790,12 +801,11 @@ def test_jpeg_decode_stats_pure_map_pipeline(spark):
     assert "n_chars" not in read and "lang" not in read
 
 
-def test_jq_keys_explode_no_python_and_pruned(spark):
-    """r11 plan gate: both keys programs compile natively — Python
-    nodes only read duplicate-key rows (none here), the only wide
-    exchanges are the final low-cardinality aggregate + presentation
-    sort, and the scan prunes the unused text column."""
-    assert collect_routed(QUERIES["jq_keys_explode"](spark, SF_DIR))[1] == 0
+def test_jq_keys_explode_python_tier_and_pruned(spark):
+    """r11 plan gate: both keys programs iterate, so they run on the
+    Python tier and give the oracle's rows; there is no join, and the
+    scan prunes the unused text column."""
+    assert python_tier_rows(spark, "jq_keys_explode") == oracle_rows("jq_keys_explode")
     plan = formatted_plan(spark, "jq_keys_explode")
     assert "Join" not in plan
     read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
@@ -803,13 +813,15 @@ def test_jq_keys_explode_no_python_and_pruned(spark):
 
 
 def test_jq_native_growth_no_python_and_pruned(spark):
-    """r12 plan gate (VERDICT r11 #5): all three growth programs —
-    contains-select, whole-element has under an iterate, full split
-    array — compile natively: Python nodes only read duplicate-key
-    rows (none here), no joins, and every documents scan prunes the
-    unused text column."""
-    assert collect_routed(QUERIES["jq_native_growth"](spark, SF_DIR))[1] == 0
+    """r12 plan gate (VERDICT r11 #5): contains-select and the full
+    split array compile natively, the whole-element has under an
+    iterate runs on the Python tier; the rows are the oracle's, there
+    are no joins, and every documents scan prunes the unused text
+    column."""
+    df = QUERIES["jq_native_growth"](spark, SF_DIR)
+    assert sorted(map(tuple, df.collect())) == oracle_rows("jq_native_growth")
     plan = formatted_plan(spark, "jq_native_growth")
+    assert "__jq_docbind" in plan and "ArrowEvalPython" in plan
     assert "Join" not in plan
     reads = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert reads, "expected parquet scans"

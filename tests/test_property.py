@@ -136,7 +136,6 @@ simple_paths = st.lists(field_names, min_size=1, max_size=3).map(
 def test_simple_paths_always_compile_native(path_prog):
     ir = analyze_program(path_prog)
     assert ir is not None
-    assert not ir.iterate
     assert ir.single_path == tuple(path_prog[1:].split("."))
 
 

@@ -1,20 +1,30 @@
-"""Same-session A/B of the two jq tiers: every program runs with
-``native="auto"`` and with ``native="never"`` on the same input, the
-collected rows of the two tiers are compared, and the median wall time
-of ``--reps`` runs after ``--warm`` untimed runs is printed per tier.
-Each run builds a fresh DataFrame and collects it, as bench.py does.
+"""Same-session A/B of the two jq tiers on what the suite runs.
 
-Inputs: the ``native_dirty`` benchmark corpus (perfbench) at each
-``--docs`` size with its two programs, and ``events.props`` at ``--sf``
-with four plain programs.
+Each registered ``jq_native_*`` / ``jq_keys_explode`` query (or those
+``--queries`` names) runs as registered ("pinned") and with every
+``native="require"`` pin overridden to ``native="never",
+min_parallelism=defaultParallelism`` ("python", the exact Python tier
+as the suite's other Python-tier calls run it).  A query without such
+a pin runs the same code on both sides.  The collected rows of the two
+sides are compared, and the median wall time of ``--reps`` runs after
+``--warm`` untimed runs is printed per side, for each ``--sf`` data
+directory.  Each run builds a fresh DataFrame and collects it, as
+bench.py does.
+
+``--docs`` also A/Bs the ``native_dirty`` benchmark corpus (perfbench)
+at each size with its two programs, ``native="auto"`` against
+``"never"``; an empty ``--docs`` skips it.
 
 Usage: python tools/tier_ab.py [--reps 5] [--warm 2]
-           [--docs 4000,36000,200000] [--sf /root/testdata/sf0.1]
+           [--sf /root/testdata/sf0.01,/root/testdata/sf0.1]
+           [--queries 'jq_native_*,jq_keys_explode'] [--docs 4000,36000]
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import fnmatch
 import os
 import shutil
 import statistics
@@ -25,26 +35,47 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
-EVENTS_PROGRAMS = [
-    ("{k: .k}", ("k:int",)),
-    ("{k: .k, big: (.k > 50), bucket: (.k % 10)}", ("k:int", "big:boolean", "bucket:int")),
-    ("{k: (.k // -1)}", ("k:int",)),
-    ("select(.k > 50) | {k: .k}", ("k:int",)),
-]
+
+@contextlib.contextmanager
+def python_tier(par: int):
+    """Within the block, ``jq_explode(..., native="require")`` — as the
+    query modules and udtf.py name it — runs ``native="never",
+    min_parallelism=par`` instead."""
+    from hive_jq_udtf_spark import udtf
+
+    orig = udtf.jq_explode
+
+    def unpinned(*args, **kw):
+        if kw.get("native") == "require":
+            kw.update(native="never", min_parallelism=par)
+        return orig(*args, **kw)
+
+    mods = [
+        m for name, m in list(sys.modules.items())
+        if name.startswith("hive_jq_udtf_spark.") and getattr(m, "jq_explode", None) is orig
+    ]
+    for m in mods:
+        m.jq_explode = unpinned
+    try:
+        yield
+    finally:
+        for m in mods:
+            m.jq_explode = orig
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--warm", type=int, default=2)
-    ap.add_argument("--docs", default="4000,36000,200000")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01,/root/testdata/sf0.1")
+    ap.add_argument("--queries", default="jq_native_*,jq_keys_explode")
+    ap.add_argument("--docs", default="4000,36000")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from hive_jq_udtf_spark.sources.tables import load_table
+    import __spark_entry__ as entrymod
     from hive_jq_udtf_spark.udtf import jq_explode
     from perfbench import corpus as C
     from perfbench import workloads as W
@@ -60,25 +91,37 @@ def main() -> None:
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .getOrCreate()
     )
+    par = spark.sparkContext.defaultParallelism
 
-    def measure(label, build):
-        out = {}
-        for tier in ("auto", "never"):
-            for _ in range(args.warm):
-                build(tier).collect()
-            times = []
-            for _ in range(args.reps):
-                t = time.perf_counter()
-                rows = build(tier).collect()
-                times.append(time.perf_counter() - t)
-            out[tier] = (statistics.median(times), sorted(map(tuple, rows), key=repr))
-        (a, ra), (n, rn) = out["auto"], out["never"]
-        same = "rows equal" if ra == rn else "ROWS DIFFER"
-        print(f"{label}: auto {a:.3f} s, never {n:.3f} s, never/auto {n / a:.2f}, {same}",
-              flush=True)
+    def timed(build):
+        for _ in range(args.warm):
+            build().collect()
+        times = []
+        for _ in range(args.reps):
+            t = time.perf_counter()
+            rows = build().collect()
+            times.append(time.perf_counter() - t)
+        return statistics.median(times), sorted(map(tuple, rows), key=repr)
+
+    def report(label, names, a, b):
+        (ta, ra), (tb, rb) = a, b
+        same = "rows equal" if ra == rb else "ROWS DIFFER"
+        print(f"{label}: {names[0]} {ta:.3f} s, {names[1]} {tb:.3f} s, "
+              f"{names[0]}/{names[1]} {ta / tb:.2f}, {same}", flush=True)
+
+    patterns = [p for p in args.queries.split(",") if p]
+    queries = {
+        n: fn for n, fn in entrymod.queries().items()
+        if any(fnmatch.fnmatchcase(n, p) for p in patterns)
+    }
+    for sf in (s for s in args.sf.split(",") if s):
+        for name, fn in queries.items():
+            pinned = timed(lambda: fn(spark, sf))
+            with python_tier(par):
+                python = timed(lambda: fn(spark, sf))
+            report(f"{name} {os.path.basename(sf)}", ("pinned", "python"), pinned, python)
 
     stage = tempfile.mkdtemp(prefix="tier_ab_")
-    par = spark.sparkContext.defaultParallelism  # a no-op on the native tier
     for n_docs in (int(d) for d in args.docs.split(",") if d):
         spec = C.CorpusSpec(
             n_docs=n_docs, dup_share=0.05, escaped_share=0.02,
@@ -91,25 +134,15 @@ def main() -> None:
             ("nat_select_iterate", W.N_ITER, W.N_ITER_DECLS, ("sku", "up")),
         ]:
             def build(tier, prog=prog, decls=decls, keys=keys):
+                # min_parallelism is a no-op on a native plan
                 x = jq_explode(
                     spark.read.parquet(path), "doc", prog, *decls,
                     native=tier, min_parallelism=par,
                 )
                 return x.groupBy(*keys).agg(F.count("*").alias("n"))
 
-            measure(f"{name} {n_docs} docs", build)
-
-    events = load_table(spark, args.sf, "events")
-    for prog, decls in EVENTS_PROGRAMS:
-        def build(tier, prog=prog, decls=decls):
-            x = jq_explode(
-                events, "props", prog, *decls, native=tier, min_parallelism=par
-            )
-            return x.groupBy(*[d.split(":")[0] for d in decls[1:]]).agg(
-                F.count("*").alias("n"), F.sum("k").alias("sum_k")
-            )
-
-        measure(f"events.props {os.path.basename(args.sf)} {prog}", build)
+            report(f"native_dirty {name} {n_docs} docs", ("auto", "never"),
+                   timed(lambda: build("auto")), timed(lambda: build("never")))
     spark.stop()
     shutil.rmtree(stage, ignore_errors=True)
 
