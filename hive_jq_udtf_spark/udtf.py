@@ -277,7 +277,10 @@ def jq_explode(
     duplicate-key rows itself, so the route cannot find them: "auto"
     then takes the Python tier and "require" raises.  Nothing here
     changes a session conf.  Both branches of a native plan evaluate
-    ``df``, so persist a nondeterministic input first.
+    ``df``, so a nondeterministic ``df`` or ``column`` (``rand()``,
+    ``uuid()``, a nondeterministic UDF) could lose or duplicate rows
+    between them: "auto" then takes the Python tier and "require"
+    raises.
 
     min_parallelism: repartition the input up to this many partitions
     BEFORE the (expensive, per-row) Python tier when the scan came in
@@ -311,6 +314,18 @@ def jq_explode(
                     "instead of reaching the Python tier"
                 )
             plan = None
+        if plan is not None:
+            # a Column-typed doc argument is evaluated in each branch too
+            probe = df if isinstance(column, str) else df.select(column)
+            if not probe._jdf.queryExecution().analyzed().deterministic():
+                if native == "require":
+                    raise ValueError(
+                        f"jq program {program!r} cannot run natively on a "
+                        "nondeterministic input: each branch of a native "
+                        "plan evaluates it, so rows could be lost or "
+                        "duplicated"
+                    )
+                plan = None
         if plan is not None:
             return plan.apply(df, column, python_tier, outer=outer)
         if native == "require":

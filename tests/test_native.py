@@ -2085,6 +2085,43 @@ def test_native_allow_duplicate_keys_session_takes_python_tier(spark):
         spark.conf.unset(key)
 
 
+def test_native_nondeterministic_input_takes_python_tier(spark):
+    """A native plan evaluates its input once per branch, so on a
+    nondeterministic input (or doc column) "auto" takes the Python tier
+    and "require" raises: a ``rand()``-built column of plain and routed
+    (duplicate-key) documents gives exactly one row per input row.
+    Spark's seeded ``rand()`` repeats its values in both branches; a
+    nondeterministic Python UDF does not, and with two branches it
+    lost and duplicated about a quarter of the rows."""
+    n = 2000
+    doc = F.when(F.rand() < 0.5, F.lit('{"a":1}')).otherwise(F.lit('{"a":2,"a":3}'))
+
+    @F.udf("string")
+    def coin(_):
+        import random
+
+        return '{"a":1}' if random.random() < 0.5 else '{"a":2,"a":3}'
+
+    ids = spark.range(n).repartition(4)
+    for src, column in [
+        (ids.select("id", doc.alias("j")), "j"),
+        (ids, doc),
+        (ids.select("id", coin.asNondeterministic()("id").alias("j")), "j"),
+    ]:
+        with pytest.raises(ValueError, match="nondeterministic"):
+            jq_explode(src, column, "{v: .a}", "v:int", native="require")
+        out = jq_explode(src, column, "{v: .a}", "v:int")
+        assert "__jq_docbind" not in out._jdf.queryExecution().analyzed().toString()
+        rows = out.select("id", "v").collect()
+        assert sorted(r.id for r in rows) == list(range(n))
+        assert {r.v for r in rows} == {1, 3}
+    # the same documents from a deterministic input still compile natively
+    fixed = spark.range(n).select("id", F.when(F.col("id") % 2 == 0, F.lit('{"a":1}'))
+                                  .otherwise(F.lit('{"a":2,"a":3}')).alias("j"))
+    rows, sent = collect_routed(jq_explode(fixed, "j", "{v: .a}", "v:int", native="require"))
+    assert len(rows) == n and sent == n // 2
+
+
 @pytest.mark.parametrize("native", ["auto", "never"])
 def test_jq_explode_odd_input_columns(spark, native):
     """Input columns named like the internal binding and generator
